@@ -12,6 +12,18 @@ PG functions with no Spark builtin (ST_*) are registered as session UDFs
 by :mod:`gfw_data_api_spark.functions.geo_udfs`, so injected spatial
 predicates execute verbatim.
 
+FINDER CONTRACT: every rewrite is a *finder*,
+``find(sql, tokens) -> (start, end, replacement) | None``. It returns
+the FIRST edit it wants — a character span of ``sql`` and the text to
+put there — or None when nothing is left to rewrite. :func:`_rewrite`
+applies a finder until it returns None, then moves on to the next,
+re-tokenizing only after a splice, so one token stream is threaded
+through the whole pipeline (a statement no finder touches is tokenized
+once). A finder must stop matching its own emission, or the driver
+never reaches its fixpoint. Adding a pass means adding one finder to
+:func:`_pipeline`; each public ``translate_*`` is the driver run over
+that pass's finders.
+
 LITERAL CONTRACT (round 7): PG string literals are VERBATIM
 (standard_conforming_strings, the default since PG 9.1) — ``'\\s+'``
 keeps its backslash — while Spark's default parser processes
@@ -24,6 +36,7 @@ emit literals UNDOUBLED accordingly.
 
 from __future__ import annotations
 
+import functools
 import re
 import threading
 from contextlib import contextmanager
@@ -142,6 +155,137 @@ PG_TO_SPARK_TYPES: dict[str, str] = {
     # are special-cased in translate_pg_casts.
     "bytea": "BINARY",
 }
+
+
+# ---------------------------------------------------------------------------
+# Rewrite machinery: the driver and the shared token matchers every
+# finder is built from (see FINDER CONTRACT in the module docstring).
+# ---------------------------------------------------------------------------
+
+
+def _rewrite(sql: str, finders, tokens=None):
+    """Run each finder to its fixpoint, in order; ``tokens`` (when
+    given) must be ``tokenize(sql)``. Returns ``(sql, tokens)`` so the
+    caller can hand the current token stream on."""
+    if tokens is None:
+        tokens = tokenize(sql)
+    for find in finders:
+        while (edit := find(sql, tokens)) is not None:
+            start, end, repl = edit
+            sql = f"{sql[:start]}{repl}{sql[end:]}"
+            tokens = tokenize(sql)
+    return sql, tokens
+
+
+def _is_punct(tok, value: str) -> bool:
+    return tok.kind == "PUNCT" and tok.value == value
+
+
+def _is_kw(tok, word: str) -> bool:
+    """``tok`` is the bare keyword/identifier ``word`` (upper-case)."""
+    return tok.kind == "IDENT" and tok.upper == word
+
+
+def _calls(tokens, names):
+    """Indices of the call sites ``name(`` whose lower-cased name is in
+    ``names``, in text order."""
+    for i in range(len(tokens) - 1):
+        t = tokens[i]
+        if (
+            t.kind == "IDENT"
+            and t.value.lower() in names
+            and _is_punct(tokens[i + 1], "(")
+        ):
+            yield i
+
+
+def _find_call(tokens, names):
+    """Index of the first call site of one of ``names``, or None."""
+    return next(_calls(tokens, names), None)
+
+
+def _close(tokens, at, seps=()):
+    """Match the bracket opening at ``tokens[at]`` (``(`` or ``[``; the
+    depth counts both kinds). Returns ``(close_index, spans)``: the
+    top-level pieces between the brackets as inclusive token-index
+    pairs, split at commas and at the keywords in ``seps``
+    (upper-case). An empty bracket pair has no spans; a bracket that
+    never closes gives ``(None, [])``."""
+    depth = 0
+    for k in range(at, len(tokens)):
+        t = tokens[k]
+        if t.kind != "PUNCT":
+            continue
+        if t.value in ("(", "["):
+            depth += 1
+        elif t.value in (")", "]"):
+            depth -= 1
+            if depth == 0:
+                spans = _args_spans(tokens, at + 1, k - 1, seps) if k > at + 1 else []
+                return k, spans
+    return None, []
+
+
+def _open(tokens, k):
+    """Backward twin of :func:`_close`: index of the bracket that
+    ``tokens[k]`` (``)`` or ``]``) closes, or None."""
+    depth = 0
+    for j in range(k, -1, -1):
+        t = tokens[j]
+        if t.kind != "PUNCT":
+            continue
+        if t.value in (")", "]"):
+            depth += 1
+        elif t.value in ("(", "["):
+            depth -= 1
+            if depth == 0:
+                return j
+    return None
+
+
+def _top_level(tokens, lo, hi):
+    """Walk ``tokens[lo..hi]`` outside every bracket group, yielding
+    ``(first, last)`` per item: a single token is ``(k, k)``, a bracket
+    group ``(open, close)``. Stops at a group that does not close
+    within the range."""
+    k = lo
+    while k <= hi:
+        end = k
+        if tokens[k].kind == "PUNCT" and tokens[k].value in ("(", "["):
+            end, _ = _close(tokens, k)
+            if end is None or end > hi:
+                return
+        yield k, end
+        k = end + 1
+
+
+def _span_text(sql, tokens, span) -> str:
+    s, e = span
+    return sql[tokens[s].start : tokens[e].end] if s <= e else ""
+
+
+def _arg_texts(sql, tokens, spans) -> list[str]:
+    return [_span_text(sql, tokens, sp) for sp in spans if sp[0] <= sp[1]]
+
+
+def _suffix_end(tokens, close):
+    """Last token of the call closing at ``tokens[close]`` together
+    with its ``FILTER (WHERE …)`` and ``OVER (…)`` / ``OVER name``
+    suffixes — they must stay attached when the call is wrapped."""
+    n = len(tokens)
+    end = close
+    if end + 2 < n and _is_kw(tokens[end + 1], "FILTER") and _is_punct(tokens[end + 2], "("):
+        fend, _ = _close(tokens, end + 2)
+        if fend is not None:
+            end = fend
+    if end + 2 < n and _is_kw(tokens[end + 1], "OVER"):
+        if tokens[end + 2].kind in ("IDENT", "QIDENT"):
+            end += 2
+        elif _is_punct(tokens[end + 2], "("):
+            oend, _ = _close(tokens, end + 2)
+            if oend is not None:
+                end = oend
+    return end
 
 
 _INTERVAL_UNIT_MONTHS = {
@@ -538,268 +682,232 @@ def translate_pg_casts(sql: str) -> str:
     (possibly qualified) identifier, or a balanced parenthesized group with
     an optional preceding function name.
     """
-    while True:
-        tokens = tokenize(sql)
-        cast_at = None
-        for i, tok in enumerate(tokens):
-            if tok.kind == "OP" and tok.value == "::":
-                cast_at = i
-                break
-        if cast_at is None or cast_at == 0 or cast_at + 1 >= len(tokens):
-            return sql
+    return _rewrite(sql, [_find_pg_cast])[0]
 
-        type_tok = tokens[cast_at + 1]
-        if type_tok.kind != "IDENT":
-            return sql
-        type_end_idx = cast_at + 1
-        type_name = type_tok.value.lower()
-        # two-word types: double precision / timestamp with(out) time zone
-        if type_name == "double" and type_end_idx + 1 < len(tokens) and tokens[
-            type_end_idx + 1
-        ].value.lower() == "precision":
-            type_end_idx += 1
-        elif type_name in ("timestamp", "time") and type_end_idx + 1 < len(tokens):
-            j = type_end_idx + 1
-            words = []
-            while j < len(tokens) and tokens[j].kind == "IDENT" and tokens[j].value.lower() in (
-                "with",
-                "without",
-                "time",
-                "zone",
-            ):
-                words.append(tokens[j].value.lower())
-                j += 1
-            if words[:1] in (["with"], ["without"]) and words[-1:] == ["zone"]:
-                type_end_idx = j - 1
-        # parameterized types: numeric(p[,s]), varchar(n), char(n),
-        # float(n) — consume a directly-following (int[, int]) group
-        type_args: list[int] | None = None
+
+def _find_pg_cast(sql, tokens):
+    cast_at = next(
+        (i for i, t in enumerate(tokens) if t.kind == "OP" and t.value == "::"),
+        None,
+    )
+    if cast_at is None or cast_at == 0 or cast_at + 1 >= len(tokens):
+        return None
+
+    type_tok = tokens[cast_at + 1]
+    if type_tok.kind != "IDENT":
+        return None
+    type_end_idx = cast_at + 1
+    type_name = type_tok.value.lower()
+    # two-word types: double precision / timestamp with(out) time zone
+    if type_name == "double" and type_end_idx + 1 < len(tokens) and tokens[
+        type_end_idx + 1
+    ].value.lower() == "precision":
+        type_end_idx += 1
+    elif type_name in ("timestamp", "time") and type_end_idx + 1 < len(tokens):
         j = type_end_idx + 1
-        if j < len(tokens) and tokens[j].kind == "PUNCT" and tokens[j].value == "(":
-            vals = []
-            k2 = j + 1
-            well_formed = False
-            while k2 < len(tokens):
-                tk = tokens[k2]
-                if tk.kind == "PUNCT" and tk.value == ")":
-                    well_formed = bool(vals)
-                    break
-                if tk.kind == "NUMBER" and tk.value.isdigit():
-                    vals.append(int(tk.value))
-                elif not (tk.kind == "PUNCT" and tk.value == ","):
-                    break
-                k2 += 1
-            if well_formed:
-                type_args = vals
-                type_end_idx = k2
-        # array types: '{a,b}'::text[] — capture the element-type text
-        # (with any (p,s) args) before consuming the brackets
-        elem_type_text = sql[
-            tokens[cast_at + 1].start : tokens[type_end_idx].end
-        ]
-        is_array_type = False
-        # PG ignores the NUMBER of bracket pairs (int[] ≡ int[][]);
-        # the literal's own nesting decides dimensionality — consume
-        # every trailing [] pair (round-11)
-        while (
-            type_end_idx + 2 < len(tokens)
-            and tokens[type_end_idx + 1].kind == "PUNCT"
-            and tokens[type_end_idx + 1].value == "["
-            and tokens[type_end_idx + 2].kind == "PUNCT"
-            and tokens[type_end_idx + 2].value == "]"
+        words = []
+        while j < len(tokens) and tokens[j].kind == "IDENT" and tokens[j].value.lower() in (
+            "with",
+            "without",
+            "time",
+            "zone",
         ):
-            is_array_type = True
-            type_end_idx += 2
-        if type_name not in PG_TO_SPARK_TYPES and type_name != "interval":
-            # Unknown PG type names used to fall through to Spark's
-            # parser (CAST(x AS REGCLASS) → opaque ParseException).
-            # Reject loudly, naming the vocabulary.
+            words.append(tokens[j].value.lower())
+            j += 1
+        if words[:1] in (["with"], ["without"]) and words[-1:] == ["zone"]:
+            type_end_idx = j - 1
+    # parameterized types: numeric(p[,s]), varchar(n), char(n),
+    # float(n) — consume a directly-following (int[, int]) group
+    type_args: list[int] | None = None
+    j = type_end_idx + 1
+    if j < len(tokens) and tokens[j].kind == "PUNCT" and tokens[j].value == "(":
+        vals = []
+        k2 = j + 1
+        well_formed = False
+        while k2 < len(tokens):
+            tk = tokens[k2]
+            if tk.kind == "PUNCT" and tk.value == ")":
+                well_formed = bool(vals)
+                break
+            if tk.kind == "NUMBER" and tk.value.isdigit():
+                vals.append(int(tk.value))
+            elif not (tk.kind == "PUNCT" and tk.value == ","):
+                break
+            k2 += 1
+        if well_formed:
+            type_args = vals
+            type_end_idx = k2
+    # array types: '{a,b}'::text[] — capture the element-type text
+    # (with any (p,s) args) before consuming the brackets
+    elem_type_text = sql[
+        tokens[cast_at + 1].start : tokens[type_end_idx].end
+    ]
+    is_array_type = False
+    # PG ignores the NUMBER of bracket pairs (int[] ≡ int[][]);
+    # the literal's own nesting decides dimensionality — consume
+    # every trailing [] pair (round-11)
+    while (
+        type_end_idx + 2 < len(tokens)
+        and tokens[type_end_idx + 1].kind == "PUNCT"
+        and tokens[type_end_idx + 1].value == "["
+        and tokens[type_end_idx + 2].kind == "PUNCT"
+        and tokens[type_end_idx + 2].value == "]"
+    ):
+        is_array_type = True
+        type_end_idx += 2
+    if type_name not in PG_TO_SPARK_TYPES and type_name != "interval":
+        # Unknown PG type names used to fall through to Spark's
+        # parser (CAST(x AS REGCLASS) → opaque ParseException).
+        # Reject loudly, naming the vocabulary.
+        raise ValueError(
+            f"::{type_name} cast outside the translatable subset; "
+            "supported cast targets: interval (literal strings), "
+            + ", ".join(sorted(PG_TO_SPARK_TYPES))
+        )
+    spark_type = PG_TO_SPARK_TYPES.get(type_name, "")
+    wrap = None  # (prefix, suffix) around CAST(op AS STRING)
+    if type_args is None and type_name in ("char", "bpchar"):
+        # PG: bare char/bpchar means char(1) — truncate AND pad —
+        # not unlimited text (that's the 'name'/'text' family)
+        type_args = [1]
+    if type_args is not None:
+        if type_name in ("numeric", "decimal") and len(type_args) <= 2:
+            p = type_args[0]
+            s = type_args[1] if len(type_args) == 2 else 0
+            spark_type = f"DECIMAL({p},{s})"
+        elif type_name == "varchar" and len(type_args) == 1:
+            # PG: an explicit varchar(n) cast TRUNCATES to n chars
+            # (Spark's VARCHAR(n) cast does not)
+            spark_type = "STRING"
+            wrap = ("substring(", f", 1, {type_args[0]})")
+        elif type_name in ("char", "bpchar") and len(type_args) == 1:
+            # PG: char(n) truncates AND pads to n. The padded string
+            # is literal — PG's trailing-space-insensitive bpchar
+            # comparisons are outside the subset (documented).
+            n_chars = type_args[0]
+            spark_type = "STRING"
+            wrap = (
+                f"rpad(substring(",
+                f", 1, {n_chars}), {n_chars}, ' ')",
+            )
+        elif type_name == "float" and len(type_args) == 1:
+            # PG: float(1..24) = real, float(25..53) = double
+            spark_type = "FLOAT" if type_args[0] <= 24 else "DOUBLE"
+        else:
             raise ValueError(
-                f"::{type_name} cast outside the translatable subset; "
-                "supported cast targets: interval (literal strings), "
-                + ", ".join(sorted(PG_TO_SPARK_TYPES))
+                f"parameterized ::{type_name}({', '.join(map(str, type_args))}) "
+                "cast outside the translatable subset"
             )
-        spark_type = PG_TO_SPARK_TYPES.get(type_name, "")
-        wrap = None  # (prefix, suffix) around CAST(op AS STRING)
-        if type_args is None and type_name in ("char", "bpchar"):
-            # PG: bare char/bpchar means char(1) — truncate AND pad —
-            # not unlimited text (that's the 'name'/'text' family)
-            type_args = [1]
-        if type_args is not None:
-            if type_name in ("numeric", "decimal") and len(type_args) <= 2:
-                p = type_args[0]
-                s = type_args[1] if len(type_args) == 2 else 0
-                spark_type = f"DECIMAL({p},{s})"
-            elif type_name == "varchar" and len(type_args) == 1:
-                # PG: an explicit varchar(n) cast TRUNCATES to n chars
-                # (Spark's VARCHAR(n) cast does not)
-                spark_type = "STRING"
-                wrap = ("substring(", f", 1, {type_args[0]})")
-            elif type_name in ("char", "bpchar") and len(type_args) == 1:
-                # PG: char(n) truncates AND pads to n. The padded string
-                # is literal — PG's trailing-space-insensitive bpchar
-                # comparisons are outside the subset (documented).
-                n_chars = type_args[0]
-                spark_type = "STRING"
-                wrap = (
-                    f"rpad(substring(",
-                    f", 1, {n_chars}), {n_chars}, ' ')",
-                )
-            elif type_name == "float" and len(type_args) == 1:
-                # PG: float(1..24) = real, float(25..53) = double
-                spark_type = "FLOAT" if type_args[0] <= 24 else "DOUBLE"
-            else:
-                raise ValueError(
-                    f"parameterized ::{type_name}({', '.join(map(str, type_args))}) "
-                    "cast outside the translatable subset"
-                )
 
-        # resolve operand start, walking backwards
-        k = cast_at - 1
-        prev = tokens[k]
-        if prev.kind in ("NUMBER", "STRING", "QIDENT"):
-            start = prev.start
-        elif prev.kind == "IDENT":
-            start = prev.start
-            while k >= 2 and tokens[k - 1].kind == "PUNCT" and tokens[k - 1].value == "." and tokens[
-                k - 2
-            ].kind in ("IDENT", "QIDENT"):
-                k -= 2
-                start = tokens[k].start
-        elif prev.kind == "PUNCT" and prev.value == ")":
-            depth = 0
-            j = k
-            while j >= 0:
-                if tokens[j].kind == "PUNCT" and tokens[j].value == ")":
-                    depth += 1
-                elif tokens[j].kind == "PUNCT" and tokens[j].value == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j -= 1
-            if j < 0:
-                return sql
-            if (
-                j > 0
-                and tokens[j - 1].kind == "IDENT"
-                and tokens[j - 1].upper not in _OPERAND_BOUNDARY
-                and not _is_infix_div(tokens, j - 1)
-            ):
-                j -= 1  # function call: include the name
-            start = tokens[j].start
-        else:
-            return sql
-
-        operand = sql[start : prev.end]
-        end = tokens[type_end_idx].end
-        if is_array_type:
-            # PG array INPUT literal → Spark array(...) of per-element
-            # casts, which the rescan of this same loop translates
-            # (so numeric rounding, varchar truncation, bytea and
-            # interval element semantics all apply uniformly).
-            lit = _single_string_literal(operand)
-            if lit is None:
-                # computed operand (ARRAY[...] constructor, a column,
-                # string_to_array, ...): element-wise cast — the
-                # emitted ::type inside the lambda re-translates on
-                # rescan with the full per-type semantics
-                cast_sql = (
-                    f"transform(({operand}), "
-                    f"__gfw_e -> __gfw_e::{elem_type_text})"
-                )
-                sql = f"{sql[:start]}{cast_sql}{sql[end:]}"
-                continue
-            elems = _parse_pg_array_literal(lit)
-            if not elems:
-                if not spark_type:
-                    raise ValueError(
-                        "empty interval-array literals are outside "
-                        "the translatable subset"
-                    )
-                cast_sql = f"CAST(array() AS ARRAY<{spark_type}>)"
-            else:
-
-                def _emit_elems(es: list) -> str:
-                    parts = []
-                    for e in es:
-                        if isinstance(e, list):
-                            parts.append(_emit_elems(e))
-                        elif e is None:
-                            if type_name == "interval":
-                                raise ValueError(
-                                    "NULL elements in interval-array "
-                                    "literals are outside the "
-                                    "translatable subset"
-                                )
-                            parts.append(f"NULL::{elem_type_text}")
-                        else:
-                            esc = e.replace("'", "''")
-                            parts.append(f"'{esc}'::{elem_type_text}")
-                    return f"array({', '.join(parts)})"
-
-                cast_sql = _emit_elems(elems)
-            sql = f"{sql[:start]}{cast_sql}{sql[end:]}"
-            continue
-        if type_name == "text":
-            # interval→text (round-11, verdict r10 #9): constructor-
-            # typed operands render PG-style in-SQL, matching the
-            # serializers. make_interval(...) classifies first (its
-            # own pass runs later in the pipeline).
-            inner = _strip_outer_parens(operand)
-            while inner.startswith("justify_hours(") and inner.endswith(")"):
-                # identity on our representation (the justify pass
-                # runs later in the pipeline) — peel it so the
-                # constructor beneath still renders PG-style
-                toks_j = tokenize(inner)
-                if _primary_end(toks_j, 0) != len(toks_j) - 1:
-                    break
-                inner = _strip_outer_parens(
-                    inner[len("justify_hours(") : -1]
-                )
-            if inner.startswith("make_interval("):
-                inner = _rewrite_make_interval(inner)
-            if inner.startswith(("make_dt_interval(", "make_ym_interval(")):
-                cast_sql = _interval_text_sql(inner)
-                sql = f"{sql[:start]}{cast_sql}{sql[end:]}"
-                continue
-        if type_name == "interval":
-            # '2 days 03:00:00'::interval — an everyday PG idiom. The
-            # literal parses AT TRANSLATION into the typed constructors
-            # (collectible, comparable — see the make_interval pass);
-            # computed operands stay loud (PG's interval input parser
-            # at runtime has no Spark twin; use make_interval).
-            lit = _single_string_literal(operand)
-            if lit is None:
-                raise ValueError(
-                    "::interval casts translate only for literal "
-                    "strings; use make_interval(...) for computed "
-                    "intervals"
-                )
-            cast_sql = _interval_cast_sql(lit)
-            sql = f"{sql[:start]}{cast_sql}{sql[end:]}"
-            continue
-        if type_name == "bytea":
-            cast_sql = _bytea_cast_sql(
-                operand, _single_string_literal(operand)
-            )
-            sql = f"{sql[:start]}{cast_sql}{sql[end:]}"
-            continue
-        if wrap is None and spark_type in ("SMALLINT", "INT", "BIGINT"):
-            # PG numeric→int rounds HALF AWAY FROM ZERO (2.5::int = 3);
-            # Spark's cast TRUNCATES. Route through DECIMAL(38,10) —
-            # exact for bigint-range integers and integer strings —
-            # then round. Residual boundaries (documented): PG's
-            # float8→int is half-EVEN (we round half-away uniformly),
-            # and bool::int raises here where PG gives 0/1.
+    # resolve operand start, walking backwards
+    prev = tokens[cast_at - 1]
+    lstart = _operand_start(tokens, cast_at - 1)
+    if lstart is None:
+        return None
+    start = tokens[lstart].start
+    operand = sql[start : prev.end]
+    end = tokens[type_end_idx].end
+    if is_array_type:
+        # PG array INPUT literal → Spark array(...) of per-element
+        # casts, which the rescan of this same loop translates
+        # (so numeric rounding, varchar truncation, bytea and
+        # interval element semantics all apply uniformly).
+        lit = _single_string_literal(operand)
+        if lit is None:
+            # computed operand (ARRAY[...] constructor, a column,
+            # string_to_array, ...): element-wise cast — the
+            # emitted ::type inside the lambda re-translates on
+            # rescan with the full per-type semantics
             cast_sql = (
-                f"CAST(round(CAST({operand} AS DECIMAL(38,10)), 0) "
-                f"AS {spark_type})"
+                f"transform(({operand}), "
+                f"__gfw_e -> __gfw_e::{elem_type_text})"
             )
+            return start, end, cast_sql
+        elems = _parse_pg_array_literal(lit)
+        if not elems:
+            if not spark_type:
+                raise ValueError(
+                    "empty interval-array literals are outside "
+                    "the translatable subset"
+                )
+            cast_sql = f"CAST(array() AS ARRAY<{spark_type}>)"
         else:
-            cast_sql = f"CAST({operand} AS {spark_type})"
-        if wrap is not None:
-            cast_sql = f"{wrap[0]}{cast_sql}{wrap[1]}"
-        sql = f"{sql[:start]}{cast_sql}{sql[end:]}"
+
+            def _emit_elems(es: list) -> str:
+                parts = []
+                for e in es:
+                    if isinstance(e, list):
+                        parts.append(_emit_elems(e))
+                    elif e is None:
+                        if type_name == "interval":
+                            raise ValueError(
+                                "NULL elements in interval-array "
+                                "literals are outside the "
+                                "translatable subset"
+                            )
+                        parts.append(f"NULL::{elem_type_text}")
+                    else:
+                        esc = e.replace("'", "''")
+                        parts.append(f"'{esc}'::{elem_type_text}")
+                return f"array({', '.join(parts)})"
+
+            cast_sql = _emit_elems(elems)
+        return start, end, cast_sql
+    if type_name == "text":
+        # interval→text (round-11, verdict r10 #9): constructor-
+        # typed operands render PG-style in-SQL, matching the
+        # serializers. make_interval(...) classifies first (its
+        # own pass runs later in the pipeline).
+        inner = _strip_outer_parens(operand)
+        while inner.startswith("justify_hours(") and inner.endswith(")"):
+            # identity on our representation (the justify pass
+            # runs later in the pipeline) — peel it so the
+            # constructor beneath still renders PG-style
+            toks_j = tokenize(inner)
+            if _primary_end(toks_j, 0) != len(toks_j) - 1:
+                break
+            inner = _strip_outer_parens(
+                inner[len("justify_hours(") : -1]
+            )
+        if inner.startswith("make_interval("):
+            inner = _rewrite_make_interval(inner)
+        if inner.startswith(("make_dt_interval(", "make_ym_interval(")):
+            return start, end, _interval_text_sql(inner)
+    if type_name == "interval":
+        # '2 days 03:00:00'::interval — an everyday PG idiom. The
+        # literal parses AT TRANSLATION into the typed constructors
+        # (collectible, comparable — see the make_interval pass);
+        # computed operands stay loud (PG's interval input parser
+        # at runtime has no Spark twin; use make_interval).
+        lit = _single_string_literal(operand)
+        if lit is None:
+            raise ValueError(
+                "::interval casts translate only for literal "
+                "strings; use make_interval(...) for computed "
+                "intervals"
+            )
+        return start, end, _interval_cast_sql(lit)
+    if type_name == "bytea":
+        cast_sql = _bytea_cast_sql(
+            operand, _single_string_literal(operand)
+        )
+        return start, end, cast_sql
+    if wrap is None and spark_type in ("SMALLINT", "INT", "BIGINT"):
+        # PG numeric→int rounds HALF AWAY FROM ZERO (2.5::int = 3);
+        # Spark's cast TRUNCATES. Route through DECIMAL(38,10) —
+        # exact for bigint-range integers and integer strings —
+        # then round. Residual boundaries (documented): PG's
+        # float8→int is half-EVEN (we round half-away uniformly),
+        # and bool::int raises here where PG gives 0/1.
+        cast_sql = (
+            f"CAST(round(CAST({operand} AS DECIMAL(38,10)), 0) "
+            f"AS {spark_type})"
+        )
+    else:
+        cast_sql = f"CAST({operand} AS {spark_type})"
+    if wrap is not None:
+        cast_sql = f"{wrap[0]}{cast_sql}{wrap[1]}"
+    return start, end, cast_sql
 
 
 _FETCH_RE = re.compile(
@@ -837,6 +945,12 @@ def translate_fetch_first(sql: str) -> str:
     ``LIMIT n [OFFSET m]`` (Spark requires LIMIT before OFFSET; the
     reference's FROM-rewrite explicitly preserves FETCH tails,
     query_helpers.py:424-429, so the dialect must accept them)."""
+    return _rewrite(sql, [_find_fetch_first])[0]
+
+
+def _find_fetch_first(sql, tokens):
+    """One whole-statement edit (the clause rewrite is regex-based and
+    idempotent), or None when there is no FETCH/OFFSET ROWS tail."""
 
     def fix(chunk: str) -> str:
         def repl(m):
@@ -846,7 +960,8 @@ def translate_fetch_first(sql: str) -> str:
         chunk = _FETCH_RE.sub(repl, chunk)
         return _OFFSET_ROWS_RE.sub(lambda m: f"OFFSET {m.group(1)}", chunk)
 
-    return _outside_string_literals(sql, fix)
+    new = _outside_string_literals(sql, fix)
+    return None if new == sql else (0, len(sql), new)
 
 
 # ---------------------------------------------------------------------------
@@ -898,6 +1013,32 @@ def _is_infix_div(tokens, j):
     )
 
 
+def _dotted_start(tokens, k):
+    """Start of the dotted name chain (``a.b."c"``) ending at
+    ``tokens[k]``."""
+    while (
+        k >= 2
+        and _is_punct(tokens[k - 1], ".")
+        and tokens[k - 2].kind in ("IDENT", "QIDENT")
+    ):
+        k -= 2
+    return k
+
+
+def _operand_start(tokens, k):
+    """Start of the operand ending at ``tokens[k]`` for the postfix
+    rewrites (``::``, ``[i]``, ``AT TIME ZONE``): a literal, a dotted
+    name, or a balanced group with its call name; None otherwise."""
+    tok = tokens[k]
+    if tok.kind in ("NUMBER", "STRING", "QIDENT"):
+        return k
+    if tok.kind == "IDENT":
+        return _dotted_start(tokens, k)
+    if _is_punct(tok, ")"):
+        return _primary_start(tokens, k)
+    return None
+
+
 def _primary_start(tokens, k):
     """Index of the first token of the primary expression whose LAST
     token is ``tokens[k]`` (mirrors translate_pg_casts's backward walk):
@@ -920,33 +1061,21 @@ def _primary_start(tokens, k):
             j -= 1
         return None
     if tok.kind == "IDENT":
-        while (
-            k >= 2
-            and tokens[k - 1].kind == "PUNCT"
-            and tokens[k - 1].value == "."
-            and tokens[k - 2].kind in ("IDENT", "QIDENT")
-        ):
-            k -= 2
-        return k
+        return _dotted_start(tokens, k)
     if tok.kind == "PUNCT" and tok.value == ")":
-        depth = 0
-        j = k
-        while j >= 0:
-            if tokens[j].kind == "PUNCT" and tokens[j].value == ")":
-                depth += 1
-            elif tokens[j].kind == "PUNCT" and tokens[j].value == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            j -= 1
-        if j < 0:
+        j = _open(tokens, k)
+        if j is None:
             return None
-        if j > 0 and tokens[j - 1].kind == "IDENT" and tokens[j - 1].upper not in _OPERAND_BOUNDARY:
-            # infix ``div`` (emitted by the typed-ops pass) is an
-            # OPERATOR when a primary ends right before it — not the
-            # PG div(a, b) function name
-            if not _is_infix_div(tokens, j - 1):
-                j -= 1
+        # infix ``div`` (emitted by the typed-ops pass) is an OPERATOR
+        # when a primary ends right before it — not the PG div(a, b)
+        # function name
+        if (
+            j > 0
+            and tokens[j - 1].kind == "IDENT"
+            and tokens[j - 1].upper not in _OPERAND_BOUNDARY
+            and not _is_infix_div(tokens, j - 1)
+        ):
+            j -= 1  # function call: include the name
         return j
     return None
 
@@ -989,15 +1118,7 @@ def _primary_end(tokens, k):
             return k
         tok = tokens[k]
     if tok.kind == "PUNCT" and tok.value == "(":
-        depth = 0
-        while k < n:
-            if tokens[k].kind == "PUNCT" and tokens[k].value == "(":
-                depth += 1
-            elif tokens[k].kind == "PUNCT" and tokens[k].value == ")":
-                depth -= 1
-                if depth == 0:
-                    return k
-            k += 1
+        return _close(tokens, k)[0]
     return None
 
 
@@ -1069,30 +1190,32 @@ def translate_caret_power(sql: str) -> str:
     primary on each side (PG gives ``^`` higher precedence than ``*``),
     and folding a genuinely unary sign into the left operand (PG binds
     unary minus tighter than ``^``)."""
-    while True:
-        tokens = tokenize(sql)
-        idx = next(
-            (i for i, t in enumerate(tokens) if t.kind == "OP" and t.value == "^"),
-            None,
-        )
-        if idx is None or idx == 0 or idx + 1 >= len(tokens):
-            return sql
-        lstart = _primary_start(tokens, idx - 1)
-        rend = _primary_end(tokens, idx + 1)
-        if lstart is None or rend is None:
-            return sql
-        if lstart > 0 and tokens[lstart - 1].kind == "OP" and tokens[lstart - 1].value in "+-":
-            prev2 = tokens[lstart - 2] if lstart >= 2 else None
-            if (
-                prev2 is None
-                or prev2.kind == "OP"
-                or (prev2.kind == "PUNCT" and prev2.value in "(,")
-                or (prev2.kind == "IDENT" and prev2.upper in _OPERAND_BOUNDARY)
-            ):
-                lstart -= 1
-        lo, hi = tokens[lstart].start, tokens[idx - 1].end
-        rs, re_ = tokens[idx + 1].start, tokens[rend].end
-        sql = f"{sql[:lo]}POWER({sql[lo:hi]}, {sql[rs:re_]}){sql[re_:]}"
+    return _rewrite(sql, [_find_caret_power])[0]
+
+
+def _find_caret_power(sql, tokens):
+    idx = next(
+        (i for i, t in enumerate(tokens) if t.kind == "OP" and t.value == "^"),
+        None,
+    )
+    if idx is None or idx == 0 or idx + 1 >= len(tokens):
+        return None
+    lstart = _primary_start(tokens, idx - 1)
+    rend = _primary_end(tokens, idx + 1)
+    if lstart is None or rend is None:
+        return None
+    if lstart > 0 and tokens[lstart - 1].kind == "OP" and tokens[lstart - 1].value in "+-":
+        prev2 = tokens[lstart - 2] if lstart >= 2 else None
+        if (
+            prev2 is None
+            or prev2.kind == "OP"
+            or (prev2.kind == "PUNCT" and prev2.value in "(,")
+            or (prev2.kind == "IDENT" and prev2.upper in _OPERAND_BOUNDARY)
+        ):
+            lstart -= 1
+    lo, hi = tokens[lstart].start, tokens[idx - 1].end
+    rs, re_ = tokens[idx + 1].start, tokens[rend].end
+    return lo, re_, f"POWER({sql[lo:hi]}, {sql[rs:re_]})"
 
 
 _REGEX_OPS = {
@@ -1233,17 +1356,7 @@ def _strip_outer_parens(text: str) -> str:
     t = text.strip()
     while t.startswith("(") and t.endswith(")"):
         toks = tokenize(t)
-        depth = 0
-        closes_at_end = False
-        for i, tk in enumerate(toks):
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    closes_at_end = i == len(toks) - 1
-                    break
-        if not closes_at_end:
+        if _close(toks, 0)[0] != len(toks) - 1:
             break
         t = t[1:-1].strip()
     return t
@@ -1265,121 +1378,86 @@ def translate_at_time_zone(sql: str) -> str:
     The leftmost (innermost) site rewrites first, so chains resolve
     with PG's left-associative typing. Typed-literal operands
     (``timestamp '...'``) absorb their keyword."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "AT"
-                and i + 2 < len(tokens)
-                and tokens[i + 1].upper == "TIME"
-                and tokens[i + 2].upper == "ZONE"
-                and i > 0
-                and i + 3 < len(tokens)
-            ):
-                at = i
-                break
-        if at is None:
-            return sql
-        # zone operand: the next primary (literal / ident / call /
-        # paren group)
-        z = at + 3
-        if tokens[z].kind in ("STRING", "QIDENT", "NUMBER", "PARAM"):
+    return _rewrite(sql, [_find_at_time_zone])[0]
+
+
+def _find_at_time_zone(sql, tokens):
+    at = None
+    for i, t in enumerate(tokens):
+        if (
+            t.kind == "IDENT"
+            and t.upper == "AT"
+            and i + 2 < len(tokens)
+            and tokens[i + 1].upper == "TIME"
+            and tokens[i + 2].upper == "ZONE"
+            and i > 0
+            and i + 3 < len(tokens)
+        ):
+            at = i
+            break
+    if at is None:
+        return None
+    # zone operand: the next primary (literal / ident / call /
+    # paren group)
+    z = at + 3
+    if tokens[z].kind in ("STRING", "QIDENT", "NUMBER", "PARAM"):
+        zend = z
+    elif tokens[z].kind == "IDENT":
+        zend = _primary_end(tokens, z)
+        if zend is None:
             zend = z
-        elif tokens[z].kind == "IDENT":
-            zend = _primary_end(tokens, z)
-            if zend is None:
-                zend = z
-        elif tokens[z].kind == "PUNCT" and tokens[z].value == "(":
-            depth = 0
-            zend = None
-            for j in range(z, len(tokens)):
-                if tokens[j].kind == "PUNCT" and tokens[j].value == "(":
-                    depth += 1
-                elif tokens[j].kind == "PUNCT" and tokens[j].value == ")":
-                    depth -= 1
-                    if depth == 0:
-                        zend = j
-                        break
-            if zend is None:
-                raise ValueError("unbalanced zone expression after AT TIME ZONE")
-        else:
-            raise ValueError(
-                "AT TIME ZONE needs a zone expression (literal, "
-                "column, or parenthesized expression)"
-            )
-        zone = sql[tokens[z].start : tokens[zend].end]
-        if zend == z and tokens[z].kind == "STRING":
-            # literal zone: translate the PG spelling conventions
-            # (abbreviations, POSIX sign-flips) to Java's; a
-            # non-literal zone passes through and assumes IANA names
-            # (documented in PARITY.md)
-            mapped = _pg_zone_to_spark(tokens[z].value)
-            if "'" in mapped:
-                raise ValueError("zone string cannot contain quotes")
-            zone = f"'{mapped}'"
-        # timestamp operand: the previous primary
-        k = at - 1
-        prev = tokens[k]
-        if prev.kind in ("NUMBER", "STRING", "QIDENT"):
-            start = prev.start
-            # absorb a typed-literal keyword (timestamp '...', etc.)
-            if (
-                prev.kind == "STRING"
-                and k >= 1
-                and tokens[k - 1].kind == "IDENT"
-                and tokens[k - 1].upper in ("TIMESTAMP", "DATE", "TIME")
-            ):
-                start = tokens[k - 1].start
-        elif prev.kind == "IDENT":
-            start = prev.start
-            while (
-                k >= 2
-                and tokens[k - 1].kind == "PUNCT"
-                and tokens[k - 1].value == "."
-                and tokens[k - 2].kind in ("IDENT", "QIDENT")
-            ):
-                k -= 2
-                start = tokens[k].start
-        elif prev.kind == "PUNCT" and prev.value == ")":
-            depth = 0
-            j = k
-            while j >= 0:
-                if tokens[j].kind == "PUNCT" and tokens[j].value == ")":
-                    depth += 1
-                elif tokens[j].kind == "PUNCT" and tokens[j].value == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j -= 1
-            if j < 0:
-                raise ValueError("unbalanced expression before AT TIME ZONE")
-            if (
-                j > 0
-                and tokens[j - 1].kind == "IDENT"
-                and tokens[j - 1].upper not in _OPERAND_BOUNDARY
-                and not _is_infix_div(tokens, j - 1)
-            ):
-                j -= 1
-            start = tokens[j].start
-        else:
-            raise ValueError(
-                "AT TIME ZONE needs a simple timestamp operand "
-                "(parenthesize the expression)"
-            )
-        operand = sql[start : prev.end]
-        # paren-unwrap before the chain check: PG treats
-        # (ts AT TIME ZONE 'a') AT TIME ZONE 'b' identically to the
-        # unparenthesized chain, so a wrapped inner emission must
-        # still be recognized as our timestamptz
-        fn = (
-            "from_utc_timestamp"
-            if _strip_outer_parens(operand).startswith("to_utc_timestamp(")
-            else "to_utc_timestamp"
+    elif _is_punct(tokens[z], "("):
+        zend, _ = _close(tokens, z)
+        if zend is None:
+            raise ValueError("unbalanced zone expression after AT TIME ZONE")
+    else:
+        raise ValueError(
+            "AT TIME ZONE needs a zone expression (literal, "
+            "column, or parenthesized expression)"
         )
-        repl = f"{fn}(({operand}), {zone})"
-        sql = f"{sql[:start]}{repl}{sql[tokens[zend].end:]}"
+    zone = sql[tokens[z].start : tokens[zend].end]
+    if zend == z and tokens[z].kind == "STRING":
+        # literal zone: translate the PG spelling conventions
+        # (abbreviations, POSIX sign-flips) to Java's; a
+        # non-literal zone passes through and assumes IANA names
+        # (documented in PARITY.md)
+        mapped = _pg_zone_to_spark(tokens[z].value)
+        if "'" in mapped:
+            raise ValueError("zone string cannot contain quotes")
+        zone = f"'{mapped}'"
+    # timestamp operand: the previous primary
+    k = at - 1
+    prev = tokens[k]
+    if prev.kind in ("NUMBER", "STRING", "QIDENT", "IDENT") or _is_punct(prev, ")"):
+        j = _operand_start(tokens, k)
+        if j is None:
+            raise ValueError("unbalanced expression before AT TIME ZONE")
+        # absorb a typed-literal keyword (timestamp '...', etc.)
+        if (
+            prev.kind == "STRING"
+            and k >= 1
+            and tokens[k - 1].kind == "IDENT"
+            and tokens[k - 1].upper in ("TIMESTAMP", "DATE", "TIME")
+        ):
+            j = k - 1
+        start = tokens[j].start
+    else:
+        raise ValueError(
+            "AT TIME ZONE needs a simple timestamp operand "
+            "(parenthesize the expression)"
+        )
+    operand = sql[start : prev.end]
+    # paren-unwrap before the chain check: PG treats
+    # (ts AT TIME ZONE 'a') AT TIME ZONE 'b' identically to the
+    # unparenthesized chain, so a wrapped inner emission must
+    # still be recognized as our timestamptz
+    fn = (
+        "from_utc_timestamp"
+        if _strip_outer_parens(operand).startswith("to_utc_timestamp(")
+        else "to_utc_timestamp"
+    )
+    repl = f"{fn}(({operand}), {zone})"
+    return start, tokens[zend].end, repl
 
 
 def translate_unary_math_ops(sql: str) -> str:
@@ -1392,50 +1470,52 @@ def translate_unary_math_ops(sql: str) -> str:
     function so ``|/ -1`` raises like PG. The postfix/prefix
     factorial operators (``!``/``!!``) were REMOVED in PG 14 and stay
     out (use factorial())."""
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        fn = None
-        rstart = None
-        for i, t in enumerate(tokens):
-            if t.kind != "OP" or t.value not in ("@", "|", "||"):
+    return _rewrite(sql, [_find_unary_math_op])[0]
+
+
+def _find_unary_math_op(sql, tokens):
+    hit = None
+    fn = None
+    rstart = None
+    for i, t in enumerate(tokens):
+        if t.kind != "OP" or t.value not in ("@", "|", "||"):
+            continue
+        if t.value in ("|", "||"):
+            if not (
+                i + 1 < len(tokens)
+                and tokens[i + 1].kind == "OP"
+                and tokens[i + 1].value == "/"
+                and tokens[i + 1].start == t.end
+            ):
                 continue
-            if t.value in ("|", "||"):
-                if not (
-                    i + 1 < len(tokens)
-                    and tokens[i + 1].kind == "OP"
-                    and tokens[i + 1].value == "/"
-                    and tokens[i + 1].start == t.end
-                ):
-                    continue
-                operand_at = i + 2
-                fname = "sqrt" if t.value == "|" else "cbrt"
-            else:
-                operand_at = i + 1
-                fname = "abs"
-            # prefix position: expression start, after an operator,
-            # an opening paren, or a comma — never after a completed
-            # operand (there ``@``/``|`` would be a binary use)
-            if i > 0:
-                prev = tokens[i - 1]
-                if prev.kind in ("NUMBER", "STRING", "QIDENT", "PARAM"):
-                    continue
-                if prev.kind == "PUNCT" and prev.value in (")", "]"):
-                    continue
-                if prev.kind == "IDENT" and prev.upper not in _OPERAND_BOUNDARY:
-                    continue
-            if operand_at >= len(tokens):
+            operand_at = i + 2
+            fname = "sqrt" if t.value == "|" else "cbrt"
+        else:
+            operand_at = i + 1
+            fname = "abs"
+        # prefix position: expression start, after an operator,
+        # an opening paren, or a comma — never after a completed
+        # operand (there ``@``/``|`` would be a binary use)
+        if i > 0:
+            prev = tokens[i - 1]
+            if prev.kind in ("NUMBER", "STRING", "QIDENT", "PARAM"):
                 continue
-            hit, fn, rstart = i, fname, operand_at
-            break
-        if hit is None:
-            return sql
-        rend = _primary_end(tokens, rstart)
-        if rend is None:
-            rend = rstart
-        operand = sql[tokens[rstart].start : tokens[rend].end]
-        repl = f"{fn}(({operand}))"
-        sql = f"{sql[:tokens[hit].start]}{repl}{sql[tokens[rend].end:]}"
+            if prev.kind == "PUNCT" and prev.value in (")", "]"):
+                continue
+            if prev.kind == "IDENT" and prev.upper not in _OPERAND_BOUNDARY:
+                continue
+        if operand_at >= len(tokens):
+            continue
+        hit, fn, rstart = i, fname, operand_at
+        break
+    if hit is None:
+        return None
+    rend = _primary_end(tokens, rstart)
+    if rend is None:
+        rend = rstart
+    operand = sql[tokens[rstart].start : tokens[rend].end]
+    repl = f"{fn}(({operand}))"
+    return tokens[hit].start, tokens[rend].end, repl
 
 
 def translate_like_ops(sql: str) -> str:
@@ -1445,22 +1525,22 @@ def translate_like_ops(sql: str) -> str:
     both engines default to backslash escaping. Runs BEFORE
     translate_regex_ops so the ``~`` regex family never sees them
     (round-10; previously an opaque Spark ParseException)."""
-    mapping = {
-        "~~": " LIKE ",
-        "!~~": " NOT LIKE ",
-        "~~*": " ILIKE ",
-        "!~~*": " NOT ILIKE ",
-    }
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for t in tokens:
-            if t.kind == "OP" and t.value in mapping:
-                hit = t
-                break
-        if hit is None:
-            return sql
-        sql = f"{sql[:hit.start]}{mapping[hit.value]}{sql[hit.end:]}"
+    return _rewrite(sql, [_find_like_op])[0]
+
+
+_LIKE_OPS = {
+    "~~": " LIKE ",
+    "!~~": " NOT LIKE ",
+    "~~*": " ILIKE ",
+    "!~~*": " NOT ILIKE ",
+}
+
+
+def _find_like_op(sql, tokens):
+    for t in tokens:
+        if t.kind == "OP" and t.value in _LIKE_OPS:
+            return t.start, t.end, _LIKE_OPS[t.value]
+    return None
 
 
 def translate_json_agg(sql: str) -> str:
@@ -1473,51 +1553,32 @@ def translate_json_agg(sql: str) -> str:
     renders '[1, 2]' with spaces; PARITY). ``json_object_agg`` raises
     a named error: PG keeps DUPLICATE keys in the json text, which no
     Spark map/object emission reproduces."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        fname = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower()
-                in ("json_agg", "jsonb_agg", "json_object_agg",
-                    "jsonb_object_agg")
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                fname = t.value.lower()
-                break
-        if at is None:
-            return sql
-        if fname in ("json_object_agg", "jsonb_object_agg"):
-            raise ValueError(
-                f"{fname}() is outside the translatable subset: PG "
-                "keeps duplicate keys in the aggregated json text, "
-                "which no Spark map emission reproduces; build "
-                "per-row objects and json_agg them, or aggregate "
-                "upstream"
-            )
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError(f"unbalanced {fname}(...)")
-        inner = sql[tokens[at + 2].start : tokens[close - 1].end]
-        # keep a FILTER (WHERE ...) suffix attached to the aggregate
-        end = close
-        if (
-            close + 1 < len(tokens)
-            and tokens[close + 1].kind == "IDENT"
-            and tokens[close + 1].upper == "FILTER"
-            and close + 2 < len(tokens)
-            and tokens[close + 2].value == "("
-        ):
-            fend = _primary_end(tokens, close + 1)
-            if fend is not None:
-                end = fend
-        filt = sql[tokens[close].end : tokens[end].end]
-        repl = f"to_json(array_agg({inner}){filt})"
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[end].end:]}"
+    return _rewrite(sql, [_find_json_agg])[0]
+
+
+def _find_json_agg(sql, tokens):
+    at = _find_call(
+        tokens, ("json_agg", "jsonb_agg", "json_object_agg", "jsonb_object_agg")
+    )
+    if at is None:
+        return None
+    fname = tokens[at].value.lower()
+    if fname in ("json_object_agg", "jsonb_object_agg"):
+        raise ValueError(
+            f"{fname}() is outside the translatable subset: PG "
+            "keeps duplicate keys in the aggregated json text, "
+            "which no Spark map emission reproduces; build "
+            "per-row objects and json_agg them, or aggregate "
+            "upstream"
+        )
+    close, _ = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {fname}(...)")
+    inner = sql[tokens[at + 2].start : tokens[close - 1].end]
+    # keep FILTER (WHERE ...) / OVER suffixes attached to the aggregate
+    end = _suffix_end(tokens, close)
+    suffix = sql[tokens[close].end : tokens[end].end]
+    return tokens[at].start, tokens[end].end, f"to_json(array_agg({inner}){suffix})"
 
 
 # PG 15 named regex functions that share Spark's name and semantics
@@ -1531,50 +1592,31 @@ _NAMED_REGEX_FNS = ("regexp_like", "regexp_count", "regexp_instr",
 
 
 def translate_named_regex_fns(sql: str) -> str:
-    done: set[tuple[int, str]] = set()
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        fname = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower() in _NAMED_REGEX_FNS
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                close = _primary_end(tokens, i)
-                if close is None:
-                    raise ValueError(f"unbalanced {t.value}(...)")
-                args = _args_spans(tokens, i + 2, close - 1)
-                if len(args) != 2:
-                    raise ValueError(
-                        f"{t.value.lower()} translates only the "
-                        "2-argument (string, pattern) form; PG's "
-                        "start/N/flags/subexpr arguments have no "
-                        "Spark twin (fold flags into the pattern, "
-                        "e.g. '(?i)...')"
-                    )
-                s0, e0 = args[1]
-                if (
-                    s0 == e0
-                    and tokens[s0].kind == "STRING"
-                    and "[:" in tokens[s0].value
-                    and (tokens[s0].start, tokens[s0].value) not in done
-                ):
-                    at = s0
-                    fname = t.value
-                    break
-        if at is None:
-            return sql
-        converted = _translate_posix_classes(tokens[at].value)
-        if converted == tokens[at].value:
-            # '[:' present but not a POSIX class atom — nothing to
-            # splice; remember the site so the rescan terminates
-            done.add((tokens[at].start, tokens[at].value))
+    return _rewrite(sql, [_find_named_regex_fn])[0]
+
+
+def _find_named_regex_fn(sql, tokens):
+    for i in _calls(tokens, _NAMED_REGEX_FNS):
+        close, args = _close(tokens, i + 1)
+        if close is None:
+            raise ValueError(f"unbalanced {tokens[i].value}(...)")
+        if len(args) != 2:
+            raise ValueError(
+                f"{tokens[i].value.lower()} translates only the "
+                "2-argument (string, pattern) form; PG's "
+                "start/N/flags/subexpr arguments have no "
+                "Spark twin (fold flags into the pattern, "
+                "e.g. '(?i)...')"
+            )
+        s0, e0 = args[1]
+        pat = tokens[s0]
+        if s0 != e0 or pat.kind != "STRING" or "[:" not in pat.value:
             continue
-        lit = converted.replace("'", "''")
-        sql = f"{sql[:tokens[at].start]}'{lit}'{sql[tokens[at].end:]}"
+        converted = _translate_posix_classes(pat.value)
+        # '[:' that is not a POSIX class atom leaves nothing to splice
+        if converted != pat.value:
+            return pat.start, pat.end, "'" + converted.replace("'", "''") + "'"
+    return None
 
 
 def translate_regex_ops(sql: str) -> str:
@@ -1585,46 +1627,48 @@ def translate_regex_ops(sql: str) -> str:
     shares — left alone. Pattern syntax is Java regex on Spark vs
     POSIX ERE on PG: common atoms agree; POSIX ``[[:alpha:]]`` classes
     do not exist in Java and fail loudly at execution."""
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for i, t in enumerate(tokens):
-            if t.kind == "OP" and t.value in _REGEX_OPS and 0 < i < len(tokens) - 1:
-                prev = tokens[i - 1]
-                is_binary = prev.kind in ("IDENT", "QIDENT", "STRING", "NUMBER", "PARAM") or (
-                    prev.kind == "PUNCT" and prev.value == ")"
-                )
-                if t.value == "~" and not is_binary:
-                    continue  # unary bitwise NOT
-                if prev.kind == "IDENT" and prev.upper in _OPERAND_BOUNDARY:
-                    continue
-                hit = i
-                break
-        if hit is None:
-            return sql
-        ci, neg = _REGEX_OPS[tokens[hit].value]
-        lstart = _primary_start(tokens, hit - 1)
-        rend = _primary_end(tokens, hit + 1)
-        if lstart is None or rend is None:
-            return sql
-        # `a || b ~ 'p'` means `(a || b) ~ 'p'` — absorb a left-side
-        # concatenation chain into the operand
-        lstart = _absorb_concat_left(tokens, lstart)
-        left = sql[tokens[lstart].start : tokens[hit - 1].end]
-        if rend == hit + 1 and tokens[rend].kind == "STRING" and "[:" in tokens[rend].value:
-            # literal pattern: splice POSIX classes to Java \p forms
-            lit = _translate_posix_classes(tokens[rend].value).replace("'", "''")
-            right = f"'{lit}'"
-        else:
-            right = sql[tokens[hit + 1].start : tokens[rend].end]
-        if ci:
-            rx = f"CONCAT('{ci}', {right})"
-        else:
-            rx = right
-        repl = f"({left} RLIKE {rx})"
-        if neg:
-            repl = f"(NOT {repl})"
-        sql = f"{sql[:tokens[lstart].start]}{repl}{sql[tokens[rend].end:]}"
+    return _rewrite(sql, [_find_regex_op])[0]
+
+
+def _find_regex_op(sql, tokens):
+    hit = None
+    for i, t in enumerate(tokens):
+        if t.kind == "OP" and t.value in _REGEX_OPS and 0 < i < len(tokens) - 1:
+            prev = tokens[i - 1]
+            is_binary = prev.kind in ("IDENT", "QIDENT", "STRING", "NUMBER", "PARAM") or (
+                prev.kind == "PUNCT" and prev.value == ")"
+            )
+            if t.value == "~" and not is_binary:
+                continue  # unary bitwise NOT
+            if prev.kind == "IDENT" and prev.upper in _OPERAND_BOUNDARY:
+                continue
+            hit = i
+            break
+    if hit is None:
+        return None
+    ci, neg = _REGEX_OPS[tokens[hit].value]
+    lstart = _primary_start(tokens, hit - 1)
+    rend = _primary_end(tokens, hit + 1)
+    if lstart is None or rend is None:
+        return None
+    # `a || b ~ 'p'` means `(a || b) ~ 'p'` — absorb a left-side
+    # concatenation chain into the operand
+    lstart = _absorb_concat_left(tokens, lstart)
+    left = sql[tokens[lstart].start : tokens[hit - 1].end]
+    if rend == hit + 1 and tokens[rend].kind == "STRING" and "[:" in tokens[rend].value:
+        # literal pattern: splice POSIX classes to Java \p forms
+        lit = _translate_posix_classes(tokens[rend].value).replace("'", "''")
+        right = f"'{lit}'"
+    else:
+        right = sql[tokens[hit + 1].start : tokens[rend].end]
+    if ci:
+        rx = f"CONCAT('{ci}', {right})"
+    else:
+        rx = right
+    repl = f"({left} RLIKE {rx})"
+    if neg:
+        repl = f"(NOT {repl})"
+    return tokens[lstart].start, tokens[rend].end, repl
 
 
 def _operand_scan_end(tokens, k):
@@ -1633,25 +1677,14 @@ def _operand_scan_end(tokens, k):
     a top-level comma, or an unbalanced close paren. Binary operators
     continue the expression (PG gives BETWEEN lower precedence than
     arithmetic)."""
-    n = len(tokens)
-    depth = 0
     last = None
-    j = k
-    while j < n:
+    for j, end in _top_level(tokens, k, len(tokens) - 1):
         t = tokens[j]
-        if t.kind == "PUNCT" and t.value == "(":
-            depth += 1
-        elif t.kind == "PUNCT" and t.value == ")":
-            if depth == 0:
-                break
-            depth -= 1
-        elif depth == 0:
-            if t.kind == "PUNCT" and t.value in (",", ";"):
-                break
-            if t.kind == "IDENT" and t.upper in _OPERAND_BOUNDARY:
-                break
-        last = j
-        j += 1
+        if (t.kind == "PUNCT" and t.value in (")", ",", ";")) or (
+            t.kind == "IDENT" and t.upper in _OPERAND_BOUNDARY
+        ):
+            break
+        last = end
     return last
 
 
@@ -1668,98 +1701,65 @@ def translate_array_subscript(sql: str) -> str:
     consumed. PG slice syntax (``a[1:3]``) raises a named error;
     non-default lower bounds ('[0:2]={...}' literals) are outside the
     subset (PARITY)."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if not (t.kind == "PUNCT" and t.value == "["):
-                continue
-            if i == 0:
-                continue
-            prev = tokens[i - 1]
-            # a subscript follows a completed primary; ARRAY[ is the
-            # constructor spelling (consumed earlier, but guard
-            # anyway)
-            if prev.kind == "IDENT" and prev.upper == "ARRAY":
-                continue
-            if not (
-                prev.kind in ("IDENT", "QIDENT")
-                or (prev.kind == "PUNCT" and prev.value in (")", "]"))
-            ):
-                continue
-            at = i
-            break
-        if at is None:
-            return sql
-        depth = 0
-        close = None
-        colon = None
-        for j in range(at, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "[":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == "]":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-            elif depth == 1 and tk.value == ":" and tk.kind in ("OP", "PUNCT"):
-                colon = j
-        if close is None:
-            raise ValueError("unbalanced array subscript")
-        if colon is not None:
-            raise ValueError(
-                "array slice syntax (a[lo:hi]) is outside the "
-                "translatable subset; subscript single elements or "
-                "use slice()-style arithmetic instead"
-            )
-        if close == at + 1:
-            raise ValueError("empty array subscript")
-        idx = sql[tokens[at + 1].start : tokens[close - 1].end]
-        # operand: walk back over the previous primary
-        k = at - 1
-        prev = tokens[k]
-        if prev.kind in ("IDENT", "QIDENT"):
-            start = prev.start
-            while (
-                k >= 2
-                and tokens[k - 1].kind == "PUNCT"
-                and tokens[k - 1].value == "."
-                and tokens[k - 2].kind in ("IDENT", "QIDENT")
-            ):
-                k -= 2
-                start = tokens[k].start
-        else:  # ')' or ']' — balanced group (function call, paren,
-            # or a preceding subscript we already rewrote)
-            opener = "(" if prev.value == ")" else "["
-            closer = prev.value
-            depth = 0
-            j = k
-            while j >= 0:
-                if tokens[j].kind == "PUNCT" and tokens[j].value == closer:
-                    depth += 1
-                elif tokens[j].kind == "PUNCT" and tokens[j].value == opener:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j -= 1
-            if j < 0:
-                raise ValueError("unbalanced expression before subscript")
-            if (
-                closer == ")"
-                and j > 0
-                and tokens[j - 1].kind == "IDENT"
-                and tokens[j - 1].upper not in _OPERAND_BOUNDARY
-                and not _is_infix_div(tokens, j - 1)
-            ):
-                j -= 1  # function call: include the name
-            start = tokens[j].start
-        operand = sql[start : prev.end]
-        repl = (
-            f"(CASE WHEN ({idx}) < 1 THEN NULL ELSE "
-            f"try_element_at(({operand}), CAST(({idx}) AS INT)) END)"
+    return _rewrite(sql, [_find_array_subscript])[0]
+
+
+def _find_array_subscript(sql, tokens):
+    at = None
+    for i, t in enumerate(tokens):
+        if not (t.kind == "PUNCT" and t.value == "["):
+            continue
+        if i == 0:
+            continue
+        prev = tokens[i - 1]
+        # a subscript follows a completed primary; ARRAY[ is the
+        # constructor spelling (consumed earlier, but guard
+        # anyway)
+        if prev.kind == "IDENT" and prev.upper == "ARRAY":
+            continue
+        if not (
+            prev.kind in ("IDENT", "QIDENT")
+            or (prev.kind == "PUNCT" and prev.value in (")", "]"))
+        ):
+            continue
+        at = i
+        break
+    if at is None:
+        return None
+    close, _ = _close(tokens, at)
+    if close is None:
+        raise ValueError("unbalanced array subscript")
+    if any(
+        tokens[j].value == ":" and tokens[j].kind in ("OP", "PUNCT")
+        for j, _ in _top_level(tokens, at + 1, close - 1)
+    ):
+        raise ValueError(
+            "array slice syntax (a[lo:hi]) is outside the "
+            "translatable subset; subscript single elements or "
+            "use slice()-style arithmetic instead"
         )
-        sql = f"{sql[:start]}{repl}{sql[tokens[close].end:]}"
+    if close == at + 1:
+        raise ValueError("empty array subscript")
+    idx = sql[tokens[at + 1].start : tokens[close - 1].end]
+    # operand: walk back over the previous primary
+    prev = tokens[at - 1]
+    # ')' or ']': a balanced group (function call, paren, or a
+    # preceding subscript we already rewrote)
+    if _is_punct(prev, "]"):
+        j = _open(tokens, at - 1)
+    elif _is_punct(prev, ")"):
+        j = _primary_start(tokens, at - 1)
+    else:
+        j = _dotted_start(tokens, at - 1)
+    if j is None:
+        raise ValueError("unbalanced expression before subscript")
+    start = tokens[j].start
+    operand = sql[start : prev.end]
+    repl = (
+        f"(CASE WHEN ({idx}) < 1 THEN NULL ELSE "
+        f"try_element_at(({operand}), CAST(({idx}) AS INT)) END)"
+    )
+    return start, tokens[close].end, repl
 
 
 def translate_date_part(sql: str) -> str:
@@ -1770,54 +1770,33 @@ def translate_date_part(sql: str) -> str:
     'dow' — a silent off-by-one — and reject 'epoch' on dates. The
     field must be a string literal (PG allows dynamic fields; a
     dynamic field raises loudly here)."""
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "DATE_PART"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                hit = i
-                break
-        if hit is None:
-            return sql
-        i = hit
-        field_tok = tokens[i + 2]
-        if field_tok.kind != "STRING":
-            raise ValueError(
-                "date_part requires a string-literal field "
-                "(dynamic fields are not translatable)"
-            )
-        if not (
-            i + 3 < len(tokens)
-            and tokens[i + 3].kind == "PUNCT"
-            and tokens[i + 3].value == ","
-        ):
-            raise ValueError("date_part takes (field, source)")
-        depth = 0
-        close = None
-        for j in range(i + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        if close is None:
-            raise ValueError("unbalanced date_part(...)")
-        field = field_tok.value.strip().upper()
-        if not field.isalpha():
-            raise ValueError(f"date_part field {field_tok.value!r} not translatable")
-        src = sql[tokens[i + 4].start : tokens[close - 1].end]
-        sql = (
-            f"{sql[:tokens[i].start]}EXTRACT({field} FROM {src})"
-            f"{sql[tokens[close].end:]}"
+    return _rewrite(sql, [_find_date_part])[0]
+
+
+def _find_date_part(sql, tokens):
+    i = _find_call(tokens, ("date_part",))
+    if i is None:
+        return None
+    field_tok = tokens[i + 2]
+    if field_tok.kind != "STRING":
+        raise ValueError(
+            "date_part requires a string-literal field "
+            "(dynamic fields are not translatable)"
         )
+    if not (
+        i + 3 < len(tokens)
+        and tokens[i + 3].kind == "PUNCT"
+        and tokens[i + 3].value == ","
+    ):
+        raise ValueError("date_part takes (field, source)")
+    close, _ = _close(tokens, i + 1)
+    if close is None:
+        raise ValueError("unbalanced date_part(...)")
+    field = field_tok.value.strip().upper()
+    if not field.isalpha():
+        raise ValueError(f"date_part field {field_tok.value!r} not translatable")
+    src = sql[tokens[i + 4].start : tokens[close - 1].end]
+    return tokens[i].start, tokens[close].end, f"EXTRACT({field} FROM {src})"
 
 
 _JSONB_MERGE_CMP = (
@@ -1844,77 +1823,79 @@ def translate_jsonb_concat(sql: str) -> str:
     concatenation (or not at all), not a merge. Runs before
     translate_pg_casts (the ::jsonb markers must still be visible);
     left-assoc chains reduce pairwise."""
+    return _rewrite(sql, [_find_jsonb_concat])[0]
 
-    def _final_cast(tokens, type_idx):
-        """Lowercased final type name when ``tokens[type_idx]`` ends a
-        ``::type`` suffix, else None."""
-        if (
-            type_idx >= 2
-            and tokens[type_idx].kind == "IDENT"
-            and tokens[type_idx - 1].kind == "OP"
-            and tokens[type_idx - 1].value == "::"
-        ):
-            return tokens[type_idx].value.lower()
+
+def _final_cast(tokens, type_idx):
+    """Lowercased final type name when ``tokens[type_idx]`` ends a
+    ``::type`` suffix, else None."""
+    if (
+        type_idx >= 2
+        and tokens[type_idx].kind == "IDENT"
+        and tokens[type_idx - 1].kind == "OP"
+        and tokens[type_idx - 1].value == "::"
+    ):
+        return tokens[type_idx].value.lower()
+    return None
+
+
+def _find_jsonb_concat(sql, tokens):
+    hit = None
+    for i, t in enumerate(tokens):
+        if not (t.kind == "OP" and t.value == "||") or i == 0 or i + 1 >= len(tokens):
+            continue
+        # right operand: primary + full ::cast chain; the FINAL
+        # type in the chain is what PG's operator resolution sees
+        rend = _primary_end(tokens, i + 1)
+        if rend is None:
+            continue
+        r_cast_end = _absorb_cast_right(tokens, rend)
+        r_final = _final_cast(tokens, r_cast_end) if r_cast_end > rend else None
+        # left operand: final type ident sits immediately left of ||
+        l_final = _final_cast(tokens, i - 1)
+        if "jsonb" not in (l_final, r_final):
+            continue
+        hit = (i, rend, r_cast_end, l_final, r_final)
+        break
+    if hit is None:
         return None
-
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for i, t in enumerate(tokens):
-            if not (t.kind == "OP" and t.value == "||") or i == 0 or i + 1 >= len(tokens):
-                continue
-            # right operand: primary + full ::cast chain; the FINAL
-            # type in the chain is what PG's operator resolution sees
-            rend = _primary_end(tokens, i + 1)
-            if rend is None:
-                continue
-            r_cast_end = _absorb_cast_right(tokens, rend)
-            r_final = _final_cast(tokens, r_cast_end) if r_cast_end > rend else None
-            # left operand: final type ident sits immediately left of ||
-            l_final = _final_cast(tokens, i - 1)
-            if "jsonb" not in (l_final, r_final):
-                continue
-            hit = (i, rend, r_cast_end, l_final, r_final)
-            break
-        if hit is None:
-            return sql
-        i, rend, r_cast_end, l_final, r_final = hit
-        for side, final in (("left", l_final), ("right", r_final)):
-            if final is not None and final != "jsonb":
-                raise ValueError(
-                    f"jsonb || with a non-jsonb ::{final} cast on the "
-                    f"{side} side is outside the translatable subset "
-                    "(PG resolves it as text concatenation, not a merge)"
-                )
-        # strip the final ::jsonb (consumed by the merge); inner chain
-        # casts stay in the operand text for translate_pg_casts
-        l_prim_end = i - 3 if l_final == "jsonb" else i - 1
-        lstart = _primary_start(tokens, l_prim_end)
-        if lstart is None:
-            raise ValueError("cannot resolve the left operand of jsonb ||")
-        lstart = _absorb_cast_left(tokens, lstart)
-        lhs = sql[tokens[lstart].start : tokens[l_prim_end].end]
-        r_prim_end = r_cast_end - 2 if r_final == "jsonb" else rend
-        rhs = sql[tokens[i + 1].start : tokens[r_prim_end].end]
-        r_end_tok = r_cast_end if r_final == "jsonb" else rend
-        mx = f"from_json({lhs}, 'map<string, variant>')"
-        my = f"from_json({rhs}, 'map<string, variant>')"
-        merged = (
-            f"to_json(map_from_entries(array_sort(concat("
-            f"filter(map_entries({mx}), "
-            f"__gfw_e -> NOT array_contains(map_keys({my}), __gfw_e.key)), "
-            f"map_entries({my})), {_JSONB_MERGE_CMP})))"
-        )
-        # object guard via the map parse (NULL for non-objects) — NOT
-        # Spark's json_object_keys spelling, which the round-9 SRF pass
-        # owns for PG's set-returning json_object_keys
-        repl = (
-            f"(CASE WHEN {mx} IS NOT NULL "
-            f"AND {my} IS NOT NULL THEN {merged} "
-            f"ELSE raise_error('jsonb || translates only object || object "
-            f"(array/scalar concatenation is outside the subset)') END)"
-        )
-        sql = f"{sql[:tokens[lstart].start]}{repl}{sql[tokens[r_end_tok].end:]}"
+    i, rend, r_cast_end, l_final, r_final = hit
+    for side, final in (("left", l_final), ("right", r_final)):
+        if final is not None and final != "jsonb":
+            raise ValueError(
+                f"jsonb || with a non-jsonb ::{final} cast on the "
+                f"{side} side is outside the translatable subset "
+                "(PG resolves it as text concatenation, not a merge)"
+            )
+    # strip the final ::jsonb (consumed by the merge); inner chain
+    # casts stay in the operand text for translate_pg_casts
+    l_prim_end = i - 3 if l_final == "jsonb" else i - 1
+    lstart = _primary_start(tokens, l_prim_end)
+    if lstart is None:
+        raise ValueError("cannot resolve the left operand of jsonb ||")
+    lstart = _absorb_cast_left(tokens, lstart)
+    lhs = sql[tokens[lstart].start : tokens[l_prim_end].end]
+    r_prim_end = r_cast_end - 2 if r_final == "jsonb" else rend
+    rhs = sql[tokens[i + 1].start : tokens[r_prim_end].end]
+    r_end_tok = r_cast_end if r_final == "jsonb" else rend
+    mx = f"from_json({lhs}, 'map<string, variant>')"
+    my = f"from_json({rhs}, 'map<string, variant>')"
+    merged = (
+        f"to_json(map_from_entries(array_sort(concat("
+        f"filter(map_entries({mx}), "
+        f"__gfw_e -> NOT array_contains(map_keys({my}), __gfw_e.key)), "
+        f"map_entries({my})), {_JSONB_MERGE_CMP})))"
+    )
+    # object guard via the map parse (NULL for non-objects) — NOT
+    # Spark's json_object_keys spelling, which the round-9 SRF pass
+    # owns for PG's set-returning json_object_keys
+    repl = (
+        f"(CASE WHEN {mx} IS NOT NULL "
+        f"AND {my} IS NOT NULL THEN {merged} "
+        f"ELSE raise_error('jsonb || translates only object || object "
+        f"(array/scalar concatenation is outside the subset)') END)"
+    )
+    return tokens[lstart].start, tokens[r_end_tok].end, repl
 
 
 def translate_between_symmetric(sql: str) -> str:
@@ -1922,59 +1903,53 @@ def translate_between_symmetric(sql: str) -> str:
     Spark has no SYMMETRIC. Rewrite to
     ``BETWEEN least(a, b) AND greatest(a, b)``. The matching AND is
     found at paren depth 0, skipping ANDs that close nested BETWEENs."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "BETWEEN"
-                and i + 2 < len(tokens)
-                and tokens[i + 1].kind == "IDENT"
-                and tokens[i + 1].upper == "SYMMETRIC"
-            ):
-                at = i
+    return _rewrite(sql, [_find_between_symmetric])[0]
+
+
+def _find_between_symmetric(sql, tokens):
+    at = None
+    for i, t in enumerate(tokens):
+        if (
+            t.kind == "IDENT"
+            and t.upper == "BETWEEN"
+            and i + 2 < len(tokens)
+            and tokens[i + 1].kind == "IDENT"
+            and tokens[i + 1].upper == "SYMMETRIC"
+        ):
+            at = i
+            break
+    if at is None:
+        return None
+    # BETWEEN…AND pairing: the first top-level AND not owned by a
+    # nested BETWEEN
+    pending = 0
+    and_idx = None
+    for j, _ in _top_level(tokens, at + 2, len(tokens) - 1):
+        if _is_kw(tokens[j], "BETWEEN"):
+            pending += 1
+        elif _is_kw(tokens[j], "AND"):
+            if not pending:
+                and_idx = j
                 break
-        if at is None:
-            return sql
-        j = at + 2
-        depth = 0
-        pending = 0
-        and_idx = None
-        while j < len(tokens):
-            t = tokens[j]
-            if t.kind == "PUNCT" and t.value == "(":
-                depth += 1
-            elif t.kind == "PUNCT" and t.value == ")":
-                depth -= 1
-            elif depth == 0 and t.kind == "IDENT":
-                if t.upper == "BETWEEN":
-                    pending += 1
-                elif t.upper == "AND":
-                    if pending:
-                        pending -= 1
-                    else:
-                        and_idx = j
-                        break
-            j += 1
-        if and_idx is None or and_idx == at + 2:
-            return sql
-        hi_end = _operand_scan_end(tokens, and_idx + 1)
-        if hi_end is None:
-            return sql
-        lo = sql[tokens[at + 2].start : tokens[and_idx - 1].end]
-        hi = sql[tokens[and_idx + 1].start : tokens[hi_end].end]
-        # NULL-bound parity: PG's expansion yields NULL when either
-        # bound is NULL, but least/greatest SKIP NULLs — guard each
-        # rewritten bound so a NULL bound stays NULL (and the BETWEEN
-        # stays NULL), instead of silently comparing against the other
-        # bound alone
-        null_guard = f"WHEN ({lo}) IS NULL OR ({hi}) IS NULL THEN NULL"
-        repl = (
-            f"BETWEEN CASE {null_guard} ELSE least({lo}, {hi}) END "
-            f"AND CASE {null_guard} ELSE greatest({lo}, {hi}) END"
-        )
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[hi_end].end:]}"
+            pending -= 1
+    if and_idx is None or and_idx == at + 2:
+        return None
+    hi_end = _operand_scan_end(tokens, and_idx + 1)
+    if hi_end is None:
+        return None
+    lo = sql[tokens[at + 2].start : tokens[and_idx - 1].end]
+    hi = sql[tokens[and_idx + 1].start : tokens[hi_end].end]
+    # NULL-bound parity: PG's expansion yields NULL when either
+    # bound is NULL, but least/greatest SKIP NULLs — guard each
+    # rewritten bound so a NULL bound stays NULL (and the BETWEEN
+    # stays NULL), instead of silently comparing against the other
+    # bound alone
+    null_guard = f"WHEN ({lo}) IS NULL OR ({hi}) IS NULL THEN NULL"
+    repl = (
+        f"BETWEEN CASE {null_guard} ELSE least({lo}, {hi}) END "
+        f"AND CASE {null_guard} ELSE greatest({lo}, {hi}) END"
+    )
+    return tokens[at].start, tokens[hi_end].end, repl
 
 
 def _age_sql(t1: str, t2: str) -> str:
@@ -2072,82 +2047,70 @@ def _rewrite_make_interval(sql: str) -> str:
     from translate_extract's epoch arm (extract(epoch FROM
     make_interval(...)) must classify BEFORE the epoch pass, which
     runs earlier in the pipeline)."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower() == "make_interval"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                break
-        if at is None:
-            return sql
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError("unbalanced make_interval(...)")
-        args = (
-            _args_spans(tokens, at + 2, close - 1)
-            if close - 1 >= at + 2
-            else []
+    return _rewrite(sql, [_find_make_interval])[0]
+
+
+def _find_make_interval(sql, tokens):
+    at = _find_call(tokens, ("make_interval",))
+    if at is None:
+        return None
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError("unbalanced make_interval(...)")
+    slots = ["0"] * 7
+    order = ["years", "months", "weeks", "days", "hours", "mins", "secs"]
+    named_seen = False
+    for pos, (s0, e0) in enumerate(args):
+        is_named = (
+            tokens[s0].kind == "IDENT"
+            and s0 + 2 <= e0
+            and tokens[s0 + 1].kind == "OP"
+            and tokens[s0 + 1].value == "="
+            and tokens[s0 + 2].kind == "OP"
+            and tokens[s0 + 2].value == ">"
         )
-        slots = ["0"] * 7
-        order = ["years", "months", "weeks", "days", "hours", "mins", "secs"]
-        named_seen = False
-        for pos, (s0, e0) in enumerate(args):
-            is_named = (
-                tokens[s0].kind == "IDENT"
-                and s0 + 2 <= e0
-                and tokens[s0 + 1].kind == "OP"
-                and tokens[s0 + 1].value == "="
-                and tokens[s0 + 2].kind == "OP"
-                and tokens[s0 + 2].value == ">"
-            )
-            if is_named:
-                named_seen = True
-                if tokens[s0].value.lower() not in order:
-                    raise ValueError(
-                        "make_interval: unknown named argument "
-                        f"'{tokens[s0].value}' (expected one of "
-                        f"{', '.join(order)})"
-                    )
-                slots[order.index(tokens[s0].value.lower())] = sql[
-                    tokens[s0 + 3].start : tokens[e0].end
-                ]
-            else:
-                if named_seen or pos >= 7:
-                    raise ValueError(
-                        "make_interval: positional arguments after "
-                        "named ones (or more than 7) are outside the "
-                        "translatable subset"
-                    )
-                slots[pos] = sql[tokens[s0].start : tokens[e0].end]
-        dt_zero = slots[0].strip() == "0" and slots[1].strip() == "0"
-        ym_only = all(s.strip() == "0" for s in slots[2:])
-        if dt_zero:
-            days = (
-                slots[3]
-                if slots[2].strip() == "0"
-                else f"({slots[2]}) * 7 + ({slots[3]})"
-            )
-            repl = (
-                f"make_dt_interval({days}, {slots[4]}, {slots[5]}, "
-                f"{slots[6]})"
-            )
-        elif ym_only:
-            repl = f"make_ym_interval({slots[0]}, {slots[1]})"
+        if is_named:
+            named_seen = True
+            if tokens[s0].value.lower() not in order:
+                raise ValueError(
+                    "make_interval: unknown named argument "
+                    f"'{tokens[s0].value}' (expected one of "
+                    f"{', '.join(order)})"
+                )
+            slots[order.index(tokens[s0].value.lower())] = sql[
+                tokens[s0 + 3].start : tokens[e0].end
+            ]
         else:
-            raise ValueError(
-                "make_interval mixing year/month slots with day-time "
-                "slots is outside the translatable subset (the two "
-                "ANSI interval families cannot combine in one value); "
-                "add them to the consumer separately, e.g. (ts + "
-                "make_interval(years => 1)) + make_interval(days => 2)"
-            )
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
+            if named_seen or pos >= 7:
+                raise ValueError(
+                    "make_interval: positional arguments after "
+                    "named ones (or more than 7) are outside the "
+                    "translatable subset"
+                )
+            slots[pos] = sql[tokens[s0].start : tokens[e0].end]
+    dt_zero = slots[0].strip() == "0" and slots[1].strip() == "0"
+    ym_only = all(s.strip() == "0" for s in slots[2:])
+    if dt_zero:
+        days = (
+            slots[3]
+            if slots[2].strip() == "0"
+            else f"({slots[2]}) * 7 + ({slots[3]})"
+        )
+        repl = (
+            f"make_dt_interval({days}, {slots[4]}, {slots[5]}, "
+            f"{slots[6]})"
+        )
+    elif ym_only:
+        repl = f"make_ym_interval({slots[0]}, {slots[1]})"
+    else:
+        raise ValueError(
+            "make_interval mixing year/month slots with day-time "
+            "slots is outside the translatable subset (the two "
+            "ANSI interval families cannot combine in one value); "
+            "add them to the consumer separately, e.g. (ts + "
+            "make_interval(years => 1)) + make_interval(days => 2)"
+        )
+    return tokens[at].start, tokens[close].end, repl
 
 
 def translate_extract(sql: str) -> str:
@@ -2161,103 +2124,74 @@ def translate_extract(sql: str) -> str:
       session runs UTC, so this is PG's UTC-midnight epoch for dates
       and keeps fractional seconds for timestamps
     """
-    while True:
-        tokens = tokenize(sql)
-        changed = False
-        for i, t in enumerate(tokens):
-            if not (
-                t.kind == "IDENT"
-                and t.upper == "EXTRACT"
-                and i + 2 < len(tokens)
-                and tokens[i + 1].kind == "PUNCT"
-                and tokens[i + 1].value == "("
-            ):
-                continue
-            f = tokens[i + 2]
-            field = f.upper if f.kind == "IDENT" else (
-                f.value.upper() if f.kind == "STRING" else None
+    return _rewrite(sql, [_find_extract])[0]
+
+
+def _find_extract(sql, tokens):
+    for i in _calls(tokens, ("extract",)):
+        if i + 2 >= len(tokens):
+            continue
+        t, f = tokens[i], tokens[i + 2]
+        field = f.upper if f.kind == "IDENT" else (
+            f.value.upper() if f.kind == "STRING" else None
+        )
+        if field == "ISODOW":
+            return f.start, f.end, "DAYOFWEEK_ISO"
+        if field == "ISOYEAR":
+            return f.start, f.end, "YEAROFWEEK"
+        if field not in ("DOW", "EPOCH", "CENTURY", "DECADE", "MILLENNIUM"):
+            continue
+        close, _ = _close(tokens, i + 1)
+        if close is None:
+            return None
+        end = tokens[close].end
+        if field == "DOW":
+            inner = f"{sql[t.start:f.start]}DAYOFWEEK{sql[f.end:end]}"
+            return t.start, end, f"({inner} - 1)"
+        if field in ("CENTURY", "DECADE", "MILLENNIUM"):
+            # PG (CE dates): decade = year DIV 10; century /
+            # millennium count from year 1, so 2000 is the
+            # 20th century and 2001 opens the 21st
+            year = f"{sql[t.start:f.start]}YEAR{sql[f.end:end]}"
+            arith = {
+                "DECADE": f"({year} DIV 10)",
+                "CENTURY": f"(({year} + 99) DIV 100)",
+                "MILLENNIUM": f"(({year} + 999) DIV 1000)",
+            }[field]
+            return t.start, end, arith
+        from_idx = i + 3
+        if not (from_idx < close and _is_kw(tokens[from_idx], "FROM")):
+            return None
+        expr = sql[tokens[from_idx].end : tokens[close].start].strip()
+        # interval operands (round-10/11): the typed
+        # interval constructors — which '...'::interval and
+        # make_interval now produce — cast to DECIMAL as
+        # exact total seconds; PG's epoch-of-interval
+        # (interval_part, DTK_EPOCH) counts each WHOLE year
+        # as 365.25 days and only the residual months at 30
+        # days, with C-style truncating division/modulo for
+        # negatives (DuckDB's native epoch agrees:
+        # '-14 months' → -36741600). Spark's DIV / % are
+        # also truncate-toward-zero / dividend-signed, so
+        # the arithmetic maps 1:1. The timestamp cast would
+        # fail on intervals with an opaque analysis error.
+        if expr.startswith("make_interval("):
+            # the make_interval pass runs LATER in the
+            # pipeline; classify it now so the epoch arm
+            # dispatches on the typed constructor
+            expr = _rewrite_make_interval(expr)
+        if expr.startswith("make_dt_interval("):
+            repl = f"CAST(CAST(({expr}) AS DECIMAL(28,6)) AS DOUBLE)"
+        elif expr.startswith("make_ym_interval("):
+            months = f"CAST(({expr}) AS INT)"
+            repl = (
+                f"CAST(({months} DIV 12) * 31557600.0"
+                f" + ({months} % 12) * 2592000.0 AS DOUBLE)"
             )
-            if field == "ISODOW":
-                sql = f"{sql[:f.start]}DAYOFWEEK_ISO{sql[f.end:]}"
-                changed = True
-                break
-            if field == "ISOYEAR":
-                sql = f"{sql[:f.start]}YEAROFWEEK{sql[f.end:]}"
-                changed = True
-                break
-            if field in ("DOW", "EPOCH", "CENTURY", "DECADE", "MILLENNIUM"):
-                depth = 0
-                close = None
-                for j in range(i + 1, len(tokens)):
-                    if tokens[j].kind == "PUNCT" and tokens[j].value == "(":
-                        depth += 1
-                    elif tokens[j].kind == "PUNCT" and tokens[j].value == ")":
-                        depth -= 1
-                        if depth == 0:
-                            close = j
-                            break
-                if close is None:
-                    return sql
-                if field == "DOW":
-                    inner = f"{sql[t.start:f.start]}DAYOFWEEK{sql[f.end:tokens[close].end]}"
-                    sql = f"{sql[:t.start]}({inner} - 1){sql[tokens[close].end:]}"
-                elif field in ("CENTURY", "DECADE", "MILLENNIUM"):
-                    # PG (CE dates): decade = year DIV 10; century /
-                    # millennium count from year 1, so 2000 is the
-                    # 20th century and 2001 opens the 21st
-                    year = f"{sql[t.start:f.start]}YEAR{sql[f.end:tokens[close].end]}"
-                    arith = {
-                        "DECADE": f"({year} DIV 10)",
-                        "CENTURY": f"(({year} + 99) DIV 100)",
-                        "MILLENNIUM": f"(({year} + 999) DIV 1000)",
-                    }[field]
-                    sql = f"{sql[:t.start]}{arith}{sql[tokens[close].end:]}"
-                else:
-                    from_idx = i + 3
-                    if not (
-                        from_idx < close
-                        and tokens[from_idx].kind == "IDENT"
-                        and tokens[from_idx].upper == "FROM"
-                    ):
-                        return sql
-                    expr = sql[tokens[from_idx].end : tokens[close].start].strip()
-                    # interval operands (round-10/11): the typed
-                    # interval constructors — which '...'::interval and
-                    # make_interval now produce — cast to DECIMAL as
-                    # exact total seconds; PG's epoch-of-interval
-                    # (interval_part, DTK_EPOCH) counts each WHOLE year
-                    # as 365.25 days and only the residual months at 30
-                    # days, with C-style truncating division/modulo for
-                    # negatives (DuckDB's native epoch agrees:
-                    # '-14 months' → -36741600). Spark's DIV / % are
-                    # also truncate-toward-zero / dividend-signed, so
-                    # the arithmetic maps 1:1. The timestamp cast would
-                    # fail on intervals with an opaque analysis error.
-                    if expr.startswith("make_interval("):
-                        # the make_interval pass runs LATER in the
-                        # pipeline; classify it now so the epoch arm
-                        # dispatches on the typed constructor
-                        expr = _rewrite_make_interval(expr)
-                    if expr.startswith("make_dt_interval("):
-                        repl = (
-                            f"CAST(CAST(({expr}) AS DECIMAL(28,6)) "
-                            f"AS DOUBLE)"
-                        )
-                    elif expr.startswith("make_ym_interval("):
-                        months = f"CAST(({expr}) AS INT)"
-                        repl = (
-                            f"CAST(({months} DIV 12) * 31557600.0"
-                            f" + ({months} % 12) * 2592000.0 AS DOUBLE)"
-                        )
-                    else:
-                        repl = (
-                            f"CAST(CAST(({expr}) AS TIMESTAMP) AS DOUBLE)"
-                        )
-                    sql = f"{sql[:t.start]}{repl}{sql[tokens[close].end:]}"
-                changed = True
-                break
-        if not changed:
-            return sql
+        else:
+            repl = f"CAST(CAST(({expr}) AS TIMESTAMP) AS DOUBLE)"
+        return t.start, end, repl
+    return None
 
 
 def _similar_to_java_regex(pat: str) -> str:
@@ -2303,44 +2237,46 @@ def translate_similar_to(sql: str) -> str:
     must be string literals (the conversion happens at translate time);
     anything else raises — better loud than a silently-different
     regex dialect."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "SIMILAR"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].kind == "IDENT"
-                and tokens[i + 1].upper == "TO"
-            ):
-                at = i
-                break
-        if at is None:
-            return sql
-        neg = at > 0 and tokens[at - 1].kind == "IDENT" and tokens[at - 1].upper == "NOT"
-        lend = at - 2 if neg else at - 1
-        if lend < 0 or at + 2 >= len(tokens):
-            raise ValueError("SIMILAR TO: missing operand")
-        pat_tok = tokens[at + 2]
-        if pat_tok.kind != "STRING":
-            raise ValueError(
-                "SIMILAR TO requires a string-literal pattern "
-                "(dynamic patterns are not translatable to Spark)"
-            )
-        lstart = _primary_start(tokens, lend)
-        if lstart is None:
-            raise ValueError("SIMILAR TO: unsupported left operand")
-        # PG binds || tighter than SIMILAR TO: `a || b SIMILAR TO p`
-        # takes the whole concatenation as the operand
-        lstart = _absorb_concat_left(tokens, lstart)
-        left = sql[tokens[lstart].start : tokens[lend].end]
-        rx = _similar_to_java_regex(_translate_posix_classes(pat_tok.value))
-        lit = rx.replace("'", "''")
-        repl = f"({left} RLIKE '{lit}')"
-        if neg:
-            repl = f"(NOT {repl})"
-        sql = f"{sql[:tokens[lstart].start]}{repl}{sql[pat_tok.end:]}"
+    return _rewrite(sql, [_find_similar_to])[0]
+
+
+def _find_similar_to(sql, tokens):
+    at = None
+    for i, t in enumerate(tokens):
+        if (
+            t.kind == "IDENT"
+            and t.upper == "SIMILAR"
+            and i + 1 < len(tokens)
+            and tokens[i + 1].kind == "IDENT"
+            and tokens[i + 1].upper == "TO"
+        ):
+            at = i
+            break
+    if at is None:
+        return None
+    neg = at > 0 and tokens[at - 1].kind == "IDENT" and tokens[at - 1].upper == "NOT"
+    lend = at - 2 if neg else at - 1
+    if lend < 0 or at + 2 >= len(tokens):
+        raise ValueError("SIMILAR TO: missing operand")
+    pat_tok = tokens[at + 2]
+    if pat_tok.kind != "STRING":
+        raise ValueError(
+            "SIMILAR TO requires a string-literal pattern "
+            "(dynamic patterns are not translatable to Spark)"
+        )
+    lstart = _primary_start(tokens, lend)
+    if lstart is None:
+        raise ValueError("SIMILAR TO: unsupported left operand")
+    # PG binds || tighter than SIMILAR TO: `a || b SIMILAR TO p`
+    # takes the whole concatenation as the operand
+    lstart = _absorb_concat_left(tokens, lstart)
+    left = sql[tokens[lstart].start : tokens[lend].end]
+    rx = _similar_to_java_regex(_translate_posix_classes(pat_tok.value))
+    lit = rx.replace("'", "''")
+    repl = f"({left} RLIKE '{lit}')"
+    if neg:
+        repl = f"(NOT {repl})"
+    return tokens[lstart].start, pat_tok.end, repl
 
 
 def translate_pg_functions(sql: str) -> str:
@@ -2357,1067 +2293,795 @@ def translate_pg_functions(sql: str) -> str:
       Java regex and must itself be a string literal — else this
       raises rather than splitting on an accidental regex)
     """
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "STARTS_WITH"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                hit = t
-                break
-        if hit is None:
-            break
-        sql = f"{sql[:hit.start]}startswith{sql[hit.end:]}"
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "ARRAY_TO_STRING"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                hit = t
-                break
-        if hit is None:
-            break
-        sql = f"{sql[:hit.start]}array_join{sql[hit.end:]}"
-    while True:
-        # Spark's TWO-argument ltrim/rtrim take (trimStr, str) —
-        # REVERSED from PG's (str, characters) — so an untranslated
-        # PG call silently trims the wrong operand. Swap the args.
-        # (btrim is (str, trimStr) in both engines — Spark quirk.)
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper in ("LTRIM", "RTRIM")
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                break
-        if at is None:
-            break
-        depth = 0
-        close = None
-        comma = None
-        for j in range(at + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-            elif tk.kind == "PUNCT" and tk.value == "," and depth == 1:
-                comma = j
-        if close is None:
-            raise ValueError(f"unbalanced {tokens[at].value}(...)")
-        side = "LEADING" if tokens[at].upper == "LTRIM" else "TRAILING"
-        if comma is None:
-            # 1-arg form agrees in both engines; rewriting to TRIM
-            # syntax just keeps this scan from re-matching forever
-            x = sql[tokens[at + 2].start : tokens[close - 1].end]
-            repl = f"TRIM({side} FROM {x})"
-        else:
-            # TRIM syntax sidesteps Spark's reversed 2-arg argument
-            # order AND terminates the rescan (no ltrim( remains)
-            s_text = sql[tokens[at + 2].start : tokens[comma - 1].end]
-            chars = sql[tokens[comma + 1].start : tokens[close - 1].end]
-            repl = f"TRIM({side} {chars} FROM {s_text})"
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    while True:
-        # Round-11 (probe-found silent divergence): PG array_agg KEEPS
-        # NULL values; Spark's array_agg/collect_list silently DROPS
-        # them. Bare and DISTINCT calls route through a struct wrapper
-        # (structs are never null) — the same recipe the ORDER BY form
-        # has used since round 9. Skips our own emissions (inner
-        # named_struct) so the rescan terminates.
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "ARRAY_AGG"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-                and not (
-                    i + 2 < len(tokens)
-                    and tokens[i + 2].kind == "IDENT"
-                    and tokens[i + 2].value.lower() == "named_struct"
-                )
-                and not (
-                    i + 3 < len(tokens)
-                    and tokens[i + 2].kind == "IDENT"
-                    and tokens[i + 2].upper == "DISTINCT"
-                    and tokens[i + 3].kind == "IDENT"
-                    and tokens[i + 3].value.lower() == "named_struct"
-                )
-            ):
-                at = i
-                break
-        if at is None:
-            break
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError("unbalanced array_agg(...)")
+    return _rewrite(sql, _PG_FUNCTION_FINDERS)[0]
+
+
+def _rename_call(names, new, nargs_ok=None):
+    """Finder renaming the first call of one of ``names`` to ``new``;
+    with ``nargs_ok``, only calls whose argument count it accepts."""
+
+    def find(sql, tokens):
+        for i in _calls(tokens, names):
+            if nargs_ok is not None:
+                close, args = _close(tokens, i + 1)
+                if close is None:
+                    raise ValueError(f"unbalanced {tokens[i].value.lower()}(...)")
+                if not nargs_ok(len(args)):
+                    continue
+            return tokens[i].start, tokens[i].end, new
+        return None
+
+    return find
+
+
+_find_starts_with = _rename_call(("starts_with",), "startswith")
+_find_array_to_string = _rename_call(("array_to_string",), "array_join")
+# PG's multi-argument grouping(a, b, ...) returns the same MSB-first
+# bitmask as Spark's grouping_id(a, b, ...) (probed against DuckDB's
+# grouping, which shares PG's convention); Spark's own grouping() is
+# single-argument only. GROUPING SETS / ROLLUP / CUBE themselves are
+# Spark-native with identical semantics — no rewrite.
+_find_grouping = _rename_call(("grouping",), "grouping_id", lambda n: n >= 2)
+# PG single-argument log(x) is BASE 10; Spark's is natural log —
+# silently different values. → log10. (Two-argument log(b, x) agrees
+# in both engines and passes through; ln is natural in both.)
+_find_log = _rename_call(("log",), "log10", lambda n: n == 1)
+
+
+def _find_ltrim_rtrim(sql, tokens):
+    # Spark's TWO-argument ltrim/rtrim take (trimStr, str) —
+    # REVERSED from PG's (str, characters) — so an untranslated
+    # PG call silently trims the wrong operand. Swap the args.
+    # (btrim is (str, trimStr) in both engines — Spark quirk.)
+    at = _find_call(tokens, ("ltrim", "rtrim"))
+    if at is None:
+        return None
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {tokens[at].value}(...)")
+    side = "LEADING" if tokens[at].upper == "LTRIM" else "TRAILING"
+    if len(args) < 2:
+        # 1-arg form agrees in both engines; rewriting to TRIM
+        # syntax just keeps this scan from re-matching forever
+        x = sql[tokens[at + 2].start : tokens[close - 1].end]
+        repl = f"TRIM({side} FROM {x})"
+    else:
+        # TRIM syntax sidesteps Spark's reversed 2-arg argument
+        # order AND terminates the rescan (no ltrim( remains)
+        comma = args[-1][0] - 1
+        s_text = sql[tokens[at + 2].start : tokens[comma - 1].end]
+        chars = sql[tokens[comma + 1].start : tokens[close - 1].end]
+        repl = f"TRIM({side} {chars} FROM {s_text})"
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_array_agg_nulls(sql, tokens):
+    # Round-11 (probe-found silent divergence): PG array_agg KEEPS
+    # NULL values; Spark's array_agg/collect_list silently DROPS
+    # them. Bare and DISTINCT calls route through a struct wrapper
+    # (structs are never null) — the same recipe the ORDER BY form
+    # has used since round 9. Skips our own emissions (inner
+    # named_struct) so the rescan terminates.
+    for at in _calls(tokens, ("array_agg",)):
         inner_start = at + 2
         distinct = ""
-        if (
-            tokens[inner_start].kind == "IDENT"
-            and tokens[inner_start].upper == "DISTINCT"
-        ):
+        if inner_start < len(tokens) and _is_kw(tokens[inner_start], "DISTINCT"):
             distinct = "DISTINCT "
             inner_start += 1
+        if (
+            inner_start < len(tokens)
+            and tokens[inner_start].kind == "IDENT"
+            and tokens[inner_start].value.lower() == "named_struct"
+        ):
+            continue
+        close, _ = _close(tokens, at + 1)
+        if close is None:
+            raise ValueError("unbalanced array_agg(...)")
         inner = sql[tokens[inner_start].start : tokens[close - 1].end]
-        # a FILTER (WHERE ...) suffix must stay attached to the
+        # FILTER (WHERE ...) / OVER suffixes must stay attached to the
         # aggregate INSIDE the transform wrapper
-        end = close
-        if (
-            close + 1 < len(tokens)
-            and tokens[close + 1].kind == "IDENT"
-            and tokens[close + 1].upper == "FILTER"
-            and close + 2 < len(tokens)
-            and tokens[close + 2].value == "("
-        ):
-            fend = _primary_end(tokens, close + 1)
-            if fend is not None:
-                end = fend
-        if (
-            end + 1 < len(tokens)
-            and tokens[end + 1].kind == "IDENT"
-            and tokens[end + 1].upper == "OVER"
-            and end + 2 < len(tokens)
-        ):
-            # window form: OVER w | OVER (...) rides inside too
-            if tokens[end + 2].kind in ("IDENT", "QIDENT"):
-                end = end + 2
-            elif tokens[end + 2].value == "(":
-                oend = _primary_end(tokens, end + 1)
-                if oend is not None:
-                    end = oend
-        filt = sql[tokens[close].end : tokens[end].end]
+        end = _suffix_end(tokens, close)
+        suffix = sql[tokens[close].end : tokens[end].end]
         repl = (
             f"transform(array_agg({distinct}named_struct('v', "
-            f"({inner}))){filt}, __ag -> __ag.v)"
+            f"({inner}))){suffix}, __ag -> __ag.v)"
         )
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[end].end:]}"
-    while True:
-        # PG's multi-argument grouping(a, b, ...) returns the
-        # same MSB-first bitmask as Spark's grouping_id(a, b, ...)
-        # (probed against DuckDB's grouping, which shares PG's
-        # convention); Spark's own grouping() is single-argument
-        # only. GROUPING SETS / ROLLUP / CUBE themselves are
-        # Spark-native with identical semantics — no rewrite.
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower() == "grouping"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                close = _primary_end(tokens, i)
-                if close is None:
-                    raise ValueError("unbalanced grouping(...)")
-                args = _args_spans(tokens, i + 2, close - 1)
-                if len(args) >= 2:
-                    at = i
-                    break
-        if at is None:
-            break
-        sql = f"{sql[:tokens[at].start]}grouping_id{sql[tokens[at].end:]}"
-    while True:
-        # Round-11: PG degree-based trig (PG 12) and the core SHA
-        # digests (PG 11). Degree trig emits radians composition;
-        # residual documented in PARITY: PG special-cases exact
-        # anchor angles (sind(30) = 0.5 exactly, tand(90) =
-        # Infinity) where the float composition is a last-ulp off /
-        # finite-huge. sha224/256/384/512 return bytea in PG → BINARY
-        # via unhex(sha2(...)); text inputs hash their UTF-8 bytes in
-        # both engines (the ::bytea text rule).
-        tokens = tokenize(sql)
-        at = None
-        fname = None
-        deg_fwd = {"sind": "sin", "cosd": "cos", "tand": "tan",
-                   "cotd": "cot"}
-        deg_inv = {"asind": "asin", "acosd": "acos", "atand": "atan"}
-        shas = {"sha224": "224", "sha256": "256", "sha384": "384",
-                "sha512": "512"}
-        for i, t in enumerate(tokens):
-            low = t.value.lower() if t.kind == "IDENT" else ""
-            if (
-                low in deg_fwd
-                or low in deg_inv
-                or low in shas
-                or low == "atan2d"
-            ) and i + 1 < len(tokens) and tokens[i + 1].value == "(":
-                at = i
-                fname = low
-                break
-        if at is None:
-            break
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError(f"unbalanced {fname}(...)")
-        args = (
-            _args_spans(tokens, at + 2, close - 1)
-            if close - 1 >= at + 2
-            else []
+        return tokens[at].start, tokens[end].end, repl
+    return None
+
+
+def _find_degree_trig_sha(sql, tokens):
+    # Round-11: PG degree-based trig (PG 12) and the core SHA
+    # digests (PG 11). Degree trig emits radians composition;
+    # residual documented in PARITY: PG special-cases exact
+    # anchor angles (sind(30) = 0.5 exactly, tand(90) =
+    # Infinity) where the float composition is a last-ulp off /
+    # finite-huge. sha224/256/384/512 return bytea in PG → BINARY
+    # via unhex(sha2(...)); text inputs hash their UTF-8 bytes in
+    # both engines (the ::bytea text rule).
+    deg_fwd = {"sind": "sin", "cosd": "cos", "tand": "tan",
+               "cotd": "cot"}
+    deg_inv = {"asind": "asin", "acosd": "acos", "atand": "atan"}
+    shas = {"sha224": "224", "sha256": "256", "sha384": "384",
+            "sha512": "512"}
+    at = _find_call(tokens, {*deg_fwd, *deg_inv, *shas, "atan2d"})
+    if at is None:
+        return None
+    fname = tokens[at].value.lower()
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {fname}(...)")
+    want = 2 if fname == "atan2d" else 1
+    if len(args) != want:
+        raise ValueError(
+            f"{fname} takes exactly {want} argument"
+            + ("s" if want > 1 else "")
         )
-        want = 2 if fname == "atan2d" else 1
-        if len(args) != want:
-            raise ValueError(
-                f"{fname} takes exactly {want} argument"
-                + ("s" if want > 1 else "")
-            )
-        a0 = sql[tokens[args[0][0]].start : tokens[args[0][1]].end]
-        if fname == "atan2d":
-            a1 = sql[tokens[args[1][0]].start : tokens[args[1][1]].end]
-            repl = f"degrees(atan2(({a0}), ({a1})))"
-        elif fname in deg_fwd:
-            repl = f"{deg_fwd[fname]}(radians(({a0})))"
-        elif fname in deg_inv:
-            repl = f"degrees({deg_inv[fname]}(({a0})))"
-        else:
-            repl = f"unhex(sha2(({a0}), {shas[fname]}))"
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    while True:
-        # Round-11 interval/time odds and ends:
-        # - justify_hours: folds 24 h blocks into days. Our
-        #   DayTimeIntervalType stores ONE total-microsecond count, so
-        #   the day/hour split exists only at rendering — which already
-        #   normalizes — making justify_hours the IDENTITY on every
-        #   representable value (exact; PG's result compares equal).
-        # - justify_days / justify_interval: fold 30-day blocks into
-        #   MONTHS — the result mixes the two ANSI interval families,
-        #   which no single Spark value holds → named rejection.
-        # - timeofday(): wall-clock text → named rejection (the guard
-        #   rejects the clock value functions for the same reason).
-        # - isfinite(x): PG's ±infinity timestamps are unrepresentable
-        #   here ('infinity'::timestamp raises at the ANSI cast), so
-        #   every non-NULL value is finite; NULL stays NULL (PG).
-        tokens = tokenize(sql)
-        at = None
-        fname = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower()
-                in (
-                    "justify_hours",
-                    "justify_days",
-                    "justify_interval",
-                    "timeofday",
-                    "isfinite",
-                )
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                fname = t.value.lower()
-                break
-        if at is None:
-            break
-        if fname in ("justify_days", "justify_interval"):
-            raise ValueError(
-                f"{fname}() folds day counts into months, mixing the "
-                "year-month and day-time interval families — no "
-                "single Spark value holds both (justify_hours is "
-                "supported; it is exact here)"
-            )
-        if fname == "timeofday":
-            raise ValueError(
-                "timeofday() reads the server wall clock — "
-                "nondeterministic under the guarded surface (the "
-                "clock value functions are rejected for the same "
-                "reason); use a literal timestamp"
-            )
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError(f"unbalanced {fname}(...)")
-        args = (
-            _args_spans(tokens, at + 2, close - 1)
-            if close - 1 >= at + 2
-            else []
+    a0 = _span_text(sql, tokens, args[0])
+    if fname == "atan2d":
+        a1 = _span_text(sql, tokens, args[1])
+        repl = f"degrees(atan2(({a0}), ({a1})))"
+    elif fname in deg_fwd:
+        repl = f"{deg_fwd[fname]}(radians(({a0})))"
+    elif fname in deg_inv:
+        repl = f"degrees({deg_inv[fname]}(({a0})))"
+    else:
+        repl = f"unhex(sha2(({a0}), {shas[fname]}))"
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_interval_odds(sql, tokens):
+    # Round-11 interval/time odds and ends:
+    # - justify_hours: folds 24 h blocks into days. Our
+    #   DayTimeIntervalType stores ONE total-microsecond count, so
+    #   the day/hour split exists only at rendering — which already
+    #   normalizes — making justify_hours the IDENTITY on every
+    #   representable value (exact; PG's result compares equal).
+    # - justify_days / justify_interval: fold 30-day blocks into
+    #   MONTHS — the result mixes the two ANSI interval families,
+    #   which no single Spark value holds → named rejection.
+    # - timeofday(): wall-clock text → named rejection (the guard
+    #   rejects the clock value functions for the same reason).
+    # - isfinite(x): PG's ±infinity timestamps are unrepresentable
+    #   here ('infinity'::timestamp raises at the ANSI cast), so
+    #   every non-NULL value is finite; NULL stays NULL (PG).
+    at = _find_call(
+        tokens,
+        ("justify_hours", "justify_days", "justify_interval", "timeofday", "isfinite"),
+    )
+    if at is None:
+        return None
+    fname = tokens[at].value.lower()
+    if fname in ("justify_days", "justify_interval"):
+        raise ValueError(
+            f"{fname}() folds day counts into months, mixing the "
+            "year-month and day-time interval families — no "
+            "single Spark value holds both (justify_hours is "
+            "supported; it is exact here)"
         )
-        if len(args) != 1:
-            raise ValueError(f"{fname} takes exactly one argument")
-        x = sql[tokens[args[0][0]].start : tokens[args[0][1]].end]
-        if fname == "justify_hours":
-            repl = f"({x})"
-        else:  # isfinite
-            repl = (
-                f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS BOOLEAN) "
-                f"ELSE true END)"
-            )
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    while True:
-        # PG format(template, args...) → Spark format_string for the
-        # %s / %% subset (PG's %I/%L/positional %n$ raise — they need
-        # identifier/literal quoting no Spark function provides)
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "FORMAT"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                break
-        if at is None:
-            break
-        tpl = tokens[at + 2]
-        if tpl.kind != "STRING":
-            raise ValueError(
-                "format() requires a string-literal template "
-                "(dynamic templates are not translatable)"
-            )
-        rest = re.sub(r"%%", "", tpl.value)
-        bad = re.search(r"%[^s]", rest) or rest.endswith("%")
-        if bad:
-            raise ValueError(
-                "format() specifiers beyond %s / %% are outside the "
-                "translatable subset (PG %I/%L need SQL quoting)"
-            )
-        # round-11 (probe-found): PG renders a NULL %s argument as an
-        # EMPTY string; Java's Formatter (format_string) prints the
-        # literal 'null' — the same trap that bit chr() in round 10.
-        # Each argument gets coalesce(CAST(.. AS STRING), '').
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError("unbalanced format(...)")
-        args = _args_spans(tokens, at + 2, close - 1)
-        parts = [sql[tokens[args[0][0]].start : tokens[args[0][1]].end]]
-        for s0, e0 in args[1:]:
-            a_text = sql[tokens[s0].start : tokens[e0].end]
-            parts.append(f"coalesce(CAST(({a_text}) AS STRING), '')")
-        repl = f"format_string({', '.join(parts)})"
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    while True:
-        # PG to_hex prints LOWERCASE hex; Spark's hex() is uppercase.
-        # (Boundary, documented: PG's int4 to_hex(-1) is the 32-bit
-        # 'ffffffff'; Spark hex is 64-bit — negatives differ.)
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "TO_HEX"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                break
-        if at is None:
-            break
-        depth = 0
-        close = None
-        for j in range(at + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        if close is None:
-            raise ValueError("unbalanced to_hex(...)")
-        x = sql[tokens[at + 2].start : tokens[close - 1].end]
-        sql = f"{sql[:tokens[at].start]}lower(hex({x})){sql[tokens[close].end:]}"
-    while True:
-        # PG trunc(x[, n]) truncates numerics TOWARD ZERO; Spark's
-        # trunc is date-only (a PG numeric call errors loudly there).
-        # floor/ceiling over scaled DECIMALS keeps the arithmetic
-        # exact; n must be an integer literal.
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "TRUNC"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                break
-        if at is None:
-            break
-        depth = 0
-        close = None
-        comma = None
-        for j in range(at + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-            elif tk.kind == "PUNCT" and tk.value == "," and depth == 1:
-                comma = j
-        if close is None:
-            raise ValueError("unbalanced trunc(...)")
-        if comma is None:
-            x = sql[tokens[at + 2].start : tokens[close - 1].end]
-            repl = (
-                f"CASE WHEN ({x}) >= 0 THEN floor({x}) "
-                f"ELSE ceiling({x}) END"
-            )
-        else:
-            x = sql[tokens[at + 2].start : tokens[comma - 1].end]
-            n_toks = tokens[comma + 1 : close]
-            neg = False
-            if len(n_toks) == 2 and n_toks[0].kind == "OP" and n_toks[0].value == "-":
-                neg, n_toks = True, n_toks[1:]
-            if len(n_toks) != 1 or n_toks[0].kind != "NUMBER" or not n_toks[0].value.isdigit():
-                raise ValueError(
-                    "trunc(x, n) needs an integer-literal scale "
-                    "(dynamic scales are not translatable)"
-                )
-            n = int(n_toks[0].value)
-            if neg:
-                m = 10 ** n
-                repl = (
-                    f"CASE WHEN ({x}) >= 0 THEN floor(({x}) / {m}) * {m} "
-                    f"ELSE ceiling(({x}) / {m}) * {m} END"
-                )
-            else:
-                m = 10 ** n
-                repl = (
-                    f"CASE WHEN ({x}) >= 0 THEN floor(({x}) * {m}) / {m} "
-                    f"ELSE ceiling(({x}) * {m}) / {m} END"
-                )
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    while True:
-        # PG initcap uppercases a letter iff the PREVIOUS char is not
-        # alphanumeric (word boundaries at every non-alnum char) —
-        # Spark's initcap only breaks on whitespace ('hello-world' →
-        # 'Hello-world', silently different). Rewrite to a per-char
-        # fold; the round-trips through named_struct stay JVM-side.
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "INITCAP"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                break
-        if at is None:
-            break
-        depth = 0
-        close = None
-        for j in range(at + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        if close is None:
-            raise ValueError("unbalanced initcap(...)")
-        s_expr = sql[tokens[at + 2].start : tokens[close - 1].end]
+    if fname == "timeofday":
+        raise ValueError(
+            "timeofday() reads the server wall clock — "
+            "nondeterministic under the guarded surface (the "
+            "clock value functions are rejected for the same "
+            "reason); use a literal timestamp"
+        )
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {fname}(...)")
+    if len(args) != 1:
+        raise ValueError(f"{fname} takes exactly one argument")
+    x = _span_text(sql, tokens, args[0])
+    if fname == "justify_hours":
+        repl = f"({x})"
+    else:  # isfinite
         repl = (
-            f"aggregate(split(lower({s_expr}), ''), "
-            f"named_struct('o', '', 'p', false), "
-            f"(__gfw_a, __gfw_c) -> named_struct("
-            f"'o', concat(__gfw_a.o, CASE WHEN __gfw_a.p THEN __gfw_c "
-            f"ELSE upper(__gfw_c) END), "
-            f"'p', __gfw_c RLIKE '[\\p{{L}}\\p{{Nd}}]'), "
-            f"__gfw_a -> __gfw_a.o)"
+            f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS BOOLEAN) "
+            f"ELSE true END)"
         )
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    while True:
-        # PG single-argument log(x) is BASE 10; Spark's is natural log
-        # — silently different values. → log10. (Two-argument
-        # log(b, x) agrees in both engines and passes through; ln is
-        # natural in both.)
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "LOG"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                close = _primary_end(tokens, i)
-                if close is None:
-                    raise ValueError("unbalanced log(...)")
-                args = _args_spans(tokens, i + 2, close - 1)
-                if len(args) == 1:
-                    at = i
-                    break
-        if at is None:
-            break
-        sql = f"{sql[:tokens[at].start]}log10{sql[tokens[at].end:]}"
-    while True:
-        # round-9 array/uuid surface (silent-divergence fixes + cheap
-        # renames; values probed against PG's documented behavior):
-        #   array_position(a, v)  Spark returns 0 when absent, PG NULL
-        #                         → nullif(..., 0). 3-arg start form
-        #                         raises (Spark has no equivalent).
-        #   strpos(s, sub)        PG name; Spark spells it locate with
-        #                         the arguments REVERSED.
-        #   array_length(a, 1)    PG returns NULL for empty arrays
-        #                         (size gives 0) → nullif(size(a), 0);
-        #                         only literal dimension 1 translates.
-        #   array_cat(a, b)       PG treats a NULL side as absent
-        #                         (array_cat(NULL, b) = b); Spark's
-        #                         concat is NULL-poisoning → CASE.
-        #   gen_random_uuid()     → uuid() (both random v4 text).
-        tokens = tokenize(sql)
-        at = None
-        fname = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower()
-                in (
-                    "array_position",
-                    "strpos",
-                    "array_length",
-                    "array_cat",
-                    "gen_random_uuid",
-                    "chr",
-                )
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                if (
-                    t.value.lower() == "array_position"
-                    and i >= 2
-                    and tokens[i - 1].value == "("
-                    and tokens[i - 2].kind == "IDENT"
-                    and tokens[i - 2].value.lower() == "nullif"
-                ):
-                    # Rescan terminator for our own emission
-                    # nullif(array_position(...), 0) — but ONLY when
-                    # the enclosing nullif's second argument is the
-                    # literal 0 we emit. A user-written
-                    # nullif(array_position(a, v), X) with X != 0
-                    # still needs the inner rewrite (PG returns NULL
-                    # when absent; Spark returns 0).
-                    nclose = _primary_end(tokens, i - 2)
-                    if nclose is not None:
-                        nargs = _args_spans(tokens, i, nclose - 1)
-                        if (
-                            len(nargs) == 2
-                            and nargs[1][0] == nargs[1][1]
-                            and tokens[nargs[1][0]].kind == "NUMBER"
-                            and tokens[nargs[1][0]].value == "0"
-                        ):
-                            continue  # already rewritten
-                at = i
-                fname = t.value.lower()
-                break
-        if at is None:
-            break
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError(f"unbalanced {fname}(...)")
-        args = (
-            _args_spans(tokens, at + 2, close - 1)
-            if close - 1 >= at + 2
-            else []
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_format(sql, tokens):
+    # PG format(template, args...) → Spark format_string for the
+    # %s / %% subset (PG's %I/%L/positional %n$ raise — they need
+    # identifier/literal quoting no Spark function provides)
+    at = _find_call(tokens, ("format",))
+    if at is None:
+        return None
+    tpl = tokens[at + 2]
+    if tpl.kind != "STRING":
+        raise ValueError(
+            "format() requires a string-literal template "
+            "(dynamic templates are not translatable)"
         )
-        texts = [sql[tokens[s].start : tokens[e].end] for s, e in args if s <= e]
-        if fname == "array_position":
-            if len(texts) != 2:
-                raise ValueError(
-                    "array_position with a start index is outside the "
-                    "translatable subset"
-                )
-            repl = f"nullif(array_position(({texts[0]}), ({texts[1]})), 0)"
-        elif fname == "strpos":
-            if len(texts) != 2:
-                raise ValueError("strpos takes exactly (string, substring)")
-            repl = f"locate(({texts[1]}), ({texts[0]}))"
-        elif fname == "array_length":
-            if len(texts) != 2:
-                raise ValueError(
-                    "array_length takes exactly (array, dimension)"
-                )
-            dim = texts[1].strip()
-            if dim == "1":
-                repl = f"nullif(size(({texts[0]})), 0)"
-            elif re.fullmatch(r"-?\d+", dim):
-                # PG: arrays here are one-dimensional, and
-                # array_length(a, d) for any d ≠ 1 is simply NULL.
-                repl = "CAST(NULL AS INT)"
-            else:
-                raise ValueError(
-                    "array_length translates only for a literal "
-                    "dimension (arrays here are one-dimensional)"
-                )
-        elif fname == "array_cat":
-            if len(texts) != 2:
-                raise ValueError("array_cat takes exactly two arrays")
-            a, b = texts
-            repl = (
-                f"(CASE WHEN ({a}) IS NULL THEN ({b}) "
-                f"WHEN ({b}) IS NULL THEN ({a}) "
-                f"ELSE concat(({a}), ({b})) END)"
-            )
-        elif fname == "chr":
-            # PG chr() is the UNICODE code point (chr(955) = 'λ');
-            # Spark's chr folds modulo 256 — silently different beyond
-            # ASCII. Java's %c is the code-point conversion and raises
-            # on invalid points like PG; chr(0) needs its own arm (a
-            # valid code point, but PG forbids the null character).
-            if len(texts) != 1:
-                raise ValueError("chr takes exactly one argument")
-            x = texts[0]
-            # NULL arm first: format_string('%c', NULL) renders Java
-            # Formatter's literal "null"; PG chr is strict.
-            repl = (
-                f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS STRING) "
-                f"WHEN ({x}) = 0 THEN CASE WHEN assert_true("
-                f"false, 'null character not permitted') IS NULL "
-                f"THEN '' END "
-                f"ELSE format_string('%c', CAST(({x}) AS INT)) END)"
-            )
-        else:  # gen_random_uuid
-            if texts:
-                raise ValueError("gen_random_uuid takes no arguments")
-            repl = "uuid()"
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    sql = _rewrite_make_interval(sql)
-    while True:
-        # PG age(): the two-argument form translates (see _age_sql);
-        # the one-argument form is age(current_date, ts) — clock-
-        # dependent, nondeterministic under the guard — and stays
-        # loud with a named error.
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower() == "age"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                break
-        if at is None:
-            break
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError("unbalanced age(...)")
-        args = (
-            _args_spans(tokens, at + 2, close - 1)
-            if close - 1 >= at + 2
-            else []
+    rest = re.sub(r"%%", "", tpl.value)
+    bad = re.search(r"%[^s]", rest) or rest.endswith("%")
+    if bad:
+        raise ValueError(
+            "format() specifiers beyond %s / %% are outside the "
+            "translatable subset (PG %I/%L need SQL quoting)"
         )
-        if len(args) != 2:
+    # round-11 (probe-found): PG renders a NULL %s argument as an
+    # EMPTY string; Java's Formatter (format_string) prints the
+    # literal 'null' — the same trap that bit chr() in round 10.
+    # Each argument gets coalesce(CAST(.. AS STRING), '').
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError("unbalanced format(...)")
+    parts = [_span_text(sql, tokens, args[0])]
+    for span in args[1:]:
+        a_text = _span_text(sql, tokens, span)
+        parts.append(f"coalesce(CAST(({a_text}) AS STRING), '')")
+    repl = f"format_string({', '.join(parts)})"
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_to_hex(sql, tokens):
+    # PG to_hex prints LOWERCASE hex; Spark's hex() is uppercase.
+    # (Boundary, documented: PG's int4 to_hex(-1) is the 32-bit
+    # 'ffffffff'; Spark hex is 64-bit — negatives differ.)
+    at = _find_call(tokens, ("to_hex",))
+    if at is None:
+        return None
+    close, _ = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError("unbalanced to_hex(...)")
+    x = sql[tokens[at + 2].start : tokens[close - 1].end]
+    return tokens[at].start, tokens[close].end, f"lower(hex({x}))"
+
+
+def _find_trunc(sql, tokens):
+    # PG trunc(x[, n]) truncates numerics TOWARD ZERO; Spark's
+    # trunc is date-only (a PG numeric call errors loudly there).
+    # floor/ceiling over scaled DECIMALS keeps the arithmetic
+    # exact; n must be an integer literal.
+    at = _find_call(tokens, ("trunc",))
+    if at is None:
+        return None
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError("unbalanced trunc(...)")
+    comma = args[-1][0] - 1 if len(args) > 1 else None
+    if comma is None:
+        x = sql[tokens[at + 2].start : tokens[close - 1].end]
+        repl = (
+            f"CASE WHEN ({x}) >= 0 THEN floor({x}) "
+            f"ELSE ceiling({x}) END"
+        )
+    else:
+        x = sql[tokens[at + 2].start : tokens[comma - 1].end]
+        n_toks = tokens[comma + 1 : close]
+        neg = False
+        if len(n_toks) == 2 and n_toks[0].kind == "OP" and n_toks[0].value == "-":
+            neg, n_toks = True, n_toks[1:]
+        if len(n_toks) != 1 or n_toks[0].kind != "NUMBER" or not n_toks[0].value.isdigit():
             raise ValueError(
-                "age() is supported with exactly two timestamp "
-                "arguments; the one-argument form depends on the "
-                "server clock (age(current_date::timestamp, x)) and "
-                "is outside the deterministic guarded subset"
+                "trunc(x, n) needs an integer-literal scale "
+                "(dynamic scales are not translatable)"
             )
-        a1 = sql[tokens[args[0][0]].start : tokens[args[0][1]].end]
-        a2 = sql[tokens[args[1][0]].start : tokens[args[1][1]].end]
-        repl = _age_sql(a1, a2)
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    while True:
-        # PG gcd/lcm (int families; Spark has neither): bounded Euclid
-        # as a JVM-side aggregate fold — 92 iterations cover the
-        # Fibonacci worst case for 64-bit inputs, and the fold
-        # short-circuits to identity once b = 0. lcm = |a div g| * |b|
-        # (ANSI multiply raises on overflow exactly where PG raises).
-        # Fractional (numeric) inputs raise at the BIGINT cast — PG's
-        # numeric gcd is out of the subset, loudly. quote_literal
-        # doubles embedded quotes like PG (NULL in → NULL out; use PG
-        # quote_nullable for the 'NULL' spelling, out of subset).
-        tokens = tokenize(sql)
-        at = None
-        fname = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower()
-                in ("gcd", "lcm", "quote_literal", "date_bin")
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                fname = t.value.lower()
-                break
-        if at is None:
-            break
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError(f"unbalanced {fname}(...)")
-        args = _args_spans(tokens, at + 2, close - 1) if close - 1 >= at + 2 else []
-        texts = [sql[tokens[s].start : tokens[e].end] for s, e in args if s <= e]
-        if fname == "date_bin":
-            # PG 14 date_bin(stride, source, origin): bin source into
-            # stride-width buckets aligned at origin, flooring toward
-            # -infinity. A LITERAL day-time stride resolves to
-            # microseconds at translation; the emission is exact
-            # integer arithmetic (pmod gives the floored remainder for
-            # negative deltas too). PG itself rejects month/year
-            # strides; zero/negative strides raise like PG; computed
-            # strides stay loud.
-            if len(texts) != 3:
-                raise ValueError(
-                    "date_bin takes exactly (stride, source, origin)"
-                )
-            st = texts[0].strip()
-            # earlier passes already rewrote '…'::interval /
-            # make_interval(...) strides into the typed constructors —
-            # recognize our own literal emissions alongside bare
-            # string-literal strides (PG coerces those to interval)
-            months, stride_us = 0, None
-            m_dt = re.fullmatch(
-                r"make_dt_interval\((-?\d+),\s*(-?\d+),\s*(-?\d+),"
-                r"\s*(-?\d+(?:\.\d+)?)\)",
-                st,
-            )
-            if m_dt:
-                stride_us = int(
-                    round(
-                        (
-                            int(m_dt.group(1)) * 86_400
-                            + int(m_dt.group(2)) * 3_600
-                            + int(m_dt.group(3)) * 60
-                            + float(m_dt.group(4))
-                        )
-                        * 1_000_000
-                    )
-                )
-            elif re.fullmatch(
-                r"make_ym_interval\((-?\d+),\s*(-?\d+)\)", st
-            ):
-                months = 1  # any ym stride: PG rejects below
-            else:
-                lit = (
-                    _single_string_literal(st[len("INTERVAL") :])
-                    if st.upper().startswith("INTERVAL")
-                    else _single_string_literal(st)
-                )
-                if lit is None:
-                    raise ValueError(
-                        "date_bin translates only for a literal "
-                        "interval stride"
-                    )
-                months, stride_us = _parse_pg_interval(lit)
-            if months:
-                raise ValueError(
-                    "date_bin: timestamps cannot be binned into "
-                    "intervals containing months or years"
-                )
-            if stride_us <= 0:
-                raise ValueError("date_bin: stride must be greater than zero")
-            src = f"unix_micros(CAST(({texts[1]}) AS TIMESTAMP))"
-            org = f"unix_micros(CAST(({texts[2]}) AS TIMESTAMP))"
+        n = int(n_toks[0].value)
+        if neg:
+            m = 10 ** n
             repl = (
-                f"timestamp_micros({org} + ({src} - {org}) "
-                f"- pmod({src} - {org}, {stride_us}))"
-            )
-        elif fname == "quote_literal":
-            if len(texts) != 1:
-                raise ValueError("quote_literal takes exactly one argument")
-            x = texts[0]
-            # PG also doubles backslashes and emits the E'...' form
-            # when the input contains any backslash:
-            # quote_literal('a\b') = E'a\\b'. The emitted '\' /'\\'
-            # literals are LITERAL backslashes (escapedStringLiterals
-            # is pinned on for translated SQL).
-            s = f"CAST(({x}) AS STRING)"
-            q = f"replace({s}, '''', '''''')"
-            qb = f"replace(replace({s}, '\\', '\\\\'), '''', '''''')"
-            repl = (
-                f"(CASE WHEN instr({s}, '\\') > 0 "
-                f"THEN 'E''' || {qb} || '''' "
-                f"ELSE '''' || {q} || '''' END)"
+                f"CASE WHEN ({x}) >= 0 THEN floor(({x}) / {m}) * {m} "
+                f"ELSE ceiling(({x}) / {m}) * {m} END"
             )
         else:
-            if len(texts) != 2:
-                raise ValueError(f"{fname} takes exactly two arguments")
-            x, y = texts
-            g = (
-                f"aggregate(sequence(1, 92), "
-                f"named_struct('a', abs(CAST(({x}) AS BIGINT)), "
-                f"'b', abs(CAST(({y}) AS BIGINT))), "
-                f"(__gfw_acc, __gfw_i) -> CASE WHEN __gfw_acc.b = 0 "
-                f"THEN __gfw_acc ELSE named_struct('a', __gfw_acc.b, "
-                f"'b', __gfw_acc.a % __gfw_acc.b) END, "
-                f"__gfw_acc -> __gfw_acc.a)"
-            )
-            if fname == "gcd":
-                repl = f"({g})"
-            else:
-                repl = (
-                    f"(CASE WHEN ({g}) = 0 THEN CAST(0 AS BIGINT) "
-                    f"ELSE abs(abs(CAST(({x}) AS BIGINT)) div ({g}) "
-                    f"* abs(CAST(({y}) AS BIGINT))) END)"
-                )
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    while True:
-        # PG date_trunc units Spark lacks (decade/century/millennium —
-        # Spark returns NULL SILENTLY for unknown units, and PG
-        # centuries/millennia start at year xxx1), plus loud rejection
-        # of units Spark would NULL out: PG raises 'unit not
-        # recognized'. Spellings are PG's documented set (note the
-        # PLURAL microseconds/milliseconds); the unit must be literal.
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower() == "date_trunc"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-                and i + 2 < len(tokens)
-                and tokens[i + 2].kind == "STRING"
-                and tokens[i + 2].value.lower()
-                not in (
-                    "second", "minute", "hour", "day", "week", "month",
-                    "quarter", "year",
-                    # our own emissions (Spark spellings) — rescan stop
-                    "microsecond", "millisecond",
-                )
-            ):
-                at = i
-                break
-        if at is None:
-            break
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError("unbalanced date_trunc(...)")
-        args = _args_spans(tokens, at + 2, close - 1)
-        if len(args) != 2:
-            raise ValueError("date_trunc takes (unit, source)")
-        unit = tokens[at + 2].value.lower()
-        x = sql[tokens[args[1][0]].start : tokens[args[1][1]].end]
-        if unit == "microseconds":
-            repl = f"date_trunc('MICROSECOND', {x})"
-        elif unit == "milliseconds":
-            repl = f"date_trunc('MILLISECOND', {x})"
-        elif unit in ("decade", "century", "millennium"):
-            span = {"century": 100, "millennium": 1000}.get(unit)
-            if span is None:  # decades start at year xxx0
-                y = f"CAST(floor(year({x}) / 10) * 10 AS INT)"
-            else:  # PG centuries/millennia start at year xxx1
-                y = (
-                    f"CAST(floor((year({x}) - 1) / {span}) * {span} "
-                    f"+ 1 AS INT)"
-                )
-            repl = f"make_timestamp({y}, 1, 1, 0, 0, 0)"
-        else:
-            raise ValueError(
-                f"date_trunc: unit '{unit}' is not recognized (PG "
-                "units: microseconds, milliseconds, second, minute, "
-                "hour, day, week, month, quarter, year, decade, "
-                "century, millennium)"
-            )
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    while True:
-        # round-9 breadth batch 2 (all loud UNRESOLVED before this —
-        # no silent risk; semantics probed against PG's documented
-        # rules):
-        #   regexp_split_to_array(s, 'pat' [, 'i']) → split (Spark's
-        #     split IS regex, limit -1 keeps trailing empties like PG;
-        #     POSIX classes spliced for literal patterns)
-        #   jsonb_typeof(j) → first-char sniff CASE (canonical jsonb:
-        #     object/array/string/boolean/null/number)
-        #   jsonb_array_length/json_array_length → size(from_json)
-        #     with PG's RAISE on non-array (assert_true arm)
-        #   encode(x, 'hex') → lower(hex(x)) (PG hex is lowercase);
-        #     decode(s, 'hex') → unhex(s); other formats raise
-        #     (base64: PG wraps lines at 76 chars, Spark doesn't)
-        tokens = tokenize(sql)
-        at = None
-        fname = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower()
-                in (
-                    "regexp_split_to_array",
-                    "jsonb_typeof",
-                    "json_typeof",
-                    "jsonb_array_length",
-                    "json_array_length",
-                    "encode",
-                    "decode",
-                )
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                fname = t.value.lower()
-                break
-        if at is None:
-            break
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError(f"unbalanced {fname}(...)")
-        args = (
-            _args_spans(tokens, at + 2, close - 1)
-            if close - 1 >= at + 2
-            else []
-        )
-        texts = [sql[tokens[s].start : tokens[e].end] for s, e in args if s <= e]
-        if fname == "regexp_split_to_array":
-            if len(texts) not in (2, 3):
-                raise ValueError(
-                    "regexp_split_to_array takes (string, pattern [, flags])"
-                )
-            s_expr = texts[0]
-            pat_span = args[1]
-            prefix = ""
-            if len(texts) == 3:
-                ftoks = tokens[args[2][0] : args[2][1] + 1]
-                if len(ftoks) != 1 or ftoks[0].kind != "STRING" or ftoks[0].value not in ("", "i"):
-                    raise ValueError(
-                        "regexp_split_to_array flags: only 'i' translates"
-                    )
-                prefix = "(?i)" if ftoks[0].value == "i" else ""
-            ptoks = tokens[pat_span[0] : pat_span[1] + 1]
-            if len(ptoks) == 1 and ptoks[0].kind == "STRING":
-                lit = _translate_posix_classes(ptoks[0].value)
-                lit = (prefix + lit).replace("'", "''")
-                pat = f"'{lit}'"
-            else:
-                if prefix:
-                    raise ValueError(
-                        "regexp_split_to_array flags need a literal pattern"
-                    )
-                pat = sql[tokens[pat_span[0]].start : tokens[pat_span[1]].end]
-            repl = f"split(({s_expr}), {pat}, -1)"
-        elif fname in ("jsonb_typeof", "json_typeof"):
-            if len(texts) != 1:
-                raise ValueError(f"{fname} takes exactly one argument")
-            j = texts[0]
-            c = f"substring(ltrim(({j})), 1, 1)"
+            m = 10 ** n
             repl = (
-                f"(CASE WHEN ({j}) IS NULL THEN CAST(NULL AS STRING) "
-                f"WHEN {c} = '{{' THEN 'object' "
-                f"WHEN {c} = '[' THEN 'array' "
-                f"WHEN {c} = '\"' THEN 'string' "
-                f"WHEN {c} IN ('t', 'f') THEN 'boolean' "
-                f"WHEN {c} = 'n' THEN 'null' "
-                f"ELSE 'number' END)"
+                f"CASE WHEN ({x}) >= 0 THEN floor(({x}) * {m}) / {m} "
+                f"ELSE ceiling(({x}) * {m}) / {m} END"
             )
-        elif fname in ("jsonb_array_length", "json_array_length"):
-            if len(texts) != 1:
-                raise ValueError(f"{fname} takes exactly one argument")
-            j = texts[0]
-            parsed = f"from_json(({j}), 'array<variant>')"
-            repl = (
-                f"(CASE WHEN ({j}) IS NULL THEN CAST(NULL AS INT) "
-                f"WHEN {parsed} IS NULL THEN CASE WHEN assert_true("
-                f"false, '{fname}: cannot get array length of a "
-                f"non-array') IS NULL THEN 0 END "
-                f"ELSE size({parsed}) END)"
-            )
-        else:  # encode / decode
-            if len(texts) != 2:
-                raise ValueError(f"{fname} takes exactly (value, format)")
-            ftoks = tokens[args[1][0] : args[1][1] + 1]
-            if len(ftoks) != 1 or ftoks[0].kind != "STRING" or ftoks[0].value != "hex":
-                raise ValueError(
-                    f"{fname}: only the 'hex' format translates "
-                    "(PG base64 wraps lines at 76 chars; escape format "
-                    "has no Spark twin)"
-                )
-            if fname == "encode":
-                repl = f"lower(hex(({texts[0]})))"
-            else:
-                repl = f"unhex(({texts[0]}))"
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "STRING_TO_ARRAY"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                at = i
-                break
-        if at is None:
-            return sql
-        depth = 0
-        close = None
-        commas = []
-        for j in range(at + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-            elif tk.kind == "PUNCT" and tk.value == "," and depth == 1:
-                commas.append(j)
-        if close is None or len(commas) != 1:
-            raise ValueError("string_to_array takes exactly (expr, 'delimiter')")
-        delim_toks = tokens[commas[0] + 1 : close]
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_initcap(sql, tokens):
+    # PG initcap uppercases a letter iff the PREVIOUS char is not
+    # alphanumeric (word boundaries at every non-alnum char) —
+    # Spark's initcap only breaks on whitespace ('hello-world' →
+    # 'Hello-world', silently different). Rewrite to a per-char
+    # fold; the round-trips through named_struct stay JVM-side.
+    at = _find_call(tokens, ("initcap",))
+    if at is None:
+        return None
+    close, _ = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError("unbalanced initcap(...)")
+    s_expr = sql[tokens[at + 2].start : tokens[close - 1].end]
+    repl = (
+        f"aggregate(split(lower({s_expr}), ''), "
+        f"named_struct('o', '', 'p', false), "
+        f"(__gfw_a, __gfw_c) -> named_struct("
+        f"'o', concat(__gfw_a.o, CASE WHEN __gfw_a.p THEN __gfw_c "
+        f"ELSE upper(__gfw_c) END), "
+        f"'p', __gfw_c RLIKE '[\\p{{L}}\\p{{Nd}}]'), "
+        f"__gfw_a -> __gfw_a.o)"
+    )
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_array_uuid_fn(sql, tokens):
+    # round-9 array/uuid surface (silent-divergence fixes + cheap
+    # renames; values probed against PG's documented behavior):
+    #   array_position(a, v)  Spark returns 0 when absent, PG NULL
+    #                         → nullif(..., 0). 3-arg start form
+    #                         raises (Spark has no equivalent).
+    #   strpos(s, sub)        PG name; Spark spells it locate with
+    #                         the arguments REVERSED.
+    #   array_length(a, 1)    PG returns NULL for empty arrays
+    #                         (size gives 0) → nullif(size(a), 0);
+    #                         only literal dimension 1 translates.
+    #   array_cat(a, b)       PG treats a NULL side as absent
+    #                         (array_cat(NULL, b) = b); Spark's
+    #                         concat is NULL-poisoning → CASE.
+    #   gen_random_uuid()     → uuid() (both random v4 text).
+    at = None
+    for i in _calls(
+        tokens,
+        ("array_position", "strpos", "array_length", "array_cat", "gen_random_uuid", "chr"),
+    ):
         if (
-            len(delim_toks) == 1
-            and delim_toks[0].kind == "IDENT"
-            and delim_toks[0].upper == "NULL"
+            tokens[i].value.lower() == "array_position"
+            and i >= 2
+            and tokens[i - 1].value == "("
+            and tokens[i - 2].kind == "IDENT"
+            and tokens[i - 2].value.lower() == "nullif"
         ):
-            # PG: a NULL delimiter splits the string into its
-            # individual CHARACTERS (round-11, verdict r10 #8);
-            # split on the empty regex is exactly per-character in
-            # Spark (no trailing empty element)
-            s_expr = sql[tokens[at + 2].start : tokens[commas[0] - 1].end]
-            repl = (
-                f"CASE WHEN ({s_expr}) = '' THEN "
-                f"CAST(array() AS array<string>) "
-                f"ELSE split({s_expr}, '') END"
-            )
-            sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
-            continue
-        if len(delim_toks) != 1 or delim_toks[0].kind != "STRING":
+            # Rescan terminator for our own emission
+            # nullif(array_position(...), 0) — but ONLY when
+            # the enclosing nullif's second argument is the
+            # literal 0 we emit. A user-written
+            # nullif(array_position(a, v), X) with X != 0
+            # still needs the inner rewrite (PG returns NULL
+            # when absent; Spark returns 0).
+            nclose, nargs = _close(tokens, i - 1)
+            if (
+                nclose is not None
+                and len(nargs) == 2
+                and nargs[1][0] == nargs[1][1]
+                and tokens[nargs[1][0]].kind == "NUMBER"
+                and tokens[nargs[1][0]].value == "0"
+            ):
+                continue  # already rewritten
+        at = i
+        break
+    if at is None:
+        return None
+    fname = tokens[at].value.lower()
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {fname}(...)")
+    texts = _arg_texts(sql, tokens, args)
+    if fname == "array_position":
+        if len(texts) != 2:
             raise ValueError(
-                "string_to_array requires a string-literal delimiter "
-                "(dynamic delimiters are not translatable to Spark's regex split)"
+                "array_position with a start index is outside the "
+                "translatable subset"
             )
-        delim = delim_toks[0].value
-        if "\\E" in delim:
-            raise ValueError("string_to_array delimiter may not contain \\E")
-        s_expr = sql[tokens[at + 2].start : tokens[commas[0] - 1].end]
-        if delim == "":
-            # PG: empty delimiter → the whole string as ONE element
-            # (split on an empty regex would explode per-character)
-            repl = (
-                f"CASE WHEN ({s_expr}) = '' THEN CAST(array() AS array<string>) "
-                f"ELSE array({s_expr}) END"
+        repl = f"nullif(array_position(({texts[0]}), ({texts[1]})), 0)"
+    elif fname == "strpos":
+        if len(texts) != 2:
+            raise ValueError("strpos takes exactly (string, substring)")
+        repl = f"locate(({texts[1]}), ({texts[0]}))"
+    elif fname == "array_length":
+        if len(texts) != 2:
+            raise ValueError(
+                "array_length takes exactly (array, dimension)"
             )
+        dim = texts[1].strip()
+        if dim == "1":
+            repl = f"nullif(size(({texts[0]})), 0)"
+        elif re.fullmatch(r"-?\d+", dim):
+            # PG: arrays here are one-dimensional, and
+            # array_length(a, d) for any d ≠ 1 is simply NULL.
+            repl = "CAST(NULL AS INT)"
         else:
-            quoted = ("\\Q" + delim + "\\E").replace("'", "''")
-            repl = (
-                f"CASE WHEN ({s_expr}) = '' THEN CAST(array() AS array<string>) "
-                f"ELSE split({s_expr}, '{quoted}') END"
+            raise ValueError(
+                "array_length translates only for a literal "
+                "dimension (arrays here are one-dimensional)"
             )
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
+    elif fname == "array_cat":
+        if len(texts) != 2:
+            raise ValueError("array_cat takes exactly two arrays")
+        a, b = texts
+        repl = (
+            f"(CASE WHEN ({a}) IS NULL THEN ({b}) "
+            f"WHEN ({b}) IS NULL THEN ({a}) "
+            f"ELSE concat(({a}), ({b})) END)"
+        )
+    elif fname == "chr":
+        # PG chr() is the UNICODE code point (chr(955) = 'λ');
+        # Spark's chr folds modulo 256 — silently different beyond
+        # ASCII. Java's %c is the code-point conversion and raises
+        # on invalid points like PG; chr(0) needs its own arm (a
+        # valid code point, but PG forbids the null character).
+        if len(texts) != 1:
+            raise ValueError("chr takes exactly one argument")
+        x = texts[0]
+        # NULL arm first: format_string('%c', NULL) renders Java
+        # Formatter's literal "null"; PG chr is strict.
+        repl = (
+            f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS STRING) "
+            f"WHEN ({x}) = 0 THEN CASE WHEN assert_true("
+            f"false, 'null character not permitted') IS NULL "
+            f"THEN '' END "
+            f"ELSE format_string('%c', CAST(({x}) AS INT)) END)"
+        )
+    else:  # gen_random_uuid
+        if texts:
+            raise ValueError("gen_random_uuid takes no arguments")
+        repl = "uuid()"
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_age(sql, tokens):
+    # PG age(): the two-argument form translates (see _age_sql);
+    # the one-argument form is age(current_date, ts) — clock-
+    # dependent, nondeterministic under the guard — and stays
+    # loud with a named error.
+    at = _find_call(tokens, ("age",))
+    if at is None:
+        return None
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError("unbalanced age(...)")
+    if len(args) != 2:
+        raise ValueError(
+            "age() is supported with exactly two timestamp "
+            "arguments; the one-argument form depends on the "
+            "server clock (age(current_date::timestamp, x)) and "
+            "is outside the deterministic guarded subset"
+        )
+    a1 = _span_text(sql, tokens, args[0])
+    a2 = _span_text(sql, tokens, args[1])
+    repl = _age_sql(a1, a2)
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_gcd_lcm_quote_bin(sql, tokens):
+    # PG gcd/lcm (int families; Spark has neither): bounded Euclid
+    # as a JVM-side aggregate fold — 92 iterations cover the
+    # Fibonacci worst case for 64-bit inputs, and the fold
+    # short-circuits to identity once b = 0. lcm = |a div g| * |b|
+    # (ANSI multiply raises on overflow exactly where PG raises).
+    # Fractional (numeric) inputs raise at the BIGINT cast — PG's
+    # numeric gcd is out of the subset, loudly. quote_literal
+    # doubles embedded quotes like PG (NULL in → NULL out; use PG
+    # quote_nullable for the 'NULL' spelling, out of subset).
+    at = _find_call(tokens, ("gcd", "lcm", "quote_literal", "date_bin"))
+    if at is None:
+        return None
+    fname = tokens[at].value.lower()
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {fname}(...)")
+    texts = _arg_texts(sql, tokens, args)
+    if fname == "date_bin":
+        # PG 14 date_bin(stride, source, origin): bin source into
+        # stride-width buckets aligned at origin, flooring toward
+        # -infinity. A LITERAL day-time stride resolves to
+        # microseconds at translation; the emission is exact
+        # integer arithmetic (pmod gives the floored remainder for
+        # negative deltas too). PG itself rejects month/year
+        # strides; zero/negative strides raise like PG; computed
+        # strides stay loud.
+        if len(texts) != 3:
+            raise ValueError(
+                "date_bin takes exactly (stride, source, origin)"
+            )
+        st = texts[0].strip()
+        # earlier passes already rewrote '…'::interval /
+        # make_interval(...) strides into the typed constructors —
+        # recognize our own literal emissions alongside bare
+        # string-literal strides (PG coerces those to interval)
+        months, stride_us = 0, None
+        m_dt = re.fullmatch(
+            r"make_dt_interval\((-?\d+),\s*(-?\d+),\s*(-?\d+),"
+            r"\s*(-?\d+(?:\.\d+)?)\)",
+            st,
+        )
+        if m_dt:
+            stride_us = int(
+                round(
+                    (
+                        int(m_dt.group(1)) * 86_400
+                        + int(m_dt.group(2)) * 3_600
+                        + int(m_dt.group(3)) * 60
+                        + float(m_dt.group(4))
+                    )
+                    * 1_000_000
+                )
+            )
+        elif re.fullmatch(
+            r"make_ym_interval\((-?\d+),\s*(-?\d+)\)", st
+        ):
+            months = 1  # any ym stride: PG rejects below
+        else:
+            lit = (
+                _single_string_literal(st[len("INTERVAL") :])
+                if st.upper().startswith("INTERVAL")
+                else _single_string_literal(st)
+            )
+            if lit is None:
+                raise ValueError(
+                    "date_bin translates only for a literal "
+                    "interval stride"
+                )
+            months, stride_us = _parse_pg_interval(lit)
+        if months:
+            raise ValueError(
+                "date_bin: timestamps cannot be binned into "
+                "intervals containing months or years"
+            )
+        if stride_us <= 0:
+            raise ValueError("date_bin: stride must be greater than zero")
+        src = f"unix_micros(CAST(({texts[1]}) AS TIMESTAMP))"
+        org = f"unix_micros(CAST(({texts[2]}) AS TIMESTAMP))"
+        repl = (
+            f"timestamp_micros({org} + ({src} - {org}) "
+            f"- pmod({src} - {org}, {stride_us}))"
+        )
+    elif fname == "quote_literal":
+        if len(texts) != 1:
+            raise ValueError("quote_literal takes exactly one argument")
+        x = texts[0]
+        # PG also doubles backslashes and emits the E'...' form
+        # when the input contains any backslash:
+        # quote_literal('a\b') = E'a\\b'. The emitted '\' /'\\'
+        # literals are LITERAL backslashes (escapedStringLiterals
+        # is pinned on for translated SQL).
+        s = f"CAST(({x}) AS STRING)"
+        q = f"replace({s}, '''', '''''')"
+        qb = f"replace(replace({s}, '\\', '\\\\'), '''', '''''')"
+        repl = (
+            f"(CASE WHEN instr({s}, '\\') > 0 "
+            f"THEN 'E''' || {qb} || '''' "
+            f"ELSE '''' || {q} || '''' END)"
+        )
+    else:
+        if len(texts) != 2:
+            raise ValueError(f"{fname} takes exactly two arguments")
+        x, y = texts
+        g = (
+            f"aggregate(sequence(1, 92), "
+            f"named_struct('a', abs(CAST(({x}) AS BIGINT)), "
+            f"'b', abs(CAST(({y}) AS BIGINT))), "
+            f"(__gfw_acc, __gfw_i) -> CASE WHEN __gfw_acc.b = 0 "
+            f"THEN __gfw_acc ELSE named_struct('a', __gfw_acc.b, "
+            f"'b', __gfw_acc.a % __gfw_acc.b) END, "
+            f"__gfw_acc -> __gfw_acc.a)"
+        )
+        if fname == "gcd":
+            repl = f"({g})"
+        else:
+            repl = (
+                f"(CASE WHEN ({g}) = 0 THEN CAST(0 AS BIGINT) "
+                f"ELSE abs(abs(CAST(({x}) AS BIGINT)) div ({g}) "
+                f"* abs(CAST(({y}) AS BIGINT))) END)"
+            )
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_date_trunc(sql, tokens):
+    # PG date_trunc units Spark lacks (decade/century/millennium —
+    # Spark returns NULL SILENTLY for unknown units, and PG
+    # centuries/millennia start at year xxx1), plus loud rejection
+    # of units Spark would NULL out: PG raises 'unit not
+    # recognized'. Spellings are PG's documented set (note the
+    # PLURAL microseconds/milliseconds); the unit must be literal.
+    at = next(
+        (
+            i
+            for i in _calls(tokens, ("date_trunc",))
+            if i + 2 < len(tokens)
+            and tokens[i + 2].kind == "STRING"
+            and tokens[i + 2].value.lower()
+            not in (
+                "second", "minute", "hour", "day", "week", "month",
+                "quarter", "year",
+                # our own emissions (Spark spellings) — rescan stop
+                "microsecond", "millisecond",
+            )
+        ),
+        None,
+    )
+    if at is None:
+        return None
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError("unbalanced date_trunc(...)")
+    if len(args) != 2:
+        raise ValueError("date_trunc takes (unit, source)")
+    unit = tokens[at + 2].value.lower()
+    x = _span_text(sql, tokens, args[1])
+    if unit == "microseconds":
+        repl = f"date_trunc('MICROSECOND', {x})"
+    elif unit == "milliseconds":
+        repl = f"date_trunc('MILLISECOND', {x})"
+    elif unit in ("decade", "century", "millennium"):
+        span = {"century": 100, "millennium": 1000}.get(unit)
+        if span is None:  # decades start at year xxx0
+            y = f"CAST(floor(year({x}) / 10) * 10 AS INT)"
+        else:  # PG centuries/millennia start at year xxx1
+            y = (
+                f"CAST(floor((year({x}) - 1) / {span}) * {span} "
+                f"+ 1 AS INT)"
+            )
+        repl = f"make_timestamp({y}, 1, 1, 0, 0, 0)"
+    else:
+        raise ValueError(
+            f"date_trunc: unit '{unit}' is not recognized (PG "
+            "units: microseconds, milliseconds, second, minute, "
+            "hour, day, week, month, quarter, year, decade, "
+            "century, millennium)"
+        )
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_split_json_codec(sql, tokens):
+    # round-9 breadth batch 2 (all loud UNRESOLVED before this —
+    # no silent risk; semantics probed against PG's documented
+    # rules):
+    #   regexp_split_to_array(s, 'pat' [, 'i']) → split (Spark's
+    #     split IS regex, limit -1 keeps trailing empties like PG;
+    #     POSIX classes spliced for literal patterns)
+    #   jsonb_typeof(j) → first-char sniff CASE (canonical jsonb:
+    #     object/array/string/boolean/null/number)
+    #   jsonb_array_length/json_array_length → size(from_json)
+    #     with PG's RAISE on non-array (assert_true arm)
+    #   encode(x, 'hex') → lower(hex(x)) (PG hex is lowercase);
+    #     decode(s, 'hex') → unhex(s); other formats raise
+    #     (base64: PG wraps lines at 76 chars, Spark doesn't)
+    at = _find_call(tokens, ("regexp_split_to_array", "jsonb_typeof", "json_typeof", "jsonb_array_length", "json_array_length", "encode", "decode"))
+    if at is None:
+        return None
+    fname = tokens[at].value.lower()
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {fname}(...)")
+    texts = _arg_texts(sql, tokens, args)
+    if fname == "regexp_split_to_array":
+        if len(texts) not in (2, 3):
+            raise ValueError(
+                "regexp_split_to_array takes (string, pattern [, flags])"
+            )
+        s_expr = texts[0]
+        pat_span = args[1]
+        prefix = ""
+        if len(texts) == 3:
+            ftoks = tokens[args[2][0] : args[2][1] + 1]
+            if len(ftoks) != 1 or ftoks[0].kind != "STRING" or ftoks[0].value not in ("", "i"):
+                raise ValueError(
+                    "regexp_split_to_array flags: only 'i' translates"
+                )
+            prefix = "(?i)" if ftoks[0].value == "i" else ""
+        ptoks = tokens[pat_span[0] : pat_span[1] + 1]
+        if len(ptoks) == 1 and ptoks[0].kind == "STRING":
+            lit = _translate_posix_classes(ptoks[0].value)
+            lit = (prefix + lit).replace("'", "''")
+            pat = f"'{lit}'"
+        else:
+            if prefix:
+                raise ValueError(
+                    "regexp_split_to_array flags need a literal pattern"
+                )
+            pat = sql[tokens[pat_span[0]].start : tokens[pat_span[1]].end]
+        repl = f"split(({s_expr}), {pat}, -1)"
+    elif fname in ("jsonb_typeof", "json_typeof"):
+        if len(texts) != 1:
+            raise ValueError(f"{fname} takes exactly one argument")
+        j = texts[0]
+        c = f"substring(ltrim(({j})), 1, 1)"
+        repl = (
+            f"(CASE WHEN ({j}) IS NULL THEN CAST(NULL AS STRING) "
+            f"WHEN {c} = '{{' THEN 'object' "
+            f"WHEN {c} = '[' THEN 'array' "
+            f"WHEN {c} = '\"' THEN 'string' "
+            f"WHEN {c} IN ('t', 'f') THEN 'boolean' "
+            f"WHEN {c} = 'n' THEN 'null' "
+            f"ELSE 'number' END)"
+        )
+    elif fname in ("jsonb_array_length", "json_array_length"):
+        if len(texts) != 1:
+            raise ValueError(f"{fname} takes exactly one argument")
+        j = texts[0]
+        parsed = f"from_json(({j}), 'array<variant>')"
+        repl = (
+            f"(CASE WHEN ({j}) IS NULL THEN CAST(NULL AS INT) "
+            f"WHEN {parsed} IS NULL THEN CASE WHEN assert_true("
+            f"false, '{fname}: cannot get array length of a "
+            f"non-array') IS NULL THEN 0 END "
+            f"ELSE size({parsed}) END)"
+        )
+    else:  # encode / decode
+        if len(texts) != 2:
+            raise ValueError(f"{fname} takes exactly (value, format)")
+        ftoks = tokens[args[1][0] : args[1][1] + 1]
+        if len(ftoks) != 1 or ftoks[0].kind != "STRING" or ftoks[0].value != "hex":
+            raise ValueError(
+                f"{fname}: only the 'hex' format translates "
+                "(PG base64 wraps lines at 76 chars; escape format "
+                "has no Spark twin)"
+            )
+        if fname == "encode":
+            repl = f"lower(hex(({texts[0]})))"
+        else:
+            repl = f"unhex(({texts[0]}))"
+    return tokens[at].start, tokens[close].end, repl
+
+
+def _find_string_to_array(sql, tokens):
+    at = _find_call(tokens, ("string_to_array",))
+    if at is None:
+        return None
+    close, args = _close(tokens, at + 1)
+    if close is None or len(args) != 2:
+        raise ValueError("string_to_array takes exactly (expr, 'delimiter')")
+    comma = args[1][0] - 1
+    delim_toks = tokens[comma + 1 : close]
+    if (
+        len(delim_toks) == 1
+        and delim_toks[0].kind == "IDENT"
+        and delim_toks[0].upper == "NULL"
+    ):
+        # PG: a NULL delimiter splits the string into its
+        # individual CHARACTERS (round-11, verdict r10 #8);
+        # split on the empty regex is exactly per-character in
+        # Spark (no trailing empty element)
+        s_expr = sql[tokens[at + 2].start : tokens[comma - 1].end]
+        repl = (
+            f"CASE WHEN ({s_expr}) = '' THEN "
+            f"CAST(array() AS array<string>) "
+            f"ELSE split({s_expr}, '') END"
+        )
+        return tokens[at].start, tokens[close].end, repl
+    if len(delim_toks) != 1 or delim_toks[0].kind != "STRING":
+        raise ValueError(
+            "string_to_array requires a string-literal delimiter "
+            "(dynamic delimiters are not translatable to Spark's regex split)"
+        )
+    delim = delim_toks[0].value
+    if "\\E" in delim:
+        raise ValueError("string_to_array delimiter may not contain \\E")
+    s_expr = sql[tokens[at + 2].start : tokens[comma - 1].end]
+    if delim == "":
+        # PG: empty delimiter → the whole string as ONE element
+        # (split on an empty regex would explode per-character)
+        repl = (
+            f"CASE WHEN ({s_expr}) = '' THEN CAST(array() AS array<string>) "
+            f"ELSE array({s_expr}) END"
+        )
+    else:
+        quoted = ("\\Q" + delim + "\\E").replace("'", "''")
+        repl = (
+            f"CASE WHEN ({s_expr}) = '' THEN CAST(array() AS array<string>) "
+            f"ELSE split({s_expr}, '{quoted}') END"
+        )
+    return tokens[at].start, tokens[close].end, repl
+
+
+_PG_FUNCTION_FINDERS = (
+    _find_starts_with,
+    _find_array_to_string,
+    _find_ltrim_rtrim,
+    _find_array_agg_nulls,
+    _find_grouping,
+    _find_degree_trig_sha,
+    _find_interval_odds,
+    _find_format,
+    _find_to_hex,
+    _find_trunc,
+    _find_initcap,
+    _find_log,
+    _find_array_uuid_fn,
+    _find_make_interval,
+    _find_age,
+    _find_gcd_lcm_quote_bin,
+    _find_date_trunc,
+    _find_split_json_codec,
+    _find_string_to_array,
+)
 
 
 def _java_replacement(repl: str, shift: int) -> str:
@@ -3477,70 +3141,67 @@ def translate_math_domain(sql: str) -> str:
     the right of their enclosing call, so each rewrite only ever looks
     strictly left of the last one. NULL inputs fall through every
     domain arm to the function itself (PG: NULL in, NULL out)."""
-    boundary = None
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower() in _MATH_DOMAIN_FNS
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-                and (boundary is None or t.start < boundary)
-            ):
-                at = i  # keep scanning: we want the RIGHTMOST
-        if at is None:
-            return sql
-        fname = tokens[at].value.lower()
-        close = _primary_end(tokens, at)
-        if close is None:
-            raise ValueError(f"unbalanced {fname}(...)")
-        args = (
-            _args_spans(tokens, at + 2, close - 1)
-            if close - 1 >= at + 2
-            else []
-        )
-        texts = [sql[tokens[s].start : tokens[e].end] for s, e in args if s <= e]
-        call = sql[tokens[at].start : tokens[close].end]
-        boundary = tokens[at].start
-        arms = []
-        if fname == "sqrt" and len(texts) == 1:
-            arms = [(f"({texts[0]}) < 0",
-                     "cannot take square root of a negative number")]
-        elif fname in ("ln", "log10") and len(texts) == 1:
-            arms = [(f"({texts[0]}) <= 0",
-                     "cannot take logarithm of zero or a negative number")]
-        elif fname == "log" and len(texts) == 2:
-            b, x = texts
-            arms = [
-                (f"({b}) <= 0 OR ({x}) <= 0",
-                 "cannot take logarithm of zero or a negative number"),
-                (f"({b}) = 1", "division by zero"),
-            ]
-        elif fname in ("acos", "asin") and len(texts) == 1:
-            arms = [(f"abs({texts[0]}) > 1", "input is out of range")]
-        elif fname == "power" and len(texts) == 2:
-            x, y = texts
-            arms = [
-                (f"({x}) = 0 AND ({y}) < 0",
-                 "zero raised to a negative power is undefined"),
-                (f"({x}) < 0 AND ({y}) != floor({y})",
-                 "a negative number raised to a non-integer power "
-                 "yields a complex result"),
-            ]
-        if not arms:
-            continue  # wrong arity — leave for Spark's own analyzer
-        # the dummy MUST be non-NULL: with every CASE outcome NULL,
-        # Catalyst folds the whole CASE to NULL and silently drops the
-        # assert_true (probed) — 0.0 never materializes, the raise wins
-        when = " ".join(
-            f"WHEN {cond} THEN CASE WHEN assert_true(false, '{msg}') "
-            f"IS NULL THEN CAST(0 AS DOUBLE) END"
-            for cond, msg in arms
-        )
-        repl = f"(CASE {when} ELSE {call} END)"
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
+    return _rewrite(sql, [_math_domain_finder()])[0]
+
+
+def _math_domain_finder():
+    boundary = None  # start offset of the last site handled
+
+    def find(sql, tokens):
+        nonlocal boundary
+        sites = [
+            i
+            for i in _calls(tokens, _MATH_DOMAIN_FNS)
+            if boundary is None or tokens[i].start < boundary
+        ]
+        for at in reversed(sites):
+            fname = tokens[at].value.lower()
+            close, args = _close(tokens, at + 1)
+            if close is None:
+                raise ValueError(f"unbalanced {fname}(...)")
+            texts = _arg_texts(sql, tokens, args)
+            call = sql[tokens[at].start : tokens[close].end]
+            boundary = tokens[at].start
+            arms = []
+            if fname == "sqrt" and len(texts) == 1:
+                arms = [(f"({texts[0]}) < 0",
+                         "cannot take square root of a negative number")]
+            elif fname in ("ln", "log10") and len(texts) == 1:
+                arms = [(f"({texts[0]}) <= 0",
+                         "cannot take logarithm of zero or a negative number")]
+            elif fname == "log" and len(texts) == 2:
+                b, x = texts
+                arms = [
+                    (f"({b}) <= 0 OR ({x}) <= 0",
+                     "cannot take logarithm of zero or a negative number"),
+                    (f"({b}) = 1", "division by zero"),
+                ]
+            elif fname in ("acos", "asin") and len(texts) == 1:
+                arms = [(f"abs({texts[0]}) > 1", "input is out of range")]
+            elif fname == "power" and len(texts) == 2:
+                x, y = texts
+                arms = [
+                    (f"({x}) = 0 AND ({y}) < 0",
+                     "zero raised to a negative power is undefined"),
+                    (f"({x}) < 0 AND ({y}) != floor({y})",
+                     "a negative number raised to a non-integer power "
+                     "yields a complex result"),
+                ]
+            if not arms:
+                continue  # wrong arity — leave for Spark's own analyzer
+            # the dummy MUST be non-NULL: with every CASE outcome NULL,
+            # Catalyst folds the whole CASE to NULL and silently drops the
+            # assert_true (probed) — 0.0 never materializes, the raise wins
+            when = " ".join(
+                f"WHEN {cond} THEN CASE WHEN assert_true(false, '{msg}') "
+                f"IS NULL THEN CAST(0 AS DOUBLE) END"
+                for cond, msg in arms
+            )
+            repl = f"(CASE {when} ELSE {call} END)"
+            return tokens[at].start, tokens[close].end, repl
+        return None
+
+    return find
 
 
 def translate_regexp_replace(sql: str) -> str:
@@ -3564,70 +3225,50 @@ def translate_regexp_replace(sql: str) -> str:
     conversion happens at translate time); flags beyond ``g``/``i``
     raise.
     """
-    done = 0  # translated calls stay in the text; skip them on rescans
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        seen = 0
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "REGEXP_REPLACE"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                if seen == done:
-                    at = i
-                    break
-                seen += 1
+    return _rewrite(sql, [_regexp_replace_finder()])[0]
+
+
+def _regexp_replace_finder():
+    # translated calls keep their name: sites at or before the last
+    # rewrite are our own emissions
+    floor = -1
+
+    def find(sql, tokens):
+        nonlocal floor
+        at = next(
+            (i for i in _calls(tokens, ("regexp_replace",)) if tokens[i].start > floor),
+            None,
+        )
         if at is None:
-            return sql
-        depth = 0
-        close = None
-        commas = []
-        for j in range(at + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-            elif tk.kind == "PUNCT" and tk.value == "," and depth == 1:
-                commas.append(j)
-        if close is None or len(commas) not in (2, 3):
+            return None
+        close, args = _close(tokens, at + 1)
+        if close is None or len(args) not in (3, 4):
             raise ValueError(
                 "regexp_replace takes (expr, pattern, replacement [, flags])"
             )
-        pat_tok = tokens[commas[0] + 1]
-        rep_tok = tokens[commas[1] + 1]
-        literal_args = (
-            pat_tok.kind == "STRING"
-            and commas[0] + 2 == commas[1]
-            and rep_tok.kind == "STRING"
-            and (commas[1] + 2 == (commas[2] if len(commas) == 3 else close))
-        )
-        if not literal_args:
+
+        def literal(span):
+            return span[0] == span[1] and tokens[span[0]].kind == "STRING"
+
+        if not (literal(args[1]) and literal(args[2])):
             raise ValueError(
                 "regexp_replace requires string-literal pattern/replacement "
                 "(dynamic regexes are not translatable to Spark with PG "
                 "first-match semantics)"
             )
-        if len(commas) == 3:
-            flag_tok = tokens[commas[2] + 1]
-            if flag_tok.kind != "STRING" or commas[2] + 2 != close:
+        flags = ""
+        if len(args) == 4:
+            if not literal(args[3]):
                 raise ValueError("regexp_replace flags must be a string literal")
-            flags = flag_tok.value
-        else:
-            flags = ""
+            flags = tokens[args[3][0]].value
         if set(flags) - {"g", "i"}:
             raise ValueError(
                 f"regexp_replace flags {flags!r} outside the translatable "
                 "subset (g, i)"
             )
-        pat, repl = _translate_posix_classes(pat_tok.value), rep_tok.value
-        s_expr = sql[tokens[at + 2].start : tokens[commas[0] - 1].end]
+        pat = _translate_posix_classes(tokens[args[1][0]].value)
+        repl = tokens[args[2][0]].value
+        s_expr = sql[tokens[at + 2].start : tokens[args[1][0] - 2].end]
         ci = "(?i)" if "i" in flags else ""
         if "g" in flags:
             new_pat = ci + pat
@@ -3643,28 +3284,10 @@ def translate_regexp_replace(sql: str) -> str:
             new_repl = "$1" + _java_replacement(repl, 2)
         pl = new_pat.replace("'", "''")
         rl = new_repl.replace("'", "''")
-        repl_sql = f"regexp_replace({s_expr}, '{pl}', '{rl}')"
-        sql = f"{sql[:tokens[at].start]}{repl_sql}{sql[tokens[close].end:]}"
-        done += 1
+        floor = tokens[at].start
+        return floor, tokens[close].end, f"regexp_replace({s_expr}, '{pl}', '{rl}')"
 
-
-def _split_top_level_commas(text: str) -> list[str]:
-    """Split an expression list at commas outside any parens or
-    brackets (ARRAY[a, b] stays one item)."""
-    toks = tokenize(text)
-    items = []
-    d = 0
-    start = 0
-    for t in toks:
-        if t.kind == "PUNCT" and t.value in ("(", "["):
-            d += 1
-        elif t.kind == "PUNCT" and t.value in (")", "]"):
-            d -= 1
-        elif t.kind == "PUNCT" and t.value == "," and d == 0:
-            items.append(text[start : t.start].strip())
-            start = t.end
-    items.append(text[start:].strip())
-    return items
+    return find
 
 
 def translate_distinct_on(sql: str) -> str:
@@ -3683,7 +3306,20 @@ def translate_distinct_on(sql: str) -> str:
     arbitrary row per key without it), and a bare ``*`` select list is
     rejected (the hidden rank column cannot be dropped from ``*``
     without schema knowledge at translate time)."""
-    tokens = tokenize(sql)
+    return _rewrite(sql, [_find_distinct_on])[0]
+
+
+def _clause_at(tokens, word, start):
+    """Index of the first top-level keyword ``word`` from ``start``."""
+    return next(
+        (j for j, _ in _top_level(tokens, start, len(tokens) - 1) if _is_kw(tokens[j], word)),
+        None,
+    )
+
+
+def _find_distinct_on(sql, tokens):
+    """One whole-statement edit; the rebuilt statement no longer starts
+    with ``SELECT DISTINCT ON``."""
     at = None
     for i, t in enumerate(tokens):
         if (
@@ -3697,7 +3333,7 @@ def translate_distinct_on(sql: str) -> str:
             at = i
             break
     if at is None:
-        return sql
+        return None
     if at != 0:
         # the rewrite rebuilds the WHOLE statement from its clauses — a
         # DISTINCT ON nested in a scalar subquery (admitted by the
@@ -3706,38 +3342,10 @@ def translate_distinct_on(sql: str) -> str:
             "DISTINCT ON inside a subquery is outside the translatable "
             "subset — rewrite with row_number() OVER (...) directly"
         )
-    depth = 0
-    close = None
-    key_commas = []
-    for j in range(at + 3, len(tokens)):
-        tk = tokens[j]
-        if tk.kind == "PUNCT" and tk.value == "(":
-            depth += 1
-        elif tk.kind == "PUNCT" and tk.value == ")":
-            depth -= 1
-            if depth == 0:
-                close = j
-                break
-        elif tk.kind == "PUNCT" and tk.value == "," and depth == 1:
-            key_commas.append(j)
+    close, key_spans = _close(tokens, at + 3)
     if close is None or close == at + 4:
         raise ValueError("DISTINCT ON: empty or unbalanced key list")
-    keys_text = sql[tokens[at + 4].start : tokens[close - 1].end]
-    n_keys = len(key_commas) + 1
-
-    def _clause_at(kind_upper, start_idx):
-        d = 0
-        for j in range(start_idx, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                d += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                d -= 1
-            elif d == 0 and tk.kind == "IDENT" and tk.upper == kind_upper:
-                return j
-        return None
-
-    from_idx = _clause_at("FROM", close + 1)
+    from_idx = _clause_at(tokens, "FROM", close + 1)
     if from_idx is None:
         raise ValueError("DISTINCT ON: missing FROM")
     select_list = sql[tokens[close + 1].start : tokens[from_idx - 1].end]
@@ -3747,9 +3355,9 @@ def translate_distinct_on(sql: str) -> str:
             "(the rank column cannot be excluded) — name the columns"
         )
     for kw in ("GROUP", "HAVING", "WINDOW"):
-        if _clause_at(kw, from_idx + 1) is not None:
+        if _clause_at(tokens, kw, from_idx + 1) is not None:
             raise ValueError(f"DISTINCT ON with {kw} BY is outside the subset")
-    order_idx = _clause_at("ORDER", from_idx + 1)
+    order_idx = _clause_at(tokens, "ORDER", from_idx + 1)
     if order_idx is None:
         raise ValueError(
             "DISTINCT ON requires ORDER BY (PG would return an arbitrary "
@@ -3758,42 +3366,20 @@ def translate_distinct_on(sql: str) -> str:
     # the table body: FROM ... [WHERE ...] up to ORDER
     body = sql[tokens[from_idx].end : tokens[order_idx - 1].end]
     # ORDER BY items up to LIMIT/OFFSET/FETCH or end
-    tail_idx = None
-    for kw in ("LIMIT", "OFFSET", "FETCH"):
-        cand = _clause_at(kw, order_idx + 2)
-        if cand is not None and (tail_idx is None or cand < tail_idx):
-            tail_idx = cand
+    tails = [_clause_at(tokens, kw, order_idx + 2) for kw in ("LIMIT", "OFFSET", "FETCH")]
+    tail_idx = min((c for c in tails if c is not None), default=None)
     order_end = tail_idx - 1 if tail_idx is not None else len(tokens) - 1
     order_text = sql[tokens[order_idx + 2].start : tokens[order_end].end]
     tail_text = sql[tokens[tail_idx].start :] if tail_idx is not None else ""
-    # split ORDER BY items at top-level commas
-    items = []
-    d = 0
-    cur_start = tokens[order_idx + 2].start
-    for j in range(order_idx + 2, order_end + 1):
-        tk = tokens[j]
-        if tk.kind == "PUNCT" and tk.value == "(":
-            d += 1
-        elif tk.kind == "PUNCT" and tk.value == ")":
-            d -= 1
-        elif tk.kind == "PUNCT" and tk.value == "," and d == 0:
-            items.append(sql[cur_start : tk.start].strip())
-            cur_start = tk.end
-    items.append(sql[cur_start : tokens[order_end].end].strip())
-    if len(items) < n_keys:
+    item_spans = _args_spans(tokens, order_idx + 2, order_end)
+    n_keys = len(key_spans)
+    if len(item_spans) < n_keys:
         raise ValueError(
             "DISTINCT ON: ORDER BY must start with the DISTINCT ON expressions"
         )
-    # split keys at the depth-1 commas tracked above (a naive split
-    # would break function-call keys like date_trunc('day', ts))
-    keys = []
-    kstart = tokens[at + 4].start
-    for cj in key_commas:
-        keys.append(sql[kstart : tokens[cj].start].strip())
-        kstart = tokens[cj].end
-    keys.append(sql[kstart : tokens[close - 1].end].strip())
     norm = lambda s: re.sub(r"\s+", " ", s).strip().lower()  # noqa: E731
-    for k, item in zip(keys, items[:n_keys]):
+    for kspan, ispan in zip(key_spans, item_spans):
+        k, item = _span_text(sql, tokens, kspan), _span_text(sql, tokens, ispan)
         if norm(item) not in (norm(k), norm(k) + " asc", norm(k) + " desc",
                               norm(k) + " asc nulls last", norm(k) + " desc nulls last",
                               norm(k) + " asc nulls first", norm(k) + " desc nulls first",
@@ -3801,41 +3387,39 @@ def translate_distinct_on(sql: str) -> str:
             raise ValueError(
                 f"DISTINCT ON: ORDER BY item {item!r} does not match key {k!r}"
             )
-    tiebreakers = items[n_keys:] or [keys[0]]
+    tie_spans = item_spans[n_keys:] or key_spans[:1]
     # The window runs INSIDE the subquery, where output-column aliases
     # are not in scope — substitute bare-alias keys/tiebreakers with
     # their source expressions (PG lets ORDER BY / DISTINCT ON use an
     # alias only as a bare item, so exact-ident substitution is
     # complete).
     alias_map = {}
-    for item in _split_top_level_commas(select_list):
-        itoks = tokenize(item)
+    for s0, e0 in _args_spans(tokens, close + 1, from_idx - 1):
         if (
-            len(itoks) >= 3
-            and itoks[-2].kind == "IDENT"
-            and itoks[-2].upper == "AS"
-            and itoks[-1].kind in ("IDENT", "QIDENT")
+            e0 - s0 >= 2
+            and _is_kw(tokens[e0 - 1], "AS")
+            and tokens[e0].kind in ("IDENT", "QIDENT")
         ):
-            alias_map[itoks[-1].value.lower()] = item[: itoks[-2].start].strip()
+            alias_map[tokens[e0].value.lower()] = sql[tokens[s0].start : tokens[e0 - 2].end]
 
-    def _subst_alias(expr):
-        etoks = tokenize(expr)
+    def _subst_alias(span):
+        s0, e0 = span
         if (
-            etoks
-            and etoks[0].kind == "IDENT"
-            and etoks[0].value.lower() in alias_map
+            tokens[s0].kind == "IDENT"
+            and tokens[s0].value.lower() in alias_map
             and all(
                 t.kind == "IDENT"
                 and t.upper in ("ASC", "DESC", "NULLS", "FIRST", "LAST")
-                for t in etoks[1:]
+                for t in tokens[s0 + 1 : e0 + 1]
             )
         ):
-            return f"({alias_map[etoks[0].value.lower()]}){expr[etoks[0].end:]}"
-        return expr
+            rest = sql[tokens[s0].end : tokens[e0].end]
+            return f"({alias_map[tokens[s0].value.lower()]}){rest}"
+        return _span_text(sql, tokens, span)
 
-    win_keys = ", ".join(_subst_alias(k) for k in keys)
-    win_ties = ", ".join(_subst_alias(t) for t in tiebreakers)
-    return (
+    win_keys = ", ".join(_subst_alias(k) for k in key_spans)
+    win_ties = ", ".join(_subst_alias(t) for t in tie_spans)
+    return 0, len(sql), (
         f"SELECT {select_list.strip()} FROM (SELECT *, row_number() OVER ("
         f"PARTITION BY {win_keys} ORDER BY {win_ties}"
         f") AS __gfw_rn FROM{body.rstrip()}) __gfw_don WHERE __gfw_rn = 1 "
@@ -3906,77 +3490,42 @@ def translate_to_char(sql: str) -> str:
     alnum check in the pattern converter. Single-argument
     ``to_timestamp(double)`` (epoch seconds) passes through: it is
     the same function in Spark."""
-    done = 0  # to_date/to_timestamp rewrites keep their names; skip them
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        seen = 0
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper in _TEMPLATE_FNS
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                # one-argument to_timestamp(epoch) is Spark-native;
-                # only two-argument template forms translate
-                depth = 0
-                n_commas = 0
-                for j in range(i + 1, len(tokens)):
-                    tk = tokens[j]
-                    if tk.kind == "PUNCT" and tk.value == "(":
-                        depth += 1
-                    elif tk.kind == "PUNCT" and tk.value == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    elif tk.kind == "PUNCT" and tk.value == "," and depth == 1:
-                        n_commas += 1
-                if t.upper == "TO_TIMESTAMP" and n_commas == 0:
-                    continue
-                # to_char rewrites to date_format (vanishes from this
-                # scan) — always process immediately; to_date /
-                # to_timestamp keep their names, so skip the `done`
-                # already-rewritten ones in scan order
-                if t.upper != "TO_CHAR":
-                    if seen < done:
-                        seen += 1
-                        continue
-                at = i
-                break
-        if at is None:
-            return sql
-        fn = tokens[at].upper
-        depth = 0
-        close = None
-        commas = []
-        for j in range(at + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-            elif tk.kind == "PUNCT" and tk.value == "," and depth == 1:
-                commas.append(j)
-        if close is None or len(commas) != 1:
-            raise ValueError(f"{fn.lower()} takes exactly (expr, 'template')")
-        fmt_toks = tokens[commas[0] + 1 : close]
-        if len(fmt_toks) != 1 or fmt_toks[0].kind != "STRING":
-            raise ValueError(
-                f"{fn.lower()} requires a string-literal template "
-                "(dynamic templates are not translatable)"
-            )
-        java = _to_char_java_format(fmt_toks[0].value).replace("'", "''")
-        expr = sql[tokens[at + 2].start : tokens[commas[0] - 1].end]
-        sql = (
-            f"{sql[:tokens[at].start]}{_TEMPLATE_FNS[fn]}({expr}, '{java}')"
-            f"{sql[tokens[close].end:]}"
-        )
-        if fn != "TO_CHAR":
-            done += 1
+    return _rewrite(sql, [_to_char_finder()])[0]
+
+
+def _to_char_finder():
+    # to_char rewrites to date_format (vanishes from the scan);
+    # to_date / to_timestamp keep their names, so sites at or before
+    # the last such rewrite are our own emissions
+    floor = -1
+
+    def find(sql, tokens):
+        nonlocal floor
+        for at in _calls(tokens, ("to_char", "to_date", "to_timestamp")):
+            fn = tokens[at].upper
+            close, args = _close(tokens, at + 1)
+            # one-argument to_timestamp(epoch) is Spark-native; only
+            # two-argument template forms translate
+            if fn == "TO_TIMESTAMP" and len(args) < 2:
+                continue
+            if fn != "TO_CHAR" and tokens[at].start <= floor:
+                continue
+            if close is None or len(args) != 2:
+                raise ValueError(f"{fn.lower()} takes exactly (expr, 'template')")
+            s0, e0 = args[1]
+            if s0 != e0 or tokens[s0].kind != "STRING":
+                raise ValueError(
+                    f"{fn.lower()} requires a string-literal template "
+                    "(dynamic templates are not translatable)"
+                )
+            java = _to_char_java_format(tokens[s0].value).replace("'", "''")
+            expr = sql[tokens[at + 2].start : tokens[s0 - 2].end]
+            if fn != "TO_CHAR":
+                floor = tokens[at].start
+            return tokens[at].start, tokens[close].end, f"{_TEMPLATE_FNS[fn]}({expr}, '{java}')"
+        return None
+
+    return find
 
 
 _JSON_OPS = {"->>": True, "->": False, "#>>": True, "#>": False}  # → text?
@@ -4052,61 +3601,63 @@ def translate_json_ops(sql: str) -> str:
     MUST run FIRST in to_spark_sql — later passes emit ``->`` lambda
     arrows (transform/exists) that this translator would mangle.
     """
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if t.kind == "OP" and t.value in _JSON_OPS and 0 < i < len(tokens) - 1:
-                at = i
-                break
-        if at is None:
-            return sql
-        op = tokens[at].value
-        rhs = tokens[at + 1]
-        # negative array index (PG: -1 = last element) — round-7
-        # widening: tokenized as OP '-' + NUMBER; expressed as a
-        # DYNAMIC JSONPath anchored at json_array_length (probed: both
-        # get_json_object and try_variant_get accept non-foldable
-        # paths; non-arrays/out-of-range give NULL, like PG)
-        neg_n = None
-        if (
-            op in ("->", "->>")
-            and rhs.kind == "OP"
-            and rhs.value == "-"
-            and at + 2 < len(tokens)
-            and tokens[at + 2].kind == "NUMBER"
-            and tokens[at + 2].value.isdigit()
-        ):
-            neg_n = int(tokens[at + 2].value)
-            rhs_end = tokens[at + 2].end
+    return _rewrite(sql, [_find_json_op])[0]
+
+
+def _find_json_op(sql, tokens):
+    at = None
+    for i, t in enumerate(tokens):
+        if t.kind == "OP" and t.value in _JSON_OPS and 0 < i < len(tokens) - 1:
+            at = i
+            break
+    if at is None:
+        return None
+    op = tokens[at].value
+    rhs = tokens[at + 1]
+    # negative array index (PG: -1 = last element) — round-7
+    # widening: tokenized as OP '-' + NUMBER; expressed as a
+    # DYNAMIC JSONPath anchored at json_array_length (probed: both
+    # get_json_object and try_variant_get accept non-foldable
+    # paths; non-arrays/out-of-range give NULL, like PG)
+    neg_n = None
+    if (
+        op in ("->", "->>")
+        and rhs.kind == "OP"
+        and rhs.value == "-"
+        and at + 2 < len(tokens)
+        and tokens[at + 2].kind == "NUMBER"
+        and tokens[at + 2].value.isdigit()
+    ):
+        neg_n = int(tokens[at + 2].value)
+        rhs_end = tokens[at + 2].end
+    else:
+        path = _json_path(op, rhs.kind, rhs.value)
+        rhs_end = rhs.end
+    lstart = _primary_start(tokens, at - 1)
+    if lstart is None:
+        raise ValueError(f"cannot resolve the left operand of {op}")
+    # PG's -> ->> #> #>> share ||'s left-assoc tier: `a || b ->> 'k'`
+    # means `(a || b) ->> 'k'`; :: binds tighter still
+    lstart = _absorb_operand_left(tokens, lstart)
+    lhs = sql[tokens[lstart].start : tokens[at - 1].end]
+    if neg_n is not None:
+        # size(from_json) rather than Spark's json_array_length:
+        # the round-9 pg_functions loop owns the json_array_length
+        # SPELLING (PG raise-on-non-array semantics) and must not
+        # rewrite this emission
+        path_expr = (
+            f"concat('$[', CAST(size(from_json({lhs}, "
+            f"'array<variant>')) - {neg_n} AS STRING), ']')"
+        )
+        if _JSON_OPS[op]:
+            repl = f"get_json_object({lhs}, {path_expr})"
         else:
-            path = _json_path(op, rhs.kind, rhs.value)
-            rhs_end = rhs.end
-        lstart = _primary_start(tokens, at - 1)
-        if lstart is None:
-            raise ValueError(f"cannot resolve the left operand of {op}")
-        # PG's -> ->> #> #>> share ||'s left-assoc tier: `a || b ->> 'k'`
-        # means `(a || b) ->> 'k'`; :: binds tighter still
-        lstart = _absorb_operand_left(tokens, lstart)
-        lhs = sql[tokens[lstart].start : tokens[at - 1].end]
-        if neg_n is not None:
-            # size(from_json) rather than Spark's json_array_length:
-            # the round-9 pg_functions loop owns the json_array_length
-            # SPELLING (PG raise-on-non-array semantics) and must not
-            # rewrite this emission
-            path_expr = (
-                f"concat('$[', CAST(size(from_json({lhs}, "
-                f"'array<variant>')) - {neg_n} AS STRING), ']')"
-            )
-            if _JSON_OPS[op]:
-                repl = f"get_json_object({lhs}, {path_expr})"
-            else:
-                repl = f"to_json(try_variant_get(parse_json({lhs}), {path_expr}))"
-        elif _JSON_OPS[op]:
-            repl = f"get_json_object({lhs}, '{path}')"
-        else:
-            repl = f"to_json(try_variant_get(parse_json({lhs}), '{path}'))"
-        sql = f"{sql[:tokens[lstart].start]}{repl}{sql[rhs_end:]}"
+            repl = f"to_json(try_variant_get(parse_json({lhs}), {path_expr}))"
+    elif _JSON_OPS[op]:
+        repl = f"get_json_object({lhs}, '{path}')"
+    else:
+        repl = f"to_json(try_variant_get(parse_json({lhs}), '{path}'))"
+    return tokens[lstart].start, rhs_end, repl
 
 
 def _json_exists_keys(tokens, at):
@@ -4180,39 +3731,41 @@ def translate_json_exists(sql: str) -> str:
     ARRAY[...]`` all-of the same per-key test. Keys must be literals.
     Runs before :func:`translate_array_literal` (it consumes the raw
     ARRAY[...] form itself)."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "OP"
-                and t.value in ("?", "?|", "?&")
-                and 0 < i < len(tokens) - 1
-            ):
-                at = i
-                break
-        if at is None:
-            return sql
-        op = tokens[at].value
-        lstart = _primary_start(tokens, at - 1)
-        if lstart is None:
-            raise ValueError(f"cannot resolve the left operand of {op}")
-        # same precedence tier as || (see translate_json_ops)
-        lstart = _absorb_operand_left(tokens, lstart)
-        lhs = sql[tokens[lstart].start : tokens[at - 1].end]
-        if op == "?":
-            rhs = tokens[at + 1]
-            if rhs.kind != "STRING":
-                raise ValueError("? needs a string-literal key")
-            repl = _json_has_key(lhs, rhs.value)
-            end = rhs.end
-        else:
-            keys, last = _json_exists_keys(tokens, at)
-            parts = [_json_has_key(lhs, k) for k in keys]
-            joiner = " OR " if op == "?|" else " AND "
-            repl = "(" + joiner.join(parts) + ")"
-            end = tokens[last].end
-        sql = f"{sql[:tokens[lstart].start]}{repl}{sql[end:]}"
+    return _rewrite(sql, [_find_json_exists])[0]
+
+
+def _find_json_exists(sql, tokens):
+    at = None
+    for i, t in enumerate(tokens):
+        if (
+            t.kind == "OP"
+            and t.value in ("?", "?|", "?&")
+            and 0 < i < len(tokens) - 1
+        ):
+            at = i
+            break
+    if at is None:
+        return None
+    op = tokens[at].value
+    lstart = _primary_start(tokens, at - 1)
+    if lstart is None:
+        raise ValueError(f"cannot resolve the left operand of {op}")
+    # same precedence tier as || (see translate_json_ops)
+    lstart = _absorb_operand_left(tokens, lstart)
+    lhs = sql[tokens[lstart].start : tokens[at - 1].end]
+    if op == "?":
+        rhs = tokens[at + 1]
+        if rhs.kind != "STRING":
+            raise ValueError("? needs a string-literal key")
+        repl = _json_has_key(lhs, rhs.value)
+        end = rhs.end
+    else:
+        keys, last = _json_exists_keys(tokens, at)
+        parts = [_json_has_key(lhs, k) for k in keys]
+        joiner = " OR " if op == "?|" else " AND "
+        repl = "(" + joiner.join(parts) + ")"
+        end = tokens[last].end
+    return tokens[lstart].start, end, repl
 
 
 _JSON_DIGIT_GUARD = (
@@ -4404,49 +3957,51 @@ def translate_json_contains(sql: str) -> str:
     counting the needle itself — _variant_containment_probe). Containment
     between two dynamic columns and deeper nesting still raise
     loudly."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if t.kind == "OP" and t.value in ("@>", "<@") and 0 < i < len(tokens) - 1:
-                at = i
-                break
-        if at is None:
-            return sql
-        op = tokens[at].value
-        if op == "@>":
-            # column/expr on the LEFT, literal needle on the RIGHT
-            needle = tokens[at + 1]
-            if needle.kind != "STRING":
-                raise ValueError(
-                    "@> needs a string-literal JSON needle on the right "
-                    "(dynamic containment is outside the translatable subset)"
-                )
-            lstart = _primary_start(tokens, at - 1)
-            if lstart is None:
-                raise ValueError("cannot resolve the left operand of @>")
-            # same precedence tier as || (see translate_json_ops); the
-            # <@ arm needs no ||-twin — left-assoc makes `'x' <@ a || b`
-            # parse as `('x' <@ a) || b` — but trailing ::casts DO bind
-            lstart = _absorb_operand_left(tokens, lstart)
-            col_text = sql[tokens[lstart].start : tokens[at - 1].end]
-            start, end = tokens[lstart].start, needle.end
-        else:
-            # literal needle on the LEFT, column/expr on the RIGHT
-            needle = tokens[at - 1]
-            if needle.kind != "STRING":
-                raise ValueError(
-                    "<@ needs a string-literal JSON needle on the left "
-                    "(dynamic containment is outside the translatable subset)"
-                )
-            rend = _primary_end(tokens, at + 1)
-            if rend is None:
-                raise ValueError("cannot resolve the right operand of <@")
-            rend = _absorb_cast_right(tokens, rend)
-            col_text = sql[tokens[at + 1].start : tokens[rend].end]
-            start, end = needle.start, tokens[rend].end
-        repl = _containment_conditions(col_text, needle.value, op)
-        sql = f"{sql[:start]}{repl}{sql[end:]}"
+    return _rewrite(sql, [_find_json_contains])[0]
+
+
+def _find_json_contains(sql, tokens):
+    at = None
+    for i, t in enumerate(tokens):
+        if t.kind == "OP" and t.value in ("@>", "<@") and 0 < i < len(tokens) - 1:
+            at = i
+            break
+    if at is None:
+        return None
+    op = tokens[at].value
+    if op == "@>":
+        # column/expr on the LEFT, literal needle on the RIGHT
+        needle = tokens[at + 1]
+        if needle.kind != "STRING":
+            raise ValueError(
+                "@> needs a string-literal JSON needle on the right "
+                "(dynamic containment is outside the translatable subset)"
+            )
+        lstart = _primary_start(tokens, at - 1)
+        if lstart is None:
+            raise ValueError("cannot resolve the left operand of @>")
+        # same precedence tier as || (see translate_json_ops); the
+        # <@ arm needs no ||-twin — left-assoc makes `'x' <@ a || b`
+        # parse as `('x' <@ a) || b` — but trailing ::casts DO bind
+        lstart = _absorb_operand_left(tokens, lstart)
+        col_text = sql[tokens[lstart].start : tokens[at - 1].end]
+        start, end = tokens[lstart].start, needle.end
+    else:
+        # literal needle on the LEFT, column/expr on the RIGHT
+        needle = tokens[at - 1]
+        if needle.kind != "STRING":
+            raise ValueError(
+                "<@ needs a string-literal JSON needle on the left "
+                "(dynamic containment is outside the translatable subset)"
+            )
+        rend = _primary_end(tokens, at + 1)
+        if rend is None:
+            raise ValueError("cannot resolve the right operand of <@")
+        rend = _absorb_cast_right(tokens, rend)
+        col_text = sql[tokens[at + 1].start : tokens[rend].end]
+        start, end = needle.start, tokens[rend].end
+    repl = _containment_conditions(col_text, needle.value, op)
+    return start, end, repl
 
 
 def _has_capture_group(pat: str) -> bool:
@@ -4478,55 +4033,30 @@ def translate_substring_regex(sql: str) -> str:
     returns '' instead. Positional ``substring(x FROM 2 FOR 3)`` is
     native Spark and passes through untouched (the rewrite fires only
     on string-literal patterns)."""
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for i, t in enumerate(tokens):
-            if not (
-                t.kind == "IDENT"
-                and t.upper == "SUBSTRING"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                continue
-            depth = 0
-            close = None
-            sep = None  # depth-1 comma or FROM introducing arg 2
-            for j in range(i + 1, len(tokens)):
-                tk = tokens[j]
-                if tk.kind == "PUNCT" and tk.value == "(":
-                    depth += 1
-                elif tk.kind == "PUNCT" and tk.value == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
-                elif depth == 1 and sep is None:
-                    if (tk.kind == "PUNCT" and tk.value == ",") or (
-                        tk.kind == "IDENT" and tk.upper == "FROM"
-                    ):
-                        sep = j
-            if (
-                close is None
-                or sep is None
-                or sep + 2 != close
-                or tokens[sep + 1].kind != "STRING"
-            ):
-                continue
-            hit = (i, sep, close)
+    return _rewrite(sql, [_find_substring_regex])[0]
+
+
+def _find_substring_regex(sql, tokens):
+    for i in _calls(tokens, ("substring",)):
+        close, parts = _close(tokens, i + 1, seps=("FROM",))
+        # exactly (expr, 'pattern') / (expr FROM 'pattern')
+        if close is None or len(parts) != 2:
+            continue
+        s1, e1 = parts[1]
+        if s1 == e1 and tokens[s1].kind == "STRING":
             break
-        if hit is None:
-            return sql
-        i, sep, close = hit
-        expr = sql[tokens[i + 2].start : tokens[sep - 1].end]
-        pat = _translate_posix_classes(tokens[sep + 1].value)
-        idx = 1 if _has_capture_group(pat) else 0
-        lit = pat.replace("'", "''")
-        repl = (
-            f"CASE WHEN ({expr}) RLIKE '{lit}' "
-            f"THEN regexp_extract({expr}, '{lit}', {idx}) END"
-        )
-        sql = f"{sql[:tokens[i].start]}{repl}{sql[tokens[close].end:]}"
+    else:
+        return None
+    sep = s1 - 1
+    expr = sql[tokens[i + 2].start : tokens[sep - 1].end]
+    pat = _translate_posix_classes(tokens[sep + 1].value)
+    idx = 1 if _has_capture_group(pat) else 0
+    lit = pat.replace("'", "''")
+    repl = (
+        f"CASE WHEN ({expr}) RLIKE '{lit}' "
+        f"THEN regexp_extract({expr}, '{lit}', {idx}) END"
+    )
+    return tokens[i].start, tokens[close].end, repl
 
 
 def _is_safe_start_literal(text: str) -> bool:
@@ -4560,38 +4090,24 @@ def translate_substr_positional(sql: str) -> str:
     negative length yields '' (documented, PG errors at runtime).
     Runs AFTER translate_substring_regex, so string-literal patterns
     (the regex form) are already consumed."""
-    processed = 0
-    while True:
-        tokens = tokenize(sql)
-        site = -1
-        hit = None
-        for i, t in enumerate(tokens):
-            if not (
-                t.kind == "IDENT"
-                and t.upper in ("SUBSTR", "SUBSTRING")
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
+    return _rewrite(sql, [_substr_positional_finder()])[0]
+
+
+def _substr_positional_finder():
+    # rewritten calls keep the substring name: sites at or before the
+    # last rewrite are our own emissions
+    floor = -1
+
+    def find(sql, tokens):
+        nonlocal floor
+        for i in _calls(tokens, ("substr", "substring")):
+            if tokens[i].start <= floor:
                 continue
-            depth = 0
-            close = None
-            seps = []  # depth-1 separators: ',' or FROM/FOR keywords
-            for j in range(i + 1, len(tokens)):
-                tk = tokens[j]
-                if tk.kind == "PUNCT" and tk.value == "(":
-                    depth += 1
-                elif tk.kind == "PUNCT" and tk.value == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
-                elif depth == 1 and (
-                    (tk.kind == "PUNCT" and tk.value == ",")
-                    or (tk.kind == "IDENT" and tk.upper in ("FROM", "FOR"))
-                ):
-                    seps.append(j)
-            if close is None or not seps or len(seps) > 2:
+            # separators: ',' or the FROM/FOR keywords
+            close, parts = _close(tokens, i + 1, seps=("FROM", "FOR"))
+            if close is None or len(parts) not in (2, 3):
                 continue
+            seps = [e + 1 for _, e in parts[:-1]]
             if tokens[seps[0] + 1].kind == "STRING" and len(seps) == 1:
                 continue  # regex form (already translated upstream)
             if tokens[seps[0] + 1].kind == "STRING" and len(seps) == 2:
@@ -4604,46 +4120,41 @@ def translate_substr_positional(sql: str) -> str:
                     "substring(s FROM pattern FOR escape) — the SIMILAR "
                     "TO escape form — is outside the translatable subset"
                 )
-            site += 1
-            if site < processed:
-                continue
-            hit = (i, seps, close)
-            break
-        if hit is None:
-            return sql
-        i, seps, close = hit
-        s_text = sql[tokens[i + 2].start : tokens[seps[0] - 1].end]
-        if len(seps) == 2:
-            start_text = sql[tokens[seps[0] + 1].start : tokens[seps[1] - 1].end]
-            len_text = sql[tokens[seps[1] + 1].start : tokens[close - 1].end]
-        else:
-            start_text = sql[tokens[seps[0] + 1].start : tokens[close - 1].end]
-            len_text = None
-        processed += 1
-        if len_text is not None and len_text.strip().lstrip("-") .isdigit() and len_text.strip().startswith("-"):
-            raise ValueError(
-                "substring: negative substring length not allowed (PG)"
-            )
-        if _is_safe_start_literal(start_text) and (
-            len_text is None or _is_safe_len_literal(len_text)
-        ):
-            continue  # engines agree; leave untouched
-        clamped = f"CASE WHEN ({start_text}) < 1 THEN 1 ELSE ({start_text}) END"
-        if len_text is None:
-            repl = f"substring({s_text}, {clamped})"
-        else:
-            # a runtime-negative LENGTH raises like PG (round-8; was a
-            # documented ''-divergence) — eff < 0 from start-clamping
-            # alone stays '' (PG: positions off the string's left edge)
-            eff = f"({start_text}) + ({len_text}) - {clamped}"
-            repl = (
-                f"substring({s_text}, {clamped}, "
-                f"CASE WHEN ({len_text}) < 0 THEN CASE WHEN assert_true("
-                f"false, 'negative substring length not allowed') IS NULL "
-                f"THEN 0 END "
-                f"WHEN ({eff}) < 0 THEN 0 ELSE ({eff}) END)"
-            )
-        sql = f"{sql[:tokens[i].start]}{repl}{sql[tokens[close].end:]}"
+            s_text = sql[tokens[i + 2].start : tokens[seps[0] - 1].end]
+            if len(seps) == 2:
+                start_text = sql[tokens[seps[0] + 1].start : tokens[seps[1] - 1].end]
+                len_text = sql[tokens[seps[1] + 1].start : tokens[close - 1].end]
+            else:
+                start_text = sql[tokens[seps[0] + 1].start : tokens[close - 1].end]
+                len_text = None
+            if len_text is not None and len_text.strip().lstrip("-") .isdigit() and len_text.strip().startswith("-"):
+                raise ValueError(
+                    "substring: negative substring length not allowed (PG)"
+                )
+            if _is_safe_start_literal(start_text) and (
+                len_text is None or _is_safe_len_literal(len_text)
+            ):
+                continue  # engines agree; leave untouched
+            clamped = f"CASE WHEN ({start_text}) < 1 THEN 1 ELSE ({start_text}) END"
+            if len_text is None:
+                repl = f"substring({s_text}, {clamped})"
+            else:
+                # a runtime-negative LENGTH raises like PG (round-8; was a
+                # documented ''-divergence) — eff < 0 from start-clamping
+                # alone stays '' (PG: positions off the string's left edge)
+                eff = f"({start_text}) + ({len_text}) - {clamped}"
+                repl = (
+                    f"substring({s_text}, {clamped}, "
+                    f"CASE WHEN ({len_text}) < 0 THEN CASE WHEN assert_true("
+                    f"false, 'negative substring length not allowed') IS NULL "
+                    f"THEN 0 END "
+                    f"WHEN ({eff}) < 0 THEN 0 ELSE ({eff}) END)"
+                )
+            floor = tokens[i].start
+            return floor, tokens[close].end, repl
+        return None
+
+    return find
 
 
 def translate_left_right(sql: str) -> str:
@@ -4661,69 +4172,41 @@ def translate_left_right(sql: str) -> str:
     (greatest is safe inside the left() arm: n < 0 already implies n
     is non-NULL there; the right() arm needs the explicit IS NULL
     branch because its ELSE 1 would otherwise turn NULL into the whole
-    string). Both rewrites REMOVE the left/right call site, so the
-    scan skip-counter only counts sites that persist (safe literals).
-    Calls with a literal n >= 0 pass through — the engines agree."""
-    processed = 0
-    while True:
-        tokens = tokenize(sql)
-        site = -1
-        hit = None
-        for i, t in enumerate(tokens):
-            if not (
-                t.kind == "IDENT"
-                and t.upper in ("LEFT", "RIGHT")
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                continue
-            depth = 0
-            close = None
-            comma = None
-            for j in range(i + 1, len(tokens)):
-                tk = tokens[j]
-                if tk.kind == "PUNCT" and tk.value == "(":
-                    depth += 1
-                elif tk.kind == "PUNCT" and tk.value == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
-                elif depth == 1 and tk.kind == "PUNCT" and tk.value == ",":
-                    comma = j
-            if close is None or comma is None:
-                continue
-            site += 1
-            if site < processed:
-                continue
-            hit = (i, t.upper, comma, close)
-            break
-        if hit is None:
-            return sql
-        i, fname, comma, close = hit
+    string). Both rewrites REMOVE the left/right call site; calls
+    with a literal n >= 0 pass through — the engines agree."""
+    return _rewrite(sql, [_find_left_right])[0]
+
+
+def _find_left_right(sql, tokens):
+    for i in _calls(tokens, ("left", "right")):
+        close, args = _close(tokens, i + 1)
+        if close is None or len(args) < 2:
+            continue
+        comma = args[-1][0] - 1
         s_text = sql[tokens[i + 2].start : tokens[comma - 1].end]
         n_text = sql[tokens[comma + 1].start : tokens[close - 1].end]
-        if _is_safe_len_literal(n_text):
-            # literal n >= 0: engines agree — this site PERSISTS, so
-            # it (alone) advances the skip counter
-            processed += 1
-            continue
-        if fname == "LEFT":
-            repl = (
-                f"substring({s_text}, 1, CASE WHEN ({n_text}) < 0 "
-                f"THEN greatest(length({s_text}) + ({n_text}), 0) "
-                f"ELSE ({n_text}) END)"
-            )
-        else:
-            repl = (
-                f"substring({s_text}, CASE "
-                f"WHEN ({n_text}) IS NULL THEN CAST(NULL AS INT) "
-                f"WHEN ({n_text}) < 0 THEN 1 - ({n_text}) "
-                f"WHEN length({s_text}) > ({n_text}) "
-                f"THEN length({s_text}) - ({n_text}) + 1 "
-                f"ELSE 1 END)"
-            )
-        sql = f"{sql[:tokens[i].start]}{repl}{sql[tokens[close].end:]}"
+        # literal n >= 0: engines agree — the site stays as written
+        if not _is_safe_len_literal(n_text):
+            break
+    else:
+        return None
+    fname = tokens[i].upper
+    if fname == "LEFT":
+        repl = (
+            f"substring({s_text}, 1, CASE WHEN ({n_text}) < 0 "
+            f"THEN greatest(length({s_text}) + ({n_text}), 0) "
+            f"ELSE ({n_text}) END)"
+        )
+    else:
+        repl = (
+            f"substring({s_text}, CASE "
+            f"WHEN ({n_text}) IS NULL THEN CAST(NULL AS INT) "
+            f"WHEN ({n_text}) < 0 THEN 1 - ({n_text}) "
+            f"WHEN length({s_text}) > ({n_text}) "
+            f"THEN length({s_text}) - ({n_text}) + 1 "
+            f"ELSE 1 END)"
+        )
+    return tokens[i].start, tokens[close].end, repl
 
 
 def translate_cast_type_names(sql: str) -> str:
@@ -4736,92 +4219,66 @@ def translate_cast_type_names(sql: str) -> str:
     TRUNCATE — PG's explicit-cast semantics, which the reference's
     Postgres executes — where Spark's native VARCHAR(3) cast does not.
     """
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for i, t in enumerate(tokens):
+    return _rewrite(sql, [_find_cast_type_name])[0]
+
+
+def _cast_as(tokens, i):
+    """``(close, as_index)`` of the ``CAST(`` call at ``tokens[i]``:
+    the LAST top-level AS is the cast's own (as_index None without
+    one)."""
+    close, parts = _close(tokens, i + 1, seps=("AS",))
+    as_idx = next(
+        (e + 1 for _, e in reversed(parts[:-1]) if _is_kw(tokens[e + 1], "AS")),
+        None,
+    )
+    return close, as_idx
+
+
+def _find_cast_type_name(sql, tokens):
+    for i in _calls(tokens, ("cast",)):
+        close, as_idx = _cast_as(tokens, i)
+        if close is None or as_idx is None or as_idx + 1 >= close:
+            continue
+        type_tok = tokens[as_idx + 1]
+        if type_tok.kind != "IDENT":
+            continue
+        if type_tok.value.lower() not in PG_TO_SPARK_TYPES:
+            # bare CAST(x AS INTERVAL) routes to the ::interval
+            # literal translation; qualified ANSI interval types
+            # (INTERVAL DAY TO SECOND) pass through to Spark
             if not (
-                t.kind == "IDENT"
-                and t.upper == "CAST"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
+                type_tok.value.lower() == "interval"
+                and as_idx + 2 == close
             ):
                 continue
-            depth = 0
-            close = None
-            as_idx = None
-            for j in range(i + 1, len(tokens)):
-                tk = tokens[j]
-                if tk.kind == "PUNCT" and tk.value == "(":
-                    depth += 1
-                elif tk.kind == "PUNCT" and tk.value == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
-                elif depth == 1 and tk.kind == "IDENT" and tk.upper == "AS":
-                    as_idx = j  # the LAST depth-1 AS is the cast's own
-            if close is None or as_idx is None or as_idx + 1 >= close:
-                continue
-            type_tok = tokens[as_idx + 1]
-            if type_tok.kind != "IDENT":
-                continue
-            if type_tok.value.lower() not in PG_TO_SPARK_TYPES:
-                # bare CAST(x AS INTERVAL) routes to the ::interval
-                # literal translation; qualified ANSI interval types
-                # (INTERVAL DAY TO SECOND) pass through to Spark
-                if not (
-                    type_tok.value.lower() == "interval"
-                    and as_idx + 2 == close
-                ):
-                    continue
-            hit = (i, as_idx, close)
-            break
-        if hit is None:
-            return sql
-        i, as_idx, close = hit
         expr = sql[tokens[i + 2].start : tokens[as_idx - 1].end]
         type_text = sql[tokens[as_idx + 1].start : tokens[close - 1].end]
-        sql = (
-            f"{sql[:tokens[i].start]}({expr})::{type_text}{sql[tokens[close].end:]}"
-        )
+        return tokens[i].start, tokens[close].end, f"({expr})::{type_text}"
+    return None
 
 
 def translate_array_literal(sql: str) -> str:
     """PG ``ARRAY[e1, e2, ...]`` constructor → Spark ``array(e1, e2,
-    ...)``. Brackets only re-balance against brackets, so element
-    expressions with parentheses pass through; nested ARRAY[...] is
-    handled by the outer loop re-tokenizing."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper == "ARRAY"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].kind == "PUNCT"
-                and tokens[i + 1].value == "["
-            ):
-                at = i
-                break
-        if at is None:
-            return sql
-        depth = 0
-        close = None
-        for j in range(at + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "[":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == "]":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        if close is None:
-            raise ValueError("unbalanced ARRAY[...] constructor")
-        inner = sql[tokens[at + 1].end : tokens[close].start]
-        sql = f"{sql[:tokens[at].start]}array({inner}){sql[tokens[close].end:]}"
+    ...)``; nested ARRAY[...] is rewritten outermost first."""
+    return _rewrite(sql, [_find_array_literal])[0]
+
+
+def _find_array_literal(sql, tokens):
+    at = next(
+        (
+            i
+            for i in range(len(tokens) - 1)
+            if _is_kw(tokens[i], "ARRAY") and _is_punct(tokens[i + 1], "[")
+        ),
+        None,
+    )
+    if at is None:
+        return None
+    close, _ = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError("unbalanced ARRAY[...] constructor")
+    inner = sql[tokens[at + 1].end : tokens[close].start]
+    return tokens[at].start, tokens[close].end, f"array({inner})"
 
 
 _ANY_ALL_OPS = {"=", "<>", "!=", "<", "<=", ">", ">="}
@@ -4836,136 +4293,120 @@ def translate_any_all(sql: str) -> str:
     already ``array(...)`` calls. The subquery form (``= ANY(SELECT
     ...)``) is outside the guarded dialect's translatable subset and
     raises with the IN-rewrite hint."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        op = None
-        lhs_end = None
-        for i, t in enumerate(tokens):
-            if not (
-                t.kind == "IDENT"
-                and t.upper in ("ANY", "ALL")
-                and 0 < i < len(tokens) - 1
-                and tokens[i + 1].value == "("
-            ):
-                continue
-            prev = tokens[i - 1]
-            if prev.kind == "OP" and (
-                prev.value in _ANY_ALL_OPS or prev.value in _REGEX_OPS
-            ):
-                at, op, lhs_end = i, prev.value, i - 2
-                break
-            # PG also quantifies LIKE/ILIKE: `x [NOT] LIKE ANY(arr)`
-            # (Spark's native LIKE ANY takes a paren LIST, not an
-            # array, so the exists/forall rewrite applies here too)
-            if prev.kind == "IDENT" and prev.upper in ("LIKE", "ILIKE"):
-                if (
-                    i >= 2
-                    and tokens[i - 2].kind == "IDENT"
-                    and tokens[i - 2].upper == "NOT"
-                ):
-                    at, op, lhs_end = i, f"NOT {prev.upper}", i - 3
-                else:
-                    at, op, lhs_end = i, prev.upper, i - 2
-                break
-        if at is None:
-            return sql
-        quant = tokens[at].upper
-        lhs_start = _primary_start(tokens, lhs_end)
-        if lhs_start is None:
-            raise ValueError(f"cannot resolve the left operand of {op} {quant}(...)")
-        # PG gives comparison operators LOWER precedence than ||,
-        # arithmetic, ^ and :: — absorb the whole higher-precedence
-        # chain into the left operand (`a || b = ANY(x)` compares the
-        # concatenation, not b). A single-token boundary keyword stops
-        # the walk (start of clause), everything else chains.
-        while (
-            lhs_start >= 2
-            and tokens[lhs_start - 1].kind == "OP"
-            and tokens[lhs_start - 1].value in ("||", "+", "-", "*", "/", "%", "^", "::")
+    return _rewrite(sql, [_find_any_all])[0]
+
+
+def _find_any_all(sql, tokens):
+    at = None
+    for i in _calls(tokens, ("any", "all")):
+        if i == 0:
+            continue
+        prev = tokens[i - 1]
+        if prev.kind == "OP" and (
+            prev.value in _ANY_ALL_OPS or prev.value in _REGEX_OPS
         ):
-            prev = _primary_start(tokens, lhs_start - 2)
-            if prev is None:
-                break
+            at, op, lhs_end = i, prev.value, i - 2
+            break
+        # PG also quantifies LIKE/ILIKE: `x [NOT] LIKE ANY(arr)`
+        # (Spark's native LIKE ANY takes a paren LIST, not an
+        # array, so the exists/forall rewrite applies here too)
+        if prev.kind == "IDENT" and prev.upper in ("LIKE", "ILIKE"):
             if (
-                prev == lhs_start - 2
-                and tokens[prev].kind == "IDENT"
-                and tokens[prev].upper in _OPERAND_BOUNDARY
+                i >= 2
+                and tokens[i - 2].kind == "IDENT"
+                and tokens[i - 2].upper == "NOT"
             ):
-                break  # bare keyword (SELECT/WHERE/...), not an operand
-            lhs_start = prev
-        depth = 0
-        close = None
-        for j in range(at + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        if close is None:
-            raise ValueError(f"unbalanced {quant}(...)")
-        if close == at + 2:
-            raise ValueError(f"empty {quant}() argument")
-        if tokens[at + 2].kind == "IDENT" and tokens[at + 2].upper == "SELECT":
-            raise ValueError(
-                f"{quant}(SELECT ...) is outside the translatable subset — "
-                "rewrite as IN (SELECT ...) / NOT IN (SELECT ...)"
-            )
-        lhs = sql[tokens[lhs_start].start : tokens[lhs_end].end]
-        if lhs_start >= 1 and tokens[lhs_start - 1].kind == "OP" and tokens[
-            lhs_start - 1
-        ].value in ("+", "-"):
-            raise ValueError(
-                f"a signed left operand of {op} {quant}(...) is ambiguous "
-                "after translation — parenthesize it: (-x) = ANY(...)"
-            )
-        arr = sql[tokens[at + 2].start : tokens[close - 1].end]
-        hof = "exists" if quant == "ANY" else "forall"
-        if op in _REGEX_OPS:
-            # `x ~ ANY(patterns)` — regex-match quantifiers (the same
-            # RLIKE mapping as translate_regex_ops, per element)
-            ci, neg = _REGEX_OPS[op]
-            rx = f"CONCAT('{ci}', __gfw_e)" if ci else "__gfw_e"
-            body = f"({lhs}) RLIKE {rx}"
-            if neg:
-                body = f"NOT ({body})"
-            repl = f"{hof}({arr}, __gfw_e -> {body})"
-        else:
-            repl = f"{hof}({arr}, __gfw_e -> ({lhs}) {op} __gfw_e)"
-        sql = f"{sql[:tokens[lhs_start].start]}{repl}{sql[tokens[close].end:]}"
+                at, op, lhs_end = i, f"NOT {prev.upper}", i - 3
+            else:
+                at, op, lhs_end = i, prev.upper, i - 2
+            break
+    if at is None:
+        return None
+    quant = tokens[at].upper
+    lhs_start = _primary_start(tokens, lhs_end)
+    if lhs_start is None:
+        raise ValueError(f"cannot resolve the left operand of {op} {quant}(...)")
+    # PG gives comparison operators LOWER precedence than ||,
+    # arithmetic, ^ and :: — absorb the whole higher-precedence
+    # chain into the left operand (`a || b = ANY(x)` compares the
+    # concatenation, not b). A single-token boundary keyword stops
+    # the walk (start of clause), everything else chains.
+    while (
+        lhs_start >= 2
+        and tokens[lhs_start - 1].kind == "OP"
+        and tokens[lhs_start - 1].value in ("||", "+", "-", "*", "/", "%", "^", "::")
+    ):
+        prev = _primary_start(tokens, lhs_start - 2)
+        if prev is None:
+            break
+        if (
+            prev == lhs_start - 2
+            and tokens[prev].kind == "IDENT"
+            and tokens[prev].upper in _OPERAND_BOUNDARY
+        ):
+            break  # bare keyword (SELECT/WHERE/...), not an operand
+        lhs_start = prev
+    close, _ = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {quant}(...)")
+    if close == at + 2:
+        raise ValueError(f"empty {quant}() argument")
+    if tokens[at + 2].kind == "IDENT" and tokens[at + 2].upper == "SELECT":
+        raise ValueError(
+            f"{quant}(SELECT ...) is outside the translatable subset — "
+            "rewrite as IN (SELECT ...) / NOT IN (SELECT ...)"
+        )
+    lhs = sql[tokens[lhs_start].start : tokens[lhs_end].end]
+    if lhs_start >= 1 and tokens[lhs_start - 1].kind == "OP" and tokens[
+        lhs_start - 1
+    ].value in ("+", "-"):
+        raise ValueError(
+            f"a signed left operand of {op} {quant}(...) is ambiguous "
+            "after translation — parenthesize it: (-x) = ANY(...)"
+        )
+    arr = sql[tokens[at + 2].start : tokens[close - 1].end]
+    hof = "exists" if quant == "ANY" else "forall"
+    if op in _REGEX_OPS:
+        # `x ~ ANY(patterns)` — regex-match quantifiers (the same
+        # RLIKE mapping as translate_regex_ops, per element)
+        ci, neg = _REGEX_OPS[op]
+        rx = f"CONCAT('{ci}', __gfw_e)" if ci else "__gfw_e"
+        body = f"({lhs}) RLIKE {rx}"
+        if neg:
+            body = f"NOT ({body})"
+        repl = f"{hof}({arr}, __gfw_e -> {body})"
+    else:
+        repl = f"{hof}({arr}, __gfw_e -> ({lhs}) {op} __gfw_e)"
+    return tokens[lhs_start].start, tokens[close].end, repl
 
 
-def _parse_sort_item(item: str) -> tuple[str, str, str]:
-    """Split one ORDER-BY item into (expr_text, ASC|DESC, FIRST|LAST),
-    applying PG defaults (ASC → NULLS LAST, DESC → NULLS FIRST)."""
-    toks = tokenize(item)
-    end = len(toks)
+def _parse_sort_item(sql, tokens, span) -> tuple[str, str, str]:
+    """Split one ORDER-BY item (a token span) into (expr_text,
+    ASC|DESC, FIRST|LAST), applying PG defaults (ASC → NULLS LAST,
+    DESC → NULLS FIRST)."""
+    lo, end = span[0], span[1] + 1  # end exclusive
     nulls = None
     if (
-        end >= 2
-        and toks[end - 2].kind == "IDENT"
-        and toks[end - 2].upper == "NULLS"
-        and toks[end - 1].upper in ("FIRST", "LAST")
+        end - lo >= 2
+        and _is_kw(tokens[end - 2], "NULLS")
+        and tokens[end - 1].upper in ("FIRST", "LAST")
     ):
-        nulls = toks[end - 1].upper
+        nulls = tokens[end - 1].upper
         end -= 2
     direction = "ASC"
-    has_dir = (
-        end >= 1
-        and toks[end - 1].kind == "IDENT"
-        and toks[end - 1].upper in ("ASC", "DESC")
-    )
-    if has_dir:
-        direction = toks[end - 1].upper
+    if (
+        end - lo >= 1
+        and tokens[end - 1].kind == "IDENT"
+        and tokens[end - 1].upper in ("ASC", "DESC")
+    ):
+        direction = tokens[end - 1].upper
         end -= 1
-    if end == 0:
+    if end == lo:
+        item = _span_text(sql, tokens, span)
         raise ValueError(f"empty ORDER BY item in aggregate: {item!r}")
     if nulls is None:
         nulls = "LAST" if direction == "ASC" else "FIRST"
-    return item[: toks[end - 1].end], direction, nulls
+    return sql[tokens[lo].start : tokens[end - 1].end], direction, nulls
 
 
 def translate_agg_order_by(sql: str) -> str:
@@ -4991,126 +4432,77 @@ def translate_agg_order_by(sql: str) -> str:
     survive the rewrite (structs are never null, and Spark's
     string_agg skips nulls natively).
     """
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        fn = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.upper in ("STRING_AGG", "ARRAY_AGG")
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                # only calls carrying an internal ORDER BY are rewritten
-                depth = 0
-                has_order = False
-                for j in range(i + 1, len(tokens)):
-                    tk = tokens[j]
-                    if tk.kind == "PUNCT" and tk.value == "(":
-                        depth += 1
-                    elif tk.kind == "PUNCT" and tk.value == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    elif (
-                        depth == 1
-                        and tk.kind == "IDENT"
-                        and tk.upper == "ORDER"
-                        and j + 1 < len(tokens)
-                        and tokens[j + 1].upper == "BY"
-                    ):
-                        has_order = True
-                if has_order:
-                    at = i
-                    fn = t.upper
-                    break
-        if at is None:
-            return sql
-        depth = 0
-        bdepth = 0  # ARRAY[a, b] commas are not argument separators
-        close = None
-        commas = []
-        order_at = None
-        for j in range(at + 1, len(tokens)):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == "(":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-            elif tk.kind == "PUNCT" and tk.value == "[":
-                bdepth += 1
-            elif tk.kind == "PUNCT" and tk.value == "]":
-                bdepth -= 1
-            elif depth == 1 and bdepth == 0 and order_at is None:
-                if tk.kind == "PUNCT" and tk.value == ",":
-                    commas.append(j)
-                elif tk.kind == "IDENT" and tk.upper == "ORDER":
-                    order_at = j
-        if close is None or order_at is None:
-            raise ValueError(f"unbalanced {fn.lower()}(... ORDER BY ...) call")
-        if tokens[at + 2].kind == "IDENT" and tokens[at + 2].upper == "DISTINCT":
+    return _rewrite(sql, [_find_agg_order_by])[0]
+
+
+def _find_agg_order_by(sql, tokens):
+    # only calls carrying an internal ORDER BY are rewritten
+    for at in _calls(tokens, ("string_agg", "array_agg")):
+        close, parts = _close(tokens, at + 1, seps=("ORDER",))
+        seps = [e + 1 for _, e in parts[:-1]]
+        order_at = next(
+            (j for j in seps if _is_kw(tokens[j], "ORDER") and tokens[j + 1].upper == "BY"),
+            None,
+        )
+        if order_at is not None:
+            break
+    else:
+        return None
+    fn = tokens[at].upper
+    commas = [j for j in seps if j < order_at and _is_punct(tokens[j], ",")]
+    if close is None:
+        raise ValueError(f"unbalanced {fn.lower()}(... ORDER BY ...) call")
+    if tokens[at + 2].kind == "IDENT" and tokens[at + 2].upper == "DISTINCT":
+        raise ValueError(
+            f"{fn.lower()}(DISTINCT ... ORDER BY ...) is outside the "
+            "translatable subset — deduplicate upstream"
+        )
+    order_text = sql[tokens[order_at + 2].start : tokens[close - 1].end]
+    args_end = tokens[order_at - 1].end
+    if fn == "STRING_AGG":
+        if len(commas) != 1:
             raise ValueError(
-                f"{fn.lower()}(DISTINCT ... ORDER BY ...) is outside the "
-                "translatable subset — deduplicate upstream"
+                "string_agg takes exactly (expr, delimiter [ORDER BY ...])"
             )
-        order_text = sql[tokens[order_at + 2].start : tokens[close - 1].end]
-        args_end = tokens[order_at - 1].end
-        if fn == "STRING_AGG":
-            if len(commas) != 1:
-                raise ValueError(
-                    "string_agg takes exactly (expr, delimiter [ORDER BY ...])"
-                )
-            args = sql[tokens[at + 2].start : args_end]
-            repl = f"string_agg({args}) WITHIN GROUP (ORDER BY {order_text})"
-        else:
-            if commas:
-                raise ValueError(
-                    "array_agg takes exactly (expr [ORDER BY ...])"
-                )
-            value = sql[tokens[at + 2].start : args_end]
-            items = [_parse_sort_item(s) for s in _split_top_level_commas(order_text)]
-            directions = {d for _, d, _ in items}
-            if len(directions) > 1:
-                raise ValueError(
-                    "array_agg ORDER BY with mixed ASC/DESC keys is outside "
-                    "the translatable subset"
-                )
-            desc = directions == {"DESC"}
-            fields = []
-            for idx, (key, direction, nulls) in enumerate(items):
-                # base sort is always ascending (reverse()d for DESC), so
-                # the flag puts nulls at the END of the base sort exactly
-                # when the requested placement lands them there
-                base_last = (direction == "ASC") == (nulls == "LAST")
-                flag = "IS NULL" if base_last else "IS NOT NULL"
-                fields.append(f"'n{idx}', ({key}) {flag}, 'o{idx}', {key}")
-            struct_sql = f"named_struct({', '.join(fields)}, 'v', {value})"
-            # a FILTER (WHERE ...) suffix must attach to the aggregate
-            # INSIDE the transform wrapper (round-11: surfaced by the
-            # json_agg ... FILTER composition)
-            end = close
-            if (
-                close + 1 < len(tokens)
-                and tokens[close + 1].kind == "IDENT"
-                and tokens[close + 1].upper == "FILTER"
-                and close + 2 < len(tokens)
-                and tokens[close + 2].value == "("
-            ):
-                fend = _primary_end(tokens, close + 1)
-                if fend is not None:
-                    end = fend
-            filt = sql[tokens[close].end : tokens[end].end]
-            sorted_sql = f"array_sort(array_agg({struct_sql}){filt})"
-            if desc:
-                sorted_sql = f"reverse({sorted_sql})"
-            repl = f"transform({sorted_sql}, s -> s.v)"
-            sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[end].end:]}"
-            continue
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
+        args = sql[tokens[at + 2].start : args_end]
+        repl = f"string_agg({args}) WITHIN GROUP (ORDER BY {order_text})"
+    else:
+        if commas:
+            raise ValueError(
+                "array_agg takes exactly (expr [ORDER BY ...])"
+            )
+        value = sql[tokens[at + 2].start : args_end]
+        items = [
+            _parse_sort_item(sql, tokens, span)
+            for span in _args_spans(tokens, order_at + 2, close - 1)
+        ]
+        directions = {d for _, d, _ in items}
+        if len(directions) > 1:
+            raise ValueError(
+                "array_agg ORDER BY with mixed ASC/DESC keys is outside "
+                "the translatable subset"
+            )
+        desc = directions == {"DESC"}
+        fields = []
+        for idx, (key, direction, nulls) in enumerate(items):
+            # base sort is always ascending (reverse()d for DESC), so
+            # the flag puts nulls at the END of the base sort exactly
+            # when the requested placement lands them there
+            base_last = (direction == "ASC") == (nulls == "LAST")
+            flag = "IS NULL" if base_last else "IS NOT NULL"
+            fields.append(f"'n{idx}', ({key}) {flag}, 'o{idx}', {key}")
+        struct_sql = f"named_struct({', '.join(fields)}, 'v', {value})"
+        # FILTER (WHERE ...) / OVER suffixes must attach to the
+        # aggregate INSIDE the transform wrapper (round-11: surfaced by
+        # the json_agg ... FILTER composition)
+        end = _suffix_end(tokens, close)
+        suffix = sql[tokens[close].end : tokens[end].end]
+        sorted_sql = f"array_sort(array_agg({struct_sql}){suffix})"
+        if desc:
+            sorted_sql = f"reverse({sorted_sql})"
+        repl = f"transform({sorted_sql}, s -> s.v)"
+        return tokens[at].start, tokens[end].end, repl
+    return tokens[at].start, tokens[close].end, repl
 
 
 _ORDER_CLAUSE_END = {
@@ -5127,73 +4519,53 @@ def translate_order_nulls(sql: str) -> str:
     REPICKS) rows whenever a sort key is NULL. Items already carrying
     an explicit NULLS keep it. Runs LAST so ORDER BY clauses emitted by
     earlier rewrites (DISTINCT ON's window) are covered too."""
-    tokens = tokenize(sql)
-    depths = []
-    d = 0
-    for t in tokens:
-        if t.kind == "PUNCT" and t.value == "(":
-            depths.append(d)
-            d += 1
-        elif t.kind == "PUNCT" and t.value == ")":
-            d -= 1
-            depths.append(d)
-        else:
-            depths.append(d)
+    return _rewrite(sql, [_find_order_nulls])[0]
+
+
+def _find_order_nulls(sql, tokens):
+    """One edit carrying every insertion (None once each item has an
+    explicit NULLS)."""
     inserts = []  # (offset, text)
-    i = 0
     n = len(tokens)
+    i = 0
     while i < n:
-        t = tokens[i]
-        if not (
-            t.kind == "IDENT"
-            and t.upper == "ORDER"
-            and i + 1 < n
-            and tokens[i + 1].kind == "IDENT"
-            and tokens[i + 1].upper == "BY"
-        ):
+        if not (_is_kw(tokens[i], "ORDER") and i + 1 < n and _is_kw(tokens[i + 1], "BY")):
             i += 1
             continue
-        base = depths[i]
-        j = i + 2
-        item_toks: list[int] = []
-
-        def flush(last_j):
-            if not item_toks:
-                return
-            uppers = [
-                tokens[k].upper for k in item_toks if tokens[k].kind == "IDENT"
-            ]
-            if "NULLS" in uppers:
-                return
+        items = [[]]  # token indices per item, nested groups included
+        stop = n
+        for k, kend in _top_level(tokens, i + 2, n - 1):
+            t = tokens[k]
+            # a ')' here closes the group the clause sits in (OVER (...))
+            if _is_punct(t, ")") or (t.kind == "IDENT" and t.upper in _ORDER_CLAUSE_END):
+                stop = k
+                break
+            if t.kind == "PUNCT" and t.value in (",", ";"):
+                items.append([])
+            else:
+                items[-1].extend(range(k, kend + 1))
+        for item in items:
+            if not item or any(_is_kw(tokens[k], "NULLS") for k in item):
+                continue
             direction = "ASC"
-            for k in reversed(item_toks):
-                if tokens[k].kind == "IDENT" and tokens[k].upper in ("ASC", "DESC"):
-                    direction = tokens[k].upper
-                    break
+            for k in reversed(item):
                 if tokens[k].kind != "IDENT":
                     break
-            nulls = "NULLS FIRST" if direction == "DESC" else "NULLS LAST"
-            inserts.append((tokens[item_toks[-1]].end, f" {nulls}"))
-
-        while j < n:
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == ")" and depths[j] < base:
-                break
-            if depths[j] == base:
-                if tk.kind == "PUNCT" and tk.value in (",", ";"):
-                    flush(j)
-                    item_toks = []
-                    j += 1
-                    continue
-                if tk.kind == "IDENT" and tk.upper in _ORDER_CLAUSE_END:
+                if tokens[k].upper in ("ASC", "DESC"):
+                    direction = tokens[k].upper
                     break
-            item_toks.append(j)
-            j += 1
-        flush(j)
-        i = j
-    for off, text in sorted(inserts, reverse=True):
-        sql = sql[:off] + text + sql[off:]
-    return sql
+            nulls = "NULLS FIRST" if direction == "DESC" else "NULLS LAST"
+            inserts.append((tokens[item[-1]].end, f" {nulls}"))
+        i = stop
+    if not inserts:
+        return None
+    inserts.sort()
+    lo, hi = inserts[0][0], inserts[-1][0]
+    out, pos = [], lo
+    for off, text in inserts:
+        out += [sql[pos:off], text]
+        pos = off
+    return lo, hi, "".join(out)
 
 
 def fix_unlexable_literals(sql: str) -> str:
@@ -5208,27 +4580,29 @@ def fix_unlexable_literals(sql: str) -> str:
     Catalyst, so free at run time. Everything else passes through
     byte-identical. This runs on the FINAL translated text, so it
     also normalizes the ``''``-doubled literals earlier passes emit."""
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for t in tokens:
-            if t.kind == "STRING" and (
-                "'" in t.value or "\\'" in t.value or t.value.endswith("\\")
-            ):
-                hit = t
-                break
-        if hit is None:
-            return sql
-        parts = []
-        for piece in re.split(r"(['\\])", hit.value):
-            if piece == "'":
-                parts.append("chr(39)")
-            elif piece == "\\":
-                parts.append("chr(92)")
-            elif piece:
-                parts.append("'" + piece + "'")
-        repl = "concat(" + ", ".join(parts) + ")" if parts else "''"
-        sql = f"{sql[:hit.start]}{repl}{sql[hit.end:]}"
+    return _rewrite(sql, [_find_unlexable_literal])[0]
+
+
+def _find_unlexable_literal(sql, tokens):
+    hit = None
+    for t in tokens:
+        if t.kind == "STRING" and (
+            "'" in t.value or "\\'" in t.value or t.value.endswith("\\")
+        ):
+            hit = t
+            break
+    if hit is None:
+        return None
+    parts = []
+    for piece in re.split(r"(['\\])", hit.value):
+        if piece == "'":
+            parts.append("chr(39)")
+        elif piece == "\\":
+            parts.append("chr(92)")
+        elif piece:
+            parts.append("'" + piece + "'")
+    repl = "concat(" + ", ".join(parts) + ")" if parts else "''"
+    return hit.start, hit.end, repl
 
 
 # ---------------------------------------------------------------------------
@@ -5278,14 +4652,14 @@ _SELECT_LIST_BOUNDARY = {
 }
 
 
-def _translate_lockstep_unnest(sql, tokens, depths, calls):
+def _translate_lockstep_unnest(sql, tokens, top, calls):
     """``SELECT unnest(a), unnest(b) …`` → one
     ``inline(arrays_zip(a, b)) AS (n1, n2)`` generator — arrays_zip
     null-pads to the longest array, which IS PG's lockstep rule."""
     items = []  # (call_idx, arg_text, alias, item_end_tok)
     for i in calls:
         fname = tokens[i].value.lower()
-        if fname != "unnest" or depths[i] != 0:
+        if fname != "unnest" or i not in top:
             raise ValueError(
                 "multiple set-returning functions translate only as "
                 "consecutive bare unnest() SELECT items (PG lockstep "
@@ -5299,11 +4673,10 @@ def _translate_lockstep_unnest(sql, tokens, depths, calls):
             raise ValueError(
                 "lockstep unnest() items must be bare SELECT items"
             )
-        close = _primary_end(tokens, i)
+        close, args = _close(tokens, i + 1)
         if close is None:
             raise ValueError("unbalanced unnest() call")
-        args = _args_spans(tokens, i + 2, close - 1) if close - 1 >= i + 2 else []
-        texts = [sql[tokens[s].start : tokens[e].end] for s, e in args if s <= e]
+        texts = _arg_texts(sql, tokens, args)
         if len(texts) != 1:
             raise ValueError(
                 "multi-argument unnest is outside the translatable subset"
@@ -5348,9 +4721,8 @@ def _translate_lockstep_unnest(sql, tokens, depths, calls):
         + ", ".join(a for _, _, a, _ in items)
         + ")"
     )
-    out = f"{sql[:first_start]}{gen}{sql[last_end:]}"
-    # re-run the scan: validates nothing else remains and returns
-    return translate_set_returning(out)
+    # the rescan validates that nothing else remains
+    return first_start, last_end, gen
 
 
 _ROW_CMP_OPS = ("<", "<=", ">", ">=", "=", "<>", "!=")
@@ -5370,26 +4742,14 @@ def _row_group(tokens, open_idx, sql):
         tokens[open_idx].kind == "PUNCT" and tokens[open_idx].value == "("
     ):
         return None
-    depth = 0
-    close = None
-    for j in range(open_idx, len(tokens)):
-        t = tokens[j]
-        if t.kind == "PUNCT" and t.value == "(":
-            depth += 1
-        elif t.kind == "PUNCT" and t.value == ")":
-            depth -= 1
-            if depth == 0:
-                close = j
-                break
+    close, spans = _close(tokens, open_idx)
     if close is None or close == open_idx + 1:
         return None
     if tokens[open_idx + 1].upper == "SELECT":
         return None  # scalar subquery
-    spans = _args_spans(tokens, open_idx + 1, close - 1)
     if len(spans) < 2:
         return None  # no top-level comma: a scalar paren group
-    texts = [sql[tokens[s].start : tokens[e].end] for s, e in spans]
-    return close, texts
+    return close, [_span_text(sql, tokens, sp) for sp in spans]
 
 
 def _row_ctor_start(tokens, open_idx):
@@ -5451,121 +4811,67 @@ def translate_row_comparisons(sql: str) -> str:
     pairwise AND / OR for =/<>, the lexicographic expansion for the
     order operators, OR-of-equalities for IN (NOT IN negates).
     Emitted comparisons are scalar, so the rescan terminates."""
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for i, t in enumerate(tokens):
-            is_cmp = t.kind == "OP" and t.value in _ROW_CMP_OPS
-            is_in = t.kind == "IDENT" and t.upper == "IN"
-            if not (is_cmp or is_in):
+    return _rewrite(sql, [_find_row_comparison])[0]
+
+
+def _find_row_comparison(sql, tokens):
+    for i, t in enumerate(tokens):
+        is_cmp = t.kind == "OP" and t.value in _ROW_CMP_OPS
+        is_in = _is_kw(t, "IN")
+        if not (is_cmp or is_in):
+            continue
+        # left side: a ')' closing a bare row constructor
+        # (for IN, an interposed NOT: ``(a, b) NOT IN (...)``)
+        k = i - 1
+        neg_in = False
+        if is_in and k >= 0 and _is_kw(tokens[k], "NOT"):
+            neg_in = True
+            k -= 1
+        if k < 0 or not _is_punct(tokens[k], ")"):
+            continue
+        lopen = _open(tokens, k)
+        if lopen is None:
+            continue
+        lstart = _row_ctor_start(tokens, lopen)
+        if lstart is None:
+            continue
+        lrow = _row_group(tokens, lopen, sql)
+        if lrow is None:
+            continue
+        _, ltexts = lrow
+        if is_cmp:
+            ropen = i + 1
+            if ropen < len(tokens) and _is_kw(tokens[ropen], "ROW"):
+                ropen += 1
+            rrow = _row_group(tokens, ropen, sql) if ropen < len(tokens) else None
+            if rrow is None or len(rrow[1]) != len(ltexts):
                 continue
-            # left side: a ')' closing a bare row constructor
-            # (for IN, an interposed NOT: ``(a, b) NOT IN (...)``)
-            k = i - 1
-            neg_in = False
-            if (
-                is_in
-                and k >= 0
-                and tokens[k].kind == "IDENT"
-                and tokens[k].upper == "NOT"
-            ):
-                neg_in = True
-                k -= 1
-            if k < 0 or not (
-                tokens[k].kind == "PUNCT" and tokens[k].value == ")"
-            ):
-                continue
-            depth = 0
-            lopen = None
-            for j in range(k, -1, -1):
-                tj = tokens[j]
-                if tj.kind == "PUNCT" and tj.value == ")":
-                    depth += 1
-                elif tj.kind == "PUNCT" and tj.value == "(":
-                    depth -= 1
-                    if depth == 0:
-                        lopen = j
-                        break
-            if lopen is None:
-                continue
-            lstart = _row_ctor_start(tokens, lopen)
-            if lstart is None:
-                continue
-            lrow = _row_group(tokens, lopen, sql)
-            if lrow is None:
-                continue
-            _, ltexts = lrow
-            if is_cmp:
-                ropen = i + 1
-                if (
-                    ropen < len(tokens)
-                    and tokens[ropen].kind == "IDENT"
-                    and tokens[ropen].upper == "ROW"
-                ):
-                    ropen += 1
-                rrow = (
-                    _row_group(tokens, ropen, sql)
-                    if ropen < len(tokens)
-                    else None
-                )
-                if rrow is None or len(rrow[1]) != len(ltexts):
-                    continue
-                rclose, rtexts = rrow
-                repl = _lex_expansion(ltexts, rtexts, t.value)
-                sql = (
-                    f"{sql[:tokens[lstart].start]}{repl}"
-                    f"{sql[tokens[rclose].end:]}"
-                )
-                hit = True
+            rclose, rtexts = rrow
+            repl = _lex_expansion(ltexts, rtexts, t.value)
+            return tokens[lstart].start, tokens[rclose].end, repl
+        # IN / NOT IN over a list of row constructors
+        lopen2 = i + 1
+        if not (lopen2 < len(tokens) and _is_punct(tokens[lopen2], "(")):
+            continue
+        lclose2, item_spans = _close(tokens, lopen2)
+        if lclose2 is None:
+            continue
+        if tokens[lopen2 + 1].upper == "SELECT":
+            continue  # subquery form — guard policy handles it
+        alts = []
+        for s0, _ in item_spans:
+            s1 = s0 + 1 if _is_kw(tokens[s0], "ROW") else s0
+            item = _row_group(tokens, s1, sql)
+            if item is None or len(item[1]) != len(ltexts):
                 break
-            # IN / NOT IN over a list of row constructors
-            lopen2 = i + 1
-            if not (
-                lopen2 < len(tokens)
-                and tokens[lopen2].kind == "PUNCT"
-                and tokens[lopen2].value == "("
-            ):
-                continue
-            depth = 0
-            lclose2 = None
-            for j in range(lopen2, len(tokens)):
-                tj = tokens[j]
-                if tj.kind == "PUNCT" and tj.value == "(":
-                    depth += 1
-                elif tj.kind == "PUNCT" and tj.value == ")":
-                    depth -= 1
-                    if depth == 0:
-                        lclose2 = j
-                        break
-            if lclose2 is None:
-                continue
-            if tokens[lopen2 + 1].upper == "SELECT":
-                continue  # subquery form — guard policy handles it
-            item_spans = _args_spans(tokens, lopen2 + 1, lclose2 - 1)
-            alts = []
-            ok = True
-            for s0, e0 in item_spans:
-                s1 = s0
-                if tokens[s1].kind == "IDENT" and tokens[s1].upper == "ROW":
-                    s1 += 1
-                item = _row_group(tokens, s1, sql)
-                if item is None or len(item[1]) != len(ltexts):
-                    ok = False
-                    break
-                alts.append(_lex_expansion(ltexts, item[1], "="))
-            if not ok or not alts:
-                continue
-            repl = "(" + " OR ".join(alts) + ")"
-            if neg_in:
-                repl = f"(NOT {repl})"
-            sql = (
-                f"{sql[:tokens[lstart].start]}{repl}"
-                f"{sql[tokens[lclose2].end:]}"
-            )
-            hit = True
-            break
-        if hit is None:
-            return sql
+            alts.append(_lex_expansion(ltexts, item[1], "="))
+        else:
+            if alts:
+                repl = "(" + " OR ".join(alts) + ")"
+                if neg_in:
+                    repl = f"(NOT {repl})"
+                return tokens[lstart].start, tokens[lclose2].end, repl
+    return None
 
 
 def translate_row_overlaps(sql: str) -> str:
@@ -5579,429 +4885,386 @@ def translate_row_overlaps(sql: str) -> str:
     the non-null endpoint as its start; a determinate TRUE/FALSE is
     returned when one known endpoint decides the answer, NULL only when
     it genuinely cannot) — r8-ADVICE closed the silent NULL-collapse."""
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        for i, t in enumerate(tokens):
-            if t.kind == "IDENT" and t.upper == "OVERLAPS" and 0 < i < len(tokens) - 1:
-                at = i
-                break
-        if at is None:
-            return sql
-        if not (
-            tokens[at - 1].kind == "PUNCT"
-            and tokens[at - 1].value == ")"
-            and tokens[at + 1].kind == "PUNCT"
-            and tokens[at + 1].value == "("
-        ):
-            raise ValueError(
-                "OVERLAPS needs (start, end) row constructors on both sides"
-            )
-        # left row: walk back to the matching (
-        depth = 0
-        lopen = None
-        for j in range(at - 1, -1, -1):
-            tk = tokens[j]
-            if tk.kind == "PUNCT" and tk.value == ")":
-                depth += 1
-            elif tk.kind == "PUNCT" and tk.value == "(":
-                depth -= 1
-                if depth == 0:
-                    lopen = j
-                    break
-        rclose = _primary_end(tokens, at + 1)
-        if lopen is None or rclose is None:
-            raise ValueError("unbalanced OVERLAPS row constructor")
-        if (
-            lopen > 0
-            and tokens[lopen - 1].kind == "IDENT"
-            and tokens[lopen - 1].upper not in _OPERAND_BOUNDARY
-        ):
-            # `foo(a, b) OVERLAPS …` — a call, not a row constructor;
-            # PG rejects this shape too
-            raise ValueError(
-                "OVERLAPS needs (start, end) row constructors on both sides"
-            )
-        largs = _args_spans(tokens, lopen + 1, at - 2)
-        rargs = _args_spans(tokens, at + 2, rclose - 1)
-        if len(largs) != 2 or len(rargs) != 2:
-            raise ValueError("OVERLAPS takes (start, end) pairs on both sides")
-        a, b = (sql[tokens[s].start : tokens[e].end] for s, e in largs)
-        c, d = (sql[tokens[s].start : tokens[e].end] for s, e in rargs)
-        # PG's normalization: a pair with a NULL start takes the
-        # non-null endpoint as its start and a NULL end; otherwise
-        # start/end sort. Both-NULL pairs fall through to NULL via the
-        # start-IS-NULL arm below.
-        ls = (
-            f"(CASE WHEN ({a}) IS NULL THEN ({b}) "
-            f"WHEN ({b}) IS NULL THEN ({a}) "
-            f"ELSE least(({a}), ({b})) END)"
+    return _rewrite(sql, [_find_row_overlaps])[0]
+
+
+def _find_row_overlaps(sql, tokens):
+    at = next(
+        (i for i in range(1, len(tokens) - 1) if _is_kw(tokens[i], "OVERLAPS")),
+        None,
+    )
+    if at is None:
+        return None
+    if not (_is_punct(tokens[at - 1], ")") and _is_punct(tokens[at + 1], "(")):
+        raise ValueError(
+            "OVERLAPS needs (start, end) row constructors on both sides"
         )
-        le = (
-            f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL THEN NULL "
-            f"ELSE greatest(({a}), ({b})) END)"
+    lopen = _open(tokens, at - 1)
+    rclose, rargs = _close(tokens, at + 1)
+    if lopen is None or rclose is None:
+        raise ValueError("unbalanced OVERLAPS row constructor")
+    if (
+        lopen > 0
+        and tokens[lopen - 1].kind == "IDENT"
+        and tokens[lopen - 1].upper not in _OPERAND_BOUNDARY
+    ):
+        # `foo(a, b) OVERLAPS …` — a call, not a row constructor;
+        # PG rejects this shape too
+        raise ValueError(
+            "OVERLAPS needs (start, end) row constructors on both sides"
         )
-        rs = (
-            f"(CASE WHEN ({c}) IS NULL THEN ({d}) "
-            f"WHEN ({d}) IS NULL THEN ({c}) "
-            f"ELSE least(({c}), ({d})) END)"
-        )
-        re_ = (
-            f"(CASE WHEN ({c}) IS NULL OR ({d}) IS NULL THEN NULL "
-            f"ELSE greatest(({c}), ({d})) END)"
-        )
-        # PG's decision table (half-open [s, e); equal-endpoint pair =
-        # single instant): when the starts differ, the later start
-        # against the other pair's end decides; a needed-but-NULL end
-        # yields NULL, an unneeded one doesn't.
-        repl = (
-            f"(CASE "
-            f"WHEN {ls} IS NULL OR {rs} IS NULL THEN CAST(NULL AS BOOLEAN) "
-            f"WHEN {ls} > {rs} THEN CASE "
-            f"WHEN {re_} IS NULL THEN CAST(NULL AS BOOLEAN) "
-            f"WHEN {ls} < {re_} THEN TRUE "
-            f"WHEN {le} IS NULL THEN CAST(NULL AS BOOLEAN) "
-            f"ELSE FALSE END "
-            f"WHEN {ls} < {rs} THEN CASE "
-            f"WHEN {le} IS NULL THEN CAST(NULL AS BOOLEAN) "
-            f"WHEN {rs} < {le} THEN TRUE "
-            f"WHEN {re_} IS NULL THEN CAST(NULL AS BOOLEAN) "
-            f"ELSE FALSE END "
-            f"ELSE CASE WHEN {le} IS NULL OR {re_} IS NULL "
-            f"THEN CAST(NULL AS BOOLEAN) ELSE TRUE END END)"
-        )
-        sql = f"{sql[:tokens[lopen].start]}{repl}{sql[tokens[rclose].end:]}"
+    largs = _close(tokens, lopen)[1]
+    if len(largs) != 2 or len(rargs) != 2:
+        raise ValueError("OVERLAPS takes (start, end) pairs on both sides")
+    a, b = (_span_text(sql, tokens, sp) for sp in largs)
+    c, d = (_span_text(sql, tokens, sp) for sp in rargs)
+    # PG's normalization: a pair with a NULL start takes the
+    # non-null endpoint as its start and a NULL end; otherwise
+    # start/end sort. Both-NULL pairs fall through to NULL via the
+    # start-IS-NULL arm below.
+    ls = (
+        f"(CASE WHEN ({a}) IS NULL THEN ({b}) "
+        f"WHEN ({b}) IS NULL THEN ({a}) "
+        f"ELSE least(({a}), ({b})) END)"
+    )
+    le = (
+        f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL THEN NULL "
+        f"ELSE greatest(({a}), ({b})) END)"
+    )
+    rs = (
+        f"(CASE WHEN ({c}) IS NULL THEN ({d}) "
+        f"WHEN ({d}) IS NULL THEN ({c}) "
+        f"ELSE least(({c}), ({d})) END)"
+    )
+    re_ = (
+        f"(CASE WHEN ({c}) IS NULL OR ({d}) IS NULL THEN NULL "
+        f"ELSE greatest(({c}), ({d})) END)"
+    )
+    # PG's decision table (half-open [s, e); equal-endpoint pair =
+    # single instant): when the starts differ, the later start
+    # against the other pair's end decides; a needed-but-NULL end
+    # yields NULL, an unneeded one doesn't.
+    repl = (
+        f"(CASE "
+        f"WHEN {ls} IS NULL OR {rs} IS NULL THEN CAST(NULL AS BOOLEAN) "
+        f"WHEN {ls} > {rs} THEN CASE "
+        f"WHEN {re_} IS NULL THEN CAST(NULL AS BOOLEAN) "
+        f"WHEN {ls} < {re_} THEN TRUE "
+        f"WHEN {le} IS NULL THEN CAST(NULL AS BOOLEAN) "
+        f"ELSE FALSE END "
+        f"WHEN {ls} < {rs} THEN CASE "
+        f"WHEN {le} IS NULL THEN CAST(NULL AS BOOLEAN) "
+        f"WHEN {rs} < {le} THEN TRUE "
+        f"WHEN {re_} IS NULL THEN CAST(NULL AS BOOLEAN) "
+        f"ELSE FALSE END "
+        f"ELSE CASE WHEN {le} IS NULL OR {re_} IS NULL "
+        f"THEN CAST(NULL AS BOOLEAN) ELSE TRUE END END)"
+    )
+    return tokens[lopen].start, tokens[rclose].end, repl
 
 
 def translate_null_counters(sql: str) -> str:
     """PG ``num_nonnulls(v1, …)`` / ``num_nulls(v1, …)`` → a sum of
     per-argument CASE terms (argument types may be mixed, so an array
     spelling is unavailable)."""
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower() in ("num_nonnulls", "num_nulls")
-                and i + 1 < len(tokens)
-                and tokens[i + 1].kind == "PUNCT"
-                and tokens[i + 1].value == "("
-            ):
-                hit = i
-                break
-        if hit is None:
-            return sql
-        close = _primary_end(tokens, hit)
-        if close is None:
-            raise ValueError(f"unbalanced {tokens[hit].value}() call")
-        args = _args_spans(tokens, hit + 2, close - 1) if close - 1 >= hit + 2 else []
-        texts = [sql[tokens[s].start : tokens[e].end] for s, e in args if s <= e]
-        if not texts:
-            raise ValueError(f"{tokens[hit].value}() needs at least one argument")
-        null_is = "NOT NULL" if tokens[hit].value.lower() == "num_nonnulls" else "NULL"
-        terms = " + ".join(
-            f"CASE WHEN ({t}) IS {null_is} THEN 1 ELSE 0 END" for t in texts
-        )
-        sql = f"{sql[:tokens[hit].start]}({terms}){sql[tokens[close].end:]}"
+    return _rewrite(sql, [_find_null_counter])[0]
+
+
+def _find_null_counter(sql, tokens):
+    hit = _find_call(tokens, ("num_nonnulls", "num_nulls"))
+    if hit is None:
+        return None
+    close, args = _close(tokens, hit + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {tokens[hit].value}() call")
+    texts = _arg_texts(sql, tokens, args)
+    if not texts:
+        raise ValueError(f"{tokens[hit].value}() needs at least one argument")
+    null_is = "NOT NULL" if tokens[hit].value.lower() == "num_nonnulls" else "NULL"
+    terms = " + ".join(
+        f"CASE WHEN ({t}) IS {null_is} THEN 1 ELSE 0 END" for t in texts
+    )
+    return tokens[hit].start, tokens[close].end, f"({terms})"
 
 
 def translate_set_returning(sql: str) -> str:
     """Rewrite the SRF subset above; raise ValueError outside it."""
-    while True:
-        tokens = tokenize(sql)
-        depths = []
-        d = 0
-        for t in tokens:
-            if t.kind == "PUNCT" and t.value == "(":
-                depths.append(d)
-                d += 1
-            elif t.kind == "PUNCT" and t.value == ")":
-                d -= 1
-                depths.append(d)
-            else:
-                depths.append(d)
-        calls = [
-            i
-            for i, t in enumerate(tokens)
-            if t.kind == "IDENT"
-            and t.value.lower() in _SRF_NAMES
-            and i + 1 < len(tokens)
-            and tokens[i + 1].kind == "PUNCT"
-            and tokens[i + 1].value == "("
-        ]
-        if not calls:
-            return sql
-        if len(calls) > 1:
-            # PG ≥10 evaluates several SRFs in LOCKSTEP (rows = longest,
-            # shorter ones null-padded) — exactly arrays_zip + inline
-            # (probed). Translatable subset: all of them unnest, as
-            # CONSECUTIVE bare SELECT items; anything else rejects.
-            return _translate_lockstep_unnest(sql, tokens, depths, calls)
-        i = calls[0]
-        fname = tokens[i].value.lower()
-        if depths[i] != 0:
-            raise ValueError(
-                f"{fname}() is only translatable as a bare top-level "
-                "SELECT item (not inside expressions or subqueries)"
-            )
-        # must be a SELECT-list item: nearest clause keyword to the left
-        # at depth 0 is SELECT, and the item starts right at the call
-        k = i - 1
-        while k >= 0:
-            tk = tokens[k]
-            if depths[k] == 0 and tk.kind == "IDENT" and tk.upper in _SELECT_LIST_BOUNDARY:
-                break
-            k -= 1
-        if k < 0 or tokens[k].upper != "SELECT":
-            raise ValueError(
-                f"{fname}() is a set-returning function — PG allows it "
-                "only in the SELECT list, and so does the translation"
-            )
-        prev = tokens[i - 1]
-        if not (
-            prev.upper in ("SELECT", "DISTINCT")
-            or (prev.kind == "PUNCT" and prev.value == ",")
-        ):
-            raise ValueError(
-                f"{fname}() is only translatable as a bare SELECT item "
-                "(no surrounding expression)"
-            )
-        # close paren + args
-        close = _primary_end(tokens, i)
-        if close is None:
-            raise ValueError(f"unbalanced {fname}() call")
-        args = (
-            _args_spans(tokens, i + 2, close - 1) if close - 1 >= i + 2 else []
+    return _rewrite(sql, [_find_set_returning])[0]
+
+
+def _find_set_returning(sql, tokens):
+    calls = list(_calls(tokens, _SRF_NAMES))
+    if not calls:
+        return None
+    top = [k for k, _ in _top_level(tokens, 0, len(tokens) - 1)]
+    if len(calls) > 1:
+        # PG ≥10 evaluates several SRFs in LOCKSTEP (rows = longest,
+        # shorter ones null-padded) — exactly arrays_zip + inline
+        # (probed). Translatable subset: all of them unnest, as
+        # CONSECUTIVE bare SELECT items; anything else rejects.
+        return _translate_lockstep_unnest(sql, tokens, set(top), calls)
+    i = calls[0]
+    fname = tokens[i].value.lower()
+    if i not in top:
+        raise ValueError(
+            f"{fname}() is only translatable as a bare top-level "
+            "SELECT item (not inside expressions or subqueries)"
         )
-        arg_texts = [sql[tokens[s].start : tokens[e].end] for s, e in args if s <= e]
-        # round-9: optional WITH ORDINALITY suffix (PG's FROM-clause
-        # spelling, admitted here as a SELECT-list extension — PG itself
-        # rejects the spelling in a select list, so accepting it cannot
-        # silently change any PG-valid query; docs/PARITY.md round-9)
-        ord_end = close
-        with_ordinality = (
-            close + 2 < len(tokens)
-            and tokens[close + 1].kind == "IDENT"
-            and tokens[close + 1].upper == "WITH"
-            and tokens[close + 2].kind == "IDENT"
-            and tokens[close + 2].upper == "ORDINALITY"
+    # must be a SELECT-list item: nearest clause keyword to the left
+    # at depth 0 is SELECT, and the item starts right at the call
+    k = next(
+        (
+            k
+            for k in reversed(top)
+            if k < i and tokens[k].kind == "IDENT" and tokens[k].upper in _SELECT_LIST_BOUNDARY
+        ),
+        -1,
+    )
+    if k < 0 or tokens[k].upper != "SELECT":
+        raise ValueError(
+            f"{fname}() is a set-returning function — PG allows it "
+            "only in the SELECT list, and so does the translation"
         )
-        if with_ordinality:
-            ord_end = close + 2
-        # (arr, elem-template on __gfw_x) per function; identity elems
-        # keep the plain explode fast path below
-        elem = "__gfw_x"
-        if fname == "unnest":
-            if len(arg_texts) == 0:
-                raise ValueError("unnest takes at least one argument")
-            if len(arg_texts) > 1:
-                # PG's multi-array lockstep unnest (FROM-clause form,
-                # admitted as a SELECT-list extension): arrays_zip
-                # null-pads to the longest array — the lockstep rule
-                if with_ordinality:
-                    raise ValueError(
-                        "multi-argument unnest WITH ORDINALITY is outside "
-                        "the translatable subset"
-                    )
-                after = tokens[close + 1] if close + 1 < len(tokens) else None
-                if after is not None and (
-                    after.kind == "QIDENT"
-                    or (after.kind == "IDENT" and after.upper == "AS")
-                    or (
-                        after.kind == "IDENT"
-                        and after.upper not in _OPERAND_BOUNDARY
-                    )
-                ):
-                    raise ValueError(
-                        "multi-argument unnest produces several columns "
-                        "— a single alias cannot name them"
-                    )
-                names = ", ".join(
-                    "unnest" if k == 0 else f"unnest_{k}"
-                    for k in range(len(arg_texts))
+    prev = tokens[i - 1]
+    if not (
+        prev.upper in ("SELECT", "DISTINCT")
+        or (prev.kind == "PUNCT" and prev.value == ",")
+    ):
+        raise ValueError(
+            f"{fname}() is only translatable as a bare SELECT item "
+            "(no surrounding expression)"
+        )
+    # close paren + args
+    close, args = _close(tokens, i + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {fname}() call")
+    arg_texts = _arg_texts(sql, tokens, args)
+    # round-9: optional WITH ORDINALITY suffix (PG's FROM-clause
+    # spelling, admitted here as a SELECT-list extension — PG itself
+    # rejects the spelling in a select list, so accepting it cannot
+    # silently change any PG-valid query; docs/PARITY.md round-9)
+    ord_end = close
+    with_ordinality = (
+        close + 2 < len(tokens)
+        and tokens[close + 1].kind == "IDENT"
+        and tokens[close + 1].upper == "WITH"
+        and tokens[close + 2].kind == "IDENT"
+        and tokens[close + 2].upper == "ORDINALITY"
+    )
+    if with_ordinality:
+        ord_end = close + 2
+    # (arr, elem-template on __gfw_x) per function; identity elems
+    # keep the plain explode fast path below
+    elem = "__gfw_x"
+    if fname == "unnest":
+        if len(arg_texts) == 0:
+            raise ValueError("unnest takes at least one argument")
+        if len(arg_texts) > 1:
+            # PG's multi-array lockstep unnest (FROM-clause form,
+            # admitted as a SELECT-list extension): arrays_zip
+            # null-pads to the longest array — the lockstep rule
+            if with_ordinality:
+                raise ValueError(
+                    "multi-argument unnest WITH ORDINALITY is outside "
+                    "the translatable subset"
                 )
-                zipped = ", ".join(f"({t})" for t in arg_texts)
-                gen = f"inline(arrays_zip({zipped})) AS ({names})"
-                sql = f"{sql[:tokens[i].start]}{gen}{sql[tokens[close].end:]}"
-                continue
-            arr = f"({arg_texts[0]})"
-        elif fname == "generate_series":
-            if len(arg_texts) == 2:
-                a, b = arg_texts
+            after = tokens[close + 1] if close + 1 < len(tokens) else None
+            if after is not None and (
+                after.kind == "QIDENT"
+                or (after.kind == "IDENT" and after.upper == "AS")
+                or (
+                    after.kind == "IDENT"
+                    and after.upper not in _OPERAND_BOUNDARY
+                )
+            ):
+                raise ValueError(
+                    "multi-argument unnest produces several columns "
+                    "— a single alias cannot name them"
+                )
+            names = ", ".join(
+                "unnest" if k == 0 else f"unnest_{k}"
+                for k in range(len(arg_texts))
+            )
+            zipped = ", ".join(f"({t})" for t in arg_texts)
+            gen = f"inline(arrays_zip({zipped})) AS ({names})"
+            return tokens[i].start, tokens[close].end, gen
+        arr = f"({arg_texts[0]})"
+    elif fname == "generate_series":
+        if len(arg_texts) == 2:
+            a, b = arg_texts
+            arr = (
+                f"(CASE WHEN ({a}) <= ({b}) "
+                f"THEN sequence(({a}), ({b})) "
+                f"ELSE slice(sequence(({a}), ({a})), 1, 0) END)"
+            )
+        elif len(arg_texts) == 3:
+            a, b, step = arg_texts
+            # timestamp series (round-10): a literal-interval step
+            # ('1 day'::interval / INTERVAL '1 day') classifies AT
+            # TRANSLATION — sign and family are known, so the
+            # emission is a direct sequence() over CAST(ts) bounds
+            # (PG's generate_series(date, ...) also returns
+            # timestamps). Spark's sequence is stop-inclusive like
+            # PG. Zero steps raise here (PG raises at runtime).
+            step_lit = None
+            st = step.strip()
+            if st.lower().endswith("::interval"):
+                step_lit = _single_string_literal(
+                    st[: -len("::interval")]
+                )
+            elif st.upper().startswith("INTERVAL"):
+                step_lit = _single_string_literal(st[len("INTERVAL") :])
+            if step_lit is not None:
+                months, us = _parse_pg_interval(step_lit)
+                if months and us:
+                    raise ValueError(
+                        "generate_series interval step mixing "
+                        "year/month with day-time quantities is "
+                        "outside the translatable subset"
+                    )
+                if months == 0 and us == 0:
+                    raise ValueError(
+                        "generate_series step must not be zero"
+                    )
+                ivl = _interval_cast_sql(step_lit)
+                ta = f"CAST(({a}) AS TIMESTAMP)"
+                tb = f"CAST(({b}) AS TIMESTAMP)"
+                empty = f"slice(sequence({ta}, {ta}, {ivl}), 1, 0)"
+                cmp = "<=" if (months + us) > 0 else ">="
                 arr = (
-                    f"(CASE WHEN ({a}) <= ({b}) "
-                    f"THEN sequence(({a}), ({b})) "
-                    f"ELSE slice(sequence(({a}), ({a})), 1, 0) END)"
+                    f"(CASE WHEN {ta} {cmp} {tb} "
+                    f"THEN sequence({ta}, {tb}, {ivl}) "
+                    f"ELSE {empty} END)"
                 )
-            elif len(arg_texts) == 3:
-                a, b, step = arg_texts
-                # timestamp series (round-10): a literal-interval step
-                # ('1 day'::interval / INTERVAL '1 day') classifies AT
-                # TRANSLATION — sign and family are known, so the
-                # emission is a direct sequence() over CAST(ts) bounds
-                # (PG's generate_series(date, ...) also returns
-                # timestamps). Spark's sequence is stop-inclusive like
-                # PG. Zero steps raise here (PG raises at runtime).
-                step_lit = None
-                st = step.strip()
-                if st.lower().endswith("::interval"):
-                    step_lit = _single_string_literal(
-                        st[: -len("::interval")]
-                    )
-                elif st.upper().startswith("INTERVAL"):
-                    step_lit = _single_string_literal(st[len("INTERVAL") :])
-                if step_lit is not None:
-                    months, us = _parse_pg_interval(step_lit)
-                    if months and us:
-                        raise ValueError(
-                            "generate_series interval step mixing "
-                            "year/month with day-time quantities is "
-                            "outside the translatable subset"
-                        )
-                    if months == 0 and us == 0:
-                        raise ValueError(
-                            "generate_series step must not be zero"
-                        )
-                    ivl = _interval_cast_sql(step_lit)
-                    ta = f"CAST(({a}) AS TIMESTAMP)"
-                    tb = f"CAST(({b}) AS TIMESTAMP)"
-                    empty = f"slice(sequence({ta}, {ta}, {ivl}), 1, 0)"
-                    cmp = "<=" if (months + us) > 0 else ">="
-                    arr = (
-                        f"(CASE WHEN {ta} {cmp} {tb} "
-                        f"THEN sequence({ta}, {tb}, {ivl}) "
-                        f"ELSE {empty} END)"
-                    )
-                else:
-                    # dynamic numeric steps (round-8 widening): the
-                    # sign is checked AT RUNTIME — wrong-sign bounds
-                    # give PG's zero rows (Spark's sequence would
-                    # raise), and step 0 raises like PG (assert_true
-                    # inside a lazy CASE arm)
-                    empty = f"slice(sequence(({a}), ({a})), 1, 0)"
-                    arr = (
-                        f"(CASE "
-                        f"WHEN ({step}) = 0 THEN CASE WHEN assert_true("
-                        f"false, 'generate_series step must not be zero') "
-                        f"IS NULL THEN {empty} END "
-                        f"WHEN ({step}) > 0 AND ({a}) <= ({b}) "
-                        f"THEN sequence(({a}), ({b}), ({step})) "
-                        f"WHEN ({step}) < 0 AND ({a}) >= ({b}) "
-                        f"THEN sequence(({a}), ({b}), ({step})) "
-                        f"ELSE {empty} END)"
-                    )
             else:
-                raise ValueError("generate_series takes 2 or 3 arguments")
-        elif fname.endswith("_object_keys"):
-            if len(arg_texts) != 1:
-                raise ValueError(f"{fname} takes exactly one argument")
-            # PG raises on a non-object ("cannot call … on a scalar /
-            # an array") — same assert_true arm as the array SRFs.
-            # jsonb canonical key order is length-then-bytewise (the
-            # comparator below; bytewise approximated by Spark string
-            # order — exact for ASCII keys); json_ keeps document
-            # order. NB json (non-b) duplicate keys are deduplicated
-            # by the map parse — a documented boundary.
-            arg = arg_texts[0]
-            parsed = f"from_json(({arg}), 'map<string, variant>')"
-            keys = f"map_keys({parsed})"
-            if fname.startswith("jsonb"):
-                keys = (
-                    f"array_sort({keys}, (l, r) -> CASE "
-                    f"WHEN length(l) < length(r) THEN -1 "
-                    f"WHEN length(l) > length(r) THEN 1 "
-                    f"WHEN l < r THEN -1 WHEN l > r THEN 1 ELSE 0 END)"
+                # dynamic numeric steps (round-8 widening): the
+                # sign is checked AT RUNTIME — wrong-sign bounds
+                # give PG's zero rows (Spark's sequence would
+                # raise), and step 0 raises like PG (assert_true
+                # inside a lazy CASE arm)
+                empty = f"slice(sequence(({a}), ({a})), 1, 0)"
+                arr = (
+                    f"(CASE "
+                    f"WHEN ({step}) = 0 THEN CASE WHEN assert_true("
+                    f"false, 'generate_series step must not be zero') "
+                    f"IS NULL THEN {empty} END "
+                    f"WHEN ({step}) > 0 AND ({a}) <= ({b}) "
+                    f"THEN sequence(({a}), ({b}), ({step})) "
+                    f"WHEN ({step}) < 0 AND ({a}) >= ({b}) "
+                    f"THEN sequence(({a}), ({b}), ({step})) "
+                    f"ELSE {empty} END)"
                 )
-            empty = "slice(array(''), 1, 0)"
-            arr = (
-                f"(CASE "
-                f"WHEN ({arg}) IS NULL THEN CAST(NULL AS ARRAY<STRING>) "
-                f"WHEN {parsed} IS NULL THEN CASE WHEN assert_true("
-                f"false, '{fname} must be applied to a json object') "
-                f"IS NULL THEN {empty} END "
-                f"ELSE {keys} END)"
-            )
         else:
-            if len(arg_texts) != 1:
-                raise ValueError(f"{fname} takes exactly one argument")
-            elem = (
-                "CAST(__gfw_x AS STRING)"
-                if fname.endswith("_text")
-                else "to_json(__gfw_x)"
+            raise ValueError("generate_series takes 2 or 3 arguments")
+    elif fname.endswith("_object_keys"):
+        if len(arg_texts) != 1:
+            raise ValueError(f"{fname} takes exactly one argument")
+        # PG raises on a non-object ("cannot call … on a scalar /
+        # an array") — same assert_true arm as the array SRFs.
+        # jsonb canonical key order is length-then-bytewise (the
+        # comparator below; bytewise approximated by Spark string
+        # order — exact for ASCII keys); json_ keeps document
+        # order. NB json (non-b) duplicate keys are deduplicated
+        # by the map parse — a documented boundary.
+        arg = arg_texts[0]
+        parsed = f"from_json(({arg}), 'map<string, variant>')"
+        keys = f"map_keys({parsed})"
+        if fname.startswith("jsonb"):
+            keys = (
+                f"array_sort({keys}, (l, r) -> CASE "
+                f"WHEN length(l) < length(r) THEN -1 "
+                f"WHEN length(l) > length(r) THEN 1 "
+                f"WHEN l < r THEN -1 WHEN l > r THEN 1 ELSE 0 END)"
             )
-            # PG RAISES on a non-array argument ("cannot extract
-            # elements from a scalar/an object"); from_json alone would
-            # yield NULL → explode → silent row-drop. Loud-raise arm
-            # (same assert_true-in-lazy-CASE recipe as generate_series
-            # step 0); SQL NULL input keeps PG's zero rows, while a
-            # json null SCALAR raises like any other scalar in PG.
-            arg = arg_texts[0]
-            parsed = f"from_json(({arg}), 'array<variant>')"
-            empty = "slice(array(''), 1, 0)"
-            arr = (
-                f"(CASE "
-                f"WHEN ({arg}) IS NULL "
-                f"THEN CAST(NULL AS ARRAY<STRING>) "
-                f"WHEN {parsed} IS NULL THEN CASE WHEN assert_true("
-                f"false, '{fname} must be applied to a json array') "
-                f"IS NULL THEN {empty} END "
-                f"ELSE transform({parsed}, __gfw_x -> {elem}) END)"
-            )
-            # the raise-arm transform already applied the element
-            # template; downstream the elements are plain strings
-            elem = "__gfw_x"
-        # alias: keep a user AS/bare alias, else add PG's default name
-        nxt = tokens[ord_end + 1] if ord_end + 1 < len(tokens) else None
-        alias = None
-        if nxt is not None:
-            if nxt.kind == "IDENT" and nxt.upper == "AS":
-                if ord_end + 2 < len(tokens):
-                    atok = tokens[ord_end + 2]
-                    alias = f"`{atok.value}`" if atok.kind == "QIDENT" else atok.value
-            elif nxt.kind == "QIDENT":
-                alias = f"`{nxt.value}`"
-            elif nxt.kind == "IDENT" and nxt.upper not in _OPERAND_BOUNDARY:
-                alias = nxt.value
-        # the item must END here: a trailing operator (`unnest(a) / 2`)
-        # means the SRF sits inside an expression — reject with the
-        # subset error instead of a confusing downstream parse failure
-        item_end = ord_end
-        if alias is not None:
-            item_end = ord_end + (
-                2 if (nxt.kind == "IDENT" and nxt.upper == "AS") else 1
-            )
-        trailing = tokens[item_end + 1] if item_end + 1 < len(tokens) else None
-        if trailing is not None and not (
-            (trailing.kind == "PUNCT" and trailing.value == ",")
-            or (
-                trailing.kind == "IDENT"
-                and trailing.upper in _SELECT_LIST_BOUNDARY
-            )
-            or (trailing.kind == "IDENT" and trailing.upper == "FROM")
-        ):
-            raise ValueError(
-                f"{fname}() is only translatable as a bare SELECT item "
-                "(no surrounding expression)"
-            )
-        if with_ordinality:
-            # PG's WITH ORDINALITY: 1-based BIGINT position column named
-            # `ordinality`, AFTER the value column. A user alias names
-            # the value column (keep it out of the rewritten span — the
-            # struct fields carry both names).
-            name = alias or _SRF_NAMES[fname]
-            span_hi = tokens[item_end].end
-            gen = (
-                f"inline(transform({arr}, (__gfw_x, __gfw_i) -> "
-                f"struct({elem} AS {name}, "
-                f"CAST(__gfw_i + 1 AS BIGINT) AS ordinality)))"
-            )
-            sql = f"{sql[:tokens[i].start]}{gen}{sql[span_hi:]}"
-        else:
-            gen = f"explode({arr})"
-            if alias is None:
-                gen += f" AS {_SRF_NAMES[fname]}"
-            sql = f"{sql[:tokens[i].start]}{gen}{sql[tokens[close].end:]}"
+        empty = "slice(array(''), 1, 0)"
+        arr = (
+            f"(CASE "
+            f"WHEN ({arg}) IS NULL THEN CAST(NULL AS ARRAY<STRING>) "
+            f"WHEN {parsed} IS NULL THEN CASE WHEN assert_true("
+            f"false, '{fname} must be applied to a json object') "
+            f"IS NULL THEN {empty} END "
+            f"ELSE {keys} END)"
+        )
+    else:
+        if len(arg_texts) != 1:
+            raise ValueError(f"{fname} takes exactly one argument")
+        elem = (
+            "CAST(__gfw_x AS STRING)"
+            if fname.endswith("_text")
+            else "to_json(__gfw_x)"
+        )
+        # PG RAISES on a non-array argument ("cannot extract
+        # elements from a scalar/an object"); from_json alone would
+        # yield NULL → explode → silent row-drop. Loud-raise arm
+        # (same assert_true-in-lazy-CASE recipe as generate_series
+        # step 0); SQL NULL input keeps PG's zero rows, while a
+        # json null SCALAR raises like any other scalar in PG.
+        arg = arg_texts[0]
+        parsed = f"from_json(({arg}), 'array<variant>')"
+        empty = "slice(array(''), 1, 0)"
+        arr = (
+            f"(CASE "
+            f"WHEN ({arg}) IS NULL "
+            f"THEN CAST(NULL AS ARRAY<STRING>) "
+            f"WHEN {parsed} IS NULL THEN CASE WHEN assert_true("
+            f"false, '{fname} must be applied to a json array') "
+            f"IS NULL THEN {empty} END "
+            f"ELSE transform({parsed}, __gfw_x -> {elem}) END)"
+        )
+        # the raise-arm transform already applied the element
+        # template; downstream the elements are plain strings
+        elem = "__gfw_x"
+    # alias: keep a user AS/bare alias, else add PG's default name
+    nxt = tokens[ord_end + 1] if ord_end + 1 < len(tokens) else None
+    alias = None
+    if nxt is not None:
+        if nxt.kind == "IDENT" and nxt.upper == "AS":
+            if ord_end + 2 < len(tokens):
+                atok = tokens[ord_end + 2]
+                alias = f"`{atok.value}`" if atok.kind == "QIDENT" else atok.value
+        elif nxt.kind == "QIDENT":
+            alias = f"`{nxt.value}`"
+        elif nxt.kind == "IDENT" and nxt.upper not in _OPERAND_BOUNDARY:
+            alias = nxt.value
+    # the item must END here: a trailing operator (`unnest(a) / 2`)
+    # means the SRF sits inside an expression — reject with the
+    # subset error instead of a confusing downstream parse failure
+    item_end = ord_end
+    if alias is not None:
+        item_end = ord_end + (
+            2 if (nxt.kind == "IDENT" and nxt.upper == "AS") else 1
+        )
+    trailing = tokens[item_end + 1] if item_end + 1 < len(tokens) else None
+    if trailing is not None and not (
+        (trailing.kind == "PUNCT" and trailing.value == ",")
+        or (
+            trailing.kind == "IDENT"
+            and trailing.upper in _SELECT_LIST_BOUNDARY
+        )
+        or (trailing.kind == "IDENT" and trailing.upper == "FROM")
+    ):
+        raise ValueError(
+            f"{fname}() is only translatable as a bare SELECT item "
+            "(no surrounding expression)"
+        )
+    if with_ordinality:
+        # PG's WITH ORDINALITY: 1-based BIGINT position column named
+        # `ordinality`, AFTER the value column. A user alias names
+        # the value column (keep it out of the rewritten span — the
+        # struct fields carry both names).
+        name = alias or _SRF_NAMES[fname]
+        span_hi = tokens[item_end].end
+        gen = (
+            f"inline(transform({arr}, (__gfw_x, __gfw_i) -> "
+            f"struct({elem} AS {name}, "
+            f"CAST(__gfw_i + 1 AS BIGINT) AS ordinality)))"
+        )
+        return tokens[i].start, span_hi, gen
+    else:
+        gen = f"explode({arr})"
+        if alias is None:
+            gen += f" AS {_SRF_NAMES[fname]}"
+        return tokens[i].start, tokens[close].end, gen
 
 
 # ---------------------------------------------------------------------------
@@ -6106,47 +5369,39 @@ def _top_level_split(tokens, lo, hi):
     grammar appears at top level (comparison, CASE, comma, …) — the
     caller then types the span as unknown."""
     ops = []
-    depth = 0
     case_depth = 0
-    k = lo
-    while k <= hi:
+    reached = lo - 1
+    for k, reached in _top_level(tokens, lo, hi):
         t = tokens[k]
-        if t.kind == "PUNCT" and t.value == "(":
-            depth += 1
-        elif t.kind == "PUNCT" and t.value == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-        elif depth == 0 and t.kind == "IDENT" and t.upper == "CASE":
+        if _is_punct(t, ")"):
+            return None  # closes a group opened before the span
+        if _is_kw(t, "CASE"):
             # CASE…END is an opaque primary for splitting purposes
             # (its arms are typed by _operand_type)
             case_depth += 1
-        elif depth == 0 and case_depth > 0:
-            if t.kind == "IDENT" and t.upper == "END":
+        elif case_depth > 0:
+            if _is_kw(t, "END"):
                 case_depth -= 1
-        elif depth == 0:
-            if t.kind == "OP" and t.value in ("+", "-", "*", "/", "%"):
-                # unary sign (start of span or right after an operator)
-                if t.value in "+-" and (
-                    k == lo
-                    or tokens[k - 1].kind == "OP"
-                    or (tokens[k - 1].kind == "IDENT" and tokens[k - 1].upper == "DIV")
-                ):
-                    k += 1
-                    continue
-                ops.append(k)
-            elif t.kind == "OP" and t.value == "||":
-                ops.append(k)
-            elif t.kind == "IDENT" and t.upper == "DIV":
-                ops.append(k)
-            elif t.kind == "OP" and t.value != "::":
-                return None  # comparison/regex/json operator: not typed
-            elif t.kind == "PUNCT" and t.value in (",", ";"):
-                return None
-            elif t.kind == "IDENT" and t.upper in _OPERAND_BOUNDARY:
-                return None
-        k += 1
-    return ops if depth == 0 and case_depth == 0 else None
+        elif t.kind == "OP" and t.value in ("+", "-", "*", "/", "%"):
+            # unary sign (start of span or right after an operator)
+            if t.value in "+-" and (
+                k == lo
+                or tokens[k - 1].kind == "OP"
+                or _is_kw(tokens[k - 1], "DIV")
+            ):
+                continue
+            ops.append(k)
+        elif t.kind == "OP" and t.value == "||":
+            ops.append(k)
+        elif _is_kw(t, "DIV"):
+            ops.append(k)
+        elif t.kind == "OP" and t.value != "::":
+            return None  # comparison/regex/json operator: not typed
+        elif t.kind == "PUNCT" and t.value in (",", ";"):
+            return None
+        elif t.kind == "IDENT" and t.upper in _OPERAND_BOUNDARY:
+            return None
+    return ops if reached == hi and case_depth == 0 else None
 
 
 def _fold_types(left: str, op: str, right: str) -> str:
@@ -6188,21 +5443,14 @@ def _span_type(tokens, lo, hi, coltypes) -> str:
     # FILTER/OVER suffixes: `agg(…) FILTER (…) OVER (… | name)` types
     # as the aggregate itself (the clauses scope rows, not the type)
     if tokens[hi].kind == "PUNCT" and tokens[hi].value == ")":
-        depth_f = 0
-        for k in range(hi, lo - 1, -1):
-            t = tokens[k]
-            if t.kind == "PUNCT" and t.value == ")":
-                depth_f += 1
-            elif t.kind == "PUNCT" and t.value == "(":
-                depth_f -= 1
-                if depth_f == 0:
-                    if (
-                        k - 1 > lo
-                        and tokens[k - 1].kind == "IDENT"
-                        and tokens[k - 1].upper in ("FILTER", "OVER")
-                    ):
-                        return _span_type(tokens, lo, k - 2, coltypes)
-                    break
+        k = _open(tokens, hi)
+        if (
+            k is not None
+            and k - 1 > lo
+            and tokens[k - 1].kind == "IDENT"
+            and tokens[k - 1].upper in ("FILTER", "OVER")
+        ):
+            return _span_type(tokens, lo, k - 2, coltypes)
     elif (
         hi - 1 > lo
         and tokens[hi].kind in ("IDENT", "QIDENT")
@@ -6232,9 +5480,10 @@ def _span_type(tokens, lo, hi, coltypes) -> str:
     return _operand_type(tokens, lo, hi, coltypes)
 
 
-def _args_spans(tokens, lo, hi):
+def _args_spans(tokens, lo, hi, seps=()):
     """Top-level comma-separated argument spans inside tokens[lo..hi]
-    (the contents of a call's parens, parens excluded)."""
+    (the contents of a call's parens, parens excluded); the keywords
+    in ``seps`` (upper-case) separate spans too."""
     spans, depth, start = [], 0, lo
     for k in range(lo, hi + 1):
         t = tokens[k]
@@ -6242,7 +5491,10 @@ def _args_spans(tokens, lo, hi):
             depth += 1
         elif t.kind == "PUNCT" and t.value in (")", "]"):
             depth -= 1
-        elif depth == 0 and t.kind == "PUNCT" and t.value == ",":
+        elif depth == 0 and (
+            (t.kind == "PUNCT" and t.value == ",")
+            or (seps and t.kind == "IDENT" and t.upper in seps)
+        ):
             spans.append((start, k - 1))
             start = k + 1
     spans.append((start, hi))
@@ -6252,15 +5504,9 @@ def _args_spans(tokens, lo, hi):
 def _operand_type(tokens, lo, hi, coltypes) -> str:
     """Type category of a single primary (no top-level binary ops)."""
     # trailing ::type cast decides (rightmost top-level ::)
-    depth = 0
     last_cast = None
-    for k in range(lo, hi + 1):
-        t = tokens[k]
-        if t.kind == "PUNCT" and t.value == "(":
-            depth += 1
-        elif t.kind == "PUNCT" and t.value == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "OP" and t.value == "::":
+    for k, _ in _top_level(tokens, lo, hi):
+        if tokens[k].kind == "OP" and tokens[k].value == "::":
             last_cast = k
     if last_cast is not None and last_cast + 1 <= hi:
         tt = tokens[last_cast + 1]
@@ -6318,28 +5564,23 @@ def _operand_type(tokens, lo, hi, coltypes) -> str:
         and tokens[hi].upper == "END"
     ):
         arms = []
-        pd = cd = 0
+        cd = 0  # nested CASE…END depth
         arm_start = None
-        k = lo + 1
-        while k <= hi:
+        for k, _ in _top_level(tokens, lo + 1, hi):
             t = tokens[k]
-            if t.kind == "PUNCT" and t.value == "(":
-                pd += 1
-            elif t.kind == "PUNCT" and t.value == ")":
-                pd -= 1
-            elif pd == 0 and t.kind == "IDENT":
-                if t.upper == "CASE":
-                    cd += 1
-                elif cd > 0:
-                    if t.upper == "END":
-                        cd -= 1
-                elif t.upper in ("THEN", "ELSE", "WHEN", "END"):
-                    if arm_start is not None:
-                        arms.append((arm_start, k - 1))
-                        arm_start = None
-                    if t.upper in ("THEN", "ELSE"):
-                        arm_start = k + 1
-            k += 1
+            if t.kind != "IDENT":
+                continue
+            if t.upper == "CASE":
+                cd += 1
+            elif cd > 0:
+                if t.upper == "END":
+                    cd -= 1
+            elif t.upper in ("THEN", "ELSE", "WHEN", "END"):
+                if arm_start is not None:
+                    arms.append((arm_start, k - 1))
+                    arm_start = None
+                if t.upper in ("THEN", "ELSE"):
+                    arm_start = k + 1
         acc = None
         for s, e in arms:
             if s > e:
@@ -6373,20 +5614,8 @@ def _operand_type(tokens, lo, hi, coltypes) -> str:
             return _FN_CATEGORY[fname]
         if fname == "cast":
             # CAST(expr AS type): the top-level AS decides
-            depth2 = 0
-            for k in range(lo + 2, hi):
-                tk = tokens[k]
-                if tk.kind == "PUNCT" and tk.value == "(":
-                    depth2 += 1
-                elif tk.kind == "PUNCT" and tk.value == ")":
-                    depth2 -= 1
-                elif (
-                    depth2 == 0
-                    and tk.kind == "IDENT"
-                    and tk.upper == "AS"
-                    and k + 1 < hi + 1
-                    and tokens[k + 1].kind == "IDENT"
-                ):
+            for k, _ in _top_level(tokens, lo + 2, hi - 1):
+                if _is_kw(tokens[k], "AS") and tokens[k + 1].kind == "IDENT":
                     name = tokens[k + 1].value.lower()
                     if name == "double":
                         return "double"
@@ -6533,122 +5762,101 @@ def _right_primary(tokens, k):
 _MULT_CHAIN_OPS = ("*", "/", "%")
 
 
-def _rewrite_int_division(sql: str, coltypes) -> str:
+def _find_int_division(sql, tokens, coltypes):
     """``a / b`` with both sides integral → ``a div b`` (same
     multiplicative precedence tier, so the token swap preserves
     grouping; left-associative chains rewrite left-to-right like PG
     evaluates them)."""
-    while True:
-        tokens = tokenize(sql)
-        hit = None
-        for i, t in enumerate(tokens):
-            if t.kind != "OP" or t.value != "/" or i == 0 or i + 1 >= len(tokens):
-                continue
-            rend = _right_primary(tokens, i + 1)
-            if rend is None:
-                continue
-            # PG ^ (float8 power) binds TIGHTER than / — a trailing
-            # `^` means the real operand is the power expression
-            # (double), so the division must stay float
-            if (
-                rend + 1 < len(tokens)
-                and tokens[rend + 1].kind == "OP"
-                and tokens[rend + 1].value == "^"
-            ):
-                continue
-            if _span_type(tokens, i + 1, rend, coltypes) not in _INTEGRAL_CATS:
-                continue
-            lstart = _left_primary(tokens, i - 1)
-            if lstart is None:
-                continue
-            # left operand of / is the whole multiplicative chain
-            while lstart >= 2 and (
-                (
-                    tokens[lstart - 1].kind == "OP"
-                    and tokens[lstart - 1].value in _MULT_CHAIN_OPS
-                )
-                or (
-                    tokens[lstart - 1].kind == "IDENT"
-                    and tokens[lstart - 1].upper == "DIV"
-                )
-            ):
-                p = _left_primary(tokens, lstart - 2)
-                if p is None:
-                    break
-                lstart = p
-            # ^ before the chain start: the real left operand is the
-            # power expression (float8 in PG) — keep float division
-            if (
-                lstart > 0
-                and tokens[lstart - 1].kind == "OP"
-                and tokens[lstart - 1].value == "^"
-            ):
-                continue
-            if _span_type(tokens, lstart, i - 1, coltypes) not in _INTEGRAL_CATS:
-                continue
-            hit = t
-            break
-        if hit is None:
-            return sql
-        sql = f"{sql[:hit.start]} div {sql[hit.end:]}"
+    for i, t in enumerate(tokens):
+        if t.kind != "OP" or t.value != "/" or i == 0 or i + 1 >= len(tokens):
+            continue
+        rend = _right_primary(tokens, i + 1)
+        if rend is None:
+            continue
+        # PG ^ (float8 power) binds TIGHTER than / — a trailing
+        # `^` means the real operand is the power expression
+        # (double), so the division must stay float
+        if (
+            rend + 1 < len(tokens)
+            and tokens[rend + 1].kind == "OP"
+            and tokens[rend + 1].value == "^"
+        ):
+            continue
+        if _span_type(tokens, i + 1, rend, coltypes) not in _INTEGRAL_CATS:
+            continue
+        lstart = _left_primary(tokens, i - 1)
+        if lstart is None:
+            continue
+        # left operand of / is the whole multiplicative chain
+        while lstart >= 2 and (
+            (
+                tokens[lstart - 1].kind == "OP"
+                and tokens[lstart - 1].value in _MULT_CHAIN_OPS
+            )
+            or _is_kw(tokens[lstart - 1], "DIV")
+        ):
+            p = _left_primary(tokens, lstart - 2)
+            if p is None:
+                break
+            lstart = p
+        # ^ before the chain start: the real left operand is the
+        # power expression (float8 in PG) — keep float division
+        if (
+            lstart > 0
+            and tokens[lstart - 1].kind == "OP"
+            and tokens[lstart - 1].value == "^"
+        ):
+            continue
+        if _span_type(tokens, lstart, i - 1, coltypes) not in _INTEGRAL_CATS:
+            continue
+        return t.start, t.end, " div "
+    return None
 
 
-def _rewrite_date_minus(sql: str, coltypes) -> str:
+def _find_date_minus(sql, tokens, coltypes):
     """``date - date`` → ``datediff(l, r)`` (PG: integer days). The
     left operand absorbs the full additive chain (``d + 1 - d2`` is
     ``(d + 1) - d2`` in PG, still date-typed on the left)."""
-    while True:
-        tokens = tokenize(sql)
-        done = True
-        for i, t in enumerate(tokens):
-            if t.kind != "OP" or t.value != "-" or i == 0 or i + 1 >= len(tokens):
-                continue
-            rend = _right_primary(tokens, i + 1)
-            if rend is None:
-                continue
-            # ^ binds tighter in PG — a power-adjacent operand is not
-            # the subtraction operand (see _rewrite_int_division)
-            if (
-                rend + 1 < len(tokens)
-                and tokens[rend + 1].kind == "OP"
-                and tokens[rend + 1].value == "^"
-            ) or (tokens[i - 1].kind == "OP" and tokens[i - 1].value == "^"):
-                continue
-            if _span_type(tokens, i + 1, rend, coltypes) != "date":
-                continue
-            lstart = _left_primary(tokens, i - 1)
-            if lstart is None:
-                continue
-            while lstart >= 2 and (
-                (
-                    tokens[lstart - 1].kind == "OP"
-                    and tokens[lstart - 1].value
-                    in ("+", "-") + _MULT_CHAIN_OPS
-                )
-                or (
-                    tokens[lstart - 1].kind == "IDENT"
-                    and tokens[lstart - 1].upper == "DIV"
-                )
-            ):
-                p = _left_primary(tokens, lstart - 2)
-                if p is None:
-                    break
-                lstart = p
-            if _span_type(tokens, lstart, i - 1, coltypes) != "date":
-                continue
-            l_lo, l_hi = tokens[lstart].start, tokens[i - 1].end
-            r_lo, r_hi = tokens[i + 1].start, tokens[rend].end
-            sql = (
-                f"{sql[:l_lo]}datediff({sql[l_lo:l_hi]}, "
-                f"{sql[r_lo:r_hi]}){sql[r_hi:]}"
+    for i, t in enumerate(tokens):
+        if t.kind != "OP" or t.value != "-" or i == 0 or i + 1 >= len(tokens):
+            continue
+        rend = _right_primary(tokens, i + 1)
+        if rend is None:
+            continue
+        # ^ binds tighter in PG — a power-adjacent operand is not
+        # the subtraction operand (see _find_int_division)
+        if (
+            rend + 1 < len(tokens)
+            and tokens[rend + 1].kind == "OP"
+            and tokens[rend + 1].value == "^"
+        ) or (tokens[i - 1].kind == "OP" and tokens[i - 1].value == "^"):
+            continue
+        if _span_type(tokens, i + 1, rend, coltypes) != "date":
+            continue
+        lstart = _left_primary(tokens, i - 1)
+        if lstart is None:
+            continue
+        while lstart >= 2 and (
+            (
+                tokens[lstart - 1].kind == "OP"
+                and tokens[lstart - 1].value
+                in ("+", "-") + _MULT_CHAIN_OPS
             )
-            done = False
-            break
-        if done:
-            return sql
+            or _is_kw(tokens[lstart - 1], "DIV")
+        ):
+            p = _left_primary(tokens, lstart - 2)
+            if p is None:
+                break
+            lstart = p
+        if _span_type(tokens, lstart, i - 1, coltypes) != "date":
+            continue
+        l_lo, l_hi = tokens[lstart].start, tokens[i - 1].end
+        r_lo, r_hi = tokens[i + 1].start, tokens[rend].end
+        return l_lo, r_hi, f"datediff({sql[l_lo:l_hi]}, {sql[r_lo:r_hi]})"
+    return None
 
 
-def _rewrite_typed_round(sql: str, coltypes) -> str:
+def _find_typed_round(sql, tokens, coltypes):
     """PG ``round(float8)`` rounds HALF-EVEN (rint; the known PG gotcha
     vs numeric's half-away), Spark's round is HALF_UP for every type —
     silently different at exact halves. Single-argument round over a
@@ -6656,141 +5864,110 @@ def _rewrite_typed_round(sql: str, coltypes) -> str:
     keep Spark round (HALF_UP = PG numeric). Integral operands are
     identity in both engines. 2-arg round of a float is a PG ERROR
     (no round(float8, int) exists) — left untouched as an extension."""
-    while True:
-        tokens = tokenize(sql)
-        changed = False
-        for i, t in enumerate(tokens):
-            if not (
-                t.kind == "IDENT"
-                and t.upper == "ROUND"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                continue
-            close = _primary_end(tokens, i)
-            if close is None:
-                continue
-            args = _args_spans(tokens, i + 2, close - 1)
-            if len(args) != 1:
-                continue
-            s0, e0 = args[0]
-            if _span_type(tokens, s0, e0, coltypes) not in ("double", "float"):
-                continue
-            inner = sql[tokens[s0].start : tokens[e0].end]
-            sql = f"{sql[:tokens[i].start]}rint({inner}){sql[tokens[close].end:]}"
-            changed = True
-            break
-        if not changed:
-            return sql
+    for i in _calls(tokens, ("round",)):
+        close, args = _close(tokens, i + 1)
+        if close is None or len(args) != 1:
+            continue
+        s0, e0 = args[0]
+        if _span_type(tokens, s0, e0, coltypes) not in ("double", "float"):
+            continue
+        inner = sql[tokens[s0].start : tokens[e0].end]
+        return tokens[i].start, tokens[close].end, f"rint({inner})"
+    return None
 
 
-def _rewrite_typed_casts(sql: str, coltypes) -> str:
-    """Type-aware int-cast routes (both cast spellings):
+# Type-aware int-cast routes (both cast spellings):
+# - bool → int family: plain CAST (Spark gives PG's 0/1; the generic
+#   DECIMAL route would raise on round(boolean)).
+# - float/double → int family: CAST(rint(x) AS …) — PG float8→int is
+#   HALF-EVEN, which is exactly ``rint``.
+# - spelled CAST(x AS int) of a known DECIMAL: round(x, 0) first —
+#   Spark's CAST truncates, PG's numeric→int rounds half-away, which
+#   is Spark round's HALF_UP. (The ``::`` spelling already rounds via
+#   the generic DECIMAL route.)
+# Unknown operand types keep the generic behavior.
 
-    - bool → int family: plain CAST (Spark gives PG's 0/1; the generic
-      DECIMAL route would raise on round(boolean)).
-    - float/double → int family: CAST(rint(x) AS …) — PG float8→int is
-      HALF-EVEN, which is exactly ``rint``.
-    - spelled CAST(x AS int) of a known DECIMAL: round(x, 0) first —
-      Spark's CAST truncates, PG's numeric→int rounds half-away, which
-      is Spark round's HALF_UP. (The ``::`` spelling already rounds via
-      the generic DECIMAL route.)
-    Unknown operand types keep the generic behavior."""
-    # --- ::int spelling ---
-    while True:
-        tokens = tokenize(sql)
-        changed = False
-        for i, t in enumerate(tokens):
-            if t.kind != "OP" or t.value != "::" or i == 0 or i + 1 >= len(tokens):
-                continue
-            tt = tokens[i + 1]
-            if tt.kind != "IDENT":
-                continue
-            cat = _PG_TYPE_CATEGORY.get(tt.value.lower())
-            if cat not in _INTEGRAL_CATS:
-                continue
-            lstart = _left_primary(tokens, i - 1)
-            if lstart is None:
-                continue
-            otype = _span_type(tokens, lstart, i - 1, coltypes)
-            if otype not in ("bool", "float", "double"):
-                continue
-            op_text = sql[tokens[lstart].start : tokens[i - 1].end]
-            spark_t = _INT_CAT_SPARK_TYPE[cat]
-            if otype == "bool":
-                repl = f"CAST({op_text} AS {spark_t})"
-            else:
-                repl = f"CAST(rint({op_text}) AS {spark_t})"
-            sql = f"{sql[:tokens[lstart].start]}{repl}{sql[tt.end:]}"
-            changed = True
-            break
-        if not changed:
-            break
-    # --- spelled CAST(x AS int) ---
-    while True:
-        tokens = tokenize(sql)
-        changed = False
-        for i, t in enumerate(tokens):
-            if not (
-                t.kind == "IDENT"
-                and t.upper == "CAST"
-                and i + 1 < len(tokens)
-                and tokens[i + 1].kind == "PUNCT"
-                and tokens[i + 1].value == "("
-            ):
-                continue
-            depth = 0
-            as_at = close = None
-            for k in range(i + 1, len(tokens)):
-                tk = tokens[k]
-                if tk.kind == "PUNCT" and tk.value == "(":
-                    depth += 1
-                elif tk.kind == "PUNCT" and tk.value == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = k
-                        break
-                elif depth == 1 and tk.kind == "IDENT" and tk.upper == "AS":
-                    as_at = k
-            if as_at is None or close is None or close != as_at + 2:
-                continue  # not a single-token target type
-            cat = _PG_TYPE_CATEGORY.get(tokens[as_at + 1].value.lower())
-            if cat not in _INTEGRAL_CATS:
-                continue
-            otype = _span_type(tokens, i + 2, as_at - 1, coltypes)
-            if otype not in ("float", "double", "decimal"):
-                continue
-            op_lo = tokens[i + 2].start
-            op_hi = tokens[as_at - 1].end
-            op_text = sql[op_lo:op_hi]
-            # marker check: already-rewritten operands start with rint(/round(
-            if op_text.startswith("rint(") or op_text.startswith("round("):
-                continue
-            if otype == "decimal":
-                repl = f"round({op_text}, 0)"
-            else:
-                repl = f"rint({op_text})"
-            sql = f"{sql[:op_lo]}{repl}{sql[op_hi:]}"
-            changed = True
-            break
-        if not changed:
-            break
-    return sql
+
+def _find_typed_int_cast(sql, tokens, coltypes):
+    """``x::int`` spelling of the int-cast routes."""
+    for i, t in enumerate(tokens):
+        if t.kind != "OP" or t.value != "::" or i == 0 or i + 1 >= len(tokens):
+            continue
+        tt = tokens[i + 1]
+        if tt.kind != "IDENT":
+            continue
+        cat = _PG_TYPE_CATEGORY.get(tt.value.lower())
+        if cat not in _INTEGRAL_CATS:
+            continue
+        lstart = _left_primary(tokens, i - 1)
+        if lstart is None:
+            continue
+        otype = _span_type(tokens, lstart, i - 1, coltypes)
+        if otype not in ("bool", "float", "double"):
+            continue
+        op_text = sql[tokens[lstart].start : tokens[i - 1].end]
+        spark_t = _INT_CAT_SPARK_TYPE[cat]
+        if otype == "bool":
+            repl = f"CAST({op_text} AS {spark_t})"
+        else:
+            repl = f"CAST(rint({op_text}) AS {spark_t})"
+        return tokens[lstart].start, tt.end, repl
+    return None
+
+
+def _find_typed_spelled_cast(sql, tokens, coltypes):
+    """``CAST(x AS int)`` spelling of the int-cast routes."""
+    for i in _calls(tokens, ("cast",)):
+        close, as_at = _cast_as(tokens, i)
+        if as_at is None or close is None or close != as_at + 2:
+            continue  # not a single-token target type
+        cat = _PG_TYPE_CATEGORY.get(tokens[as_at + 1].value.lower())
+        if cat not in _INTEGRAL_CATS:
+            continue
+        otype = _span_type(tokens, i + 2, as_at - 1, coltypes)
+        if otype not in ("float", "double", "decimal"):
+            continue
+        op_lo = tokens[i + 2].start
+        op_hi = tokens[as_at - 1].end
+        op_text = sql[op_lo:op_hi]
+        # marker check: already-rewritten operands start with rint(/round(
+        if op_text.startswith("rint(") or op_text.startswith("round("):
+            continue
+        if otype == "decimal":
+            repl = f"round({op_text}, 0)"
+        else:
+            repl = f"rint({op_text})"
+        return op_lo, op_hi, repl
+    return None
+
+
+def _typed_finders(column_types):
+    """The schema-aware finders bound to ``column_types`` lower-cased
+    (none without types: the type-blind behavior, documented in
+    docs/PARITY.md)."""
+    if column_types is None:
+        return []
+    coltypes = {k.lower(): v for k, v in column_types.items()}
+    return [
+        functools.partial(find, coltypes=coltypes)
+        for find in (
+            _find_typed_round,
+            _find_typed_int_cast,
+            _find_typed_spelled_cast,
+            _find_date_minus,
+            _find_int_division,
+        )
+    ]
 
 
 def translate_typed_ops(sql: str, column_types: dict[str, str] | None) -> str:
     """Schema-aware PG-semantics rewrites (see the block comment above).
     ``column_types`` maps lower-cased column names to type categories —
     build one from a DataFrame schema with :func:`schema_type_categories`.
-    Without types the pass is the identity (the type-blind behavior,
-    documented in docs/PARITY.md)."""
+    Without types the pass is the identity."""
     if column_types is None:
         return sql
-    coltypes = {k.lower(): v for k, v in column_types.items()}
-    sql = _rewrite_typed_round(sql, coltypes)
-    sql = _rewrite_typed_casts(sql, coltypes)
-    sql = _rewrite_date_minus(sql, coltypes)
-    return _rewrite_int_division(sql, coltypes)
+    return _rewrite(sql, _typed_finders(column_types))[0]
 
 
 def translate_concat_nullskip(sql: str) -> str:
@@ -6810,39 +5987,28 @@ def translate_concat_nullskip(sql: str) -> str:
     agree. MUST run before any pass that emits a Spark ``concat(``
     itself (json ops, array_cat, literal splicing) — those emissions
     want Spark semantics and stay untouched; this pass's own
-    concat_ws emissions are skipped via a processed-site counter. The
+    concat_ws emissions are skipped by position. The
     ``||`` operator NULL-poisons in BOTH engines and is not
     affected."""
-    processed = 0
-    while True:
-        tokens = tokenize(sql)
-        at = None
-        fname = None
-        seen = 0
-        for i, t in enumerate(tokens):
-            if (
-                t.kind == "IDENT"
-                and t.value.lower() in ("concat", "concat_ws")
-                and i + 1 < len(tokens)
-                and tokens[i + 1].value == "("
-            ):
-                seen += 1
-                if seen <= processed:
-                    continue
-                at = i
-                fname = t.value.lower()
-                break
+    return _rewrite(sql, [_concat_nullskip_finder()])[0]
+
+
+def _concat_nullskip_finder():
+    floor = -1  # our concat_ws emission sits at the last rewrite's start
+
+    def find(sql, tokens):
+        nonlocal floor
+        at = next(
+            (i for i in _calls(tokens, ("concat", "concat_ws")) if tokens[i].start > floor),
+            None,
+        )
         if at is None:
-            return sql
-        close = _primary_end(tokens, at)
+            return None
+        fname = tokens[at].value.lower()
+        close, args = _close(tokens, at + 1)
         if close is None:
             raise ValueError(f"unbalanced {fname}(...)")
-        args = (
-            _args_spans(tokens, at + 2, close - 1)
-            if close - 1 >= at + 2
-            else []
-        )
-        texts = [sql[tokens[s].start : tokens[e].end] for s, e in args if s <= e]
+        texts = _arg_texts(sql, tokens, args)
         if fname == "concat_ws":
             if len(texts) < 2:
                 raise ValueError(
@@ -6857,8 +6023,10 @@ def translate_concat_nullskip(sql: str) -> str:
                 raise ValueError("concat takes at least one argument")
             wrapped = ", ".join(f"CAST(({t}) AS STRING)" for t in texts)
             repl = f"concat_ws('', {wrapped})"
-        processed += 1
-        sql = f"{sql[:tokens[at].start]}{repl}{sql[tokens[close].end:]}"
+        floor = tokens[at].start
+        return floor, tokens[close].end, repl
+
+    return find
 
 
 _FTS_FUNCTIONS = frozenset(
@@ -6881,7 +6049,7 @@ _FTS_FUNCTIONS = frozenset(
 )
 
 
-def _reject_fulltext_search(sql: str) -> None:
+def _reject_fulltext_search(sql, tokens):
     """PG full-text search is ADMITTED by the reference's pass-through
     (not in its blocklists — query_helpers.py:50-78 blocks only
     admin/system names), but Spark has no tsvector type: previously
@@ -6889,16 +6057,11 @@ def _reject_fulltext_search(sql: str) -> None:
     closed-vocabulary policy the rejection is now NAMED (round-11,
     verdict r10 #7): the dictionary-driven stemming/stopword pipeline
     behind to_tsvector has no Spark twin, so a silent approximation
-    would diverge on almost every document."""
-    tokens = tokenize(sql)
+    would diverge on almost every document. A finder that never
+    edits: it raises or returns None."""
+    call = _find_call(tokens, _FTS_FUNCTIONS)
     for i, t in enumerate(tokens):
-        if (
-            t.kind == "IDENT"
-            and t.value.lower() in _FTS_FUNCTIONS
-            and i + 1 < len(tokens)
-            and tokens[i + 1].kind == "PUNCT"
-            and tokens[i + 1].value == "("
-        ):
+        if i == call:
             raise ValueError(
                 f"PostgreSQL full-text search ('{t.value}', the "
                 "tsvector/tsquery family and the @@ match operator) "
@@ -6925,92 +6088,82 @@ def _reject_fulltext_search(sql: str) -> None:
             )
 
 
-def _reject_unsupported_frames(sql: str) -> None:
+def _reject_unsupported_frames(sql, tokens):
     """Window-frame features Spark lacks get NAMED rejections instead
     of opaque ParseExceptions (round-11): PG 11's GROUPS frame mode
     (peer-group offsets) and the frame EXCLUDE clause (CURRENT ROW /
     GROUP / TIES). Only flagged INSIDE an OVER (...) group, so columns
     named 'groups'/'exclude' elsewhere are untouched. ROWS and RANGE
     frames (including PG 11 RANGE offsets) are Spark-native and pass
-    through."""
-    tokens = tokenize(sql)
-    i = 0
-    n = len(tokens)
-    while i < n:
-        t = tokens[i]
-        if (
-            t.kind == "IDENT"
-            and t.upper == "OVER"
-            and i + 1 < n
-            and tokens[i + 1].kind == "PUNCT"
-            and tokens[i + 1].value == "("
-        ):
-            close = _primary_end(tokens, i)
-            if close is None:
-                i += 1
-                continue
-            for j in range(i + 2, close):
-                tk = tokens[j]
-                if tk.kind != "IDENT":
-                    continue
-                if tk.upper == "GROUPS":
-                    raise ValueError(
-                        "the GROUPS window frame mode (peer-group "
-                        "offsets, PG 11) has no Spark twin; use ROWS "
-                        "or RANGE frames"
-                    )
-                if tk.upper == "EXCLUDE":
-                    raise ValueError(
-                        "the window frame EXCLUDE clause (EXCLUDE "
-                        "CURRENT ROW / GROUP / TIES, PG 11) has no "
-                        "Spark twin; subtract the excluded rows "
-                        "explicitly (e.g. sum(...) OVER w - CASE "
-                        "WHEN ... END)"
-                    )
-            i = close + 1
-            continue
-        i += 1
+    through. A finder that never edits: it raises or returns None."""
+    for i in _calls(tokens, ("over",)):
+        close, _ = _close(tokens, i + 1)
+        for tk in tokens[i + 2 : close] if close is not None else ():
+            if _is_kw(tk, "GROUPS"):
+                raise ValueError(
+                    "the GROUPS window frame mode (peer-group "
+                    "offsets, PG 11) has no Spark twin; use ROWS "
+                    "or RANGE frames"
+                )
+            if _is_kw(tk, "EXCLUDE"):
+                raise ValueError(
+                    "the window frame EXCLUDE clause (EXCLUDE "
+                    "CURRENT ROW / GROUP / TIES, PG 11) has no "
+                    "Spark twin; subtract the excluded rows "
+                    "explicitly (e.g. sum(...) OVER w - CASE "
+                    "WHEN ... END)"
+                )
+    return None
+
+
+def _pipeline(column_types):
+    """Every pass's finders, in pipeline order (stateful finders are
+    built fresh per translation)."""
+    return [
+        _reject_fulltext_search,  # named error, not Spark's opaque one
+        _reject_unsupported_frames,
+        *_typed_finders(column_types),  # schema-aware, PG-typed
+        _concat_nullskip_finder(),  # before passes that EMIT concat(
+        _find_json_op,  # first: later passes emit -> lambdas
+        _find_json_exists,  # before array_literal: eats ARRAY[..]
+        _find_json_contains,
+        _find_jsonb_concat,  # before pg_casts eats ::jsonb
+        _find_set_returning,  # after json ops; emits explode()
+        _find_row_overlaps,
+        _find_row_comparison,  # after OVERLAPS eats its pairs
+        _find_null_counter,
+        _find_distinct_on,
+        _to_char_finder(),
+        _find_json_agg,  # → array_agg, handled next
+        _find_agg_order_by,
+        _find_array_literal,
+        _find_any_all,
+        _find_cast_type_name,
+        _find_pg_cast,
+        _find_array_subscript,  # after casts eat type [] pairs
+        _find_date_part,  # → EXTRACT, handled next
+        _find_extract,
+        _find_at_time_zone,  # after casts resolve operands
+        _find_between_symmetric,
+        _find_caret_power,
+        _find_unary_math_op,  # @ / |/ / ||/ prefixes
+        _find_like_op,  # before the ~ regex family
+        _find_named_regex_fn,
+        _find_regex_op,
+        _find_similar_to,
+        *_PG_FUNCTION_FINDERS,
+        _math_domain_finder(),  # after log→log10 and ^→power
+        _regexp_replace_finder(),
+        _find_substring_regex,
+        _substr_positional_finder(),  # after regex form is consumed
+        _find_left_right,
+        _find_fetch_first,
+        _find_order_nulls,
+        _find_unlexable_literal,  # last: covers emitted literals too
+    ]
 
 
 def to_spark_sql(sql: str, column_types: dict[str, str] | None = None) -> str:
-    """All PG→Spark surface translations."""
-    _reject_fulltext_search(sql)  # named error, not Spark's opaque one
-    _reject_unsupported_frames(sql)
-    sql = translate_typed_ops(sql, column_types)  # schema-aware, PG-typed
-    sql = translate_concat_nullskip(sql)  # before passes that EMIT concat(
-    sql = translate_json_ops(sql)  # first: later passes emit -> lambdas
-    sql = translate_json_exists(sql)  # before array_literal: eats ARRAY[..]
-    sql = translate_json_contains(sql)
-    sql = translate_jsonb_concat(sql)  # before pg_casts eats ::jsonb
-    sql = translate_set_returning(sql)  # after json ops; emits explode()
-    sql = translate_row_overlaps(sql)
-    sql = translate_row_comparisons(sql)  # after OVERLAPS eats its pairs
-    sql = translate_null_counters(sql)
-    sql = translate_distinct_on(sql)
-    sql = translate_to_char(sql)
-    sql = translate_json_agg(sql)  # → array_agg, handled next
-    sql = translate_agg_order_by(sql)
-    sql = translate_array_literal(sql)
-    sql = translate_any_all(sql)
-    sql = translate_cast_type_names(sql)
-    sql = translate_pg_casts(sql)
-    sql = translate_array_subscript(sql)  # after casts eat type [] pairs
-    sql = translate_date_part(sql)  # → EXTRACT, handled next
-    sql = translate_extract(sql)
-    sql = translate_at_time_zone(sql)  # after casts resolve operands
-    sql = translate_between_symmetric(sql)
-    sql = translate_caret_power(sql)
-    sql = translate_unary_math_ops(sql)  # @ / |/ / ||/ prefixes
-    sql = translate_like_ops(sql)  # before the ~ regex family
-    sql = translate_named_regex_fns(sql)
-    sql = translate_regex_ops(sql)
-    sql = translate_similar_to(sql)
-    sql = translate_pg_functions(sql)
-    sql = translate_math_domain(sql)  # after log→log10 and ^→power
-    sql = translate_regexp_replace(sql)
-    sql = translate_substring_regex(sql)
-    sql = translate_substr_positional(sql)  # after regex form is consumed
-    sql = translate_left_right(sql)
-    sql = translate_fetch_first(sql)
-    sql = translate_order_nulls(sql)
-    return fix_unlexable_literals(sql)  # last: covers emitted literals too
+    """All PG→Spark surface translations: the pipeline's finders over
+    one token stream."""
+    return _rewrite(sql, _pipeline(column_types))[0]

@@ -100,24 +100,17 @@ _TOKEN_RE = re.compile(
 )
 
 
-import functools
-
-
-@functools.lru_cache(maxsize=256)
 def tokenize(sql: str) -> tuple[Token, ...]:
-    """Regex-scanner tokenizer (round-10: the per-character loop was
-    97% of translation latency — ~97 tokenizations per statement
-    through the pass pipeline's rescan loops). Token-for-token
-    identical to :func:`_tokenize_reference`; the differential test in
-    tests/test_dialect.py walks every gate SQL plus edge corpora.
+    """Tokenize ``sql`` with one compiled regex scanner (round-10: the
+    per-character loop, kept as :func:`_tokenize_reference`, was most
+    of translation latency). Token-for-token identical to the
+    reference; the differential test in tests/test_dialect.py walks
+    every gate SQL plus edge corpora. Returns an immutable tuple.
 
-    Round-11: MEMOIZED and returning an immutable tuple — the pass
-    pipeline re-tokenizes the same unchanged statement text dozens of
-    times (each pass's rescan loop starts with tokenize; most find
-    nothing to rewrite), which dominated translation latency again
-    once the big age()/interval emissions grew statements to tens of
-    kilobytes. No caller mutates the token sequence (audited); the
-    cache key is the SQL text itself."""
+    Nothing is cached: the dialect pipeline threads one token stream
+    through all of its passes and re-tokenizes only after a rewrite
+    changes the text (see the finder contract in
+    :mod:`gfw_data_api_spark.sql.dialect`)."""
     return tuple(_tokenize_impl(sql))
 
 

@@ -3072,7 +3072,7 @@ class TestTokenizerRegexEquivalence:
         )
 
         for sql in self._corpus():
-            # round-11: tokenize returns a memoized TUPLE
+            # tokenize returns a TUPLE
             assert list(tokenize(sql)) == _tokenize_reference(sql), sql
 
     def test_error_parity(self):
@@ -3091,6 +3091,41 @@ class TestTokenizerRegexEquivalence:
                 _tokenize_reference(bad)
             assert str(e_new.value) == str(e_ref.value), bad
             assert e_new.value.index == e_ref.value.index, bad
+
+
+class TestTokenizeOnce:
+    """The pass pipeline threads one token stream through every finder
+    and re-tokenizes only after a rewrite splices the text; nothing is
+    memoized. Counted by patching the name the dialect calls."""
+
+    @staticmethod
+    def _count(monkeypatch, sql):
+        from gfw_data_api_spark.sql import dialect
+
+        real = dialect.tokenize
+        calls = []
+
+        def counting(text):
+            calls.append(text)
+            return real(text)
+
+        monkeypatch.setattr(dialect, "tokenize", counting)
+        dialect.to_spark_sql(sql)
+        return len(calls)
+
+    def test_untouched_statement_tokenized_once(self, monkeypatch):
+        sql = "SELECT iso, count(*) AS n FROM data WHERE frp > 3 GROUP BY iso"
+        assert self._count(monkeypatch, sql) == 1
+
+    def test_one_tokenize_per_rewrite(self, monkeypatch):
+        # date_part → EXTRACT and ARRAY[...] → array(...): two splices
+        sql = "SELECT date_part('year', d) AS y, ARRAY[1,2] AS a FROM data"
+        assert self._count(monkeypatch, sql) == 3
+
+    def test_tokenize_has_no_cache(self):
+        from gfw_data_api_spark.sql.tokenizer import tokenize
+
+        assert not hasattr(tokenize, "cache_info")
 
 
 class TestTimestampGenerateSeries:

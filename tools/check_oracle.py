@@ -7,8 +7,9 @@ names, and values (column-name-sorted, row-sorted, exact where possible).
 
 Usage: python tools/check_oracle.py [--virgin] [name_prefix ...]
 
-``--virgin`` replicates the driver harness: a bare SparkSession built
-without any of session.py's confs, and with a deliberately non-UTC session
+``--virgin`` replicates the driver harness: a bare SparkSession on
+``local[$SPARK_GRAFT_CPUS]`` (default 32) built without any of
+session.py's confs, and with a deliberately non-UTC session
 timezone — every gate entry must pass there too (load_table sets the
 events-read confs and UTC at runtime; nothing may depend on the builder).
 """
@@ -90,10 +91,12 @@ def main() -> int:
     if virgin:
         from pyspark.sql import SparkSession
 
+        # the driver's local[N] and partition count, N = SPARK_GRAFT_CPUS
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         spark = (
-            SparkSession.builder.master("local[32]")
+            SparkSession.builder.master(f"local[{cpus}]")
             .appName("oracle-check-virgin")
-            .config("spark.sql.shuffle.partitions", "32")
+            .config("spark.sql.shuffle.partitions", cpus)
             .config("spark.sql.session.timeZone", "America/Chicago")
             .config("spark.driver.memory", "8g")
             .getOrCreate()

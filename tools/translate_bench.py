@@ -3,9 +3,10 @@
 
 Times ``to_spark_sql`` ALONE (no Spark, no execution) over every
 guarded-path gate SQL in the registry — the per-request cost the API
-pays before Catalyst sees the query. The pass pipeline re-tokenizes
-per pass (~35 passes), so this is the number to watch as the dialect
-grows; budget and history live in docs/BENCH_NOTES.md.
+pays before Catalyst sees the query. The pass pipeline threads one
+token stream through its ~40 passes and re-tokenizes only after a
+rewrite; ``tokenize_calls`` (one translation per statement) keeps that
+property visible. Budget and history live in docs/BENCH_NOTES.md.
 
 Usage: python tools/translate_bench.py [reps]
 """
@@ -21,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gfw_data_api_spark import inventory  # noqa: E402
-from gfw_data_api_spark.sql.dialect import to_spark_sql  # noqa: E402
+from gfw_data_api_spark.sql import dialect  # noqa: E402
 
 
 def _gate_sqls() -> dict[str, str]:
@@ -48,19 +49,27 @@ def main() -> None:
         "doc_id": "bigint", "n_chars": "bigint", "lang": "text",
         "text": "text", "amount": "decimal", "o_orderdate": "date",
     }
+    tokenize = dialect.tokenize
+    calls = 0
+
+    def counting_tokenize(text):
+        nonlocal calls
+        calls += 1
+        return tokenize(text)
+
+    # one counted translation per statement, outside the timed reps
+    dialect.tokenize = counting_tokenize
+    try:
+        for sql in sqls.values():
+            dialect.to_spark_sql(sql, column_types=coltypes)
+    finally:
+        dialect.tokenize = tokenize
     times_ms: dict[str, float] = {}
     for name, sql in sorted(sqls.items()):
         best = float("inf")
         for _ in range(reps):
-            # round-11: tokenize is memoized — clear per rep so the
-            # bench reports COLD translation latency (the cache is a
-            # real win for repeated identical statements, but this
-            # tool's budget tracks the first-translation path)
-            from gfw_data_api_spark.sql.tokenizer import tokenize
-
-            tokenize.cache_clear()
             t0 = time.perf_counter()
-            to_spark_sql(sql, column_types=coltypes)
+            dialect.to_spark_sql(sql, column_types=coltypes)
             best = min(best, (time.perf_counter() - t0) * 1000)
         times_ms[name] = best
     vals = sorted(times_ms.values())
@@ -75,6 +84,7 @@ def main() -> None:
                 "p95_ms": round(p95, 2),
                 "max_ms": round(max(vals), 2),
                 "sum_ms": round(sum(vals), 2),
+                "tokenize_calls": calls,
                 "slowest": sorted(
                     times_ms.items(), key=lambda kv: -kv[1]
                 )[:5],
