@@ -288,6 +288,14 @@ def _suffix_end(tokens, close):
     return end
 
 
+def _agg_values(agg: str, var: str) -> str:
+    """Project the ``v`` field out of ``agg``, an aggregate of
+    ``named_struct('v', …)`` (the NULL-keeping and ORDER BY array_agg
+    recipes). An aggregate over zero input rows is NULL in PG, where
+    Spark's is ``[]``; Spark plans the repeated aggregate once."""
+    return f"CASE WHEN size({agg}) > 0 THEN transform({agg}, {var} -> {var}.v) END"
+
+
 _INTERVAL_UNIT_MONTHS = {
     "mon": 1, "mons": 1, "month": 1, "months": 1,
     "y": 12, "yr": 12, "yrs": 12, "year": 12, "years": 12,
@@ -2382,11 +2390,8 @@ def _find_array_agg_nulls(sql, tokens):
         # aggregate INSIDE the transform wrapper
         end = _suffix_end(tokens, close)
         suffix = sql[tokens[close].end : tokens[end].end]
-        repl = (
-            f"transform(array_agg({distinct}named_struct('v', "
-            f"({inner}))){suffix}, __ag -> __ag.v)"
-        )
-        return tokens[at].start, tokens[end].end, repl
+        agg = f"array_agg({distinct}named_struct('v', ({inner}))){suffix}"
+        return tokens[at].start, tokens[end].end, _agg_values(agg, "__ag")
     return None
 
 
@@ -4500,8 +4505,7 @@ def _find_agg_order_by(sql, tokens):
         sorted_sql = f"array_sort(array_agg({struct_sql}){suffix})"
         if desc:
             sorted_sql = f"reverse({sorted_sql})"
-        repl = f"transform({sorted_sql}, s -> s.v)"
-        return tokens[at].start, tokens[end].end, repl
+        return tokens[at].start, tokens[end].end, _agg_values(sorted_sql, "s")
     return tokens[at].start, tokens[close].end, repl
 
 

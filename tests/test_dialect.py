@@ -473,11 +473,64 @@ class TestAggOrderBy:
             "SELECT array_to_string(array_agg(v), ',') FROM t"
         )
         # round-11: bare array_agg routes through the NULL-keeping
-        # struct wrapper (PG keeps NULL elements; Spark's drops them)
+        # struct wrapper (PG keeps NULL elements; Spark's drops them),
+        # and an aggregate over zero rows is NULL, not []
+        agg = "array_agg(named_struct('v', (v)))"
         assert out == (
-            "SELECT array_join(transform(array_agg(named_struct('v', "
-            "(v))), __ag -> __ag.v), ',') FROM t"
+            f"SELECT array_join(CASE WHEN size({agg}) > 0 THEN "
+            f"transform({agg}, __ag -> __ag.v) END, ',') FROM t"
         )
+
+
+class TestEmptyArrayAggregates:
+    """PG array_agg / json_agg over zero input rows are NULL — a FILTER
+    that no row of a group passes, or a global aggregate over no rows;
+    Spark's array_agg gives [] (so json_agg gave '[]'). Through the
+    guarded path, against a DuckDB twin for array_agg (DuckDB has no
+    json_agg, so those expectations are literal)."""
+
+    ROWS = [("a", "x", 1), ("a", "y", 5), ("b", "z", 2), ("b", None, 3)]
+
+    @pytest.fixture
+    def df(self, spark):
+        return spark.createDataFrame(self.ROWS, "g string, s string, n int")
+
+    @staticmethod
+    def _guarded(spark, df, sql):
+        from gfw_data_api_spark.operators.query import execute_on_dataframe
+
+        return [tuple(r) for r in execute_on_dataframe(spark, df, sql).collect()]
+
+    def test_array_agg_filter_matches_duckdb(self, spark, df):
+        import duckdb
+        import pandas as pd
+
+        con = duckdb.connect()
+        con.register("data", pd.DataFrame(self.ROWS, columns=["g", "s", "n"]))
+        for agg in (
+            "array_agg(s)",
+            "array_agg(s ORDER BY s)",
+            "array_agg(s ORDER BY s DESC)",
+        ):
+            sql = (
+                f"SELECT g, {agg} FILTER (WHERE n > 4) AS a "
+                "FROM data GROUP BY g ORDER BY g"
+            )
+            got = self._guarded(spark, df, sql)
+            assert got == [("a", ["y"]), ("b", None)], agg
+            assert got == con.sql(sql).fetchall(), agg
+
+    def test_json_agg_filter_is_null(self, spark, df):
+        for agg in ("json_agg(s)", "json_agg(s ORDER BY s)"):
+            sql = (
+                f"SELECT g, {agg} FILTER (WHERE n > 4) AS a "
+                "FROM data GROUP BY g ORDER BY g"
+            )
+            assert self._guarded(spark, df, sql) == [("a", '["y"]'), ("b", None)]
+
+    def test_global_aggregate_over_no_rows_is_null(self, spark, df):
+        sql = "SELECT array_agg(s) AS a, json_agg(s) AS j FROM data WHERE n > 100"
+        assert self._guarded(spark, df, sql) == [(None, None)]
 
 
 class TestParameterizedCasts:
