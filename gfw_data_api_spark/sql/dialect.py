@@ -20,7 +20,9 @@ applies a finder until it returns None, then moves on to the next,
 re-tokenizing only after a splice, so one token stream is threaded
 through the whole pipeline (a statement no finder touches is tokenized
 once). A finder must stop matching its own emission, or the driver
-never reaches its fixpoint. Adding a pass means adding one finder to
+never reaches its fixpoint; one whose emission keeps the name it
+matched tells its own emissions apart by position
+(:func:`_after_last_edit`). Adding a pass means adding one finder to
 :func:`_pipeline`; each public ``translate_*`` is the driver run over
 that pass's finders.
 
@@ -161,6 +163,23 @@ PG_TO_SPARK_TYPES: dict[str, str] = {
 # Rewrite machinery: the driver and the shared token matchers every
 # finder is built from (see FINDER CONTRACT in the module docstring).
 # ---------------------------------------------------------------------------
+
+
+def _after_last_edit(find):
+    """A fresh finder over ``find(sql, tokens, last)``, where ``last``
+    is the start offset of its previous edit in this run (-1 before the
+    first): passes whose emission keeps the name they match tell their
+    own emissions apart by position."""
+    last = -1
+
+    def run(sql, tokens):
+        nonlocal last
+        edit = find(sql, tokens, last)
+        if edit is not None:
+            last = edit[0]
+        return edit
+
+    return run
 
 
 def _rewrite(sql: str, finders, tokens=None):
@@ -3146,67 +3165,61 @@ def translate_math_domain(sql: str) -> str:
     the right of their enclosing call, so each rewrite only ever looks
     strictly left of the last one. NULL inputs fall through every
     domain arm to the function itself (PG: NULL in, NULL out)."""
-    return _rewrite(sql, [_math_domain_finder()])[0]
+    return _rewrite(sql, [_after_last_edit(_find_math_domain)])[0]
 
 
-def _math_domain_finder():
-    boundary = None  # start offset of the last site handled
-
-    def find(sql, tokens):
-        nonlocal boundary
-        sites = [
-            i
-            for i in _calls(tokens, _MATH_DOMAIN_FNS)
-            if boundary is None or tokens[i].start < boundary
-        ]
-        for at in reversed(sites):
-            fname = tokens[at].value.lower()
-            close, args = _close(tokens, at + 1)
-            if close is None:
-                raise ValueError(f"unbalanced {fname}(...)")
-            texts = _arg_texts(sql, tokens, args)
-            call = sql[tokens[at].start : tokens[close].end]
-            boundary = tokens[at].start
-            arms = []
-            if fname == "sqrt" and len(texts) == 1:
-                arms = [(f"({texts[0]}) < 0",
-                         "cannot take square root of a negative number")]
-            elif fname in ("ln", "log10") and len(texts) == 1:
-                arms = [(f"({texts[0]}) <= 0",
-                         "cannot take logarithm of zero or a negative number")]
-            elif fname == "log" and len(texts) == 2:
-                b, x = texts
-                arms = [
-                    (f"({b}) <= 0 OR ({x}) <= 0",
-                     "cannot take logarithm of zero or a negative number"),
-                    (f"({b}) = 1", "division by zero"),
-                ]
-            elif fname in ("acos", "asin") and len(texts) == 1:
-                arms = [(f"abs({texts[0]}) > 1", "input is out of range")]
-            elif fname == "power" and len(texts) == 2:
-                x, y = texts
-                arms = [
-                    (f"({x}) = 0 AND ({y}) < 0",
-                     "zero raised to a negative power is undefined"),
-                    (f"({x}) < 0 AND ({y}) != floor({y})",
-                     "a negative number raised to a non-integer power "
-                     "yields a complex result"),
-                ]
-            if not arms:
-                continue  # wrong arity — leave for Spark's own analyzer
-            # the dummy MUST be non-NULL: with every CASE outcome NULL,
-            # Catalyst folds the whole CASE to NULL and silently drops the
-            # assert_true (probed) — 0.0 never materializes, the raise wins
-            when = " ".join(
-                f"WHEN {cond} THEN CASE WHEN assert_true(false, '{msg}') "
-                f"IS NULL THEN CAST(0 AS DOUBLE) END"
-                for cond, msg in arms
-            )
-            repl = f"(CASE {when} ELSE {call} END)"
-            return tokens[at].start, tokens[close].end, repl
-        return None
-
-    return find
+def _find_math_domain(sql, tokens, last):
+    # rightmost first: only sites left of the last rewrite remain
+    sites = [
+        i
+        for i in _calls(tokens, _MATH_DOMAIN_FNS)
+        if last < 0 or tokens[i].start < last
+    ]
+    for at in reversed(sites):
+        fname = tokens[at].value.lower()
+        close, args = _close(tokens, at + 1)
+        if close is None:
+            raise ValueError(f"unbalanced {fname}(...)")
+        texts = _arg_texts(sql, tokens, args)
+        call = sql[tokens[at].start : tokens[close].end]
+        arms = []
+        if fname == "sqrt" and len(texts) == 1:
+            arms = [(f"({texts[0]}) < 0",
+                     "cannot take square root of a negative number")]
+        elif fname in ("ln", "log10") and len(texts) == 1:
+            arms = [(f"({texts[0]}) <= 0",
+                     "cannot take logarithm of zero or a negative number")]
+        elif fname == "log" and len(texts) == 2:
+            b, x = texts
+            arms = [
+                (f"({b}) <= 0 OR ({x}) <= 0",
+                 "cannot take logarithm of zero or a negative number"),
+                (f"({b}) = 1", "division by zero"),
+            ]
+        elif fname in ("acos", "asin") and len(texts) == 1:
+            arms = [(f"abs({texts[0]}) > 1", "input is out of range")]
+        elif fname == "power" and len(texts) == 2:
+            x, y = texts
+            arms = [
+                (f"({x}) = 0 AND ({y}) < 0",
+                 "zero raised to a negative power is undefined"),
+                (f"({x}) < 0 AND ({y}) != floor({y})",
+                 "a negative number raised to a non-integer power "
+                 "yields a complex result"),
+            ]
+        if not arms:
+            continue  # wrong arity — leave for Spark's own analyzer
+        # the dummy MUST be non-NULL: with every CASE outcome NULL,
+        # Catalyst folds the whole CASE to NULL and silently drops the
+        # assert_true (probed) — 0.0 never materializes, the raise wins
+        when = " ".join(
+            f"WHEN {cond} THEN CASE WHEN assert_true(false, '{msg}') "
+            f"IS NULL THEN CAST(0 AS DOUBLE) END"
+            for cond, msg in arms
+        )
+        repl = f"(CASE {when} ELSE {call} END)"
+        return tokens[at].start, tokens[close].end, repl
+    return None
 
 
 def translate_regexp_replace(sql: str) -> str:
@@ -3230,69 +3243,62 @@ def translate_regexp_replace(sql: str) -> str:
     conversion happens at translate time); flags beyond ``g``/``i``
     raise.
     """
-    return _rewrite(sql, [_regexp_replace_finder()])[0]
+    return _rewrite(sql, [_after_last_edit(_find_regexp_replace)])[0]
 
 
-def _regexp_replace_finder():
+def _find_regexp_replace(sql, tokens, last):
     # translated calls keep their name: sites at or before the last
     # rewrite are our own emissions
-    floor = -1
-
-    def find(sql, tokens):
-        nonlocal floor
-        at = next(
-            (i for i in _calls(tokens, ("regexp_replace",)) if tokens[i].start > floor),
-            None,
+    at = next(
+        (i for i in _calls(tokens, ("regexp_replace",)) if tokens[i].start > last),
+        None,
+    )
+    if at is None:
+        return None
+    close, args = _close(tokens, at + 1)
+    if close is None or len(args) not in (3, 4):
+        raise ValueError(
+            "regexp_replace takes (expr, pattern, replacement [, flags])"
         )
-        if at is None:
-            return None
-        close, args = _close(tokens, at + 1)
-        if close is None or len(args) not in (3, 4):
-            raise ValueError(
-                "regexp_replace takes (expr, pattern, replacement [, flags])"
-            )
 
-        def literal(span):
-            return span[0] == span[1] and tokens[span[0]].kind == "STRING"
+    def literal(span):
+        return span[0] == span[1] and tokens[span[0]].kind == "STRING"
 
-        if not (literal(args[1]) and literal(args[2])):
+    if not (literal(args[1]) and literal(args[2])):
+        raise ValueError(
+            "regexp_replace requires string-literal pattern/replacement "
+            "(dynamic regexes are not translatable to Spark with PG "
+            "first-match semantics)"
+        )
+    flags = ""
+    if len(args) == 4:
+        if not literal(args[3]):
+            raise ValueError("regexp_replace flags must be a string literal")
+        flags = tokens[args[3][0]].value
+    if set(flags) - {"g", "i"}:
+        raise ValueError(
+            f"regexp_replace flags {flags!r} outside the translatable "
+            "subset (g, i)"
+        )
+    pat = _translate_posix_classes(tokens[args[1][0]].value)
+    repl = tokens[args[2][0]].value
+    s_expr = sql[tokens[at + 2].start : tokens[args[1][0] - 2].end]
+    ci = "(?i)" if "i" in flags else ""
+    if "g" in flags:
+        new_pat = ci + pat
+        new_repl = _java_replacement(repl, 0)
+    else:
+        if re.search(r"\\[1-9]", pat):
             raise ValueError(
-                "regexp_replace requires string-literal pattern/replacement "
-                "(dynamic regexes are not translatable to Spark with PG "
-                "first-match semantics)"
+                "regexp_replace without the g flag cannot translate a "
+                "pattern containing backreferences (the first-only "
+                "rewrite renumbers groups)"
             )
-        flags = ""
-        if len(args) == 4:
-            if not literal(args[3]):
-                raise ValueError("regexp_replace flags must be a string literal")
-            flags = tokens[args[3][0]].value
-        if set(flags) - {"g", "i"}:
-            raise ValueError(
-                f"regexp_replace flags {flags!r} outside the translatable "
-                "subset (g, i)"
-            )
-        pat = _translate_posix_classes(tokens[args[1][0]].value)
-        repl = tokens[args[2][0]].value
-        s_expr = sql[tokens[at + 2].start : tokens[args[1][0] - 2].end]
-        ci = "(?i)" if "i" in flags else ""
-        if "g" in flags:
-            new_pat = ci + pat
-            new_repl = _java_replacement(repl, 0)
-        else:
-            if re.search(r"\\[1-9]", pat):
-                raise ValueError(
-                    "regexp_replace without the g flag cannot translate a "
-                    "pattern containing backreferences (the first-only "
-                    "rewrite renumbers groups)"
-                )
-            new_pat = f"\\A(?s)(.*?)({ci}{pat})"
-            new_repl = "$1" + _java_replacement(repl, 2)
-        pl = new_pat.replace("'", "''")
-        rl = new_repl.replace("'", "''")
-        floor = tokens[at].start
-        return floor, tokens[close].end, f"regexp_replace({s_expr}, '{pl}', '{rl}')"
-
-    return find
+        new_pat = f"\\A(?s)(.*?)({ci}{pat})"
+        new_repl = "$1" + _java_replacement(repl, 2)
+    pl = new_pat.replace("'", "''")
+    rl = new_repl.replace("'", "''")
+    return tokens[at].start, tokens[close].end, f"regexp_replace({s_expr}, '{pl}', '{rl}')"
 
 
 def translate_distinct_on(sql: str) -> str:
@@ -3495,42 +3501,33 @@ def translate_to_char(sql: str) -> str:
     alnum check in the pattern converter. Single-argument
     ``to_timestamp(double)`` (epoch seconds) passes through: it is
     the same function in Spark."""
-    return _rewrite(sql, [_to_char_finder()])[0]
+    return _rewrite(sql, [_after_last_edit(_find_to_char)])[0]
 
 
-def _to_char_finder():
-    # to_char rewrites to date_format (vanishes from the scan);
-    # to_date / to_timestamp keep their names, so sites at or before
-    # the last such rewrite are our own emissions
-    floor = -1
-
-    def find(sql, tokens):
-        nonlocal floor
-        for at in _calls(tokens, ("to_char", "to_date", "to_timestamp")):
-            fn = tokens[at].upper
-            close, args = _close(tokens, at + 1)
-            # one-argument to_timestamp(epoch) is Spark-native; only
-            # two-argument template forms translate
-            if fn == "TO_TIMESTAMP" and len(args) < 2:
-                continue
-            if fn != "TO_CHAR" and tokens[at].start <= floor:
-                continue
-            if close is None or len(args) != 2:
-                raise ValueError(f"{fn.lower()} takes exactly (expr, 'template')")
-            s0, e0 = args[1]
-            if s0 != e0 or tokens[s0].kind != "STRING":
-                raise ValueError(
-                    f"{fn.lower()} requires a string-literal template "
-                    "(dynamic templates are not translatable)"
-                )
-            java = _to_char_java_format(tokens[s0].value).replace("'", "''")
-            expr = sql[tokens[at + 2].start : tokens[s0 - 2].end]
-            if fn != "TO_CHAR":
-                floor = tokens[at].start
-            return tokens[at].start, tokens[close].end, f"{_TEMPLATE_FNS[fn]}({expr}, '{java}')"
-        return None
-
-    return find
+def _find_to_char(sql, tokens, last):
+    # to_date / to_timestamp rewrites keep their names: sites at or
+    # before the last rewrite are our own emissions
+    for at in _calls(tokens, ("to_char", "to_date", "to_timestamp")):
+        fn = tokens[at].upper
+        close, args = _close(tokens, at + 1)
+        # one-argument to_timestamp(epoch) is Spark-native; only
+        # two-argument template forms translate
+        if fn == "TO_TIMESTAMP" and len(args) < 2:
+            continue
+        if tokens[at].start <= last:
+            continue
+        if close is None or len(args) != 2:
+            raise ValueError(f"{fn.lower()} takes exactly (expr, 'template')")
+        s0, e0 = args[1]
+        if s0 != e0 or tokens[s0].kind != "STRING":
+            raise ValueError(
+                f"{fn.lower()} requires a string-literal template "
+                "(dynamic templates are not translatable)"
+            )
+        java = _to_char_java_format(tokens[s0].value).replace("'", "''")
+        expr = sql[tokens[at + 2].start : tokens[s0 - 2].end]
+        return tokens[at].start, tokens[close].end, f"{_TEMPLATE_FNS[fn]}({expr}, '{java}')"
+    return None
 
 
 _JSON_OPS = {"->>": True, "->": False, "#>>": True, "#>": False}  # → text?
@@ -4095,71 +4092,64 @@ def translate_substr_positional(sql: str) -> str:
     negative length yields '' (documented, PG errors at runtime).
     Runs AFTER translate_substring_regex, so string-literal patterns
     (the regex form) are already consumed."""
-    return _rewrite(sql, [_substr_positional_finder()])[0]
+    return _rewrite(sql, [_after_last_edit(_find_substr_positional)])[0]
 
 
-def _substr_positional_finder():
+def _find_substr_positional(sql, tokens, last):
     # rewritten calls keep the substring name: sites at or before the
     # last rewrite are our own emissions
-    floor = -1
-
-    def find(sql, tokens):
-        nonlocal floor
-        for i in _calls(tokens, ("substr", "substring")):
-            if tokens[i].start <= floor:
-                continue
-            # separators: ',' or the FROM/FOR keywords
-            close, parts = _close(tokens, i + 1, seps=("FROM", "FOR"))
-            if close is None or len(parts) not in (2, 3):
-                continue
-            seps = [e + 1 for _, e in parts[:-1]]
-            if tokens[seps[0] + 1].kind == "STRING" and len(seps) == 1:
-                continue  # regex form (already translated upstream)
-            if tokens[seps[0] + 1].kind == "STRING" and len(seps) == 2:
-                # SQL-standard SIMILAR-TO-escape form: substring(s FROM
-                # 'pat' FOR 'esc') / substring(s, 'pat', 'esc'). Treating
-                # it as positional would CAST('pat' AS INT) → silent
-                # NULLs; SIMILAR TO patterns need their own translation,
-                # so reject loudly (ADVICE r7).
-                raise ValueError(
-                    "substring(s FROM pattern FOR escape) — the SIMILAR "
-                    "TO escape form — is outside the translatable subset"
-                )
-            s_text = sql[tokens[i + 2].start : tokens[seps[0] - 1].end]
-            if len(seps) == 2:
-                start_text = sql[tokens[seps[0] + 1].start : tokens[seps[1] - 1].end]
-                len_text = sql[tokens[seps[1] + 1].start : tokens[close - 1].end]
-            else:
-                start_text = sql[tokens[seps[0] + 1].start : tokens[close - 1].end]
-                len_text = None
-            if len_text is not None and len_text.strip().lstrip("-") .isdigit() and len_text.strip().startswith("-"):
-                raise ValueError(
-                    "substring: negative substring length not allowed (PG)"
-                )
-            if _is_safe_start_literal(start_text) and (
-                len_text is None or _is_safe_len_literal(len_text)
-            ):
-                continue  # engines agree; leave untouched
-            clamped = f"CASE WHEN ({start_text}) < 1 THEN 1 ELSE ({start_text}) END"
-            if len_text is None:
-                repl = f"substring({s_text}, {clamped})"
-            else:
-                # a runtime-negative LENGTH raises like PG (round-8; was a
-                # documented ''-divergence) — eff < 0 from start-clamping
-                # alone stays '' (PG: positions off the string's left edge)
-                eff = f"({start_text}) + ({len_text}) - {clamped}"
-                repl = (
-                    f"substring({s_text}, {clamped}, "
-                    f"CASE WHEN ({len_text}) < 0 THEN CASE WHEN assert_true("
-                    f"false, 'negative substring length not allowed') IS NULL "
-                    f"THEN 0 END "
-                    f"WHEN ({eff}) < 0 THEN 0 ELSE ({eff}) END)"
-                )
-            floor = tokens[i].start
-            return floor, tokens[close].end, repl
-        return None
-
-    return find
+    for i in _calls(tokens, ("substr", "substring")):
+        if tokens[i].start <= last:
+            continue
+        # separators: ',' or the FROM/FOR keywords
+        close, parts = _close(tokens, i + 1, seps=("FROM", "FOR"))
+        if close is None or len(parts) not in (2, 3):
+            continue
+        seps = [e + 1 for _, e in parts[:-1]]
+        if tokens[seps[0] + 1].kind == "STRING" and len(seps) == 1:
+            continue  # regex form (already translated upstream)
+        if tokens[seps[0] + 1].kind == "STRING" and len(seps) == 2:
+            # SQL-standard SIMILAR-TO-escape form: substring(s FROM
+            # 'pat' FOR 'esc') / substring(s, 'pat', 'esc'). Treating
+            # it as positional would CAST('pat' AS INT) → silent
+            # NULLs; SIMILAR TO patterns need their own translation,
+            # so reject loudly (ADVICE r7).
+            raise ValueError(
+                "substring(s FROM pattern FOR escape) — the SIMILAR "
+                "TO escape form — is outside the translatable subset"
+            )
+        s_text = sql[tokens[i + 2].start : tokens[seps[0] - 1].end]
+        if len(seps) == 2:
+            start_text = sql[tokens[seps[0] + 1].start : tokens[seps[1] - 1].end]
+            len_text = sql[tokens[seps[1] + 1].start : tokens[close - 1].end]
+        else:
+            start_text = sql[tokens[seps[0] + 1].start : tokens[close - 1].end]
+            len_text = None
+        if len_text is not None and len_text.strip().lstrip("-") .isdigit() and len_text.strip().startswith("-"):
+            raise ValueError(
+                "substring: negative substring length not allowed (PG)"
+            )
+        if _is_safe_start_literal(start_text) and (
+            len_text is None or _is_safe_len_literal(len_text)
+        ):
+            continue  # engines agree; leave untouched
+        clamped = f"CASE WHEN ({start_text}) < 1 THEN 1 ELSE ({start_text}) END"
+        if len_text is None:
+            repl = f"substring({s_text}, {clamped})"
+        else:
+            # a runtime-negative LENGTH raises like PG (round-8; was a
+            # documented ''-divergence) — eff < 0 from start-clamping
+            # alone stays '' (PG: positions off the string's left edge)
+            eff = f"({start_text}) + ({len_text}) - {clamped}"
+            repl = (
+                f"substring({s_text}, {clamped}, "
+                f"CASE WHEN ({len_text}) < 0 THEN CASE WHEN assert_true("
+                f"false, 'negative substring length not allowed') IS NULL "
+                f"THEN 0 END "
+                f"WHEN ({eff}) < 0 THEN 0 ELSE ({eff}) END)"
+            )
+        return tokens[i].start, tokens[close].end, repl
+    return None
 
 
 def translate_left_right(sql: str) -> str:
@@ -5746,21 +5736,9 @@ def _right_primary(tokens, k):
     rend = _primary_end(tokens, k)
     if rend is None:
         return None
-    rend = _absorb_cast_right(tokens, rend)
     # FILTER/OVER suffixes: absorb `FILTER (…)` and `OVER (… | name)`
-    while rend + 2 < len(tokens) and tokens[rend + 1].kind == "IDENT":
-        kw = tokens[rend + 1].upper
-        nxt = tokens[rend + 2]
-        if kw in ("FILTER", "OVER") and nxt.kind == "PUNCT" and nxt.value == "(":
-            close = _primary_end(tokens, rend + 2)
-            if close is None:
-                break
-            rend = _absorb_cast_right(tokens, close)
-        elif kw == "OVER" and nxt.kind in ("IDENT", "QIDENT"):
-            rend = rend + 2  # named window
-        else:
-            break
-    return rend
+    rend = _suffix_end(tokens, _absorb_cast_right(tokens, rend))
+    return _absorb_cast_right(tokens, rend)
 
 
 _MULT_CHAIN_OPS = ("*", "/", "%")
@@ -5994,43 +5972,37 @@ def translate_concat_nullskip(sql: str) -> str:
     concat_ws emissions are skipped by position. The
     ``||`` operator NULL-poisons in BOTH engines and is not
     affected."""
-    return _rewrite(sql, [_concat_nullskip_finder()])[0]
+    return _rewrite(sql, [_after_last_edit(_find_concat_nullskip)])[0]
 
 
-def _concat_nullskip_finder():
-    floor = -1  # our concat_ws emission sits at the last rewrite's start
-
-    def find(sql, tokens):
-        nonlocal floor
-        at = next(
-            (i for i in _calls(tokens, ("concat", "concat_ws")) if tokens[i].start > floor),
-            None,
-        )
-        if at is None:
-            return None
-        fname = tokens[at].value.lower()
-        close, args = _close(tokens, at + 1)
-        if close is None:
-            raise ValueError(f"unbalanced {fname}(...)")
-        texts = _arg_texts(sql, tokens, args)
-        if fname == "concat_ws":
-            if len(texts) < 2:
-                raise ValueError(
-                    "concat_ws takes a separator and at least one value"
-                )
-            wrapped = ", ".join(
-                f"CAST(({t}) AS STRING)" for t in texts[1:]
+def _find_concat_nullskip(sql, tokens, last):
+    # our concat_ws emission sits at the last rewrite's start
+    at = next(
+        (i for i in _calls(tokens, ("concat", "concat_ws")) if tokens[i].start > last),
+        None,
+    )
+    if at is None:
+        return None
+    fname = tokens[at].value.lower()
+    close, args = _close(tokens, at + 1)
+    if close is None:
+        raise ValueError(f"unbalanced {fname}(...)")
+    texts = _arg_texts(sql, tokens, args)
+    if fname == "concat_ws":
+        if len(texts) < 2:
+            raise ValueError(
+                "concat_ws takes a separator and at least one value"
             )
-            repl = f"concat_ws(({texts[0]}), {wrapped})"
-        else:
-            if not texts:
-                raise ValueError("concat takes at least one argument")
-            wrapped = ", ".join(f"CAST(({t}) AS STRING)" for t in texts)
-            repl = f"concat_ws('', {wrapped})"
-        floor = tokens[at].start
-        return floor, tokens[close].end, repl
-
-    return find
+        wrapped = ", ".join(
+            f"CAST(({t}) AS STRING)" for t in texts[1:]
+        )
+        repl = f"concat_ws(({texts[0]}), {wrapped})"
+    else:
+        if not texts:
+            raise ValueError("concat takes at least one argument")
+        wrapped = ", ".join(f"CAST(({t}) AS STRING)" for t in texts)
+        repl = f"concat_ws('', {wrapped})"
+    return tokens[at].start, tokens[close].end, repl
 
 
 _FTS_FUNCTIONS = frozenset(
@@ -6127,7 +6099,7 @@ def _pipeline(column_types):
         _reject_fulltext_search,  # named error, not Spark's opaque one
         _reject_unsupported_frames,
         *_typed_finders(column_types),  # schema-aware, PG-typed
-        _concat_nullskip_finder(),  # before passes that EMIT concat(
+        _after_last_edit(_find_concat_nullskip),  # before passes that EMIT concat(
         _find_json_op,  # first: later passes emit -> lambdas
         _find_json_exists,  # before array_literal: eats ARRAY[..]
         _find_json_contains,
@@ -6137,7 +6109,7 @@ def _pipeline(column_types):
         _find_row_comparison,  # after OVERLAPS eats its pairs
         _find_null_counter,
         _find_distinct_on,
-        _to_char_finder(),
+        _after_last_edit(_find_to_char),
         _find_json_agg,  # → array_agg, handled next
         _find_agg_order_by,
         _find_array_literal,
@@ -6156,10 +6128,10 @@ def _pipeline(column_types):
         _find_regex_op,
         _find_similar_to,
         *_PG_FUNCTION_FINDERS,
-        _math_domain_finder(),  # after log→log10 and ^→power
-        _regexp_replace_finder(),
+        _after_last_edit(_find_math_domain),  # after log→log10 and ^→power
+        _after_last_edit(_find_regexp_replace),
         _find_substring_regex,
-        _substr_positional_finder(),  # after regex form is consumed
+        _after_last_edit(_find_substr_positional),  # after regex form is consumed
         _find_left_right,
         _find_fetch_first,
         _find_order_nulls,
