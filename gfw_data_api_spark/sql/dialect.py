@@ -4049,9 +4049,8 @@ def _find_substring_regex(sql, tokens):
             break
     else:
         return None
-    sep = s1 - 1
-    expr = sql[tokens[i + 2].start : tokens[sep - 1].end]
-    pat = _translate_posix_classes(tokens[sep + 1].value)
+    expr = sql[tokens[i + 2].start : tokens[s1 - 2].end]
+    pat = _translate_posix_classes(tokens[s1].value)
     idx = 1 if _has_capture_group(pat) else 0
     lit = pat.replace("'", "''")
     repl = (
