@@ -91,7 +91,7 @@ def main() -> int:
     if virgin:
         from pyspark.sql import SparkSession
 
-        # the driver's local[N] and partition count, N = SPARK_GRAFT_CPUS
+        # local[N] with N shuffle partitions, N = SPARK_GRAFT_CPUS
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         spark = (
             SparkSession.builder.master(f"local[{cpus}]")
