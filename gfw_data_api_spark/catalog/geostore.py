@@ -39,38 +39,6 @@ def _hash_id(geojson: str) -> str:
 ExternalResolver = Callable[[str], dict[str, Any] | None]
 
 
-def make_rw_resolver(base_url: str, timeout_s: float = 10.0) -> ExternalResolver:
-    """HTTP resolver against a ResourceWatch-style geostore service
-    (reference app/utils/rw_api.py:get_geostore). Real dispatch, stdlib
-    transport; inject a fake callable in tests."""
-
-    def resolve(geostore_id: str) -> dict[str, Any] | None:
-        import urllib.error
-        import urllib.request
-
-        url = f"{base_url.rstrip('/')}/v2/geostore/{geostore_id}"
-        try:
-            with urllib.request.urlopen(url, timeout=timeout_s) as resp:
-                payload = json.load(resp)
-        except urllib.error.HTTPError as exc:
-            if exc.code == 404:
-                return None
-            raise
-        attrs = payload["data"]["attributes"]
-        geojson = json.dumps(
-            attrs["geojson"]["features"][0]["geometry"],
-            separators=(", ", ": "),
-        )
-        return {
-            "gfw_geostore_id": geostore_id,
-            "gfw_geojson": geojson,
-            "gfw_area__ha": attrs.get("areaHa", 0.0),
-            "gfw_bbox": attrs.get("bbox"),
-        }
-
-    return resolve
-
-
 class Geostore:
     def __init__(
         self,

@@ -248,19 +248,6 @@ st_xmax = _bbox_component(2)
 st_ymax = _bbox_component(3)
 
 
-def mercator_x(lon: Column) -> Column:
-    """Web-mercator x as a native column expression (no UDF)."""
-    return F.radians(lon) * F.lit(geo.WEB_MERCATOR_R)
-
-
-def mercator_y(lat: Column) -> Column:
-    import math
-
-    return F.log(F.tan(F.lit(math.pi / 4.0) + F.radians(lat) / F.lit(2.0))) * F.lit(
-        geo.WEB_MERCATOR_R
-    )
-
-
 def bbox_overlap_predicate(bbox_col: Column, query_bbox: tuple) -> Column:
     """JVM-side prefilter: does the row's [xmin,ymin,xmax,ymax] array
     overlap the query bbox? Runs in whole-stage codegen and lets Catalyst

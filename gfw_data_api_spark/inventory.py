@@ -2237,7 +2237,7 @@ _SPECS.append(
 )
 
 
-def _t07(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _t08(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gfw_data_api_spark.llmops.sampling import hash_split
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2247,7 +2247,7 @@ def _t07(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPECS.append(
     QuerySpec(
         name="t08_hash_split",
-        spark_fn=_t07,
+        spark_fn=_t08,
         oracle=(
             # the md5-bucket split is engine-portable by design: DuckDB
             # derives the identical per-document assignment
@@ -2261,7 +2261,7 @@ _SPECS.append(
 )
 
 
-def _t08(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _t09(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gfw_data_api_spark.llmops.sampling import stratified_sample
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2273,7 +2273,7 @@ def _t08(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPECS.append(
     QuerySpec(
         name="t09_stratified_sample",
-        spark_fn=_t08,
+        spark_fn=_t09,
         oracle=(
             "SELECT doc_id, lang FROM documents WHERE "
             "('0x' || substr(md5(CAST(doc_id AS VARCHAR) || chr(31) || lang || chr(31) || '7'), 1, 15))::BIGINT "
