@@ -8,6 +8,8 @@ precision × 50) in an azimuthal-equidistant frame, then selects the
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from gfw_data_api_spark.catalog.registry import Registry, RegistryError
@@ -87,10 +89,9 @@ def admin_lookup(
     out = df.filter(F.col("adm_level") == F.lit(str(level)))
     if gid_pattern is not None:
         # revision-agnostic: 'BRA.12\__' matches any revision suffix with
-        # the literal underscore escaped (crud/geostore.py:330-367).
-        # Column.like() takes no escape parameter — use the SQL form.
-        escaped = gid_pattern.replace("'", "''")
-        out = out.filter(F.expr(f"gid_{level} LIKE '{escaped}' ESCAPE '\\\\'"))
+        # the literal underscore escaped (crud/geostore.py:330-367);
+        # Column.like's escape character is already the backslash.
+        out = out.filter(F.col(f"gid_{level}").like(gid_pattern))
     if name is not None:
         column = name_column or (f"name_{level}_normalized" if level else "country_normalized")
         out = out.filter(F.col(column) == F.lit(name.lower()))
@@ -147,20 +148,18 @@ def admin_geostore(
     if adm_level == 0:
         df = df.filter(F.col("gid_0") == country_id)
     else:
-        pattern = country_id
         if region_id is None:
             raise RegistryError("region_id required for adm_level >= 1.", 400)
-        pattern = f"{pattern}.{region_id}"
+        ids = [country_id, region_id]
         if adm_level >= 2:
             if subregion_id is None:
                 raise RegistryError(
                     "subregion_id required for adm_level >= 2.", 400
                 )
-            pattern = f"{pattern}.{subregion_id}"
-        pattern = pattern.replace("'", "''") + r"\__"
-        df = df.filter(
-            F.expr(f"gid_{adm_level} LIKE '{pattern}' ESCAPE '\\\\'")
-        )
+            ids.append(subregion_id)
+        # path segments are data: escape LIKE's \, % and _ in them
+        pattern = ".".join(re.sub(r"([\\%_])", r"\\\1", i) for i in ids)
+        df = df.filter(F.col(f"gid_{adm_level}").like(pattern + r"\__"))
     name_col = "country" if adm_level == 0 else f"name_{adm_level}"
     rows = (
         df.select(

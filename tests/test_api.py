@@ -805,6 +805,13 @@ def test_admin_geostore_levels(gadm_app):
     assert bad_src["status"] == 400
 
 
+def test_admin_geostore_region_id_stays_data(gadm_app):
+    """A region id that would close a SQL string literal is matched
+    literally: it finds no region instead of every level-1 one."""
+    out = call(gadm_app, "GET", "/geostore/admin/ZZZ/1\\' OR true --")
+    assert out["status"] == 404
+
+
 def test_admin_geostore_simplify(gadm_app):
     out = call(gadm_app, "GET", "/geostore/admin/BRA", query="simplify=0.001")
     assert out["status"] == 200
