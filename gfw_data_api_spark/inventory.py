@@ -8215,13 +8215,13 @@ _SPECS.append(
         name="q46_backslash_literals",
         spark_fn=_guarded(
             "documents",
-            # PG semantics under test (round-7 LITERAL CONTRACT): PG
-            # string literals are VERBATIM — '\s' keeps its backslash
-            # into the regex engine, '\n' is backslash-n (2 chars),
-            # and regexp character classes \d/\w work from plain
-            # literals. Spark's default parser would eat every one of
-            # these silently; the guarded path parses with
-            # escapedStringLiterals=true.
+            # PG semantics under test (the dialect's LITERAL CONTRACT):
+            # PG string literals are VERBATIM — '\s' keeps its
+            # backslash into the regex engine, '\n' is backslash-n
+            # (2 chars), and regexp character classes \d/\w work from
+            # plain literals. Spark's default parser would eat every
+            # one of these silently; the translation writes each
+            # literal in Spark's spelling (backslashes doubled).
             "SELECT doc_id, "
             "(text ~ '\\d') AS has_digit, "
             "regexp_replace(text, '\\s+', '_', 'g') AS squashed, "
@@ -8242,9 +8242,9 @@ _SPECS.append(
             "FROM documents"
         ),
         survey_ref="Q11 dialect breadth: PG-verbatim string literals "
-        "(standard_conforming_strings) — guarded SQL parses under "
-        "spark.sql.parser.escapedStringLiterals=true so backslashes in "
-        "regex patterns and plain literals survive "
+        "(standard_conforming_strings) — the translation respells each "
+        "literal for Spark's default parser so backslashes in regex "
+        "patterns and plain literals survive "
         "(sql/dialect.py LITERAL CONTRACT, operators/query.py)",
     )
 )

@@ -22,7 +22,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from gfw_data_api_spark.sql.dialect import (
-    pg_literal_parsing,
+    require_ansi,
     schema_type_categories,
     to_spark_sql,
 )
@@ -97,13 +97,10 @@ def execute_on_dataframe(
         # typing rewrites (int/int div, date - date, typed int casts) —
         # the same type knowledge the reference's Postgres evaluator has
         spark_sql = to_spark_sql(bound, column_types=schema_type_categories(df.schema))
-        # PG string literals are verbatim (standard_conforming_strings);
-        # parse under the dialect's literal contract so '\s+' keeps its
-        # backslash (dialect.py LITERAL CONTRACT)
-        with pg_literal_parsing(spark):
-            result = spark.sql(spark_sql)
-            # force analysis while the view exists; execution stays lazy
-            result.schema
+        require_ansi(spark)
+        result = spark.sql(spark_sql)
+        # force analysis while the view exists; execution stays lazy
+        result.schema
         return result
     finally:
         spark.catalog.dropTempView(view)

@@ -38,7 +38,7 @@ from gfw_data_api_spark.raster.data_environment import build_data_environment
 from gfw_data_api_spark.raster.grid import Grid
 from gfw_data_api_spark.raster.layers import default_layer_name
 from gfw_data_api_spark.raster.zonal import _referenced_layers, _rewrite_deprecated, assemble_pixels
-from gfw_data_api_spark.sql.dialect import pg_literal_parsing, to_spark_sql
+from gfw_data_api_spark.sql.dialect import require_ansi, to_spark_sql
 from gfw_data_api_spark.sql.guard import bind_from, validate_sql
 
 MAX_BATCH_FEATURES = 100  # parity with the reference's fan-out cap
@@ -162,10 +162,9 @@ def batch_query(
                 bound = bound[:pos] + "GROUP BY feature_id " + bound[pos:]
             else:
                 bound += " GROUP BY feature_id"
-        # parse under the dialect's literal contract (dialect.py)
-        with pg_literal_parsing(spark):
-            result = spark.sql(bound)
-            result.schema
+        require_ansi(spark)
+        result = spark.sql(bound)
+        result.schema  # analyze while the view exists
         return result, failed
     finally:
         spark.catalog.dropTempView(view)

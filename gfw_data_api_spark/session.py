@@ -51,7 +51,7 @@ def get_spark(
         # PG error parity (x/0, int overflow, invalid ::int casts RAISE
         # like Postgres) must not ride on Spark's version default —
         # pinned here and re-checked at every guarded execution
-        # (dialect.pg_literal_parsing). The dialect opts back into
+        # (dialect.require_ansi). The dialect opts back into
         # NULL-semantics deliberately per-site via try_cast/try_*.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -26,30 +26,28 @@ matched tells its own emissions apart by position
 :func:`_pipeline`; each public ``translate_*`` is the driver run over
 that pass's finders.
 
-LITERAL CONTRACT (round 7): PG string literals are VERBATIM
+LITERAL CONTRACT: PG string literals are VERBATIM
 (standard_conforming_strings, the default since PG 9.1) — ``'\\s+'``
-keeps its backslash — while Spark's default parser processes
-backslash escapes, silently turning ``'\\s+'`` into ``'s+'``. The
-translated SQL must therefore be parsed with
-``spark.sql.parser.escapedStringLiterals=true`` (use
-:func:`pg_literal_parsing` / :func:`run_pg_sql`); translation passes
-emit literals UNDOUBLED accordingly.
+keeps its backslash — while Spark's default parser processes backslash
+escapes, silently turning ``'\\s+'`` into ``'s+'``. Translation passes
+therefore read and emit literal VALUES in PG's verbatim spelling, and
+the last step of :func:`to_spark_sql` writes every string literal once
+in Spark's default spelling (each backslash doubled, each quote
+doubled), so the translated SQL runs with plain ``spark.sql`` and no
+session-wide parser setting.
 """
 
 from __future__ import annotations
 
 import functools
 import re
-import threading
-from contextlib import contextmanager
 
 from gfw_data_api_spark.sql.tokenizer import tokenize
 
-_ESCAPED_LITERALS_CONF = "spark.sql.parser.escapedStringLiterals"
 _ANSI_CONF = "spark.sql.ansi.enabled"
 
 
-def _require_ansi(spark) -> None:
+def require_ansi(spark) -> None:
     """PG error parity (division by zero, overflow, invalid casts all
     RAISE in Postgres) rests on Spark's ANSI mode. Spark 4 defaults it
     on, but a session that turned it off would silently convert PG
@@ -67,56 +65,13 @@ def _require_ansi(spark) -> None:
             f"session has {_ANSI_CONF}={val!r}"
         )
 
-# Refcount for concurrent pg_literal_parsing windows on one session
-# (ADVICE r7): the conf is session-global, so with overlapping guarded
-# requests a plain save/restore lets request A's restore land INSIDE
-# request B's parse window, silently re-enabling backslash processing —
-# the exact corruption the LITERAL CONTRACT exists to prevent. The conf
-# is flipped when the FIRST window opens and restored when the LAST one
-# closes. Keyed by id(session); safe from id-reuse staleness because an
-# entry only exists while a live context manager holds the session.
-_literal_conf_lock = threading.Lock()
-_literal_conf_state: dict[int, list] = {}  # id(spark) -> [refcount, old]
-
-
-@contextmanager
-def pg_literal_parsing(spark):
-    """Parse SQL with PG's verbatim string-literal rules (see the
-    module docstring's LITERAL CONTRACT). Session-scoped conf, saved
-    and restored refcounted — concurrent windows on the same session
-    nest instead of racing; only PARSE time matters, so the window is
-    the ``spark.sql(...)`` call plus schema analysis."""
-    key = id(spark)
-    _require_ansi(spark)
-    with _literal_conf_lock:
-        state = _literal_conf_state.get(key)
-        if state is None:
-            try:
-                old = spark.conf.get(_ESCAPED_LITERALS_CONF)
-            except Exception:  # pragma: no cover - conf readable in 3.x+
-                old = "false"
-            spark.conf.set(_ESCAPED_LITERALS_CONF, "true")
-            _literal_conf_state[key] = [1, old]
-        else:
-            state[0] += 1
-    try:
-        yield
-    finally:
-        with _literal_conf_lock:
-            state = _literal_conf_state[key]
-            state[0] -= 1
-            if state[0] == 0:
-                del _literal_conf_state[key]
-                spark.conf.set(_ESCAPED_LITERALS_CONF, state[1])
-
 
 def run_pg_sql(spark, sql: str):
-    """Translate a guarded PG statement and run it under the literal
-    contract — the one-stop execution helper for translated SQL."""
-    with pg_literal_parsing(spark):
-        df = spark.sql(to_spark_sql(sql))
-        df.schema  # force parse+analysis inside the conf window
-    return df
+    """Translate a guarded PG statement and run it — the one-stop
+    execution helper for translated SQL."""
+    require_ansi(spark)
+    return spark.sql(to_spark_sql(sql))
+
 
 PG_TO_SPARK_TYPES: dict[str, str] = {
     "text": "STRING",
@@ -2853,8 +2808,8 @@ def _find_gcd_lcm_quote_bin(sql, tokens):
         # PG also doubles backslashes and emits the E'...' form
         # when the input contains any backslash:
         # quote_literal('a\b') = E'a\\b'. The emitted '\' /'\\'
-        # literals are LITERAL backslashes (escapedStringLiterals
-        # is pinned on for translated SQL).
+        # literals are verbatim backslashes, like every literal
+        # here (LITERAL CONTRACT).
         s = f"CAST(({x}) AS STRING)"
         q = f"replace({s}, '''', '''''')"
         qb = f"replace(replace({s}, '\\', '\\\\'), '''', '''''')"
@@ -4561,43 +4516,6 @@ def _find_order_nulls(sql, tokens):
     return lo, hi, "".join(out)
 
 
-def fix_unlexable_literals(sql: str) -> str:
-    """Final pass (LITERAL CONTRACT corollary). Under
-    ``escapedStringLiterals=true`` Spark's lexer neither collapses
-    PG's ``''`` quote doubling (probed: ``'a''b'`` yields ``a''b``)
-    nor accepts a backslash directly before the closing quote
-    (``'\\'`` is a parse error) — so any literal whose VALUE contains
-    a single quote, or whose backslashes touch a quote boundary,
-    cannot be written as a plain Spark literal at all. Re-emit those
-    as ``concat('piece', chr(39)/chr(92), ...)`` — constant-folded by
-    Catalyst, so free at run time. Everything else passes through
-    byte-identical. This runs on the FINAL translated text, so it
-    also normalizes the ``''``-doubled literals earlier passes emit."""
-    return _rewrite(sql, [_find_unlexable_literal])[0]
-
-
-def _find_unlexable_literal(sql, tokens):
-    hit = None
-    for t in tokens:
-        if t.kind == "STRING" and (
-            "'" in t.value or "\\'" in t.value or t.value.endswith("\\")
-        ):
-            hit = t
-            break
-    if hit is None:
-        return None
-    parts = []
-    for piece in re.split(r"(['\\])", hit.value):
-        if piece == "'":
-            parts.append("chr(39)")
-        elif piece == "\\":
-            parts.append("chr(92)")
-        elif piece:
-            parts.append("'" + piece + "'")
-    repl = "concat(" + ", ".join(parts) + ")" if parts else "''"
-    return hit.start, hit.end, repl
-
-
 # ---------------------------------------------------------------------------
 # round-8 set-returning functions (VERDICT r7 #4): the reference passes
 # SRFs through to Postgres (only pg_*-prefixed names are blocked,
@@ -6134,11 +6052,27 @@ def _pipeline(column_types):
         _find_left_right,
         _find_fetch_first,
         _find_order_nulls,
-        _find_unlexable_literal,  # last: covers emitted literals too
     ]
 
 
 def to_spark_sql(sql: str, column_types: dict[str, str] | None = None) -> str:
     """All PG→Spark surface translations: the pipeline's finders over
-    one token stream."""
-    return _rewrite(sql, _pipeline(column_types))[0]
+    one token stream, then every string literal written in Spark's
+    default spelling (LITERAL CONTRACT)."""
+    sql, tokens = _rewrite(sql, _pipeline(column_types))
+    return _spark_literals(sql, tokens)
+
+
+def _spark_literals(sql, tokens):
+    """Respell each STRING token's verbatim value for Spark's default
+    parser: ``\\`` → ``\\\\`` and ``'`` → ``''``. A single pass, not a
+    finder: its output would match again. Literals with neither
+    character stay byte-identical."""
+    out, pos = [], 0
+    for t in tokens:
+        if t.kind == "STRING" and ("'" in t.value or "\\" in t.value):
+            value = t.value.replace("\\", "\\\\").replace("'", "''")
+            out += [sql[pos : t.start], f"'{value}'"]
+            pos = t.end
+    out.append(sql[pos:])
+    return "".join(out)

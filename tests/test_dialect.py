@@ -1499,53 +1499,46 @@ class TestRound7AdviceRegressions:
         with pytest.raises(ValueError, match="SIMILAR"):
             to_spark_sql("SELECT substring(s, 'a#%', '#') FROM t")
 
-    def test_literal_conf_refcount_nesting(self, spark):
-        from gfw_data_api_spark.sql.dialect import (
-            _ESCAPED_LITERALS_CONF,
-            pg_literal_parsing,
-        )
-
-        old = spark.conf.get(_ESCAPED_LITERALS_CONF)
-        with pg_literal_parsing(spark):
-            assert spark.conf.get(_ESCAPED_LITERALS_CONF) == "true"
-            with pg_literal_parsing(spark):
-                assert spark.conf.get(_ESCAPED_LITERALS_CONF) == "true"
-            # inner exit must NOT restore while the outer window is open
-            assert spark.conf.get(_ESCAPED_LITERALS_CONF) == "true"
-        assert spark.conf.get(_ESCAPED_LITERALS_CONF) == old
-
-    def test_literal_conf_concurrent_windows(self, spark):
-        """Overlapping windows from two threads: the conf must stay
-        'true' until the LAST window closes (the r7 race restored it
-        mid-parse)."""
+    def test_guarded_parse_leaves_other_threads_parser_alone(
+        self, spark, monkeypatch
+    ):
+        """While a guarded query is inside ``spark.sql`` on one thread,
+        SQL text parsed on another thread keeps Spark's default literal
+        rules, where a doubled backslash is one character."""
         import threading as th
 
-        from gfw_data_api_spark.sql.dialect import (
-            _ESCAPED_LITERALS_CONF,
-            pg_literal_parsing,
-        )
+        from pyspark.sql import functions as F
 
-        old = spark.conf.get(_ESCAPED_LITERALS_CONF)
-        a_open = th.Event()
-        b_done = th.Event()
-        seen = {}
+        from gfw_data_api_spark.operators.query import execute_on_dataframe
 
-        def holder():
-            with pg_literal_parsing(spark):
-                a_open.set()
-                b_done.wait(timeout=30)
-                seen["during"] = spark.conf.get(_ESCAPED_LITERALS_CONF)
+        entered, release = th.Event(), th.Event()
+        real_sql = spark.sql
 
-        def flipper():
-            a_open.wait(timeout=30)
-            with pg_literal_parsing(spark):
-                pass  # enter+exit fully inside holder's window
-            b_done.set()
+        def blocking_sql(text, *args, **kwargs):
+            entered.set()
+            release.wait(timeout=30)
+            return real_sql(text, *args, **kwargs)
 
-        t1, t2 = th.Thread(target=holder), th.Thread(target=flipper)
-        t1.start(); t2.start(); t1.join(); t2.join()
-        assert seen["during"] == "true"
-        assert spark.conf.get(_ESCAPED_LITERALS_CONF) == old
+        monkeypatch.setattr(spark, "sql", blocking_sql)
+        out = {}
+
+        def guarded():
+            df = execute_on_dataframe(
+                spark, spark.range(1), r"SELECT length('a\b') AS n FROM data"
+            )
+            out["guarded"] = df.first()[0]
+
+        worker = th.Thread(target=guarded)
+        worker.start()
+        try:
+            assert entered.wait(timeout=30)
+            other = spark.range(1).select(F.expr(r"length('a\\b')")).first()[0]
+        finally:
+            release.set()
+            worker.join(timeout=60)
+        assert not worker.is_alive()
+        assert other == 3
+        assert out["guarded"] == 3  # PG-verbatim 'a\b' is 3 chars too
 
 
 class TestTypedOps:

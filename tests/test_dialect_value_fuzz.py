@@ -29,7 +29,7 @@ from decimal import Decimal
 import duckdb
 import pytest
 
-from gfw_data_api_spark.sql.dialect import pg_literal_parsing, to_spark_sql
+from gfw_data_api_spark.sql.dialect import run_pg_sql, to_spark_sql
 
 N_EXPRS = 1200
 BATCH = 40
@@ -706,10 +706,7 @@ def _run_batch(spark, con, batch):
     duck_sql = "SELECT " + ", ".join(
         f"({dk}) AS c{i}" for i, (_, dk, _, _) in enumerate(batch)
     )
-    with pg_literal_parsing(spark):
-        df = spark.sql(spark_sql)
-        df.schema
-    srow = df.collect()[0]
+    srow = spark.sql(spark_sql).collect()[0]
     drow = con.sql(duck_sql).fetchone()
     bad = []
     for i, (pg, dk, kind, ex) in enumerate(batch):
@@ -920,10 +917,7 @@ def test_typed_value_fuzz(spark):
             + ", ".join(f"({dk}) AS c{i}" for i, (_, dk) in enumerate(batch))
             + " FROM t"
         )
-        with pg_literal_parsing(spark):
-            df = spark.sql(spark_sql)
-            df.schema
-        srows = {r["rid"]: r for r in df.collect()}
+        srows = {r["rid"]: r for r in spark.sql(spark_sql).collect()}
         for drow in con.sql(duck_sql).fetchall():
             srow = srows[drow[0]]
             for i, (pg, dk) in enumerate(batch):
@@ -943,7 +937,7 @@ def test_typed_value_fuzz(spark):
 # ---------------------------------------------------------------------------
 # Round-9 ERROR-PARITY fuzz (VERDICT r8 #3): where PG RAISES, the engine
 # must raise too — never silently yield NULL. Rests on ANSI mode, now
-# pinned in session.py and enforced at pg_literal_parsing. DuckDB twins
+# pinned in session.py and enforced by dialect.require_ansi. DuckDB twins
 # raise for the cast/overflow classes; DuckDB itself DIVERGES from PG on
 # division/modulo by zero (returns NULL — probed), so those atoms pin
 # PG's documented behavior directly (div-by-zero raises, SQLSTATE 22012).
@@ -1040,9 +1034,7 @@ def test_error_parity_fuzz(spark):
         )
         raised = False
         try:
-            with pg_literal_parsing(spark):
-                df = spark.sql(spark_sql)
-                df.collect()
+            spark.sql(spark_sql).collect()
         except Exception:
             raised = True
         if not raised:
@@ -1067,7 +1059,6 @@ def test_ansi_mode_enforced(spark):
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
         with pytest.raises(ValueError, match="ansi"):
-            with pg_literal_parsing(spark):
-                pass
+            run_pg_sql(spark, "SELECT 1 AS c")
     finally:
         spark.conf.set("spark.sql.ansi.enabled", "true")

@@ -216,9 +216,10 @@ def test_from_rewrite_keyword_prefixed_columns():
 
 
 def test_literal_contract_is_injection_safe(spark):
-    """Round 7: fix_unlexable_literals re-emits quote/backslash-bearing
-    literals as concat(chr(39)/chr(92), ...). The pieces must never
-    re-open a string: hostile values that LOOK like SQL stay data."""
+    """Quote- and backslash-bearing literals are respelled for Spark's
+    default parser (quotes and backslashes doubled). The respelling
+    must never re-open a string: hostile values that LOOK like SQL
+    stay data."""
     from gfw_data_api_spark.sql.dialect import run_pg_sql, to_spark_sql
 
     hostile = [
@@ -231,7 +232,5 @@ def test_literal_contract_is_injection_safe(spark):
         lit = payload.replace("'", "''")  # PG spelling of the value
         out = run_pg_sql(spark, f"SELECT '{lit}' AS v").collect()
         assert len(out) == 1 and out[0].v == payload, payload
-    # and the translation output never contains a bare quote inside
-    # a concat piece (each piece is quote-free by construction)
-    t = to_spark_sql("SELECT 'a''b\\' AS v")
-    assert "chr(39)" in t and "chr(92)" in t
+    # the PG value a'b\ is written as Spark's 'a''b\\'
+    assert to_spark_sql("SELECT 'a''b\\' AS v") == "SELECT 'a''b\\\\' AS v"

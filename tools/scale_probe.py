@@ -460,8 +460,8 @@ def main():
             ),
             # VERDICT r7 #7: the q46 LITERAL CONTRACT path end-to-end —
             # guarded PG SQL with backslash literals through run_pg_sql
-            # (escapedStringLiterals parse + fix_unlexable_literals
-            # re-emission + PG regex translation), per-row regex work
+            # (literals respelled for Spark's default parser + PG regex
+            # translation), per-row regex work
             "q46_literal_shape": lambda d: _q46_shape(d),
             # round-8 SRF translation output shapes (q52): explode over
             # split / guarded sequence / array<variant> transform —
