@@ -1525,6 +1525,27 @@ def _find_like_op(sql, tokens):
     return None
 
 
+def _find_like_backslash(sql, tokens):
+    """PG's LIKE escape ``\\`` quotes ANY next character (``'a\\b'``
+    matches ``ab``); Spark accepts it only before ``%``, ``_`` or
+    ``\\`` and rejects the pattern otherwise (ESC_IN_THE_MIDDLE). In a
+    constant LIKE/ILIKE pattern with no ESCAPE clause, drop the
+    backslash before any other character: the same match in both."""
+    for k in range(len(tokens) - 1):
+        op, pat = tokens[k], tokens[k + 1]
+        if not (op.kind == "IDENT" and op.upper in ("LIKE", "ILIKE") and pat.kind == "STRING"):
+            continue
+        if k + 2 < len(tokens) and _is_kw(tokens[k + 2], "ESCAPE"):
+            continue
+        fixed = re.sub(
+            r"\\(.)", lambda m: m.group(0) if m.group(1) in "%_\\" else m.group(1),
+            pat.value, flags=re.S,
+        )
+        if fixed != pat.value:
+            return pat.start, pat.end, "'" + fixed.replace("'", "''") + "'"
+    return None
+
+
 def translate_json_agg(sql: str) -> str:
     """PG ``json_agg(x)`` / ``jsonb_agg(x)`` → ``to_json(array_agg(
     x))`` — rewritten BEFORE translate_agg_order_by so an internal
@@ -6041,6 +6062,7 @@ def _pipeline(column_types):
         _find_caret_power,
         _find_unary_math_op,  # @ / |/ / ||/ prefixes
         _find_like_op,  # before the ~ regex family
+        _find_like_backslash,  # after ~~ became LIKE
         _find_named_regex_fn,
         _find_regex_op,
         _find_similar_to,

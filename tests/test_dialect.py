@@ -156,6 +156,35 @@ class TestSimilarTo:
             translate_similar_to("SELECT * FROM t WHERE f SIMILAR TO g")
 
 
+class TestLikeBackslash:
+    """PG's LIKE takes ``\\`` as the escape for any next character;
+    Spark only before ``%``, ``_`` and ``\\``. Values are PG's."""
+
+    @pytest.mark.parametrize(
+        "sql, want",
+        [
+            (r"SELECT 'ab' LIKE 'a\b' AS m", True),
+            (r"SELECT 'ab' ILIKE 'A\B' AS m", True),
+            (r"SELECT 'a%b' LIKE 'a\%b' AS m", True),
+            (r"SELECT 'a\b' LIKE 'a\\b' AS m", True),
+            (r"SELECT 'axb' LIKE 'a\%b' AS m", False),
+            (r"SELECT 'ab' NOT LIKE 'a\b' AS m", False),
+            (r"SELECT 'ab' ~~ 'a\b' AS m", True),
+        ],
+    )
+    def test_pg_values(self, spark, sql, want):
+        assert run_pg_sql(spark, sql).collect()[0]["m"] is want
+
+    def test_only_the_pattern_changes(self):
+        assert to_spark_sql(r"SELECT * FROM t WHERE f LIKE '\d\%'") == (
+            r"SELECT * FROM t WHERE f LIKE 'd\\%'"
+        )
+        # an explicit ESCAPE clause and a non-pattern literal stay as written
+        assert to_spark_sql(r"SELECT '\d' AS s FROM t WHERE f LIKE 'a!%' ESCAPE '!'") == (
+            r"SELECT '\\d' AS s FROM t WHERE f LIKE 'a!%' ESCAPE '!'"
+        )
+
+
 class TestPgFunctions:
     def test_starts_with(self):
         assert (
