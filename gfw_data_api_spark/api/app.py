@@ -264,7 +264,7 @@ def create_app(
     def asset_stats(asset) -> dict:
         """Version/asset stats: raster → one-pass pixel stats (P7);
         tabular/vector → row + field counts."""
-        df = spark.read.parquet(asset.asset_uri)
+        df = registry.load(spark, asset=asset)
         if asset.asset_type == "raster_tile_set":
             from gfw_data_api_spark.raster.transform import raster_stats
 
@@ -294,7 +294,7 @@ def create_app(
     def tile_store(asset) -> Any:
         df = _tile_store_cache.get(asset.asset_id)
         if df is None:
-            df = spark.read.parquet(asset.asset_uri)
+            df = registry.load(spark, asset=asset)
             while len(_tile_store_cache) >= 8:  # bounded, FIFO eviction
                 _tile_store_cache.pop(next(iter(_tile_store_cache)))
             _tile_store_cache[asset.asset_id] = df
@@ -1901,7 +1901,7 @@ def create_app(
                         match.creation_options["grid"]
                     )
                     pix = _guard_collect(
-                        spark.read.parquet(match.asset_uri)
+                        registry.load(spark, asset=match)
                         .filter(F.col("tile_id") == tile_id)
                         .select("pixel_id", "value"),
                         "tile pixel fetch", "the COG export path",

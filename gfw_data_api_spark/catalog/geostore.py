@@ -136,8 +136,10 @@ class Geostore:
                     continue
                 if asset.asset_type != "geo_database_table":
                     continue
-                df = spark.read.parquet(asset.asset_uri)
-                if all(col in df.columns for col in GEOSTORE_COLUMNS):
+                if asset.fields and not {f["name"] for f in asset.fields}.issuperset(GEOSTORE_COLUMNS):
+                    continue  # the catalog rules the table out: never opened
+                df = self.registry.load(spark, asset=asset)
+                if set(df.columns).issuperset(GEOSTORE_COLUMNS):
                     parts.append(df.select(*GEOSTORE_COLUMNS))
         if not parts:
             return None

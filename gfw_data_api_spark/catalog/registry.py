@@ -25,6 +25,7 @@ from dataclasses import asdict, dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 class RegistryError(Exception):
@@ -61,6 +62,20 @@ def default_asset_type(source_type: str, has_lat_lng: bool = False) -> str:
     if source_type == "raster":
         return "raster_tile_set"
     raise RegistryError(f"unknown source type: {source_type}")
+
+
+def schema_from_fields(fields: list[dict], names: list[str] | None = None) -> T.StructType:
+    """The Spark schema an asset's ``fields`` record, in field order, or
+    in the order of ``names`` when given (each must be a recorded field).
+
+    One DDL parse for the whole struct; every name is backtick-quoted so
+    any column name survives. Every field is nullable, as Spark reads
+    parquet.
+    """
+    types = {f["name"]: f["data_type"] for f in fields}
+    order = [f["name"] for f in fields] if names is None else names
+    ddl = ",".join("`{}`:{}".format(name.replace("`", "``"), types[name]) for name in order)
+    return T.DataType.fromDDL(f"struct<{ddl}>")
 
 
 def _now() -> str:
@@ -444,11 +459,29 @@ class Registry:
 
     # -- Spark access ----------------------------------------------------------
 
-    def load(self, spark: SparkSession, dataset: str, version: str) -> DataFrame:
+    def load(
+        self,
+        spark: SparkSession,
+        dataset: str | None = None,
+        version: str | None = None,
+        *,
+        asset: Asset | None = None,
+    ) -> DataFrame:
         """Resolve ``dataset.version`` (incl. ``latest``) to its default
-        asset's DataFrame — the Q1 FROM-rebinding target."""
-        asset = self.get_default_asset(dataset, version)
-        return spark.read.parquet(asset.asset_uri)
+        asset's DataFrame — the Q1 FROM-rebinding target — or read the
+        given ``asset``.
+
+        The schema comes from the asset's recorded ``fields`` (the
+        information_schema analog), so the read runs no Spark job. Only
+        an asset without ``fields`` (raster tile sets, catalogs written
+        before fields were recorded) has its schema inferred from the
+        parquet footers."""
+        if asset is None:
+            asset = self.get_default_asset(dataset, version)
+        reader = spark.read
+        if asset.fields:
+            reader = reader.schema(schema_from_fields(asset.fields))
+        return reader.parquet(asset.asset_uri)
 
     def datasets_df(self, spark: SparkSession) -> DataFrame:
         rows = [(d.dataset, d.is_downloadable, d.owner_id) for d in self._datasets.values()]

@@ -10,9 +10,17 @@ parity.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from gfw_data_api_spark.catalog.registry import Registry, RegistryError, default_asset_type
+from gfw_data_api_spark.catalog.registry import (
+    Registry,
+    RegistryError,
+    default_asset_type,
+    schema_from_fields,
+)
 from gfw_data_api_spark.sources import tabular, vector
 
 
@@ -63,8 +71,6 @@ def ingest_tabular(
             # the reference's tabular geo fixtures carry WKB-hex text
             # geometry columns (tests/fixtures/test.csv); decode + derive
             # the GFW system columns like a vector source (E5)
-            from pyspark.sql import functions as F
-
             df = df.withColumn("geom", vector.wkb_from_hex(F.col(wkb_hex_geometry)))
             if wkb_hex_geometry != "geom":
                 df = df.drop(wkb_hex_geometry)
@@ -94,36 +100,101 @@ def append_tabular(
     delimiter: str = ",",
 ) -> DataFrame:
     """E3 idempotent append: only to mutable versions (E16 guard); new rows
-    anti-joined on the version's unique constraint before parquet append."""
+    anti-joined on the version's unique constraint before parquet append.
+
+    The batch is read with the table's catalog types (``fields``), so a
+    part file never differs in type from the table, and a subset batch
+    is written with the missing columns as NULLs. A value that does not
+    parse as its column's type, or a file whose header differs, is a 400
+    and leaves no part file behind (the write job aborts as a whole).
+    """
     registry.assert_appendable(dataset, version)
     asset = registry.get_default_asset(dataset, version)
-    unique_on = asset.creation_options.get("unique_constraint")
-    existing = spark.read.parquet(asset.asset_uri)
-    incoming = tabular.read_tabular_source(spark, source_paths, delimiter)
     options = asset.creation_options
-    if options.get("latitude") and options.get("longitude"):
-        incoming = tabular.add_point_geometry(incoming, options["latitude"], options["longitude"])
+    unique_on = options.get("unique_constraint")
+    columns = [f["name"] for f in asset.fields]
+    try:
+        headers = tabular.csv_headers(spark, source_paths, delimiter)
+    except FileNotFoundError as exc:
+        raise RegistryError(f"Append source {exc} does not exist.", 400) from None
+    distinct_headers = {tuple(h) for h in headers.values()}
+    if len(distinct_headers) > 1:
+        raise RegistryError(
+            f"Append source files have different headers: {sorted(distinct_headers)}.", 400
+        )
+    header = list(distinct_headers.pop()) if distinct_headers else []
     # "Schema of input file must match or be a subset of previous input
     # files" (versions.py:214-216): columns outside the target schema or
     # a source sharing NO columns are input errors, not silent drops —
     # unchecked, a disjoint CSV appends zero-column part files that
     # corrupt the asset directory for every later read.
-    extra = [c for c in incoming.columns if c not in existing.columns]
+    extra = [c for c in header if c not in columns]
     if extra:
         raise RegistryError(
             f"Append source has columns not in the target schema: {extra}.",
             400,
         )
-    if not incoming.columns or not any(c in existing.columns for c in incoming.columns):
+    if not header:
         raise RegistryError(
             "Append source shares no columns with the target schema.", 400
         )
-    incoming = incoming.select(*[c for c in existing.columns if c in incoming.columns])
+    keyless = [c for c in unique_on or [] if c not in header]
+    if keyless:
+        raise RegistryError(
+            f"Append source lacks the unique constraint columns {keyless}.", 400
+        )
+    try:
+        incoming = tabular.read_tabular_source(
+            spark, source_paths, delimiter, schema=schema_from_fields(asset.fields, header)
+        )
+    except AnalysisException as exc:
+        raise RegistryError(f"Append source cannot be read: {exc.getMessage()}", 400) from None
+    latitude, longitude = options.get("latitude"), options.get("longitude")
+    if latitude in header and longitude in header:
+        incoming = tabular.add_point_geometry(incoming, latitude, longitude)
+    existing = registry.load(spark, asset=asset)
+    incoming = incoming.select(
+        *[
+            F.col(f.name) if f.name in incoming.columns else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in existing.schema.fields
+            if f.name != "_part"
+        ]
+    )
     if unique_on:
         incoming = tabular.append_new_rows(existing, incoming, unique_on)
-    incoming.write.mode("append").parquet(asset.asset_uri)
+    partition_by = []
+    if options.get("partitions"):
+        # rows go to the table's partition directories: a flat part file
+        # beside them is invisible to every read of the table
+        partitions = tabular.Partitions(**options["partitions"])
+        incoming = incoming.withColumn("_part", tabular.partition_expr(partitions))
+        partition_by = ["_part"]
+    try:
+        incoming.write.mode("append").partitionBy(*partition_by).parquet(asset.asset_uri)
+    except Py4JJavaError as exc:
+        detail = _unparsable_source(exc)
+        if detail is None:
+            raise
+        raise RegistryError(f"Append source does not match the table schema: {detail}", 400) from None
     registry.set_version_status(dataset, version, "saved", "append complete")
-    return spark.read.parquet(asset.asset_uri)
+    return registry.load(spark, asset=asset)
+
+
+def _unparsable_source(exc: Py4JJavaError) -> str | None:
+    """What made Spark's strict CSV read fail — a value that does not
+    parse as its column's type, or a header that differs from the
+    schema — or None when the write failed for another reason."""
+    cause = exc.java_exception
+    while cause is not None:
+        message = cause.getMessage() or ""
+        if message.startswith("[MALFORMED_RECORD_IN_PARSING"):
+            while cause.getCause() is not None:
+                cause = cause.getCause()
+            return f"a value does not parse as its column type ({cause.getMessage()})"
+        if message.startswith("CSV header does not conform to the schema"):
+            return " ".join(message.split())
+        cause = cause.getCause()
+    return None
 
 
 def ingest_vector(

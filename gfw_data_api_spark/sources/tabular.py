@@ -13,6 +13,7 @@ so partition pruning replaces Postgres partition elimination at scale.
 
 from __future__ import annotations
 
+import csv
 import math
 import os
 from dataclasses import dataclass, field
@@ -126,6 +127,7 @@ def read_tabular_source(
     delimiter: str = ",",
     table_schema: list[FieldType] | None = None,
     sample_rows: int = 100,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """E1: scan CSV/TSV with inferred schema + declared type overrides.
 
@@ -133,14 +135,21 @@ def read_tabular_source(
     (batch/scripts/create_tabular_schema.sh); Spark's reader does the same
     job via ``inferSchema``. Declared ``table_schema`` entries override the
     inferred type per column, mirroring the sed rewrite of the generated DDL.
+
+    A given ``schema`` replaces inference (no Spark job at read time): its
+    fields must name every file's header columns in header order, which
+    Spark checks per file, and a value that does not parse as its field's
+    type fails the job (``FAILFAST``) instead of turning into NULL.
     """
     reader = (
         spark.read.option("header", True)
         .option("delimiter", DELIMITERS.get(delimiter, delimiter))
-        .option("inferSchema", True)
-        .option("samplingRatio", 1.0)
         .option("nullValue", "")
     )
+    if schema is None:
+        reader = reader.option("inferSchema", True).option("samplingRatio", 1.0)
+    else:
+        reader = reader.schema(schema).option("enforceSchema", False).option("mode", "FAILFAST")
     df = reader.csv(paths)
     for override in table_schema or []:
         spark_type = PG_TYPE_TO_SPARK.get(override.data_type.lower())
@@ -149,6 +158,54 @@ def read_tabular_source(
         if override.name in df.columns:
             df = df.withColumn(override.name, F.col(override.name).cast(spark_type))
     return df
+
+
+def csv_headers(
+    spark: SparkSession, paths: list[str] | str, delimiter: str = ","
+) -> dict[str, list[str]]:
+    """The header of every file of a CSV/TSV source, keyed by file.
+
+    Each path may be a file, a directory (its visible files) or a glob,
+    as for Spark's reader. The first line of each file is read on the
+    driver through Hadoop's ``FileSystem``, decompressed by the codec its
+    extension names, and split with Python's ``csv`` module: no Spark
+    job. Empty files have no header and are left out; a path that
+    matches nothing raises ``FileNotFoundError``.
+    """
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    sep = DELIMITERS.get(delimiter, delimiter)
+    headers: dict[str, list[str]] = {}
+    for path in [paths] if isinstance(paths, str) else paths:
+        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(conf)
+        matched = fs.globStatus(jpath)
+        if not matched:
+            raise FileNotFoundError(path)
+        files = []
+        for status in matched:
+            if status.isDirectory():
+                files += [
+                    child.getPath()
+                    for child in fs.listStatus(status.getPath())
+                    if child.isFile() and not child.getPath().getName().startswith(("_", "."))
+                ]
+            else:
+                files.append(status.getPath())
+        for file in files:
+            raw = fs.open(file)
+            try:
+                codec = codecs.getCodec(file)
+                stream = raw if codec is None else codec.createInputStream(raw)
+                line = jvm.java.io.BufferedReader(
+                    jvm.java.io.InputStreamReader(stream, "UTF-8")
+                ).readLine()
+            finally:
+                raw.close()
+            if line:
+                headers[file.toString()] = next(csv.reader([line], delimiter=sep))
+    return headers
 
 
 def add_point_geometry(
@@ -178,7 +235,7 @@ def add_point_geometry(
     return df
 
 
-def _partition_expr(partitions: Partitions) -> F.Column:
+def partition_expr(partitions: Partitions) -> F.Column:
     col = F.col(partitions.partition_column)
     if partitions.partition_type == "hash":
         n = partitions.partition_count or 16
@@ -230,7 +287,7 @@ def write_table(
     writer_df = df
     partition_by: list[str] = []
     if partitions is not None:
-        writer_df = df.withColumn("_part", _partition_expr(partitions))
+        writer_df = df.withColumn("_part", partition_expr(partitions))
         partition_by = ["_part"]
     if cluster_on:
         if partition_by:
@@ -251,10 +308,13 @@ def append_new_rows(
 
     Returns only the incoming rows whose key is not already present.
     ``left_anti`` is a shuffle-on-key join; at scale, bucketed layouts on
-    the unique key make it co-located and shuffle-free.
+    the unique key make it co-located and shuffle-free. Its right side
+    needs no ``distinct``: an anti-join keeps a row whenever no match
+    exists, however many there are, and a distinct costs the whole
+    table an extra aggregation.
     """
     deduped = incoming.dropDuplicates(unique_on)
-    return deduped.join(existing.select(*unique_on).distinct(), on=unique_on, how="left_anti")
+    return deduped.join(existing.select(*unique_on), on=unique_on, how="left_anti")
 
 
 # widening-only promotions (Postgres ALTER COLUMN ... TYPE analogs that

@@ -4,6 +4,7 @@
 
 import io
 import json
+import os
 
 import numpy as np
 import pytest
@@ -14,6 +15,8 @@ from gfw_data_api_spark.catalog.geostore import Geostore
 from gfw_data_api_spark.raster.grid import Grid
 from gfw_data_api_spark.raster.ingest import ingest_raster_tiles
 from gfw_data_api_spark.sources.pipeline import ingest_tabular
+
+pytestmark = pytest.mark.usefixtures("catalog_schema_check")
 
 
 def call(app, method, path, query="", body=None, headers=None):
@@ -1120,7 +1123,8 @@ def test_append_schema_guards(app, spark, tmp_path):
     assert out["status"] == 400
     assert "surprise" in out["body"]["message"]
 
-    # subset appends stay allowed
+    # subset appends stay allowed, and the table keeps every column:
+    # the new rows carry NULL in the ones the batch lacks
     subset = str(tmp_path / "s.csv")
     with open(subset, "w", newline="") as fh:
         w = csvmod2.writer(fh)
@@ -1128,6 +1132,46 @@ def test_append_schema_guards(app, spark, tmp_path):
     out = call(app, "POST", "/dataset/schema_guard/v1/append",
                body={"source_uri": [subset]})
     assert out["status"] == 200
+    table = registry.load(spark, "schema_guard", "v1")
+    assert table.columns == ["id", "iso"]
+    assert sorted(tuple(r) for r in table.collect()) == [(1, "MOZ"), (5, None)]
+    rows = call(app, "POST", "/dataset/schema_guard/v1/query/json",
+                body={"sql": "SELECT id, iso FROM data ORDER BY id"})
+    assert rows["body"]["data"] == [{"id": 1, "iso": "MOZ"}, {"id": 5, "iso": None}]
+
+    # the batch's header may list the columns in another order
+    reordered = str(tmp_path / "r.csv")
+    with open(reordered, "w", newline="") as fh:
+        w = csvmod2.writer(fh)
+        w.writerow(["iso", "id"]); w.writerow(["BOL", 6])
+    out = call(app, "POST", "/dataset/schema_guard/v1/append",
+               body={"source_uri": [reordered]})
+    assert out["status"] == 200, out["body"]
+
+    # a value that does not parse as the column's type is a 400 and
+    # leaves no part file behind
+    asset_dir = registry.get_default_asset("schema_guard", "v1").asset_uri
+    parts = sorted(f for f in os.listdir(asset_dir) if f.endswith(".parquet"))
+    malformed = str(tmp_path / "m.csv")
+    with open(malformed, "w", newline="") as fh:
+        w = csvmod2.writer(fh)
+        w.writerow(["id", "iso"]); w.writerow([7, "BRA"]); w.writerow(["seven", "BRA"])
+    out = call(app, "POST", "/dataset/schema_guard/v1/append",
+               body={"source_uri": [malformed]})
+    assert out["status"] == 400
+    assert "seven" in out["body"]["message"]
+    assert sorted(f for f in os.listdir(asset_dir) if f.endswith(".parquet")) == parts
+
+    # source files whose headers disagree are a 400
+    out = call(app, "POST", "/dataset/schema_guard/v1/append",
+               body={"source_uri": [subset, reordered]})
+    assert out["status"] == 400
+    assert "headers" in out["body"]["message"]
+    rows = call(app, "POST", "/dataset/schema_guard/v1/query/json",
+                body={"sql": "SELECT id, iso FROM data ORDER BY id"})
+    assert rows["body"]["data"] == [
+        {"id": 1, "iso": "MOZ"}, {"id": 5, "iso": None}, {"id": 6, "iso": "BOL"},
+    ]
 
     # driver must equal the original (csv); "text" passes (datapump)
     mismatch = call(app, "POST", "/dataset/schema_guard/v1/append",
@@ -1136,6 +1180,50 @@ def test_append_schema_guards(app, spark, tmp_path):
     text_ok = call(app, "POST", "/dataset/schema_guard/v1/append",
                    body={"source_uri": [subset], "source_driver": "text"})
     assert text_ok["status"] == 200
+
+
+def test_guarded_read_runs_no_job_before_its_collect(app, spark, monkeypatch, spark_jobs_started):
+    """Table resolution, guard, translation and analysis run no Spark
+    job: the first job of a guarded read is its collect's."""
+    import gfw_data_api_spark.api.app as app_module
+
+    at_collect = []
+    collect = app_module.collect_with_timeout
+
+    def probe(*args, **kwargs):
+        at_collect.append(spark_jobs_started(spark))
+        return collect(*args, **kwargs)
+
+    monkeypatch.setattr(app_module, "collect_with_timeout", probe)
+    before = spark_jobs_started(spark)
+    out = call(app, "POST", "/dataset/nasa_viirs_fire_alerts/v2024/query/json",
+               body={"sql": "SELECT iso, count(*) AS n FROM data GROUP BY iso ORDER BY iso"})
+    assert out["status"] == 200
+    assert out["body"]["data"] == [{"iso": "BOL", "n": 49}, {"iso": "MOZ", "n": 50}]
+    assert at_collect == [before]
+
+
+def test_append_runs_at_most_three_jobs(app, spark, tmp_path, spark_jobs_started):
+    """An append is the dedup, the anti-join and the write: no schema
+    inference of the batch or the table, and no re-read."""
+    import csv as csvmod2
+
+    from gfw_data_api_spark.sources.pipeline import ingest_tabular as _ingest
+
+    base, batch = str(tmp_path / "base.csv"), str(tmp_path / "batch.csv")
+    for path, ids in ((base, range(0, 200)), (batch, range(150, 250))):
+        with open(path, "w", newline="") as fh:
+            w = csvmod2.writer(fh)
+            w.writerow(["alert_id", "iso", "frp"])
+            w.writerows([i, "MOZ", i * 0.5] for i in ids)
+    _ingest(app._registry, spark, "job_count", "v1", base, unique_on=["alert_id"], is_mutable=True)
+    before = spark_jobs_started(spark)
+    out = call(app, "POST", "/dataset/job_count/v1/append", body={"source_uri": [batch]})
+    assert out["status"] == 200, out["body"]
+    assert spark_jobs_started(spark) - before <= 3
+    rows = call(app, "GET", "/dataset/job_count/v1/query/json",
+                query="sql=SELECT%20count(*)%20AS%20c%20FROM%20data")
+    assert rows["body"]["data"] == [{"c": 250}]
 
 
 def test_source_uri_allowlist(app, spark, tmp_path_factory):

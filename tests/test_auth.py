@@ -26,6 +26,8 @@ from gfw_data_api_spark.catalog.geostore import Geostore
 from gfw_data_api_spark.catalog.registry import Registry
 from gfw_data_api_spark.sources.pipeline import ingest_tabular
 
+pytestmark = pytest.mark.usefixtures("catalog_schema_check")
+
 
 def call(app, method, path, query="", body=None, headers=None):
     raw = json.dumps(body).encode() if body is not None else b""

@@ -11,6 +11,8 @@ from gfw_data_api_spark.catalog import Registry, RegistryError
 from gfw_data_api_spark.operators import downloads, features
 from gfw_data_api_spark.sources.pipeline import ingest_tabular, ingest_vector
 
+pytestmark = pytest.mark.usefixtures("catalog_schema_check")
+
 
 @pytest.fixture(scope="module")
 def vector_registry(spark, tmp_path_factory):

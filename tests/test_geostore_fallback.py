@@ -141,6 +141,18 @@ def test_get_many_single_action_for_inherited_ids(spark, registry):
     assert geoms["inh-3"]["coordinates"] == [3.0, 0.0]
 
 
+def test_inherited_view_skips_tables_the_catalog_rules_out(spark, registry):
+    """A geo table whose recorded fields lack the geostore columns is
+    never opened; one without recorded fields is still read."""
+    _inherited_fixture(spark, registry, n=2)
+    registry.create_version("vec", "v2")
+    other = registry.create_asset("vec", "v2", "geo_database_table", is_default=True)
+    other.fields = [{"name": "fid", "data_type": "bigint", "is_feature_info": True}]
+    registry.set_version_status("vec", "v2", "saved", "fields only, no files")
+    union = Geostore(registry).inherited_view(spark)
+    assert sorted(r["gfw_geostore_id"] for r in union.collect()) == ["inh-0", "inh-1"]
+
+
 def test_get_many_404_names_every_missing_id(spark, registry):
     _inherited_fixture(spark, registry, n=1)
     gs = Geostore(registry, external_resolvers={"rw": _fake_rw({})})

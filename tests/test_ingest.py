@@ -8,9 +8,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from gfw_data_api_spark.catalog import Registry
+from gfw_data_api_spark.catalog import Registry, RegistryError
 from gfw_data_api_spark.sources.pipeline import append_tabular, ingest_tabular, ingest_vector
 from gfw_data_api_spark.sources.tabular import FieldType, Partitions
+
+pytestmark = pytest.mark.usefixtures("catalog_schema_check")
 
 ROWS = 99  # the reference's golden fixture size
 
@@ -84,6 +86,86 @@ def test_append_dedup(spark, registry, tmp_path):
     # ON CONFLICT DO NOTHING semantics: 99 + 49 new
     assert result.count() == ROWS + 49
     assert result.select("alert_id").distinct().count() == ROWS + 49
+
+
+def _write_rows(path, header, rows):
+    import csv
+
+    with open(path, "w", newline="") as fh:
+        writer = csv.writer(fh)
+        writer.writerow(header)
+        writer.writerows(rows)
+    return path
+
+
+def test_append_dedup_null_and_repeated_keys(spark, registry, tmp_path):
+    """The batch keeps the rows of ``dropDuplicates`` plus an anti-join
+    against the table's DISTINCT keys: one row per repeated key, one row
+    for all NULL keys (NULL never matches the table)."""
+    load1 = _write_rows(str(tmp_path / "load1.csv"), ["alert_id", "iso"], [[1, "MOZ"], [2, "BOL"], ["", "BRA"]])
+    batch = _write_rows(
+        str(tmp_path / "batch.csv"),
+        ["alert_id", "iso"],
+        [["", "A"], ["", "B"], [2, "C"], [7, "D"], [7, "E"], [8, "F"], [1, "G"]],
+    )
+    ingest_tabular(registry, spark, "keys", "v1", load1, unique_on=["alert_id"], is_mutable=True)
+    before = registry.load(spark, "keys", "v1")
+    incoming = spark.read.schema(before.schema).option("header", True).csv(batch)
+    keep = incoming.dropDuplicates(["alert_id"]).join(
+        before.select("alert_id").distinct(), on="alert_id", how="left_anti"
+    )
+    want = [r["alert_id"] for r in keep.collect()]
+    base = [r["alert_id"] for r in before.collect()]
+
+    after = append_tabular(registry, spark, "keys", "v1", batch)
+    got = [r["alert_id"] for r in after.collect()]
+    assert sorted(want, key=str) == [7, 8, None]
+    assert sorted(got, key=str) == sorted(base + want, key=str)
+
+    # a batch without the key cannot be deduplicated against the table
+    keyless = _write_rows(str(tmp_path / "keyless.csv"), ["iso"], [["A"], ["B"]])
+    with pytest.raises(RegistryError, match="unique constraint"):
+        append_tabular(registry, spark, "keys", "v1", keyless)
+
+
+def test_append_to_partitioned_table_lands_in_partitions(spark, registry, tmp_path):
+    """Appended rows are written under the table's ``_part`` directories;
+    a flat part file beside them would be invisible to every read."""
+    load1 = str(tmp_path / "load1.csv")
+    batch = str(tmp_path / "batch.csv")
+    _write_fixture_csv(load1)
+    _write_fixture_csv(batch, start=90, rows=20)
+    ingest_tabular(
+        registry, spark, "fire_alerts", "hashed", load1, unique_on=["alert_id"], is_mutable=True,
+        partitions=Partitions(partition_type="hash", partition_column="alert_id", partition_count=4),
+    )
+    result = append_tabular(registry, spark, "fire_alerts", "hashed", batch)
+    assert result.count() == ROWS + 11
+    asset = registry.get_default_asset("fire_alerts", "hashed")
+    assert not glob.glob(os.path.join(asset.asset_uri, "*.parquet"))
+    assert spark.read.parquet(asset.asset_uri).count() == ROWS + 11
+
+
+def test_load_reads_catalog_schema_without_a_job(spark, registry, tmp_path, spark_jobs_started):
+    csv_path = str(tmp_path / "load1.csv")
+    _write_fixture_csv(csv_path)
+    ingest_tabular(registry, spark, "fire_alerts", "v1", csv_path, latitude="latitude", longitude="longitude")
+    asset = registry.get_default_asset("fire_alerts", "v1")
+    inferred = spark.read.parquet(asset.asset_uri).schema
+    jobs = spark_jobs_started(spark)
+    df = registry.load(spark, "fire_alerts", "v1")
+    assert df.schema == inferred
+    assert spark_jobs_started(spark) == jobs
+    # an asset with no recorded fields still reads, by inference
+    asset.fields = []
+    assert registry.load(spark, asset=asset).schema == inferred
+
+    # any column name survives the DDL the schema is parsed from
+    odd = _write_rows(str(tmp_path / "odd.csv"), ["a b", "c`d", "e:f,g", "Upper"], [[1, "x", 2.5, "y"]])
+    ingest_tabular(registry, spark, "odd_names", "v1", odd)
+    df = registry.load(spark, "odd_names", "v1")
+    assert df.columns == ["a b", "c`d", "e:f,g", "Upper"]
+    assert df.schema == spark.read.parquet(registry.get_default_asset("odd_names", "v1").asset_uri).schema
 
 
 def test_append_requires_mutable(spark, registry, tmp_path):

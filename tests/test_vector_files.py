@@ -17,6 +17,8 @@ from gfw_data_api_spark.sources.vector_files import (
     write_geopackage,
 )
 
+pytestmark = pytest.mark.usefixtures("catalog_schema_check")
+
 SQUARES = [
     {
         "type": "Polygon",
@@ -255,6 +257,51 @@ def test_ingest_vector_gpkg_driver(spark, gpkg_path, tmp_path):
     assert cache_asset.asset_type == "static_vector_tile_cache"
     tiles = spark.read.parquet(cache_asset.asset_uri)
     assert tiles.count() > 0
+
+
+@pytest.mark.parametrize("driver", ["GeoJSON", "ESRI Shapefile", "ESRIJSON"])
+def test_ingest_vector_file_drivers(spark, tmp_path, driver):
+    """Every source driver ingests a geo table whose catalog schema is the
+    schema Spark infers from the written parquet."""
+    import json
+
+    from gfw_data_api_spark.catalog.registry import Registry
+    from gfw_data_api_spark.sources.pipeline import ingest_vector
+
+    names = [f"area_{i}" for i in range(len(SQUARES))]
+    if driver == "GeoJSON":
+        path = str(tmp_path / "areas.geojson")
+        features = [
+            {"type": "Feature", "properties": {"name": n, "rank": i}, "geometry": g}
+            for i, (n, g) in enumerate(zip(names, SQUARES))
+        ]
+        with open(path, "w") as fh:
+            json.dump({"type": "FeatureCollection", "features": features}, fh)
+    elif driver == "ESRI Shapefile":
+        path = _write_shapefile(str(tmp_path / "areas"), SQUARES, names)
+    else:
+        path = str(tmp_path / "areas.json")
+        doc = {
+            "fields": [
+                {"name": "OBJECTID", "type": "esriFieldTypeOID"},
+                {"name": "name", "type": "esriFieldTypeString"},
+            ],
+            "features": [
+                {
+                    "attributes": {"OBJECTID": i + 1, "name": n},
+                    # ESRI winding: outer ring clockwise
+                    "geometry": {"rings": [g["coordinates"][0][::-1]]},
+                }
+                for i, (n, g) in enumerate(zip(names, SQUARES))
+            ],
+        }
+        with open(path, "w") as fh:
+            json.dump(doc, fh)
+    registry = Registry(str(tmp_path / "catalog"))
+    out = ingest_vector(registry, spark, "areas", "v1", path, driver)
+    assert out.count() == len(SQUARES)
+    asset = registry.get_default_asset("areas", "v1")
+    assert registry.load(spark, "areas", "v1").schema == spark.read.parquet(asset.asset_uri).schema
 
 
 def test_create_cog_asset(spark, tmp_path):
