@@ -81,7 +81,7 @@ def write_batch(path: str, rows_now: int, seed: int) -> int:
 
 
 def main() -> None:
-    p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--rows", default="50000,1000000,8000000")
     p.add_argument("--appends", type=int, default=5, help="timed appends per size")
     p.add_argument("--work", default=None, help="directory for the tables and batches (default: the system temp dir)")
