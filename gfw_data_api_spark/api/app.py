@@ -91,6 +91,27 @@ def _num_param(params: dict, name: str, default, cast=int):
         raise QueryGuardError(f"{name} must be {kind}.", 422) from None
 
 
+def _zoom_range(options: dict, default_max: int) -> tuple[int, int]:
+    """A tile cache's ``min_zoom`` and ``max_zoom`` creation options:
+    integers (or integer strings) in 0..22 with min <= max, else a 422."""
+    zooms = []
+    for name, default in (("min_zoom", 0), ("max_zoom", default_max)):
+        raw = options.get(name, default)
+        # bool is an int subclass; reject explicitly
+        if isinstance(raw, bool) or not isinstance(raw, (int, str)):
+            raise QueryGuardError(f"{name} must be an integer.", 422)
+        try:
+            zoom = int(raw)
+        except ValueError:
+            raise QueryGuardError(f"{name} must be an integer.", 422) from None
+        if not 0 <= zoom <= 22:
+            raise QueryGuardError(f"{name} must be between 0 and 22.", 422)
+        zooms.append(zoom)
+    if zooms[0] > zooms[1]:
+        raise QueryGuardError("min_zoom must be <= max_zoom.", 422)
+    return zooms[0], zooms[1]
+
+
 def _paginated_payload(path: str, items: list, params: dict) -> dict:
     """Reference list-route pagination (app/utils/paginate.py +
     PaginationLinks/PaginationMeta): WITHOUT page[number]/page[size] the
@@ -162,6 +183,11 @@ def _row_value(value):
     if isinstance(value, (datetime.datetime, datetime.date)):
         return value.isoformat()
     return value
+
+
+def _json_rows(rows) -> list[dict]:
+    """Collected rows as JSON objects, values in their PG text forms."""
+    return [{k: _row_value(v) for k, v in row.asDict().items()} for row in rows]
 
 
 def _accepts_media_type(accept: str, media_type: str) -> bool:
@@ -797,12 +823,9 @@ def create_app(
                     start_date=body.get("start_date"),
                     end_date=body.get("end_date"),
                 )
-                data = [
-                    {k: _row_value(v) for k, v in row.asDict().items()}
-                    for row in _guard_collect(
-                        df, "zonal analysis response", "downloads/csv"
-                    )
-                ]
+                data = _json_rows(
+                    _guard_collect(df, "zonal analysis response", "downloads/csv")
+                )
                 return _json_response(
                     start_response, {"data": data, "status": "success"}
                 )
@@ -825,12 +848,9 @@ def create_app(
                     start_date=(params.get("start_date") or [None])[0],
                     end_date=(params.get("end_date") or [None])[0],
                 )
-                data = [
-                    {k: _row_value(v) for k, v in row.asDict().items()}
-                    for row in _guard_collect(
-                        df, "zonal analysis response", "downloads/csv"
-                    )
-                ]
+                data = _json_rows(
+                    _guard_collect(df, "zonal analysis response", "downloads/csv")
+                )
                 return _json_response(start_response, {"data": data, "status": "success"})
 
             # /datamart/tree_cover_loss_by_driver
@@ -1289,34 +1309,7 @@ def create_app(
                         asset_type = body.get("asset_type")
                         options = body.get("creation_options") or {}
                         if asset_type == "static_vector_tile_cache":
-
-                            def _zoom(name: str, default: int) -> int:
-                                raw = options.get(name, default)
-                                # bool is an int subclass; reject explicitly
-                                if isinstance(raw, bool) or not isinstance(
-                                    raw, (int, str)
-                                ):
-                                    raise QueryGuardError(
-                                        f"{name} must be an integer.", 422
-                                    )
-                                try:
-                                    val = int(raw)
-                                except ValueError:
-                                    raise QueryGuardError(
-                                        f"{name} must be an integer.", 422
-                                    ) from None
-                                if not 0 <= val <= 22:
-                                    raise QueryGuardError(
-                                        f"{name} must be between 0 and 22.", 422
-                                    )
-                                return val
-
-                            min_zoom = _zoom("min_zoom", 0)
-                            max_zoom = _zoom("max_zoom", 5)
-                            if min_zoom > max_zoom:
-                                raise QueryGuardError(
-                                    "min_zoom must be <= max_zoom.", 422
-                                )
+                            min_zoom, max_zoom = _zoom_range(options, 5)
                             max_feat = options.get("max_features_per_tile")
                             if max_feat is not None and (
                                 isinstance(max_feat, bool)
@@ -1338,33 +1331,7 @@ def create_app(
                                 max_features_per_tile=max_feat,
                             )
                         elif asset_type == "raster_tile_cache":
-
-                            def _zoom_r(name: str, default: int) -> int:
-                                raw = options.get(name, default)
-                                if isinstance(raw, bool) or not isinstance(
-                                    raw, (int, str)
-                                ):
-                                    raise QueryGuardError(
-                                        f"{name} must be an integer.", 422
-                                    )
-                                try:
-                                    val = int(raw)
-                                except ValueError:
-                                    raise QueryGuardError(
-                                        f"{name} must be an integer.", 422
-                                    ) from None
-                                if not 0 <= val <= 22:
-                                    raise QueryGuardError(
-                                        f"{name} must be between 0 and 22.", 422
-                                    )
-                                return val
-
-                            min_zoom = _zoom_r("min_zoom", 0)
-                            max_zoom = _zoom_r("max_zoom", 3)
-                            if min_zoom > max_zoom:
-                                raise QueryGuardError(
-                                    "min_zoom must be <= max_zoom.", 422
-                                )
+                            min_zoom, max_zoom = _zoom_range(options, 3)
                             sym = options.get("symbology") or {}
                             cm_raw = sym.get("colormap") or {}
                             if not isinstance(cm_raw, dict) or not cm_raw:
@@ -1668,12 +1635,9 @@ def create_app(
                             spark, registry, dataset, version, q, geoms
                         )
                         per_feature: dict[int, list] = {}
-                        for row in _guard_collect(
-                            result_df, "batch query result", "downloads"
+                        for item in _json_rows(
+                            _guard_collect(result_df, "batch query result", "downloads")
                         ):
-                            item = {
-                                k: _row_value(v) for k, v in row.asDict().items()
-                            }
                             per_feature.setdefault(
                                 item.pop("feature_id"), []
                             ).append(item)
@@ -1720,9 +1684,7 @@ def create_app(
                             [("Content-Type", "text/csv"), ("Content-Length", str(len(data)))],
                         )
                         return [data]
-                    data = [
-                        {k: _row_value(v) for k, v in row.asDict().items()} for row in rows
-                    ]
+                    data = _json_rows(rows)
                     return _json_response(start_response, {"data": data, "status": "success"})
 
                 if tail[:1] == ["features"] and method == "GET":
@@ -1732,12 +1694,9 @@ def create_app(
                     df = features.features_by_location(
                         spark, registry, dataset, version, lat, lng, zoom
                     )
-                    data = [
-                        {k: _row_value(v) for k, v in row.asDict().items()}
-                        for row in _guard_collect(
-                            df, "features by location", "the downloads path"
-                        )
-                    ]
+                    data = _json_rows(
+                        _guard_collect(df, "features by location", "the downloads path")
+                    )
                     return _json_response(start_response, {"data": data, "status": "success"})
 
                 if tail[:1] == ["download_by_aoi"]:
@@ -1782,12 +1741,9 @@ def create_app(
                         spark, registry, dataset, version, sql, geometry=geometry
                     )
                     if fmt == "json":
-                        data = [
-                            {k: _row_value(v) for k, v in row.asDict().items()}
-                            for row in _guard_collect(
-                                df, "download json", "downloads/csv to file"
-                            )
-                        ]
+                        data = _json_rows(
+                            _guard_collect(df, "download json", "downloads/csv to file")
+                        )
                         return _json_response(
                             start_response, {"data": data, "status": "success"}
                         )
@@ -1963,12 +1919,9 @@ def create_app(
                         geometry=resolve_geometry(params, body),
                     )
                     if fmt == "json":
-                        data = [
-                            {k: _row_value(v) for k, v in row.asDict().items()}
-                            for row in _guard_collect(
-                                df, "download json", "downloads/csv to file"
-                            )
-                        ]
+                        data = _json_rows(
+                            _guard_collect(df, "download json", "downloads/csv to file")
+                        )
                         return _json_response(
                             start_response, {"data": data, "status": "success"}
                         )

@@ -21,6 +21,8 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
 from typing import Any
 
@@ -208,6 +210,11 @@ class Registry:
         self.save()
         return entity
 
+    def ensure_version(self, dataset: str, version: str) -> Version:
+        if (dataset, version) not in self._versions:
+            return self.create_version(dataset, version)
+        return self._versions[(dataset, version)]
+
     def resolve_version(self, dataset: str, version: str) -> str:
         """``latest`` alias → concrete version (app/middleware.py:25-77;
         the reference answers with a 308 redirect, we resolve in-process)."""
@@ -315,6 +322,29 @@ class Registry:
         asset.change_log.append({"date_time": _now(), "status": status, "message": message})
         self.save()
 
+    @contextmanager
+    def asset_job(self, asset: Asset, message: str = "") -> Iterator[None]:
+        """The lifecycle of one asset-writing job (reference
+        app/routes/tasks/task.py:89-246): when the body returns, the asset
+        is ``saved``; when it raises, the asset is ``failed`` with the
+        error, which is re-raised. A default asset's version follows its
+        asset. Each transition is one ``save()``."""
+        try:
+            yield
+        except Exception as exc:
+            self._finish_asset(asset, "failed", str(exc))
+            raise
+        self._finish_asset(asset, "saved", message)
+
+    def _finish_asset(self, asset: Asset, status: str, message: str) -> None:
+        entities = [asset]
+        if asset.is_default:
+            entities.append(self.get_version(asset.dataset, asset.version))
+        for entity in entities:
+            entity.status = status
+            entity.change_log.append({"date_time": _now(), "status": status, "message": message})
+        self.save()
+
     def get_asset(self, asset_id: str) -> Asset:
         asset = self._assets.get(asset_id)
         if asset is None:
@@ -370,20 +400,11 @@ class Registry:
             )
         task.change_log.extend(change_log)
         if status == "failed":
-            self._propagate_task_failure(task)
+            self._finish_asset(self.get_asset(task.asset_id), "failed", f"Task {task_id} failed.")
         else:
             self._propagate_task_completion(task)
-        self.save()
+            self.save()
         return task
-
-    def _propagate_task_failure(self, task: Task) -> None:
-        asset = self.get_asset(task.asset_id)
-        asset.status = "failed"
-        asset.change_log.append(
-            {"date_time": _now(), "status": "failed", "message": f"Task {task.task_id} failed."}
-        )
-        if asset.is_default:
-            self.set_version_status(asset.dataset, asset.version, "failed", "default asset failed")
 
     def _propagate_task_completion(self, task: Task) -> None:
         asset = self.get_asset(task.asset_id)

@@ -32,10 +32,7 @@ def ingest_raster_tiles(
 ) -> DataFrame:
     """Materialize arrays as a raster_tile_set default asset."""
     registry.ensure_dataset(dataset)
-    try:
-        registry.get_version(dataset, version)
-    except Exception:  # noqa: BLE001
-        registry.create_version(dataset, version)
+    registry.ensure_version(dataset, version)
     asset = registry.create_asset(
         dataset,
         version,
@@ -49,17 +46,16 @@ def ingest_raster_tiles(
             "values_table": values_table,
         },
     )
-    parts = [
-        tile_set_from_array(spark, grid, tile_id, values, no_data)
-        for tile_id, values in tiles.items()
-    ]
-    df = parts[0]
-    for part in parts[1:]:
-        df = df.unionByName(part)
-    write_tile_set(df, asset.asset_uri)
-    result = spark.read.parquet(asset.asset_uri)
-    registry.set_asset_status(asset.asset_id, "saved")
-    registry.set_version_status(dataset, version, "saved", "raster ingest complete")
+    with registry.asset_job(asset, "raster ingest complete"):
+        parts = [
+            tile_set_from_array(spark, grid, tile_id, values, no_data)
+            for tile_id, values in tiles.items()
+        ]
+        df = parts[0]
+        for part in parts[1:]:
+            df = df.unionByName(part)
+        write_tile_set(df, asset.asset_uri)
+        result = spark.read.parquet(asset.asset_uri)
     if make_latest:
         registry.set_latest(dataset, version)
 

@@ -69,14 +69,10 @@ def band_algebra(
     if no_data is not None:
         out = out.filter(F.col("value") != no_data)
 
-    from gfw_data_api_spark.raster.ingest import ingest_raster_tiles  # noqa: F401 (doc link)
     from gfw_data_api_spark.raster.pixels import write_tile_set
 
     registry.ensure_dataset(output_dataset)
-    try:
-        registry.get_version(output_dataset, output_version)
-    except Exception:  # noqa: BLE001
-        registry.create_version(output_dataset, output_version)
+    registry.ensure_version(output_dataset, output_version)
     asset = registry.create_asset(
         output_dataset,
         output_version,
@@ -90,9 +86,8 @@ def band_algebra(
             "calc": calc,
         },
     )
-    write_tile_set(out, asset.asset_uri)
-    registry.set_asset_status(asset.asset_id, "saved")
-    registry.set_version_status(output_dataset, output_version, "saved", "band algebra")
+    with registry.asset_job(asset, "band algebra"):
+        write_tile_set(out, asset.asset_uri)
     registry.set_latest(output_dataset, output_version)
     return spark.read.parquet(asset.asset_uri)
 

@@ -5,7 +5,7 @@ The reference runs these as AWS Batch job DAGs
 app/tasks/default_assets.py); on Spark the whole DAG collapses into one
 driver-side function per pipeline — Spark's scheduler replaces Batch
 (SURVEY.md §3.3). Status and change-log bookkeeping are kept for API
-parity.
+parity: every asset job runs inside ``Registry.asset_job``.
 """
 
 from __future__ import annotations
@@ -63,7 +63,7 @@ def ingest_tabular(
             "wkb_hex_geometry": wkb_hex_geometry,
         },
     )
-    try:
+    with registry.asset_job(asset, "ingest complete"):
         df = tabular.read_tabular_source(spark, source_paths, delimiter, table_schema)
         if has_lat_lng:
             df = tabular.add_point_geometry(df, latitude, longitude)
@@ -80,15 +80,9 @@ def ingest_tabular(
         )
         result = spark.read.parquet(asset.asset_uri)
         registry.set_asset_fields(asset.asset_id, result)
-        registry.set_asset_status(asset.asset_id, "saved")
-        registry.set_version_status(dataset, version, "saved", "ingest complete")
-        if make_latest:
-            registry.set_latest(dataset, version)
-        return result
-    except Exception as exc:
-        registry.set_asset_status(asset.asset_id, "failed", str(exc))
-        registry.set_version_status(dataset, version, "failed", str(exc))
-        raise
+    if make_latest:
+        registry.set_latest(dataset, version)
+    return result
 
 
 def append_tabular(
@@ -217,7 +211,7 @@ def ingest_vector(
         is_default=True,
         creation_options={"source_path": source_path, "source_driver": source_driver},
     )
-    try:
+    with registry.asset_job(asset, "ingest complete"):
         if source_driver == "GeoJSONSeq":
             df = vector.read_geojson_seq(spark, source_path)
         elif source_driver == "GeoJSON":
@@ -247,15 +241,9 @@ def ingest_vector(
         df.write.mode("overwrite").parquet(asset.asset_uri)
         result = spark.read.parquet(asset.asset_uri)
         registry.set_asset_fields(asset.asset_id, result)
-        registry.set_asset_status(asset.asset_id, "saved")
-        registry.set_version_status(dataset, version, "saved", "ingest complete")
-        if make_latest:
-            registry.set_latest(dataset, version)
-        return result
-    except Exception as exc:
-        registry.set_asset_status(asset.asset_id, "failed", str(exc))
-        registry.set_version_status(dataset, version, "failed", str(exc))
-        raise
+    if make_latest:
+        registry.set_latest(dataset, version)
+    return result
 
 
 def export_version(
@@ -290,11 +278,11 @@ def export_version(
         if keep:
             df = df.select(*keep)
     asset = registry.create_asset(dataset, version, fmt)
-    if fmt == "ndjson":
-        downloads.export_ndjson_features(df, asset.asset_uri, registry, dataset, version)
-    else:
-        downloads.write_csv(df, asset.asset_uri, "\t" if fmt == "tsv" else delimiter)
-    registry.set_asset_status(asset.asset_id, "saved")
+    with registry.asset_job(asset):
+        if fmt == "ndjson":
+            downloads.export_ndjson_features(df, asset.asset_uri, registry, dataset, version)
+        else:
+            downloads.write_csv(df, asset.asset_uri, "\t" if fmt == "tsv" else delimiter)
     return asset
 
 
@@ -326,7 +314,7 @@ def create_tile_cache_asset(
             "max_features_per_tile": max_features_per_tile,
         },
     )
-    try:
+    with registry.asset_job(asset):
         tiles = build_tile_cache(
             spark,
             df,
@@ -335,11 +323,7 @@ def create_tile_cache_asset(
             max_features_per_tile=max_features_per_tile,
         )
         write_tile_cache(tiles, asset.asset_uri)
-        registry.set_asset_status(asset.asset_id, "saved")
-        return asset
-    except Exception as exc:
-        registry.set_asset_status(asset.asset_id, "failed", str(exc))
-        raise
+    return asset
 
 
 def create_raster_tile_cache_asset(
@@ -382,17 +366,13 @@ def create_raster_tile_cache_asset(
             "resampling": method,
         },
     )
-    try:
+    with registry.asset_job(asset):
         pixels = spark.read.parquet(src.asset_uri)
         tiles = raster_tile_cache(
             pixels, grid, colormap, min_zoom, max_zoom, kind=kind, method=method
         )
         tiles.write.mode("overwrite").partitionBy("z", "x").parquet(asset.asset_uri)
-        registry.set_asset_status(asset.asset_id, "saved")
-        return asset
-    except Exception as exc:
-        registry.set_asset_status(asset.asset_id, "failed", str(exc))
-        raise
+    return asset
 
 
 def create_cog_asset(
@@ -412,14 +392,8 @@ def create_cog_asset(
     from gfw_data_api_spark.raster.cog import cog_from_tile_set
 
     asset = registry.create_asset(dataset, version, "cog")
-    try:
+    with registry.asset_job(asset):
         _os.makedirs(asset.asset_uri, exist_ok=True)
         out = _os.path.join(asset.asset_uri, f"{dataset}_{version}.tif")
-        info = cog_from_tile_set(
-            spark, tile_set_path, grid, out, nodata=nodata, dtype=dtype
-        )
-        registry.set_asset_status(asset.asset_id, "saved", str(info))
-        return asset
-    except Exception as exc:
-        registry.set_asset_status(asset.asset_id, "failed", str(exc))
-        raise
+        cog_from_tile_set(spark, tile_set_path, grid, out, nodata=nodata, dtype=dtype)
+    return asset

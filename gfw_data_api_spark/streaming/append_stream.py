@@ -3,14 +3,21 @@
 The reference models NRT datasets (VIIRS, GLAD) as append-only mutable
 versions fed by repeated POST /append calls with idempotent loads
 (SURVEY.md §1.4; app/routes/datasets/versions.py:202-271,
-batch/scripts/load_tabular_data.sh). The Spark-native upgrade is a
-Structured Streaming job over a landing directory:
+batch/scripts/load_tabular_data.sh). Here a Structured Streaming file
+source over a landing directory tracks which files were ingested, and
+each micro-batch is one ``append_tabular`` call on its new files:
 
-- ``Trigger.AvailableNow`` drains whatever files have landed and stops —
-  the exact semantics of a batch append call, but with checkpointed
-  exactly-once file tracking (re-running never double-ingests a file).
-- Within each micro-batch, the unique-constraint dedup is the same
-  anti-join as the batch path (ON CONFLICT DO NOTHING parity).
+- ``Trigger.AvailableNow`` drains whatever files have landed and stops,
+  with checkpointed exactly-once file tracking (re-running never
+  double-ingests a file).
+- The stream reads each file's path only (``binaryFile``), never its
+  contents; ``append_tabular`` reads, deduplicates and writes the batch
+  exactly as POST /append does.
+- A bad landing file (a value that does not parse as its column's type,
+  a header outside the table's columns) makes ``append_tabular`` raise
+  its ``RegistryError``: nothing is written, the micro-batch is not
+  committed, and ``stream_append`` raises that error. Once the file is
+  fixed in place, the next run appends it.
 - No watermarks/stateful operators — the reference has no such semantics
   (SURVEY.md §2.7) — but the same job with a processing-time trigger is
   a continuous ingest on a cluster.
@@ -20,10 +27,14 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 
-from gfw_data_api_spark.catalog.registry import Registry
-from gfw_data_api_spark.sources import tabular
+from gfw_data_api_spark.catalog.registry import Registry, RegistryError
+from gfw_data_api_spark.sources.pipeline import append_tabular
+
+# the binaryFile source's fixed schema; a streaming source must declare it
+BINARY_FILE_SCHEMA = "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"
 
 
 def stream_append(
@@ -39,38 +50,22 @@ def stream_append(
     exactly-once per file via the streaming checkpoint. Returns the
     post-append DataFrame."""
     registry.assert_appendable(dataset, version)
-    asset = registry.get_default_asset(dataset, version)
-    unique_on = asset.creation_options.get("unique_constraint")
-    options = asset.creation_options
-    existing_schema = spark.read.parquet(asset.asset_uri).schema
     checkpoint = checkpoint_dir or os.path.join(
         registry.root, "checkpoints", dataset, version
     )
-
-    # the streaming source needs a declared schema: reuse the asset's
-    # source-facing columns (derived geometry columns are recomputed here)
-    derived = {"geom", "geom_wm_x", "geom_wm_y"}
-    source_fields = [f for f in existing_schema.fields if f.name not in derived]
-    from pyspark.sql import types as T
-
     stream = (
-        spark.readStream.schema(T.StructType(source_fields))
-        .option("header", True)
-        .option("delimiter", tabular.DELIMITERS.get(delimiter, delimiter))
-        .csv(landing_dir)
+        spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA).load(landing_dir).select("path")
     )
+    errors: list[RegistryError] = []
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        incoming = batch_df
-        if options.get("latitude") and options.get("longitude"):
-            incoming = tabular.add_point_geometry(
-                incoming, options["latitude"], options["longitude"]
-            )
-        existing = spark.read.parquet(asset.asset_uri)
-        incoming = incoming.select(*[c for c in existing.columns if c in incoming.columns])
-        if unique_on:
-            incoming = tabular.append_new_rows(existing, incoming, unique_on)
-        incoming.write.mode("append").parquet(asset.asset_uri)
+        paths = [row.path for row in batch_df.collect()]
+        if paths:
+            try:
+                append_tabular(registry, spark, dataset, version, paths, delimiter)
+            except RegistryError as exc:
+                errors.append(exc)
+                raise
 
     query = (
         stream.writeStream.foreachBatch(process_batch)
@@ -78,6 +73,10 @@ def stream_append(
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination()
-    registry.set_version_status(dataset, version, "saved", "stream append complete")
-    return spark.read.parquet(asset.asset_uri)
+    try:
+        query.awaitTermination()
+    except StreamingQueryException:
+        if errors:
+            raise errors[-1] from None
+        raise
+    return registry.load(spark, dataset, version)

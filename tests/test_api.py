@@ -492,6 +492,10 @@ def test_raster_tile_cache_asset(app, spark):
         {"symbology": {"colormap": {"2004": [1, 2]}}},
         {"symbology": {"colormap": {"2004": [1, 2, 300]}}},
         {"symbology": {"colormap": {"2004": [1, 2, 3]}}, "min_zoom": 9, "max_zoom": 2},
+        {"symbology": {"colormap": {"2004": [1, 2, 3]}}, "min_zoom": "abc"},
+        {"symbology": {"colormap": {"2004": [1, 2, 3]}}, "max_zoom": [3]},
+        {"symbology": {"colormap": {"2004": [1, 2, 3]}}, "min_zoom": True},
+        {"symbology": {"colormap": {"2004": [1, 2, 3]}}, "min_zoom": 25},
     ):
         out = call(app, "POST", base, body={
             "asset_type": "raster_tile_cache", "creation_options": opts,

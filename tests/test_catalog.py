@@ -78,3 +78,31 @@ def test_registry_persistence_roundtrip(tmp_path):
     reloaded = Registry(root)
     assert reloaded.resolve_version("d", "latest") == "v1"
     assert reloaded.get_default_asset("d", "v1").asset_type == "database_table"
+
+
+def test_asset_job_lifecycle(registry, monkeypatch):
+    registry.create_dataset("d")
+    version = registry.ensure_version("d", "v1")
+    assert registry.ensure_version("d", "v1") is version
+    default = registry.create_asset("d", "v1", "database_table", is_default=True)
+    aux = registry.create_asset("d", "v1", "csv")
+    saves = []
+    monkeypatch.setattr(registry, "save", lambda: saves.append(1))
+
+    with registry.asset_job(default, "ingest complete"):
+        assert default.status == "pending"
+    assert (default.status, version.status) == ("saved", "saved")
+    assert version.change_log[-1]["message"] == "ingest complete"
+    assert len(saves) == 1
+
+    # a non-default asset fails alone and the error propagates
+    with pytest.raises(ValueError, match="boom"), registry.asset_job(aux):
+        raise ValueError("boom")
+    assert (aux.status, aux.change_log[-1]["message"]) == ("failed", "boom")
+    assert version.status == "saved"
+    assert len(saves) == 2
+
+    with pytest.raises(ValueError), registry.asset_job(default):
+        raise ValueError("late failure")
+    assert (default.status, version.status) == ("failed", "failed")
+    assert version.change_log[-1]["message"] == "late failure"

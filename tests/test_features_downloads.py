@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from gfw_data_api_spark.catalog import Registry, RegistryError
 from gfw_data_api_spark.operators import downloads, features
 from gfw_data_api_spark.sources.pipeline import ingest_tabular, ingest_vector
+from gfw_data_api_spark.sources.tabular import Partitions
 
 pytestmark = pytest.mark.usefixtures("catalog_schema_check")
 
@@ -200,6 +201,56 @@ def test_stream_append(spark, tmp_path):
     out3 = stream_append(registry, spark, "nrt", "v1", landing)
     assert out3.count() == 80
 
+    def write_rows(path, header, rows):
+        with open(path, "w", newline="") as fh:
+            csv.writer(fh).writerows([header, *rows])
+
+    def part_files(dataset):
+        uri = registry.get_default_asset(dataset, "v1").asset_uri
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(uri) for f in fs if f.endswith(".parquet")
+        )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    # a hash-partitioned table: the batch lands in its _part directories
+    write_rows(str(tmp_path / "hashed.csv"), ["id", "iso", "v"], [[1, "BRA", 0.5], [2, "IDN", 1.5]])
+    ingest_tabular(
+        registry, spark, "hashed", "v1", str(tmp_path / "hashed.csv"), unique_on=["id"],
+        is_mutable=True,
+        partitions=Partitions(partition_type="hash", partition_column="id", partition_count=2),
+    )
+    landing = str(tmp_path / "landing_hashed")
+    os.makedirs(landing)
+    write_rows(os.path.join(landing, "b.csv"), ["id", "iso", "v"], [[3, "COD", 2.5], [4, "PER", 3.5]])
+    assert sorted(r.id for r in stream_append(registry, spark, "hashed", "v1", landing).collect()) == [1, 2, 3, 4]
+    assert stream_append(registry, spark, "hashed", "v1", landing).count() == 4
+
+    write_rows(str(tmp_path / "flat.csv"), ["id", "iso", "v"], [[1, "BRA", 0.5]])
+    ingest_tabular(registry, spark, "flat", "v1", str(tmp_path / "flat.csv"), unique_on=["id"], is_mutable=True)
+    landing = str(tmp_path / "landing_flat")
+    os.makedirs(landing)
+    # a reordered header: columns are matched by name, not position
+    write_rows(os.path.join(landing, "reordered.csv"), ["iso", "v", "id"], [["COD", 2.5, 3]])
+    assert rows(stream_append(registry, spark, "flat", "v1", landing)) == [(1, "BRA", 0.5), (3, "COD", 2.5)]
+    # a subset header: the missing column is NULL
+    write_rows(os.path.join(landing, "subset.csv"), ["id", "v"], [[5, 9.5]])
+    assert rows(stream_append(registry, spark, "flat", "v1", landing)) == [
+        (1, "BRA", 0.5), (3, "COD", 2.5), (5, None, 9.5),
+    ]
+    # a malformed value: the batch's RegistryError, nothing written
+    before = part_files("flat")
+    bad = os.path.join(landing, "bad.csv")
+    write_rows(bad, ["id", "iso", "v"], [["x", "BRA", 1.0]])
+    with pytest.raises(RegistryError, match="does not parse"):
+        stream_append(registry, spark, "flat", "v1", landing)
+    assert part_files("flat") == before
+    assert len(rows(registry.load(spark, "flat", "v1"))) == 3
+    # the uncommitted batch is retried: fixed in place, the file appends
+    write_rows(bad, ["id", "iso", "v"], [[6, "BRA", 1.0]])
+    assert len(rows(stream_append(registry, spark, "flat", "v1", landing))) == 4
+
 
 def test_tumbling_window_counts(spark, sf_dir):
     from gfw_data_api_spark.sources.tabular import load_table
@@ -366,6 +417,22 @@ def test_export_version_registers_assets(spark, vector_registry):
     # both registered as aux (non-default) assets of the version
     types = {a.asset_type for a in vector_registry.assets_for("areas", "v1")}
     assert {"geo_database_table", "ndjson", "csv"} <= types
+
+
+def test_failed_export_fails_its_asset(spark, vector_registry, monkeypatch):
+    from gfw_data_api_spark.sources.pipeline import export_version
+
+    def broken_write(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(downloads, "write_csv", broken_write)
+    before = {a.asset_id for a in vector_registry.assets_for("areas", "v1")}
+    with pytest.raises(OSError, match="disk full"):
+        export_version(vector_registry, spark, "areas", "v1", fmt="csv")
+    (asset,) = [a for a in vector_registry.assets_for("areas", "v1") if a.asset_id not in before]
+    assert (asset.status, asset.change_log[-1]["message"]) == ("failed", "disk full")
+    assert vector_registry.get_version("areas", "v1").status == "saved"
+    vector_registry.delete_asset(asset.asset_id)
 
 
 def test_watermark_admits_late_drops_too_late(spark, tmp_path):

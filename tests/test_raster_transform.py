@@ -46,6 +46,39 @@ def test_band_algebra_two_bands(spark, registry, base_arrays):
         assert got[pid] == pytest.approx(flat[pid], rel=1e-12)
 
 
+def test_failed_raster_writes_fail_their_asset(spark, registry, base_arrays, monkeypatch):
+    """A raster job whose write raises leaves its asset, and the version
+    of a default asset, ``failed`` rather than ``pending``."""
+    import gfw_data_api_spark.raster.ingest as ingest_mod
+    import gfw_data_api_spark.raster.pixels as pixels_mod
+
+    def broken_write(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(ingest_mod, "write_tile_set", broken_write)
+    with pytest.raises(OSError, match="disk full"):
+        ingest_raster_tiles(registry, spark, "broken_ingest", "v1", GRID, "gross", {TILE: base_arrays[0]})
+    asset = registry.get_default_asset("broken_ingest", "v1")
+    assert (asset.status, registry.get_version("broken_ingest", "v1").status) == ("failed", "failed")
+    # a second, non-default tile set fails alone: the version keeps its status
+    with pytest.raises(OSError, match="disk full"):
+        ingest_raster_tiles(registry, spark, "layer_a", "v1", GRID, "gross", {TILE: base_arrays[0]})
+    extra = [a for a in registry.assets_for("layer_a", "v1") if not a.is_default]
+    assert [a.status for a in extra] == ["failed"]
+    assert registry.get_version("layer_a", "v1").status == "saved"
+    registry.delete_asset(extra[0].asset_id, remove_files=False)  # its uri is the default's
+
+    monkeypatch.setattr(pixels_mod, "write_tile_set", broken_write)
+    uri_a = registry.get_default_asset("layer_a", "v1").asset_uri
+    with pytest.raises(OSError, match="disk full"):
+        band_algebra(
+            spark, registry, "broken_calc", "v1", GRID, "gross",
+            calc="A + 1", input_uris={"A": uri_a}, no_data=None,
+        )
+    asset = registry.get_default_asset("broken_calc", "v1")
+    assert (asset.status, registry.get_version("broken_calc", "v1").status) == ("failed", "failed")
+
+
 def test_downsample_average(spark, registry, base_arrays):
     a, _ = base_arrays
     uri = registry.get_default_asset("layer_a", "v1").asset_uri
