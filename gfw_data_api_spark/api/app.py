@@ -19,27 +19,39 @@ routers; this module reproduces the query-plane contracts:
 - ``POST /analysis/zonal/{geostore_id}``      — zonal statistics (R1-R9)
 
 Responses use the reference's envelope ``{"data": ..., "status":
-"success"}``; errors are ``{"status": "failed", "message": ...}`` with
-the validation layer's status codes. The reference runs FastAPI; that
+"success"}``, written once in :func:`_success` (app/responses.py); CSV,
+tiles and files go through :func:`_bytes_response`. A route body returns
+one of those or raises. An error sets ``status`` to ``"failed"`` and
+carries a ``message`` with the validation layer's status code; the
+``except`` clauses at the end of ``app`` are the one place that happens,
+like the reference's exception handlers (app/main.py:53-64). Every
+response starts in :func:`_respond`. The reference runs FastAPI; that
 package isn't available here, so this is dependency-free WSGI — the
 engine API underneath is identical either way.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
+import tempfile
+import threading
+from dataclasses import asdict
+from http import HTTPStatus
+from math import ceil
 from typing import Any, Callable
 from urllib.parse import parse_qs
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from gfw_data_api_spark.api.auth import AuthConfig, AuthError
+from gfw_data_api_spark.api.auth import AuthConfig, AuthError, api_key_is_valid
 from gfw_data_api_spark.catalog.geostore import Geostore
 from gfw_data_api_spark.catalog.metadata import MetadataStore
 from gfw_data_api_spark.catalog.registry import Registry, RegistryError
+from gfw_data_api_spark.operators import datamart as dm
 from gfw_data_api_spark.operators import downloads, features
 from gfw_data_api_spark.operators.downloads import _guard_collect
 from gfw_data_api_spark.operators.jobs import JobRegistry
@@ -51,38 +63,53 @@ from gfw_data_api_spark.operators.watchdog import (
     collect_with_timeout,
 )
 from gfw_data_api_spark.raster.zonal import query_raster
+from gfw_data_api_spark.sources import pipeline
 from gfw_data_api_spark.sql.guard import QueryGuardError
 
-_STATUS_TEXT = {
-    200: "200 OK",
-    201: "201 Created",
-    202: "202 Accepted",
-    308: "308 Permanent Redirect",
-    400: "400 Bad Request",
-    401: "401 Unauthorized",
-    403: "403 Forbidden",
-    404: "404 Not Found",
-    405: "405 Method Not Allowed",
-    409: "409 Conflict",
-    422: "422 Unprocessable Entity",
-    500: "500 Internal Server Error",
-    524: "524 A Timeout Occurred",
-}
+_NOT_IMPLEMENTED = "This endpoint is not implemented for the given dataset."
+
+
+class ApiError(Exception):
+    """A request no route serves as asked: an unknown route, a method the
+    route lacks, or a proxy with no client configured."""
+
+    def __init__(self, detail: str, status_code: int):
+        super().__init__(detail)
+        self.detail = detail
+        self.status_code = status_code
+
+
+def _respond(start_response, status: int, headers: list, body: bytes) -> list[bytes]:
+    """Start every response: the status line takes ``HTTPStatus``'s reason
+    phrase, or the reference gateway's for its query-timeout 524."""
+    phrase = "A Timeout Occurred" if status == 524 else HTTPStatus(status).phrase
+    start_response(f"{status} {phrase}", headers)
+    return [body]
 
 
 def _json_response(start_response, payload: Any, status: int = 200, headers=None):
     body = json.dumps(payload, default=str).encode()
     hdrs = [("Content-Type", "application/json"), ("Content-Length", str(len(body)))]
-    hdrs += headers or []
-    start_response(_STATUS_TEXT.get(status, f"{status} Status"), hdrs)
-    return [body]
+    return _respond(start_response, status, hdrs + (headers or []), body)
+
+
+def _success(start_response, data: Any, status: int = 200, headers=None):
+    """The reference's success envelope (app/responses.py)."""
+    return _json_response(start_response, {"data": data, "status": "success"}, status, headers)
+
+
+def _bytes_response(start_response, blob: bytes, content_type: str, disposition=None):
+    """A 200 with a non-JSON body (CSV, tile, GeoPackage, GeoTIFF)."""
+    headers = [("Content-Type", content_type)]
+    if disposition is not None:
+        headers.append(("Content-Disposition", disposition))
+    headers.append(("Content-Length", str(len(blob))))
+    return _respond(start_response, 200, headers, blob)
 
 
 def _num_param(params: dict, name: str, default, cast=int):
     """Query-string number with a 422 (not a 500) on malformed input —
     the FastAPI-validation envelope the reference's routes return."""
-    from gfw_data_api_spark.sql.guard import QueryGuardError
-
     raw = (params.get(name) or [default])[0]
     try:
         return cast(raw)
@@ -127,8 +154,6 @@ def _paginated_payload(path: str, items: list, params: dict) -> dict:
         raise QueryGuardError(
             "page[number] and page[size] must be positive integers.", 422
         )
-    from math import ceil
-
     total_items = len(items)
     total_pages = ceil(total_items / size) if total_items > 0 else 1
     if page > total_pages:
@@ -167,19 +192,9 @@ def _task_payload(task) -> dict:
 
 
 def _row_value(value):
-    import datetime
-
-    from gfw_data_api_spark.operators.downloads import (
-        _interval_to_pg_text,
-    )
-
-    from gfw_data_api_spark.compat import YearMonthInterval
-
-    if isinstance(value, (bytes, bytearray)):
-        # PG's bytea text output format: hex with the \x prefix
-        return "\\x" + bytes(value).hex()
-    if isinstance(value, (datetime.timedelta, YearMonthInterval)):
-        return _interval_to_pg_text(value)
+    """A collected value for JSON: its PG text form, with dates and
+    timestamps in ISO 8601 (CSV writes those as they are)."""
+    value = downloads._pg_text(value)
     if isinstance(value, (datetime.datetime, datetime.date)):
         return value.isoformat()
     return value
@@ -244,10 +259,8 @@ def create_app(
     land_use_type, index, params) -> dict``. ``None`` (the default)
     keeps the routes mounted but answers 501 — the engine has no local
     behavior for them, they exist only to forward."""
-    import threading as _threading_mod
-
     geostore = geostore or Geostore(registry)
-    _datamart_post_lock = _threading_mod.Lock()
+    _datamart_post_lock = threading.Lock()
     jobs = JobRegistry(os.path.join(registry.warehouse, "_jobs"))
     metadata_store = MetadataStore(os.path.join(registry.root, "metadata.json"))
 
@@ -340,17 +353,14 @@ def create_app(
         path = environ.get("PATH_INFO", "/").rstrip("/")
         params = parse_qs(environ.get("QUERY_STRING", ""))
         body: dict = {}
-        if method in ("POST", "PUT", "PATCH"):
-            try:
-                length = int(environ.get("CONTENT_LENGTH") or 0)
-                raw = environ["wsgi.input"].read(length) if length else b""
-                body = json.loads(raw) if raw else {}
-            except (ValueError, KeyError):
-                return _json_response(
-                    start_response, {"status": "failed", "message": "Invalid JSON body."}, 400
-                )
-
         try:
+            if method in ("POST", "PUT", "PATCH"):
+                try:
+                    length = int(environ.get("CONTENT_LENGTH") or 0)
+                    raw = environ["wsgi.input"].read(length) if length else b""
+                    body = json.loads(raw) if raw else {}
+                except (ValueError, KeyError):
+                    raise QueryGuardError("Invalid JSON body.", 400) from None
             parts = [p for p in path.split("/") if p]
 
             # /datasets
@@ -376,41 +386,25 @@ def create_app(
             # even with auth=None like the reference's open route
             if parts == ["auth", "sign-up"] and method == "POST":
                 if rw_api is None:
-                    return _json_response(
-                        start_response,
-                        {
-                            "status": "failed",
-                            "message": "Sign-up proxies the external "
-                            "ResourceWatch API; no rw_api client is configured.",
-                        },
+                    raise ApiError(
+                        "Sign-up proxies the external "
+                        "ResourceWatch API; no rw_api client is configured.",
                         501,
                     )
                 data = rw_api.signup(body.get("name", ""), body.get("email", ""))
-                return _json_response(
-                    start_response, {"data": data, "status": "success"}
-                )
+                return _success(start_response, data)
 
             # /auth — key management (reference authentication.py routes)
             if parts and parts[0] == "auth":
                 if auth is None:
-                    return _json_response(
-                        start_response,
-                        {"status": "failed", "message": "Not found."},
-                        404,
-                    )
-                from dataclasses import asdict as _asdict
-
+                    raise ApiError("Not found.", 404)
                 sub = parts[1:]
                 if sub == ["token"] and method == "POST":
                     token = auth.token_auth.login(
                         body.get("username", ""), body.get("password", "")
                     )
-                    return _json_response(
-                        start_response,
-                        {
-                            "data": {"access_token": token, "token_type": "bearer"},
-                            "status": "success",
-                        },
+                    return _success(
+                        start_response, {"access_token": token, "token_type": "bearer"}
                     )
                 if sub == ["apikey"] and method == "POST":
                     user = auth.get_user(environ)
@@ -422,23 +416,11 @@ def create_app(
                         domains=body.get("domains") or [],
                         never_expires=bool(body.get("never_expires", False)),
                     )
-                    return _json_response(
-                        start_response,
-                        {"data": _asdict(key), "status": "success"},
-                        201,
-                    )
+                    return _success(start_response, asdict(key), 201)
                 if sub == ["apikeys"] and method == "GET":
                     user = auth.get_user(environ)
-                    return _json_response(
-                        start_response,
-                        {
-                            "data": [
-                                _asdict(k)
-                                for k in auth.key_store.for_user(user.id)
-                            ],
-                            "status": "success",
-                        },
-                    )
+                    keys = auth.key_store.for_user(user.id)
+                    return _success(start_response, [asdict(k) for k in keys])
                 if (
                     len(sub) == 3
                     and sub[0] == "apikey"
@@ -453,18 +435,13 @@ def create_app(
                         raise AuthError(
                             "The requested API key does not exist.", 404
                         )
-                    from gfw_data_api_spark.api.auth import api_key_is_valid
-
                     valid = api_key_is_valid(
                         row.domains,
                         row.expires_on,
                         (params.get("origin") or [None])[0],
                         (params.get("referrer") or [None])[0],
                     )
-                    return _json_response(
-                        start_response,
-                        {"data": {"is_valid": valid}, "status": "success"},
-                    )
+                    return _success(start_response, {"is_valid": valid})
                 if len(sub) == 2 and sub[0] == "apikey" and method == "GET":
                     user = auth.get_user(environ)
                     row = auth.key_store.get(sub[1])
@@ -474,10 +451,7 @@ def create_app(
                         raise AuthError(
                             "API Key is not associated with current user.", 403
                         )
-                    return _json_response(
-                        start_response,
-                        {"data": _asdict(row), "status": "success"},
-                    )
+                    return _success(start_response, asdict(row))
                 if len(sub) == 2 and sub[0] == "apikey" and method == "DELETE":
                     user = auth.get_user(environ)
                     row = auth.key_store.get(sub[1])
@@ -492,10 +466,7 @@ def create_app(
                             403,
                         )
                     auth.key_store.delete(sub[1])
-                    return _json_response(
-                        start_response,
-                        {"data": _asdict(row), "status": "success"},
-                    )
+                    return _success(start_response, asdict(row))
 
             # /job/{id} — poll async analyses (app/routes/jobs/job.py:24).
             # Deliberately unauthenticated like the reference's job route:
@@ -505,29 +476,14 @@ def create_app(
                 if len(parts) == 2:
                     job = jobs.get(parts[1])
                     if job is None:
-                        return _json_response(
-                            start_response,
-                            {"status": "failed", "message": "Job not found."},
-                            404,
-                        )
-                    from dataclasses import asdict as _job_asdict
-
-                    return _json_response(
-                        start_response,
-                        {"data": _job_asdict(job), "status": "success"},
-                    )
+                        raise RegistryError("Job not found.", 404)
+                    return _success(start_response, asdict(job))
                 if len(parts) == 3 and parts[2] in ("download", "failed_geometries"):
                     kind = "results" if parts[2] == "download" else "failed"
                     data = jobs.read_result(parts[1], kind)
                     if data is None:
-                        return _json_response(
-                            start_response,
-                            {"status": "failed", "message": "Job results not found."},
-                            404,
-                        )
-                    return _json_response(
-                        start_response, {"data": data, "status": "success"}
-                    )
+                        raise RegistryError("Job results not found.", 404)
+                    return _success(start_response, data)
 
             # /political/id-lookup — admin IDs by (normalized) name
             # (reference app/routes/political/id_lookup.py)
@@ -622,15 +578,12 @@ def create_app(
                             "id": _level_id(2, r["gid_2"]), "name": r["name_2"],
                         }
                     matches.append(match)
-                return _json_response(
+                return _success(
                     start_response,
                     {
-                        "data": {
-                            "adminSource": (params.get("admin_source") or ["GADM"])[0],
-                            "adminVersion": (params.get("admin_version") or ["4.1"])[0],
-                            "matches": matches,
-                        },
-                        "status": "success",
+                        "adminSource": (params.get("admin_source") or ["GADM"])[0],
+                        "adminVersion": (params.get("admin_version") or ["4.1"])[0],
+                        "matches": matches,
                     },
                 )
 
@@ -645,10 +598,7 @@ def create_app(
             ):
                 try:
                     task = registry.get_task(parts[1])
-                    return _json_response(
-                        start_response,
-                        {"data": _task_payload(task), "status": "success"},
-                    )
+                    return _success(start_response, _task_payload(task))
                 except RegistryError:
                     pass
                 asset_id, _, step = parts[1].partition(":")
@@ -656,21 +606,14 @@ def create_app(
                     task_asset = registry.get_asset(asset_id)
                     entry = task_asset.change_log[int(step)]
                 except (RegistryError, ValueError, IndexError):
-                    return _json_response(
-                        start_response,
-                        {"status": "failed", "message": "Task not found."},
-                        404,
-                    )
-                return _json_response(
+                    raise RegistryError("Task not found.", 404)
+                return _success(
                     start_response,
                     {
-                        "data": {
-                            "task_id": parts[1],
-                            "asset_id": asset_id,
-                            "change_log": [entry],
-                            "status": entry["status"],
-                        },
-                        "status": "success",
+                        "task_id": parts[1],
+                        "asset_id": asset_id,
+                        "change_log": [entry],
+                        "status": entry["status"],
                     },
                 )
 
@@ -681,25 +624,15 @@ def create_app(
                 check_manager(environ)
                 asset_id = body.get("asset_id")
                 if not asset_id:
-                    return _json_response(
-                        start_response,
-                        {"status": "failed", "message": "asset_id is required."},
-                        400,
-                    )
+                    raise QueryGuardError("asset_id is required.", 400)
                 try:
                     task = registry.create_task(
                         parts[1], asset_id, body.get("change_log") or []
                     )
                 except RegistryError as exc:
                     # reference maps both exists/missing-asset to 400
-                    return _json_response(
-                        start_response,
-                        {"status": "failed", "message": str(exc)},
-                        400,
-                    )
-                return _json_response(
-                    start_response, {"data": _task_payload(task), "status": "success"}
-                )
+                    raise RegistryError(exc.detail, 400) from None
+                return _success(start_response, _task_payload(task))
 
             # PATCH /task/{task_id} — worker progress callback; terminal
             # change-log entries propagate to the asset and the
@@ -708,9 +641,7 @@ def create_app(
                 check_manager(environ)
                 entries = body.get("change_log") or []
                 task = registry.update_task(parts[1], entries)
-                return _json_response(
-                    start_response, {"data": _task_payload(task), "status": "success"}
-                )
+                return _success(start_response, _task_payload(task))
 
             # GET /geostore/use/{land_use_type}/{index} — 1:1
             # ResourceWatch proxy (reference geostore.py:279-303,
@@ -722,19 +653,13 @@ def create_app(
                 and method == "GET"
             ):
                 if rw_api is None:
-                    return _json_response(
-                        start_response,
-                        {
-                            "status": "failed",
-                            "message": "Land-use geostores proxy the external "
-                            "ResourceWatch API; no rw_api client is configured.",
-                        },
+                    raise ApiError(
+                        "Land-use geostores proxy the external "
+                        "ResourceWatch API; no rw_api client is configured.",
                         501,
                     )
                 data = rw_api.geostore_by_land_use(parts[2], parts[3], params)
-                return _json_response(
-                    start_response, {"data": data, "status": "success"}
-                )
+                return _success(start_response, data)
 
             # /geostore/admin/... — admin-boundary geostores
             # (reference app/routes/geostore/geostore.py:98-278)
@@ -744,11 +669,6 @@ def create_app(
                 and parts[1] == "admin"
                 and method == "GET"
             ):
-                from gfw_data_api_spark.operators.features import (
-                    admin_boundary_list,
-                    admin_geostore,
-                )
-
                 provider = (params.get("source[provider]") or ["gadm"])[0]
                 adm_version = (params.get("source[version]") or ["4.1"])[0]
                 if provider.lower() != "gadm":
@@ -762,19 +682,17 @@ def create_app(
                     adm_version if adm_version.startswith("v") else f"v{adm_version}"
                 )
                 if parts[2] == "list":
-                    df = admin_boundary_list(spark, registry, adm_dataset, adm_ver)
+                    df = features.admin_boundary_list(spark, registry, adm_dataset, adm_ver)
                     data = [
                         r.asDict()
                         for r in _guard_collect(
                             df, "admin boundary list", "the downloads path"
                         )
                     ]
-                    return _json_response(
-                        start_response, {"data": data, "status": "success"}
-                    )
+                    return _success(start_response, data)
                 ids = parts[2:]
                 simplify_raw = (params.get("simplify") or [None])[0]
-                doc = admin_geostore(
+                doc = features.admin_geostore(
                     spark,
                     registry,
                     adm_dataset,
@@ -787,17 +705,15 @@ def create_app(
                         float(simplify_raw) if simplify_raw is not None else None
                     ),
                 )
-                return _json_response(
-                    start_response, {"data": doc, "status": "success"}
-                )
+                return _success(start_response, doc)
 
             # /geostore
             if parts == ["geostore"] and method == "POST":
                 entry = geostore.create(body["geometry"])
-                return _json_response(start_response, {"data": entry, "status": "success"})
+                return _success(start_response, entry)
             if len(parts) == 2 and parts[0] == "geostore" and method == "GET":
                 entry = geostore.get(spark, parts[1])
-                return _json_response(start_response, {"data": entry, "status": "success"})
+                return _success(start_response, entry)
 
             # /analysis/zonal (POST, inline geometry —
             # reference analysis.py:75-92)
@@ -826,9 +742,7 @@ def create_app(
                 data = _json_rows(
                     _guard_collect(df, "zonal analysis response", "downloads/csv")
                 )
-                return _json_response(
-                    start_response, {"data": data, "status": "success"}
-                )
+                return _success(start_response, data)
 
             # /analysis/zonal/{geostore_id}
             if len(parts) == 3 and parts[:2] == ["analysis", "zonal"] and method == "GET":
@@ -851,15 +765,13 @@ def create_app(
                 data = _json_rows(
                     _guard_collect(df, "zonal analysis response", "downloads/csv")
                 )
-                return _json_response(start_response, {"data": data, "status": "success"})
+                return _success(start_response, data)
 
             # /datamart/tree_cover_loss_by_driver
             # (reference app/routes/datamart/land.py full lifecycle:
             # deterministic uuid5 resource ids, 409 on duplicate POST,
             # pending 202 + Retry-After, failed-only DELETE, CSV GET)
             if parts == ["datamart", "tree_cover_loss_by_driver"] and method == "POST":
-                from gfw_data_api_spark.operators import datamart as dm
-
                 geometry = resolve_geometry(params, body)
                 if geometry is None:
                     raise QueryGuardError("geostore_id or geometry required.", 422)
@@ -882,13 +794,9 @@ def create_app(
                 # and race their background computes over one file
                 with _datamart_post_lock:
                     if dm.resource_exists(registry, rid):
-                        return _json_response(
-                            start_response,
-                            {
-                                "status": "failed",
-                                "message": f"Resource {rid} already exists "
-                                "with those parameters.",
-                            },
+                        raise RegistryError(
+                            f"Resource {rid} already exists "
+                            "with those parameters.",
                             409,
                         )
                     dm.save_pending_resource(registry, rid, canopy_cover)
@@ -907,22 +815,13 @@ def create_app(
                     except Exception as exc:  # noqa: BLE001 — recorded on the resource
                         dm.save_failed_resource(registry, rid, canopy_cover, str(exc))
 
-                import threading as _threading
-
-                _threading.Thread(target=compute, daemon=True).start()
-                return _json_response(
-                    start_response,
-                    {
-                        "data": {"link": f"/datamart/tree_cover_loss_by_driver/{rid}"},
-                        "status": "success",
-                    },
-                    202,
+                threading.Thread(target=compute, daemon=True).start()
+                return _success(
+                    start_response, {"link": f"/datamart/tree_cover_loss_by_driver/{rid}"}, 202
                 )
 
             # search by parameters (land.py:75-108)
             if parts == ["datamart", "tree_cover_loss_by_driver"] and method == "GET":
-                from gfw_data_api_spark.operators import datamart as dm
-
                 geometry = resolve_geometry(params, body)
                 canopy_cover = _num_param(params, "canopy_cover", "30")
                 try:
@@ -940,20 +839,9 @@ def create_app(
                 )
                 rid = dm.resource_id_for(geometry, canopy_cover, dataset_version)
                 if not dm.resource_exists(registry, rid):
-                    return _json_response(
-                        start_response,
-                        {
-                            "status": "failed",
-                            "message": "Resource not found, may require computation.",
-                        },
-                        404,
-                    )
-                return _json_response(
-                    start_response,
-                    {
-                        "data": {"link": f"/datamart/tree_cover_loss_by_driver/{rid}"},
-                        "status": "success",
-                    },
+                    raise RegistryError("Resource not found, may require computation.", 404)
+                return _success(
+                    start_response, {"link": f"/datamart/tree_cover_loss_by_driver/{rid}"}
                 )
 
             if (
@@ -961,42 +849,22 @@ def create_app(
                 and parts[:2] == ["datamart", "tree_cover_loss_by_driver"]
                 and method == "GET"
             ):
-                from gfw_data_api_spark.operators import datamart as dm
-
                 resource = dm.get_resource(registry, parts[2])
                 if resource.get("status") == "pending":
-                    return _json_response(
-                        start_response,
-                        {"data": resource, "status": "success"},
-                        202,
-                        headers=[("Retry-After", "1")],
-                    )
+                    return _success(start_response, resource, 202, headers=[("Retry-After", "1")])
                 accept = environ.get("HTTP_ACCEPT") or ""
                 if _accepts_media_type(accept, "text/csv"):
                     csv_text = dm.resource_to_csv(resource).encode()
-                    start_response(
-                        "200 OK",
-                        [
-                            ("Content-Type", "text/csv"),
-                            ("Content-Disposition", "attachment"),
-                            ("Content-Length", str(len(csv_text))),
-                        ],
-                    )
-                    return [csv_text]
-                return _json_response(
-                    start_response, {"data": resource, "status": "success"}
-                )
+                    return _bytes_response(start_response, csv_text, "text/csv", "attachment")
+                return _success(start_response, resource)
 
             if (
                 len(parts) == 3
                 and parts[:2] == ["datamart", "tree_cover_loss_by_driver"]
                 and method == "DELETE"
             ):
-                from gfw_data_api_spark.operators import datamart as dm
-
                 dm.delete_resource(registry, parts[2])
-                start_response("204 No Content", [])
-                return [b""]
+                return _respond(start_response, 204, [], b"")
 
             # /asset/{id}[/...] — asset introspection + lifecycle
             # (reference app/routes/assets/asset.py)
@@ -1004,19 +872,16 @@ def create_app(
                 asset = registry.get_asset(parts[1])
                 sub = parts[2:]
                 if not sub and method == "GET":
-                    return _json_response(
+                    return _success(
                         start_response,
                         {
-                            "data": {
-                                "asset_id": asset.asset_id,
-                                "dataset": asset.dataset,
-                                "version": asset.version,
-                                "asset_type": asset.asset_type,
-                                "asset_uri": asset.asset_uri,
-                                "is_default": asset.is_default,
-                                "status": asset.status,
-                            },
-                            "status": "success",
+                            "asset_id": asset.asset_id,
+                            "dataset": asset.dataset,
+                            "version": asset.version,
+                            "asset_type": asset.asset_type,
+                            "asset_uri": asset.asset_uri,
+                            "is_default": asset.is_default,
+                            "status": asset.status,
                         },
                     )
                 if not sub and method == "DELETE":
@@ -1031,18 +896,11 @@ def create_app(
                             409,
                         )
                     registry.delete_asset(asset.asset_id)
-                    return _json_response(
-                        start_response,
-                        {
-                            "data": {"asset_id": asset.asset_id, "status": "deleted"},
-                            "status": "success",
-                        },
+                    return _success(
+                        start_response, {"asset_id": asset.asset_id, "status": "deleted"}
                     )
                 if sub == ["change_log"] and method == "GET":
-                    return _json_response(
-                        start_response,
-                        {"data": asset.change_log, "status": "success"},
-                    )
+                    return _success(start_response, asset.change_log)
                 if sub == ["tasks"] and method == "GET":
                     # reference assets/asset.py tasks route: real task
                     # rows when workers registered them (PUT /task),
@@ -1066,33 +924,15 @@ def create_app(
                         _paginated_payload(path, items, params),
                     )
                 if sub == ["creation_options"] and method == "GET":
-                    return _json_response(
-                        start_response,
-                        {"data": asset.creation_options, "status": "success"},
-                    )
+                    return _success(start_response, asset.creation_options)
                 if sub == ["extent"] and method == "GET":
-                    return _json_response(
-                        start_response,
-                        {"data": {"extent": asset.extent}, "status": "success"},
-                    )
+                    return _success(start_response, {"extent": asset.extent})
                 if sub == ["fields"] and method == "GET":
-                    return _json_response(
-                        start_response,
-                        {"data": asset.fields, "status": "success"},
-                    )
+                    return _success(start_response, asset.fields)
                 if sub == ["stats"] and method == "GET":
-                    return _json_response(
-                        start_response,
-                        {"data": asset_stats(asset), "status": "success"},
-                    )
+                    return _success(start_response, asset_stats(asset))
                 if sub == ["metadata"] and method == "GET":
-                    return _json_response(
-                        start_response,
-                        {
-                            "data": metadata_store.get("asset", asset.asset_id),
-                            "status": "success",
-                        },
-                    )
+                    return _success(start_response, metadata_store.get("asset", asset.asset_id))
 
             # /dataset/...
             if parts and parts[0] == "dataset":
@@ -1100,12 +940,8 @@ def create_app(
                     if method == "DELETE":
                         check_manager(environ)
                         entity = registry.delete_dataset(parts[1])
-                        return _json_response(
-                            start_response,
-                            {
-                                "data": {"dataset": entity.dataset, "status": "deleted"},
-                                "status": "success",
-                            },
+                        return _success(
+                            start_response, {"dataset": entity.dataset, "status": "deleted"}
                         )
                     if method == "PUT":
                         # create-or-echo (reference PUT /dataset/{d});
@@ -1136,18 +972,13 @@ def create_app(
                     versions = [
                         v.version for (d, _), v in registry._versions.items() if d == parts[1]
                     ]
-                    return _json_response(
+                    return _success(
                         start_response,
                         {
-                            "data": {
-                                "dataset": entity.dataset,
-                                "is_downloadable": entity.is_downloadable,
-                                "versions": versions,
-                                "metadata": metadata_store.get_or_empty(
-                                    "dataset", parts[1]
-                                ),
-                            },
-                            "status": "success",
+                            "dataset": entity.dataset,
+                            "is_downloadable": entity.is_downloadable,
+                            "versions": versions,
+                            "metadata": metadata_store.get_or_empty("dataset", parts[1]),
                         },
                     )
 
@@ -1170,15 +1001,12 @@ def create_app(
                 if len(parts) == 3 and method == "DELETE":
                     check_manager(environ)
                     entity = registry.delete_version(dataset, version)
-                    return _json_response(
+                    return _success(
                         start_response,
                         {
-                            "data": {
-                                "dataset": dataset,
-                                "version": entity.version,
-                                "status": "deleted",
-                            },
-                            "status": "success",
+                            "dataset": dataset,
+                            "version": entity.version,
+                            "status": "deleted",
                         },
                     )
 
@@ -1190,22 +1018,19 @@ def create_app(
                             metadata_store.update(
                                 "version", f"{dataset}/{version}", body["metadata"]
                             )
-                    return _json_response(
+                    return _success(
                         start_response,
                         {
-                            "data": {
-                                "dataset": dataset,
-                                "version": entity.version,
-                                "is_latest": entity.is_latest,
-                                "is_mutable": entity.is_mutable,
-                                "status": entity.status,
-                                # dataset base + version non-null overrides
-                                # (crud/metadata.py:334-352 inheritance)
-                                "metadata": metadata_store.version_view(
-                                    dataset, version
-                                ),
-                            },
-                            "status": "success",
+                            "dataset": dataset,
+                            "version": entity.version,
+                            "is_latest": entity.is_latest,
+                            "is_mutable": entity.is_mutable,
+                            "status": entity.status,
+                            # dataset base + version non-null overrides
+                            # (crud/metadata.py:334-352 inheritance)
+                            "metadata": metadata_store.version_view(
+                                dataset, version
+                            ),
                         },
                     )
 
@@ -1244,13 +1069,9 @@ def create_app(
                         None,
                     )
                     if cache is None:
-                        return _json_response(
-                            start_response,
-                            {
-                                "status": "failed",
-                                "message": f"no saved {want_type} asset for "
-                                f"{dataset}/{version}.",
-                            },
+                        raise RegistryError(
+                            f"no saved {want_type} asset for "
+                            f"{dataset}/{version}.",
                             404,
                         )
                     rows = (
@@ -1265,20 +1086,8 @@ def create_app(
                         .collect()
                     )
                     if not rows or rows[0][0] is None:
-                        return _json_response(
-                            start_response,
-                            {"status": "failed", "message": "tile not found."},
-                            404,
-                        )
-                    blob = bytes(rows[0][0])
-                    start_response(
-                        "200 OK",
-                        [
-                            ("Content-Type", ctype),
-                            ("Content-Length", str(len(blob))),
-                        ],
-                    )
-                    return [blob]
+                        raise RegistryError("tile not found.", 404)
+                    return _bytes_response(start_response, bytes(rows[0][0]), ctype)
                 if tail == ["assets"]:
                     # reference: app/routes/datasets/asset.py — GET lists a
                     # version's assets, POST creates an auxiliary asset
@@ -1304,8 +1113,6 @@ def create_app(
                         )
                     if method == "POST":
                         check_manager(environ)
-                        from gfw_data_api_spark.sources import pipeline as _pipeline
-
                         asset_type = body.get("asset_type")
                         options = body.get("creation_options") or {}
                         if asset_type == "static_vector_tile_cache":
@@ -1321,7 +1128,7 @@ def create_app(
                                     "integer.",
                                     422,
                                 )
-                            asset = _pipeline.create_tile_cache_asset(
+                            asset = pipeline.create_tile_cache_asset(
                                 registry,
                                 spark,
                                 dataset,
@@ -1370,7 +1177,7 @@ def create_app(
                                 if sym_type.startswith("gradient")
                                 else "discrete"
                             )
-                            asset = _pipeline.create_raster_tile_cache_asset(
+                            asset = pipeline.create_raster_tile_cache_asset(
                                 registry,
                                 spark,
                                 dataset,
@@ -1381,28 +1188,18 @@ def create_app(
                                 kind=kind,
                             )
                         elif asset_type in ("csv", "tsv", "ndjson"):
-                            asset = _pipeline.export_version(
+                            asset = pipeline.export_version(
                                 registry, spark, dataset, version, fmt=asset_type
                             )
                         else:
-                            return _json_response(
-                                start_response,
-                                {
-                                    "status": "failed",
-                                    "message": f"unsupported asset_type {asset_type!r}",
-                                },
-                                400,
-                            )
-                        return _json_response(
+                            raise QueryGuardError(f"unsupported asset_type {asset_type!r}", 400)
+                        return _success(
                             start_response,
                             {
-                                "data": {
-                                    "asset_id": asset.asset_id,
-                                    "asset_type": asset.asset_type,
-                                    "asset_uri": asset.asset_uri,
-                                    "status": asset.status,
-                                },
-                                "status": "success",
+                                "asset_id": asset.asset_id,
+                                "asset_type": asset.asset_type,
+                                "asset_uri": asset.asset_uri,
+                                "status": asset.status,
                             },
                             202,
                         )
@@ -1411,8 +1208,6 @@ def create_app(
                     # reference: app/routes/datasets/versions.py:200-271 —
                     # owner/ADMIN-gated append to an existing table version;
                     # schema must match or be a subset of the original
-                    from gfw_data_api_spark.sources import pipeline as _pipeline
-
                     check_manager(environ)
                     source_uri = body.get("source_uri")
                     if isinstance(source_uri, str):
@@ -1436,7 +1231,7 @@ def create_app(
                             "source_driver",
                             400,
                         )
-                    _pipeline.append_tabular(
+                    pipeline.append_tabular(
                         registry, spark, dataset, version, source_uri,
                         delimiter=orig_delim,
                     )
@@ -1446,17 +1241,14 @@ def create_app(
                     asset.creation_options["source_paths"] += source_uri
                     registry.save()
                     entity = registry.get_version(dataset, version)
-                    return _json_response(
+                    return _success(
                         start_response,
                         {
-                            "data": {
-                                "dataset": dataset,
-                                "version": entity.version,
-                                "is_latest": entity.is_latest,
-                                "is_mutable": entity.is_mutable,
-                                "status": entity.status,
-                            },
-                            "status": "success",
+                            "dataset": dataset,
+                            "version": entity.version,
+                            "is_latest": entity.is_latest,
+                            "is_mutable": entity.is_mutable,
+                            "status": entity.status,
                         },
                     )
 
@@ -1472,11 +1264,7 @@ def create_app(
                         a.asset_id == asset_id
                         for a in registry.assets_for(dataset, version)
                     ):
-                        return _json_response(
-                            start_response,
-                            {"status": "failed", "message": "Asset not found."},
-                            404,
-                        )
+                        raise RegistryError("Asset not found.", 404)
                     if method == "PATCH":
                         check_manager(environ)
                         doc = metadata_store.update(
@@ -1485,70 +1273,37 @@ def create_app(
                     elif method == "GET":
                         doc = metadata_store.get("asset", asset_id)
                     else:
-                        return _json_response(
-                            start_response,
-                            {"status": "failed", "message": "Method not allowed."},
-                            405,
-                        )
-                    return _json_response(
-                        start_response, {"data": doc, "status": "success"}
-                    )
+                        raise ApiError("Method not allowed.", 405)
+                    return _success(start_response, doc)
 
                 if tail == ["fields"]:
                     asset = registry.get_default_asset(dataset, version)
-                    return _json_response(
-                        start_response, {"data": asset.fields, "status": "success"}
-                    )
+                    return _success(start_response, asset.fields)
 
                 # version introspection (reference versions.py change_log /
                 # creation_options / extent / stats / metadata routes —
                 # all read the default asset)
                 if tail == ["change_log"] and method == "GET":
                     entity = registry.get_version(dataset, version)
-                    return _json_response(
-                        start_response,
-                        {"data": entity.change_log, "status": "success"},
-                    )
+                    return _success(start_response, entity.change_log)
                 if tail == ["creation_options"] and method == "GET":
                     asset = registry.get_default_asset(dataset, version)
-                    return _json_response(
-                        start_response,
-                        {"data": asset.creation_options, "status": "success"},
-                    )
+                    return _success(start_response, asset.creation_options)
                 if tail == ["extent"] and method == "GET":
                     asset = registry.get_default_asset(dataset, version)
-                    return _json_response(
-                        start_response,
-                        {"data": {"extent": asset.extent}, "status": "success"},
-                    )
+                    return _success(start_response, {"extent": asset.extent})
                 if tail == ["stats"] and method == "GET":
                     asset = registry.get_default_asset(dataset, version)
-                    return _json_response(
-                        start_response,
-                        {"data": asset_stats(asset), "status": "success"},
-                    )
+                    return _success(start_response, asset_stats(asset))
                 if tail == ["metadata"] and method == "GET":
-                    return _json_response(
-                        start_response,
-                        {
-                            "data": metadata_store.version_view(dataset, version),
-                            "status": "success",
-                        },
-                    )
+                    return _success(start_response, metadata_store.version_view(dataset, version))
 
                 # /dataset/{d}/{v}/geostore/{id}: geostore scoped to this
                 # version's own table (reference datasets/geostore.py)
                 if len(tail) == 2 and tail[0] == "geostore" and method == "GET":
                     df = registry.load(spark, dataset, version)
                     if "gfw_geostore_id" not in df.columns:
-                        return _json_response(
-                            start_response,
-                            {
-                                "status": "failed",
-                                "message": "Dataset has no geostore.",
-                            },
-                            404,
-                        )
+                        raise RegistryError("Dataset has no geostore.", 404)
                     rows = (
                         df.filter(F.col("gfw_geostore_id") == tail[1])
                         .select(
@@ -1559,18 +1314,8 @@ def create_app(
                         .collect()
                     )
                     if not rows:
-                        return _json_response(
-                            start_response,
-                            {
-                                "status": "failed",
-                                "message": f"Geostore {tail[1]} not found.",
-                            },
-                            404,
-                        )
-                    return _json_response(
-                        start_response,
-                        {"data": rows[0].asDict(), "status": "success"},
-                    )
+                        raise RegistryError(f"Geostore {tail[1]} not found.", 404)
+                    return _success(start_response, rows[0].asDict())
 
                 if tail[:2] == ["query", "batch"] and method == "POST":
                     check_query_auth(environ, params, dataset, version)
@@ -1649,19 +1394,16 @@ def create_app(
                         return results, failed
 
                     job = jobs.submit(run_batch)
-                    return _json_response(
+                    return _success(
                         start_response,
                         {
-                            "data": {
-                                "job_id": job.job_id,
-                                "job_link": job.job_link,
-                                "status": job.status,
-                                "message": job.message,
-                                "download_link": job.download_link,
-                                "failed_geometries_link": job.failed_geometries_link,
-                                "progress": job.progress,
-                            },
-                            "status": "success",
+                            "job_id": job.job_id,
+                            "job_link": job.job_link,
+                            "status": job.status,
+                            "message": job.message,
+                            "download_link": job.download_link,
+                            "failed_geometries_link": job.failed_geometries_link,
+                            "progress": job.progress,
                         },
                         202,
                     )
@@ -1678,14 +1420,9 @@ def create_app(
                     rows = collect_with_timeout(spark, df, DEFAULT_QUERY_TIMEOUT_S)
                     if fmt == "csv":
                         text = downloads.rows_to_csv_rows(df.columns, rows)
-                        data = text.encode()
-                        start_response(
-                            "200 OK",
-                            [("Content-Type", "text/csv"), ("Content-Length", str(len(data)))],
-                        )
-                        return [data]
+                        return _bytes_response(start_response, text.encode(), "text/csv")
                     data = _json_rows(rows)
-                    return _json_response(start_response, {"data": data, "status": "success"})
+                    return _success(start_response, data)
 
                 if tail[:1] == ["features"] and method == "GET":
                     lat = _num_param(params, "lat", params["lat"][0], cast=float)
@@ -1697,7 +1434,7 @@ def create_app(
                     data = _json_rows(
                         _guard_collect(df, "features by location", "the downloads path")
                     )
-                    return _json_response(start_response, {"data": data, "status": "success"})
+                    return _success(start_response, data)
 
                 if tail[:1] == ["download_by_aoi"]:
                     # reference downloads.py:200-262 — AOI given as
@@ -1713,17 +1450,13 @@ def create_app(
                             )
                         geometry = geostore.geometry(spark, gid)
                     elif aoi_type == "admin":
-                        from gfw_data_api_spark.operators.features import (
-                            admin_geostore,
-                        )
-
                         country = (params.get("aoi[country]") or [None])[0]
                         region = (params.get("aoi[region]") or [None])[0]
                         subregion = (params.get("aoi[subregion]") or [None])[0]
                         if not country:
                             raise QueryGuardError("aoi[country] required.", 422)
                         level = 0 + (region is not None) + (subregion is not None)
-                        doc = admin_geostore(
+                        doc = features.admin_geostore(
                             spark, registry,
                             "gadm_administrative_boundaries", "latest",
                             adm_level=level, country_id=country,
@@ -1744,28 +1477,18 @@ def create_app(
                         data = _json_rows(
                             _guard_collect(df, "download json", "downloads/csv to file")
                         )
-                        return _json_response(
-                            start_response, {"data": data, "status": "success"}
-                        )
-                    text = downloads.rows_to_csv(df)
-                    raw = text.encode()
-                    start_response(
-                        "200 OK",
-                        [
-                            ("Content-Type", "text/csv"),
-                            ("Content-Disposition",
-                             f'attachment; filename="{dataset}_{version}_aoi.csv"'),
-                            ("Content-Length", str(len(raw))),
-                        ],
+                        return _success(start_response, data)
+                    return _bytes_response(
+                        start_response,
+                        downloads.rows_to_csv(df).encode(),
+                        "text/csv",
+                        f'attachment; filename="{dataset}_{version}_aoi.csv"',
                     )
-                    return [raw]
 
                 if tail == ["download", "gpkg"] and method == "GET":
                     # reference redirects to a pre-built GPKG asset; the
                     # engine IS the cluster, so build-on-demand and serve
                     check_query_auth(environ, params, dataset, version)
-                    import tempfile
-
                     from gfw_data_api_spark.sources.vector_files import (
                         write_geopackage,
                     )
@@ -1774,15 +1497,7 @@ def create_app(
                         spark, registry, dataset, version, "SELECT * FROM data"
                     )
                     if "geom" not in df.columns:
-                        return _json_response(
-                            start_response,
-                            {
-                                "status": "failed",
-                                "message": "This endpoint is not implemented "
-                                "for the given dataset.",
-                            },
-                            501,
-                        )
+                        raise ApiError(_NOT_IMPLEMENTED, 501)
                     keep = [
                         f.name for f in df.schema.fields
                         if f.name == "geom"
@@ -1791,24 +1506,18 @@ def create_app(
                     with tempfile.NamedTemporaryFile(suffix=".gpkg") as tmp:
                         write_geopackage(df.select(*keep), tmp.name, dataset)
                         blob = open(tmp.name, "rb").read()
-                    start_response(
-                        "200 OK",
-                        [
-                            ("Content-Type", "application/geopackage+sqlite3"),
-                            ("Content-Disposition",
-                             f'attachment; filename="{dataset}_{version}.gpkg"'),
-                            ("Content-Length", str(len(blob))),
-                        ],
+                    return _bytes_response(
+                        start_response,
+                        blob,
+                        "application/geopackage+sqlite3",
+                        f'attachment; filename="{dataset}_{version}.gpkg"',
                     )
-                    return [blob]
 
                 if tail == ["download", "geotiff"] and method == "GET":
                     # reference downloads.py:265-293: one raster tile by
                     # grid + tile_id + pixel_meaning; here the GeoTIFF is
                     # assembled from the tile's pixel rows on demand
                     check_query_auth(environ, params, dataset, version)
-                    import tempfile
-
                     from gfw_data_api_spark.raster.cog import tile_array, write_cog
                     from gfw_data_api_spark.raster.grid import Grid as _Grid
 
@@ -1835,22 +1544,10 @@ def create_app(
                             a.asset_type == "raster_tile_set"
                             for a in registry.assets_for(dataset, version)
                         ):
-                            return _json_response(
-                                start_response,
-                                {
-                                    "status": "failed",
-                                    "message": "This endpoint is not "
-                                    "implemented for the given dataset.",
-                                },
-                                501,
-                            )
-                        return _json_response(
-                            start_response,
-                            {
-                                "status": "failed",
-                                "message": "Dataset version does not have "
-                                f"raster tile asset with grid {grid_name}.",
-                            },
+                            raise ApiError(_NOT_IMPLEMENTED, 501)
+                        raise RegistryError(
+                            "Dataset version does not have "
+                            f"raster tile asset with grid {grid_name}.",
                             404,
                         )
                     grid_obj = _Grid.parse(
@@ -1863,14 +1560,7 @@ def create_app(
                         "tile pixel fetch", "the COG export path",
                     )
                     if not pix:
-                        return _json_response(
-                            start_response,
-                            {
-                                "status": "failed",
-                                "message": f"Tile {tile_id} not found.",
-                            },
-                            404,
-                        )
+                        raise RegistryError(f"Tile {tile_id} not found.", 404)
                     arr = tile_array(
                         [r["pixel_id"] for r in pix],
                         [r["value"] for r in pix],
@@ -1885,30 +1575,18 @@ def create_app(
                             pixel_size=grid_obj.pixel_size, nodata=0,
                         )
                         blob = open(tmp.name, "rb").read()
-                    start_response(
-                        "200 OK",
-                        [
-                            ("Content-Type", "image/tiff"),
-                            ("Content-Disposition",
-                             f'attachment; filename="{dataset}_{tile_id}.tif"'),
-                            ("Content-Length", str(len(blob))),
-                        ],
+                    return _bytes_response(
+                        start_response,
+                        blob,
+                        "image/tiff",
+                        f'attachment; filename="{dataset}_{tile_id}.tif"',
                     )
-                    return [blob]
 
                 if tail == ["download", "shp"] and method == "GET":
                     # no shapefile writer in this engine — explicit 501,
                     # matching the reference's asset-absent path
                     check_query_auth(environ, params, dataset, version)
-                    return _json_response(
-                        start_response,
-                        {
-                            "status": "failed",
-                            "message": "This endpoint is not implemented "
-                            "for the given dataset.",
-                        },
-                        501,
-                    )
+                    raise ApiError(_NOT_IMPLEMENTED, 501)
 
                 if tail[:1] == ["download"]:
                     check_query_auth(environ, params, dataset, version)
@@ -1922,29 +1600,20 @@ def create_app(
                         data = _json_rows(
                             _guard_collect(df, "download json", "downloads/csv to file")
                         )
-                        return _json_response(
-                            start_response, {"data": data, "status": "success"}
-                        )
-                    text = downloads.rows_to_csv(df)
-                    raw = text.encode()
-                    start_response(
-                        "200 OK",
-                        [
-                            ("Content-Type", "text/csv"),
-                            ("Content-Disposition", f'attachment; filename="{dataset}_{version}.csv"'),
-                            ("Content-Length", str(len(raw))),
-                        ],
+                        return _success(start_response, data)
+                    return _bytes_response(
+                        start_response,
+                        downloads.rows_to_csv(df).encode(),
+                        "text/csv",
+                        f'attachment; filename="{dataset}_{version}.csv"',
                     )
-                    return [raw]
 
-            return _json_response(
-                start_response, {"status": "failed", "message": "Not found."}, 404
-            )
+            raise ApiError("Not found.", 404)
         except QueryTimeoutError as exc:
             return _json_response(
                 start_response, {"status": "failed", "message": str(exc)}, 524
             )
-        except (QueryGuardError, RegistryError, AuthError) as exc:
+        except (QueryGuardError, RegistryError, AuthError, ApiError) as exc:
             return _json_response(
                 start_response,
                 {"status": "failed", "message": exc.detail},

@@ -255,9 +255,6 @@ class Registry:
 
     # -- assets ---------------------------------------------------------------
 
-    def asset_path(self, dataset: str, version: str, asset_type: str) -> str:
-        return os.path.join(self.warehouse, dataset, version, asset_type)
-
     def create_asset(
         self,
         dataset: str,
@@ -275,12 +272,17 @@ class Registry:
             for a in self._assets.values()
         ):
             raise RegistryError(f"Version {dataset}.{version} already has a default asset.")
+        asset_id = str(uuid.uuid4())
+        # the default asset's directory is named for its type; any other
+        # asset gets its own beside it, so a second asset of one type
+        # never overwrites or deletes the default's files
+        leaf = asset_type if is_default else asset_id
         asset = Asset(
-            asset_id=str(uuid.uuid4()),
+            asset_id=asset_id,
             dataset=dataset,
             version=version,
             asset_type=asset_type,
-            asset_uri=asset_uri or self.asset_path(dataset, version, asset_type),
+            asset_uri=asset_uri or os.path.join(self.warehouse, dataset, version, leaf),
             is_default=is_default,
             creation_options=creation_options or {},
         )

@@ -9,7 +9,7 @@ sum/group_by/filter layer lists with:
 - boolean/meaning filters: ``layer != 'false'``
 - date-range filters bound to the first date-typed layer present
 - deprecated-layer renames + ``sum(alert__count)`` → ``count(*)``
-  (applied downstream in raster/zonal.py:_rewrite_deprecated)
+  (raster/zonal.py:_rewrite_deprecated)
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from gfw_data_api_spark.catalog.registry import Registry
-from gfw_data_api_spark.raster.zonal import query_raster
+from gfw_data_api_spark.raster.zonal import _rewrite_deprecated, query_raster
 
 DATE_LAYER_MARKERS = ("__date", "__isoweek")
 
@@ -76,10 +76,7 @@ def generate_zonal_sql(
     if groups:
         sql += f" group by {groups}"
 
-    sql = sql.replace("umd_glad_alerts__isoweek", "isoweek(umd_glad_landsat_alerts__date)")
-    sql = sql.replace("umd_glad_alerts__date", "umd_glad_landsat_alerts__date")
-    sql = sql.replace("sum(alert__count)", "count(*)")
-    return sql
+    return _rewrite_deprecated(sql)
 
 
 def zonal_statistics(

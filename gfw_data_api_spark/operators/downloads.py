@@ -15,6 +15,7 @@ intersects-join into broadcast + bbox prefilter + exact UDF check.
 from __future__ import annotations
 
 import csv
+import datetime
 import io
 import json
 from typing import Any
@@ -44,6 +45,7 @@ def _cell_intersects(wkb: pd.Series, cx: pd.Series, cy: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 from gfw_data_api_spark.catalog.registry import Registry
+from gfw_data_api_spark.compat import YearMonthInterval
 from gfw_data_api_spark.operators.query import execute_on_dataframe
 
 DELIMITERS = {",": ",", "\t": "\t", "|": "|", ";": ";"}
@@ -95,24 +97,7 @@ def _guard_collect(df: DataFrame, what: str, scale_twin: str) -> list:
 def rows_to_csv(df: DataFrame, delimiter: str = ",") -> str:
     """In-memory CSV for API responses — QUOTE_NONNUMERIC like the
     reference (queries.py:528-545). For large results use write_csv."""
-    buf = io.StringIO()
-    writer = csv.writer(buf, delimiter=DELIMITERS.get(delimiter, delimiter), quoting=csv.QUOTE_NONNUMERIC)
-    writer.writerow(df.columns)
-    import datetime
-
-    from gfw_data_api_spark.compat import YearMonthInterval
-
-    def _csv_value(v):
-        if isinstance(v, (datetime.timedelta, YearMonthInterval)):
-            return _interval_to_pg_text(v)
-        if isinstance(v, (bytes, bytearray)):
-            # PG's bytea text output format: hex with the \x prefix
-            return "\\x" + bytes(v).hex()
-        return v
-
-    for row in _guard_collect(df, "rows_to_csv", "write_csv"):
-        writer.writerow([_csv_value(row[c]) for c in df.columns])
-    return buf.getvalue()
+    return rows_to_csv_rows(df.columns, _guard_collect(df, "rows_to_csv", "write_csv"), delimiter)
 
 
 def _interval_to_pg_text(td) -> str:
@@ -125,14 +110,10 @@ def _interval_to_pg_text(td) -> str:
     own rendering is ``INTERVAL '1 02:00:00' DAY TO SECOND``).
     Year-month intervals (collected via the compat shim) render as
     '1 year 2 mons'."""
-    from gfw_data_api_spark.compat import YearMonthInterval
-
     if isinstance(td, YearMonthInterval):
         return td.pg_text()
     # Integer arithmetic — td.total_seconds() goes through float64 and
     # loses microsecond exactness beyond ~2^53 us (~285 years).
-    import datetime
-
     total_us = td // datetime.timedelta(microseconds=1)
     sign = "-" if total_us < 0 else ""
     total_us = abs(total_us)
@@ -151,34 +132,27 @@ def _interval_to_pg_text(td) -> str:
     return " ".join(parts)
 
 
-def rows_to_csv_rows(columns: list[str], rows, delimiter: str = ",") -> str:
-    """CSV from already-collected rows (used with the query watchdog).
-    Interval columns (``timestamp - timestamp``) render in PG's default
-    text style so downloads stay engine-portable — Python's timedelta
-    str() ('1 day, 2:00:00') matches neither engine."""
-    import datetime
+def _pg_text(value):
+    """A collected value in PG's text output form where Python's differs:
+    bytea as ``\\x`` hex, intervals in the default IntervalStyle (Python's
+    timedelta str() '1 day, 2:00:00' matches neither engine)."""
+    if isinstance(value, (bytes, bytearray)):
+        return "\\x" + bytes(value).hex()
+    if isinstance(value, (datetime.timedelta, YearMonthInterval)):
+        return _interval_to_pg_text(value)
+    return value
 
+
+def rows_to_csv_rows(columns: list[str], rows, delimiter: str = ",") -> str:
+    """CSV from already-collected rows (used with the query watchdog),
+    values in their PG text forms so downloads stay engine-portable."""
     buf = io.StringIO()
     writer = csv.writer(
         buf, delimiter=DELIMITERS.get(delimiter, delimiter), quoting=csv.QUOTE_NONNUMERIC
     )
     writer.writerow(columns)
-    from gfw_data_api_spark.compat import YearMonthInterval
-
-    def _cv(v):
-        if isinstance(v, (datetime.timedelta, YearMonthInterval)):
-            return _interval_to_pg_text(v)
-        if isinstance(v, (bytes, bytearray)):
-            return "\\x" + bytes(v).hex()  # PG bytea text output
-        return v
-
     for row in rows:
-        writer.writerow(
-            [
-                _cv(row[c])
-                for c in columns
-            ]
-        )
+        writer.writerow([_pg_text(row[c]) for c in columns])
     return buf.getvalue()
 
 

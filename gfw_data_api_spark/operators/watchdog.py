@@ -16,6 +16,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gfw_data_api_spark.operators.downloads import _guard_collect
+
 DEFAULT_QUERY_TIMEOUT_S = 58.0
 
 
@@ -41,20 +43,10 @@ def collect_with_timeout(
         # job group is thread-local: set it in the collecting thread
         sc.setJobGroup(group, "guarded query (watchdog)", interruptOnCancel=True)
         try:
-            # API response path — LIMIT-bounded in practice; cap like
-            # rows_to_csv so a misuse OOMs loudly, not silently (the
-            # distributed write_csv / export_ndjson_features twins are
-            # the scale path)
-            from gfw_data_api_spark.operators.downloads import MAX_COLLECT_ROWS
-
-            rows = df.limit(MAX_COLLECT_ROWS + 1).collect()
-            if len(rows) > MAX_COLLECT_ROWS:
-                raise ValueError(
-                    f"collect_with_timeout: result exceeds {MAX_COLLECT_ROWS} "
-                    "rows; the watchdog serves LIMIT-bounded API results — "
-                    "use write_csv / export_ndjson_features for large exports"
-                )
-            outcome["rows"] = rows
+            # API response path: capped like every in-memory response
+            outcome["rows"] = _guard_collect(
+                df, "collect_with_timeout", "write_csv / export_ndjson_features"
+            )
         except Exception as exc:  # noqa: BLE001 — surfaced to caller below
             outcome["error"] = exc
         finally:

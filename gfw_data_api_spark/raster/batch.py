@@ -39,9 +39,36 @@ from gfw_data_api_spark.raster.grid import Grid
 from gfw_data_api_spark.raster.layers import default_layer_name
 from gfw_data_api_spark.raster.zonal import _referenced_layers, _rewrite_deprecated, assemble_pixels
 from gfw_data_api_spark.sql.dialect import require_ansi, to_spark_sql
-from gfw_data_api_spark.sql.guard import bind_from, validate_sql
+from gfw_data_api_spark.sql.guard import (
+    QueryGuardError,
+    ValidatedQuery,
+    bind_from,
+    validate_sql,
+)
 
 MAX_BATCH_FEATURES = 100  # parity with the reference's fan-out cap
+
+
+def _refuse_cross_feature(validated: ValidatedQuery) -> None:
+    """422 for the shapes one statement over every feature cannot answer
+    per feature: a subquery over the table ranges over all features'
+    pixels, and a top-level LIMIT, OFFSET or FETCH cuts across features."""
+    if validated.nested_from_spans:
+        raise QueryGuardError(
+            "Batch queries cannot use a subquery over the table: it would "
+            "range over every feature's pixels, not one feature's.",
+            422,
+        )
+    depth = 0
+    for tok in validated.tokens:
+        if tok.kind == "PUNCT":
+            depth += {"(": 1, ")": -1}.get(tok.value, 0)
+        elif depth == 0 and tok.kind == "IDENT" and tok.upper in ("LIMIT", "OFFSET", "FETCH"):
+            raise QueryGuardError(
+                f"Batch queries cannot use {tok.upper}: it would apply across "
+                "all features, not to each feature.",
+                422,
+            )
 
 
 def batch_query(
@@ -70,6 +97,7 @@ def batch_query(
     sql = _rewrite_deprecated(sql)
     sql = re.sub(r"isoweek\(", "weekofyear(", sql)
     validated = validate_sql(sql)
+    _refuse_cross_feature(validated)
     needed = _referenced_layers(validated.sql, env)
     if base_layer not in needed:
         needed.append(base_layer)
@@ -149,8 +177,15 @@ def batch_query(
         # (queries.py:586-597), not Postgres typed division. See
         # docs/PARITY.md 'typed semantics' + the r13 gate.
         bound = to_spark_sql(bound, column_types=None)
-        # inject feature_id into SELECT and GROUP BY
-        bound = re.sub(r"(?i)^select\s", "SELECT feature_id, ", bound, count=1)
+        # inject feature_id into SELECT (after a DISTINCT, which then
+        # applies per feature) and GROUP BY
+        second = validated.tokens[1]
+        if second.kind == "IDENT" and second.upper == "DISTINCT":
+            bound = re.sub(
+                r"(?i)^select\s+distinct\s", "SELECT DISTINCT feature_id, ", bound, count=1
+            )
+        else:
+            bound = re.sub(r"(?i)^select\s", "SELECT feature_id, ", bound, count=1)
         if re.search(r"(?i)\bgroup\s+by\b", bound):
             bound = re.sub(r"(?i)\bgroup\s+by\b", "GROUP BY feature_id, ", bound, count=1)
         elif re.search(r"(?i)\b(sum|count|avg|min|max)\s*\(", bound):

@@ -134,3 +134,47 @@ def test_batch_query_aggregate_with_order_by(spark, registry):
     )
     assert failed == []
     assert {r["feature_id"] for r in result.collect()} == {0, 1}
+
+
+BATCH_FEATURES = [
+    {"type": "Polygon", "coordinates": [[[10.0, 0.0], [10.3, 0.0], [10.3, 0.3], [10.0, 0.3], [10.0, 0.0]]]},
+    {"type": "Polygon", "coordinates": [[[10.2, 0.2], [10.8, 0.2], [10.8, 0.8], [10.2, 0.8], [10.2, 0.2]]]},
+]
+
+
+def test_batch_query_distinct_is_per_feature(spark, registry):
+    """DISTINCT applies within each feature: the batch equals N single
+    queries."""
+    from gfw_data_api_spark.raster.zonal import query_raster
+
+    sql = "SELECT DISTINCT umd_tree_cover_loss__year AS yr FROM data"
+    batch, failed = batch_query(spark, registry, "umd_tree_cover_loss", "v1", sql, BATCH_FEATURES)
+    assert failed == []
+    per_feature: dict[int, list] = {}
+    for r in batch.collect():
+        per_feature.setdefault(r["feature_id"], []).append(r["yr"])
+    for idx, feature in enumerate(BATCH_FEATURES):
+        single = query_raster(spark, registry, "umd_tree_cover_loss", "v1", sql, feature)
+        assert sorted(per_feature[idx]) == sorted(r["yr"] for r in single.collect())
+
+
+@pytest.mark.parametrize(
+    "sql, reason",
+    [
+        ("SELECT umd_tree_cover_loss__year FROM data LIMIT 3", "LIMIT"),
+        ("SELECT count(*) AS n FROM data ORDER BY n OFFSET 1", "OFFSET"),
+        (
+            "SELECT umd_tree_cover_loss__year FROM data WHERE umd_tree_cover_loss__year = "
+            "(SELECT max(umd_tree_cover_loss__year) FROM data)",
+            "subquery",
+        ),
+    ],
+)
+def test_batch_query_refuses_cross_feature_shapes(spark, registry, sql, reason):
+    """A top-level LIMIT/OFFSET or a subquery over the table would range
+    across features, so the batch refuses it with a 422 naming why."""
+    from gfw_data_api_spark.sql.guard import QueryGuardError
+
+    with pytest.raises(QueryGuardError, match=reason) as err:
+        batch_query(spark, registry, "umd_tree_cover_loss", "v1", sql, BATCH_FEATURES)
+    assert err.value.status_code == 422

@@ -20,8 +20,11 @@ pytestmark = pytest.mark.usefixtures("catalog_schema_check")
 
 
 def call(app, method, path, query="", body=None, headers=None):
-    """Minimal WSGI client."""
-    raw = json.dumps(body).encode() if body is not None else b""
+    """Minimal WSGI client; a ``bytes`` body is sent as it is."""
+    if isinstance(body, bytes):
+        raw = body
+    else:
+        raw = json.dumps(body).encode() if body is not None else b""
     environ = {
         "REQUEST_METHOD": method,
         "PATH_INFO": path,
@@ -35,10 +38,12 @@ def call(app, method, path, query="", body=None, headers=None):
 
     def start_response(status, headers):
         captured["status"] = int(status.split()[0])
+        captured["status_line"] = status
         captured["headers"] = dict(headers)
 
     chunks = app(environ, start_response)
     payload = b"".join(chunks)
+    captured["raw"] = payload
     try:
         captured["body"] = json.loads(payload)
     except ValueError:
@@ -1383,3 +1388,94 @@ def test_interval_column_renders_pg_style(app):
     assert out["status"] == 200
     lines = out["body"].strip().splitlines()
     assert lines[1] == '"2 days 02:00:00","-1 days -02:00:00","02:15:00"'
+
+
+SQUARE = {
+    "type": "Polygon",
+    "coordinates": [[[10.1, 0.1], [10.4, 0.1], [10.4, 0.4], [10.1, 0.4], [10.1, 0.1]]],
+}
+
+
+@pytest.mark.parametrize(
+    "method, path, body, status, message",
+    [
+        ("POST", "/geostore", b"{not json", 400, "Invalid JSON body."),
+        ("PUT", "/task/t-without-asset", {}, 400, "asset_id is required."),
+        ("GET", "/job/no-such-job", None, 404, "Job not found."),
+        ("GET", "/nope", None, 404, "Not found."),
+        (
+            "DELETE",
+            "/dataset/nasa_viirs_fire_alerts/v2024/assets/{asset_id}/metadata",
+            None,
+            405,
+            "Method not allowed.",
+        ),
+        (
+            "POST",
+            "/datamart/tree_cover_loss_by_driver",
+            {"geometry": SQUARE, "canopy_cover": 30},
+            409,
+            "already exists with those parameters.",
+        ),
+        (
+            "GET",
+            "/dataset/nasa_viirs_fire_alerts/v2024/download/shp",
+            None,
+            501,
+            "This endpoint is not implemented for the given dataset.",
+        ),
+        ("POST", "/auth/sign-up", {"name": "n", "email": "e"}, 501, "no rw_api client"),
+    ],
+)
+def test_failures_share_one_envelope(app, spark, tmp_path, method, path, body, status, message):
+    """Every refused request answers with the same JSON failure envelope,
+    its status code and the code's standard reason phrase."""
+    from http import HTTPStatus
+
+    target = app
+    if status == 409:
+        # a repeated datamart POST; on an empty catalog so the first
+        # POST's background compute fails at once
+        target = create_app(spark, Registry(str(tmp_path / "catalog")))
+        assert call(target, method, path, body=body)["status"] == 202
+    asset_id = app._registry.get_default_asset("nasa_viirs_fire_alerts", "v2024").asset_id
+    out = call(target, method, path.format(asset_id=asset_id), body=body)
+    assert out["status"] == status, out["body"]
+    assert out["status_line"] == f"{status} {HTTPStatus(status).phrase}"
+    assert out["headers"]["Content-Type"] == "application/json"
+    assert out["headers"]["Content-Length"] == str(len(out["raw"]))
+    assert set(out["body"]) == {"status", "message"}
+    assert out["body"]["status"] == "failed"
+    assert message in out["body"]["message"]
+
+
+def test_byte_responses_carry_length_and_disposition(app, spark):
+    """A CSV download, a tile and a GeoTIFF each state their exact length
+    and, for files, the attachment name."""
+    downloads = [
+        (
+            "/dataset/nasa_viirs_fire_alerts/v2024/download/csv",
+            "",
+            "text/csv",
+            'attachment; filename="nasa_viirs_fire_alerts_v2024.csv"',
+        ),
+        (
+            "/dataset/umd_tree_cover_loss/v1/download/geotiff",
+            "grid=1%2F50&tile_id=01N_010E&pixel_meaning=year",
+            "image/tiff",
+            'attachment; filename="umd_tree_cover_loss_01N_010E.tif"',
+        ),
+    ]
+    cache = next(
+        a for a in app._registry.assets_for("umd_tree_cover_loss", "v1")
+        if a.asset_type == "raster_tile_cache"
+    )
+    z, x, y = spark.read.parquet(cache.asset_uri).select("z", "x", "y").first()
+    tile = f"/dataset/umd_tree_cover_loss/v1/tile/{z}/{x}/{y}.png"
+    downloads.append((tile, "", "image/png", None))
+    for path, query, content_type, disposition in downloads:
+        out = call(app, "GET", path, query=query)
+        assert out["status_line"] == "200 OK", path
+        assert out["headers"]["Content-Type"] == content_type
+        assert out["headers"]["Content-Length"] == str(len(out["raw"])) != "0"
+        assert out["headers"].get("Content-Disposition") == disposition

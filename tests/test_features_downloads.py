@@ -419,6 +419,32 @@ def test_export_version_registers_assets(spark, vector_registry):
     assert {"geo_database_table", "ndjson", "csv"} <= types
 
 
+def test_two_exports_of_one_format_keep_their_own_files(spark, vector_registry):
+    """Each non-default export writes its own directory: a second CSV
+    export neither overwrites the first nor takes it along on delete."""
+    from gfw_data_api_spark.sources.pipeline import export_version
+
+    first = export_version(
+        vector_registry, spark, "areas", "v1", fmt="csv", sql="SELECT fid FROM data WHERE fid < 3"
+    )
+    second = export_version(
+        vector_registry, spark, "areas", "v1", fmt="csv", sql="SELECT fid FROM data WHERE fid < 7"
+    )
+    assert first.asset_uri != second.asset_uri
+
+    def count(asset):
+        return spark.read.option("header", True).csv(asset.asset_uri).count()
+
+    assert (count(first), count(second)) == (3, 7)
+    vector_registry.delete_asset(second.asset_id)
+    assert count(first) == 3
+    default = vector_registry.get_default_asset("areas", "v1")
+    assert default.asset_uri == os.path.join(
+        vector_registry.warehouse, "areas", "v1", default.asset_type
+    )
+    vector_registry.delete_asset(first.asset_id)
+
+
 def test_failed_export_fails_its_asset(spark, vector_registry, monkeypatch):
     from gfw_data_api_spark.sources.pipeline import export_version
 

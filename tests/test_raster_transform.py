@@ -66,7 +66,7 @@ def test_failed_raster_writes_fail_their_asset(spark, registry, base_arrays, mon
     extra = [a for a in registry.assets_for("layer_a", "v1") if not a.is_default]
     assert [a.status for a in extra] == ["failed"]
     assert registry.get_version("layer_a", "v1").status == "saved"
-    registry.delete_asset(extra[0].asset_id, remove_files=False)  # its uri is the default's
+    registry.delete_asset(extra[0].asset_id)
 
     monkeypatch.setattr(pixels_mod, "write_tile_set", broken_write)
     uri_a = registry.get_default_asset("layer_a", "v1").asset_uri
@@ -77,6 +77,23 @@ def test_failed_raster_writes_fail_their_asset(spark, registry, base_arrays, mon
         )
     asset = registry.get_default_asset("broken_calc", "v1")
     assert (asset.status, registry.get_version("broken_calc", "v1").status) == ("failed", "failed")
+
+
+def test_extra_tile_set_keeps_its_own_files(spark, registry, base_arrays):
+    """A second tile set in a version writes beside the default, never
+    over it, and deleting it leaves the default's pixels readable."""
+    default = registry.get_default_asset("layer_a", "v1")
+    before = sorted(r["value"] for r in registry.load(spark, asset=default).collect())
+    ingest_raster_tiles(
+        registry, spark, "layer_a", "v1", GRID, "gross", {TILE: base_arrays[1]}, no_data=None
+    )
+    (extra,) = [a for a in registry.assets_for("layer_a", "v1") if not a.is_default]
+    assert extra.asset_uri != default.asset_uri
+    assert not extra.asset_uri.startswith(default.asset_uri + "/")
+    assert spark.read.parquet(extra.asset_uri).agg(F.max("value")).first()[0] <= 10
+    registry.delete_asset(extra.asset_id)
+    after = sorted(r["value"] for r in registry.load(spark, asset=default).collect())
+    assert after == before
 
 
 def test_downsample_average(spark, registry, base_arrays):
