@@ -1325,7 +1325,7 @@ def create_app(
                     # list (raster/batch.py) in a daemon thread — the
                     # Step Functions map collapses into one tile-pruned
                     # plan, the scale-right shape.
-                    from gfw_data_api_spark.raster.batch import batch_query
+                    from gfw_data_api_spark.raster.batch import batch_query, validate_batch_sql
 
                     asset = registry.get_default_asset(dataset, version)
                     if asset.asset_type != "raster_tile_set":
@@ -1347,6 +1347,9 @@ def create_app(
                             "collection, URI, or geostore_ids list.",
                             400,
                         )
+                    sql = body["sql"]
+                    # a refused statement answers 400/422 here; no job is queued
+                    validate_batch_sql(sql)
                     if feature_collection is not None:
                         for feat in feature_collection.get("features", []):
                             gtype = (feat.get("geometry") or {}).get("type")
@@ -1373,7 +1376,6 @@ def create_app(
                             feat.get("geometry") or {}
                             for feat in fc.get("features", [])
                         ]
-                    sql = body["sql"]
 
                     def run_batch(geoms=geometries, q=sql):
                         result_df, failed = batch_query(

@@ -13,8 +13,9 @@ independent queries, ONE job —
    it (broadcast feature list, bbox prefilter per feature, exact
    point-in-polygon per surviving candidate — a pixel in k overlapping
    features yields k tagged rows, matching per-feature semantics),
-3. the user SQL runs once with ``feature_id`` appended to SELECT and
-   GROUP BY; results split per feature at the end.
+3. the user SQL runs once with ``feature_id`` added wherever a clause
+   would otherwise range over every feature (:func:`_per_feature`);
+   results split per feature at the end.
 
 Failed/invalid geometries are reported per feature like the reference's
 failed-geometries list.
@@ -45,8 +46,20 @@ from gfw_data_api_spark.sql.guard import (
     bind_from,
     validate_sql,
 )
+from gfw_data_api_spark.sql.tokenizer import tokenize
 
 MAX_BATCH_FEATURES = 100  # parity with the reference's fan-out cap
+
+# PG aggregates: a call to one that is not a window makes the statement
+# an aggregate, which then needs ``GROUP BY feature_id``
+_AGGREGATES = frozenset(
+    {
+        "AVG", "COUNT", "MAX", "MIN", "SUM", "ARRAY_AGG", "STRING_AGG", "JSON_AGG",
+        "BOOL_AND", "BOOL_OR", "EVERY", "BIT_AND", "BIT_OR", "STDDEV", "STDDEV_POP",
+        "STDDEV_SAMP", "VARIANCE", "VAR_POP", "VAR_SAMP", "CORR", "COVAR_POP",
+        "COVAR_SAMP", "MODE", "PERCENTILE_CONT", "PERCENTILE_DISC",
+    }
+)
 
 
 def _refuse_cross_feature(validated: ValidatedQuery) -> None:
@@ -69,6 +82,18 @@ def _refuse_cross_feature(validated: ValidatedQuery) -> None:
                 "all features, not to each feature.",
                 422,
             )
+
+
+def validate_batch_sql(sql: str) -> ValidatedQuery:
+    """Every check a batch statement gets before it runs: the deprecated
+    layer names rewritten, the guard, and the cross-feature refusals. The
+    route calls it before it queues a job, so a refused statement is a
+    synchronous 400/422, not a failed job."""
+    sql = _rewrite_deprecated(sql)
+    sql = re.sub(r"isoweek\(", "weekofyear(", sql)
+    validated = validate_sql(sql)
+    _refuse_cross_feature(validated)
+    return validated
 
 
 def batch_query(
@@ -94,10 +119,7 @@ def batch_query(
     base_layer = default_layer_name(dataset, asset.creation_options["pixel_meaning"])
     env = build_data_environment(registry, grid, version_overrides)
 
-    sql = _rewrite_deprecated(sql)
-    sql = re.sub(r"isoweek\(", "weekofyear(", sql)
-    validated = validate_sql(sql)
-    _refuse_cross_feature(validated)
+    validated = validate_batch_sql(sql)
     needed = _referenced_layers(validated.sql, env)
     if base_layer not in needed:
         needed.append(base_layer)
@@ -171,35 +193,128 @@ def batch_query(
     view = f"gfw_batch_{uuid.uuid4().hex}"
     tagged.createOrReplaceTempView(view)
     try:
-        bound = bind_from(validated, view)
+        bound = _per_feature(bind_from(validated, view))
         # DELIBERATELY type-blind, same as zonal.query_raster: raster SQL
         # matches the reference's NumPy Lambda float semantics
         # (queries.py:586-597), not Postgres typed division. See
         # docs/PARITY.md 'typed semantics' + the r13 gate.
         bound = to_spark_sql(bound, column_types=None)
-        # inject feature_id into SELECT (after a DISTINCT, which then
-        # applies per feature) and GROUP BY
-        second = validated.tokens[1]
-        if second.kind == "IDENT" and second.upper == "DISTINCT":
-            bound = re.sub(
-                r"(?i)^select\s+distinct\s", "SELECT DISTINCT feature_id, ", bound, count=1
-            )
-        else:
-            bound = re.sub(r"(?i)^select\s", "SELECT feature_id, ", bound, count=1)
-        if re.search(r"(?i)\bgroup\s+by\b", bound):
-            bound = re.sub(r"(?i)\bgroup\s+by\b", "GROUP BY feature_id, ", bound, count=1)
-        elif re.search(r"(?i)\b(sum|count|avg|min|max)\s*\(", bound):
-            # a bare aggregate needs GROUP BY feature_id — inserted BEFORE
-            # any ORDER BY / LIMIT / OFFSET tail
-            tail = re.search(r"(?i)\b(ORDER\s+BY|LIMIT|OFFSET)\b", bound)
-            if tail:
-                pos = tail.start()
-                bound = bound[:pos] + "GROUP BY feature_id " + bound[pos:]
-            else:
-                bound += " GROUP BY feature_id"
         require_ansi(spark)
         result = spark.sql(bound)
         result.schema  # analyze while the view exists
         return result, failed
     finally:
         spark.catalog.dropTempView(view)
+
+
+def _close_paren(tokens, i: int) -> int:
+    """Index of the ``)`` matching the ``(`` at ``i`` (the last token if
+    it is unbalanced; Spark then reports the syntax error)."""
+    depth = 0
+    for j in range(i, len(tokens)):
+        if tokens[j].kind == "PUNCT":
+            depth += {"(": 1, ")": -1}.get(tokens[j].value, 0)
+            if depth == 0:
+                return j
+    return len(tokens) - 1
+
+
+def _is_word(tokens, i: int, word: str) -> bool:
+    return i < len(tokens) and tokens[i].kind == "IDENT" and tokens[i].upper == word
+
+
+def _is_window_call(tokens, open_paren: int) -> bool:
+    """Whether the call whose argument list opens at ``open_paren`` is a
+    window call: its ``)``, an optional ``FILTER (...)``, then ``OVER``."""
+    end = _close_paren(tokens, open_paren) + 1
+    if _is_word(tokens, end, "FILTER") and end + 1 < len(tokens) and tokens[end + 1].value == "(":
+        end = _close_paren(tokens, end + 1) + 1
+    return _is_word(tokens, end, "OVER")
+
+
+def _per_feature(sql: str) -> str:
+    """``sql`` (PG text over the tagged view) with ``feature_id`` added
+    wherever a clause would otherwise range over every feature, found by
+    one token walk that tracks bracket depth:
+
+    - the end of the top-level select list, unless it ends in a star
+      (so ordinals keep their positions, and a DISTINCT applies per
+      feature);
+    - the head of a ``DISTINCT ON`` key list and of the top-level
+      ORDER BY, which PG requires to start with those keys;
+    - the head of a top-level GROUP BY, or a new ``GROUP BY feature_id``
+      before the top-level tail when the statement aggregates (a
+      non-window aggregate call, or HAVING) without one;
+    - ``PARTITION BY`` of every window: an ``OVER (...)`` spec or a
+      definition in the WINDOW clause; an ``OVER (w ...)`` that names a
+      window inherits the partition of its definition.
+    """
+    tokens = tokenize(sql)
+    distinct_on = (
+        _is_word(tokens, 1, "DISTINCT")
+        and _is_word(tokens, 2, "ON")
+        and len(tokens) > 3
+        and tokens[3].value == "("
+    )
+    inserts: list[tuple[int, str]] = []
+    if distinct_on:
+        inserts.append((tokens[3].end, "feature_id, "))
+    depth = 0
+    seen_from = has_group_by = aggregates = in_window_clause = False
+    tail_start = len(sql)
+    for i, tok in enumerate(tokens):
+        prev = tokens[i - 1] if i else None
+        if tok.kind == "PUNCT":
+            if tok.value == "(":
+                if _is_word(tokens, i - 1, "OVER") or (in_window_clause and depth == 0):
+                    if not _names_window(tokens, i + 1):
+                        inserts.append(_window_partition(tokens, i))
+                elif prev is not None and prev.kind == "IDENT" and prev.upper in _AGGREGATES:
+                    aggregates = aggregates or not _is_window_call(tokens, i)
+                depth += 1
+            elif tok.value == ")":
+                depth -= 1
+            continue
+        if depth or tok.kind != "IDENT":
+            continue
+        word = tok.upper
+        if word == "FROM" and not seen_from:
+            seen_from = True
+            if prev.value != "*":  # a star already expands to feature_id
+                inserts.append((prev.end, ", feature_id"))
+        elif not seen_from:
+            continue
+        elif word == "BY" and prev.upper == "GROUP":
+            has_group_by = True
+            inserts.append((tok.end, " feature_id,"))
+        elif word == "BY" and prev.upper == "ORDER" and distinct_on:
+            inserts.append((tok.end, " feature_id,"))
+        elif word in ("HAVING", "WINDOW", "ORDER") and tail_start == len(sql):
+            tail_start = tok.start
+        if word == "HAVING":
+            aggregates = True
+        in_window_clause = word == "WINDOW" or (in_window_clause and word != "ORDER")
+    if aggregates and not has_group_by:
+        at_end = tail_start == len(sql)
+        inserts.append((tail_start, " GROUP BY feature_id" if at_end else "GROUP BY feature_id "))
+    for pos, text in sorted(inserts, reverse=True):
+        sql = sql[:pos] + text + sql[pos:]
+    return sql
+
+
+def _names_window(tokens, i: int) -> bool:
+    """Whether a window spec's first token ``tokens[i]`` names another
+    window, whose definition then carries the partition."""
+    return (
+        i < len(tokens)
+        and tokens[i].kind in ("IDENT", "QIDENT")
+        and tokens[i].upper not in ("PARTITION", "ORDER", "ROWS", "RANGE", "GROUPS")
+    )
+
+
+def _window_partition(tokens, open_paren: int) -> tuple[int, str]:
+    """The insert that partitions the window spec opening at
+    ``open_paren`` by feature."""
+    if _is_word(tokens, open_paren + 1, "PARTITION"):
+        return tokens[open_paren + 2].end, " feature_id,"
+    return tokens[open_paren].end, "PARTITION BY feature_id "

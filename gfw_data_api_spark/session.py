@@ -14,6 +14,11 @@ master/memory sizing changes. Notes on the choices:
 - Broadcast threshold stays at the 10 MB default; dimension tables
   (region/nation/grid cells/registry) broadcast automatically, and we add
   explicit ``F.broadcast`` hints where the optimizer can't know sizes.
+- Python workers start through :mod:`gfw_data_api_spark.worker_daemon`:
+  PySpark's worker invalidates import caches at every task, and before
+  Python 3.12 that re-reads ``pyspark.zip`` and the ``spark-core`` jar
+  (160–280 ms per Python-UDF task on 4 cores). The daemon makes the
+  re-read conditional on the archive changing on disk.
 """
 
 from __future__ import annotations
@@ -66,6 +71,7 @@ def get_spark(
         # the JVM parquet reader does not support natively; read as long and
         # convert (see sources.tabular.load_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "gfw_data_api_spark.worker_daemon")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -178,3 +178,39 @@ def test_batch_query_refuses_cross_feature_shapes(spark, registry, sql, reason):
     with pytest.raises(QueryGuardError, match=reason) as err:
         batch_query(spark, registry, "umd_tree_cover_loss", "v1", sql, BATCH_FEATURES)
     assert err.value.status_code == 422
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        # an ORDER BY inside a window is not the statement's tail
+        "SELECT umd_tree_cover_loss__year AS yr, count(*) OVER "
+        "(ORDER BY umd_tree_cover_loss__year) AS n FROM data",
+        # DISTINCT ON keeps one row per key within each feature
+        "SELECT DISTINCT ON (umd_tree_cover_loss__year) umd_tree_cover_loss__year AS yr, "
+        "umd_tree_cover_density_2000__threshold AS t FROM data "
+        "ORDER BY umd_tree_cover_loss__year, umd_tree_cover_density_2000__threshold DESC",
+        # ordinals keep their select-list positions; HAVING stays after GROUP BY
+        "SELECT umd_tree_cover_loss__year AS yr, count(*) AS n FROM data "
+        "GROUP BY 1 HAVING count(*) > 1 ORDER BY 1",
+        # a star already carries feature_id, once
+        "SELECT * FROM data",
+    ],
+    ids=["window-order-by", "distinct-on", "group-by-ordinal", "star"],
+)
+def test_batch_query_top_level_injection_matches_single_queries(spark, registry, sql):
+    """``feature_id`` lands in the statement's own clauses only, so the
+    batch equals one query_raster run per feature."""
+    from gfw_data_api_spark.raster.zonal import query_raster
+
+    batch, failed = batch_query(spark, registry, "umd_tree_cover_loss", "v1", sql, BATCH_FEATURES)
+    assert failed == []
+    per_feature: dict[int, list] = {}
+    for r in batch.collect():
+        row = r.asDict()
+        per_feature.setdefault(row.pop("feature_id"), []).append(tuple(row.values()))
+    for idx, feature in enumerate(BATCH_FEATURES):
+        single = query_raster(spark, registry, "umd_tree_cover_loss", "v1", sql, feature)
+        expected = sorted(tuple(r) for r in single.collect())
+        assert expected, "the probe feature must cover pixels"
+        assert sorted(per_feature[idx]) == expected

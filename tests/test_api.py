@@ -283,6 +283,37 @@ def test_batch_query_on_table_dataset_400(app):
     assert "raster tile sets" in out["body"]["message"]
 
 
+@pytest.mark.parametrize(
+    "sql, status, reason",
+    [
+        ("SELECT umd_tree_cover_loss__year FROM data LIMIT 3", 422, "LIMIT"),
+        (
+            "SELECT umd_tree_cover_loss__year FROM data WHERE umd_tree_cover_loss__year = "
+            "(SELECT max(umd_tree_cover_loss__year) FROM data)",
+            422,
+            "subquery",
+        ),
+        ("SELEC count(*) FROM data", 400, "syntax error"),
+        ("SELECT count(*) FROM data; SELECT 1 FROM data", 400, "exactly one SQL statement"),
+    ],
+)
+def test_batch_query_refused_statement_queues_no_job(app, monkeypatch, sql, status, reason):
+    """A statement the batch refuses gets its 400/422 from the POST
+    itself, as a single query does, and no job is queued."""
+    from gfw_data_api_spark.operators.jobs import JobRegistry
+
+    submitted = []
+    monkeypatch.setattr(JobRegistry, "submit", lambda self, *a, **k: submitted.append(a))
+    fc = {"features": [{"type": "Feature", "geometry": POLY1}]}
+    out = call(
+        app, "POST", "/dataset/umd_tree_cover_loss/v1/query/batch",
+        body={"sql": sql, "feature_collection": fc},
+    )
+    assert out["status"] == status
+    assert reason in out["body"]["message"]
+    assert submitted == []
+
+
 def test_unknown_job_404(app):
     out = call(app, "GET", "/job/no-such-job")
     assert out["status"] == 404
