@@ -58,18 +58,16 @@ FEATURE_COLS = [
 ]
 
 
-def featurize(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def featurize(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach FEATURE_COLS (all native expressions) + an MLlib vector.
 
     ONE narrow map over the corpus: ``quality_signals``' ratios and the
     Gopher repetition fractions are all per-row expressions (the
     fractions inline ``text._max_multiplicity`` — the same sorted-array
     fold ``repetition_signals`` uses — instead of computing that
-    DataFrame and joining it back on ``id_col``, which made corpus-scale
-    scoring pay a corpus-scale shuffle). NULL-text rows keep the old
-    join-miss semantics: both fractions coalesce to 0.0.
+    DataFrame and joining it back on the document id, which made
+    corpus-scale scoring pay a corpus-scale shuffle). NULL-text rows
+    keep the old join-miss semantics: both fractions coalesce to 0.0.
     """
     from pyspark.ml.feature import VectorAssembler
 
@@ -120,7 +118,6 @@ def train_quality_classifier(
     labeled: DataFrame,
     label_col: str = "label",
     text_col: str = "text",
-    id_col: str = "doc_id",
     reg_param: float = 0.01,
     max_iter: int = 50,
 ):
@@ -131,7 +128,7 @@ def train_quality_classifier(
     """
     from pyspark.ml.classification import LogisticRegression
 
-    feats = featurize(labeled, text_col, id_col)
+    feats = featurize(labeled, text_col)
     lr = LogisticRegression(
         featuresCol="features",
         labelCol=label_col,
@@ -146,13 +143,12 @@ def score_quality(
     model,
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     out_col: str = "quality_prob",
 ) -> DataFrame:
     """P(good) per document; JVM-side end to end."""
     from pyspark.ml.functions import vector_to_array
 
-    scored = model.transform(featurize(df, text_col, id_col))
+    scored = model.transform(featurize(df, text_col))
     return scored.withColumn(
         out_col, vector_to_array(F.col("probability")).getItem(1)
     ).drop("features", "rawPrediction", "probability", "prediction")
@@ -163,11 +159,10 @@ def filter_by_quality(
     df: DataFrame,
     threshold: float = 0.5,
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Keep documents the model scores at or above ``threshold``."""
     return (
-        score_quality(model, df, text_col, id_col)
+        score_quality(model, df, text_col)
         .filter(F.col("quality_prob") >= threshold)
         .drop("quality_prob")
     )

@@ -98,9 +98,7 @@ def execute_on_dataframe(
         # the same type knowledge the reference's Postgres evaluator has
         spark_sql = to_spark_sql(bound, column_types=schema_type_categories(df.schema))
         require_ansi(spark)
-        result = spark.sql(spark_sql)
-        # force analysis while the view exists; execution stays lazy
-        result.schema
-        return result
+        # spark.sql analyzes eagerly, so the view may go once it returns
+        return spark.sql(spark_sql)
     finally:
         spark.catalog.dropTempView(view)

@@ -23,7 +23,6 @@ failed-geometries list.
 
 from __future__ import annotations
 
-import re
 import uuid
 from typing import Any
 
@@ -38,14 +37,9 @@ from gfw_data_api_spark.functions import geometry as geo
 from gfw_data_api_spark.raster.data_environment import build_data_environment
 from gfw_data_api_spark.raster.grid import Grid
 from gfw_data_api_spark.raster.layers import default_layer_name
-from gfw_data_api_spark.raster.zonal import _referenced_layers, _rewrite_deprecated, assemble_pixels
+from gfw_data_api_spark.raster.zonal import _referenced_layers, assemble_pixels, validate_raster_sql
 from gfw_data_api_spark.sql.dialect import require_ansi, to_spark_sql
-from gfw_data_api_spark.sql.guard import (
-    QueryGuardError,
-    ValidatedQuery,
-    bind_from,
-    validate_sql,
-)
+from gfw_data_api_spark.sql.guard import QueryGuardError, ValidatedQuery, bind_from
 from gfw_data_api_spark.sql.tokenizer import tokenize
 
 MAX_BATCH_FEATURES = 100  # parity with the reference's fan-out cap
@@ -89,9 +83,7 @@ def validate_batch_sql(sql: str) -> ValidatedQuery:
     layer names rewritten, the guard, and the cross-feature refusals. The
     route calls it before it queues a job, so a refused statement is a
     synchronous 400/422, not a failed job."""
-    sql = _rewrite_deprecated(sql)
-    sql = re.sub(r"isoweek\(", "weekofyear(", sql)
-    validated = validate_sql(sql)
+    validated = validate_raster_sql(sql)
     _refuse_cross_feature(validated)
     return validated
 
@@ -134,24 +126,12 @@ def batch_query(
 
     # union geometry bbox for tile pruning across ALL features at once
     boxes = [geo.bbox(g) for _, g in valid]
-    union_bbox = (
+    union_geom = geo.make_envelope(
         min(b[0] for b in boxes),
         min(b[1] for b in boxes),
         max(b[2] for b in boxes),
         max(b[3] for b in boxes),
     )
-    union_geom = {
-        "type": "Polygon",
-        "coordinates": [
-            [
-                [union_bbox[0], union_bbox[1]],
-                [union_bbox[2], union_bbox[1]],
-                [union_bbox[2], union_bbox[3]],
-                [union_bbox[0], union_bbox[3]],
-                [union_bbox[0], union_bbox[1]],
-            ]
-        ],
-    }
     # assemble once over the union extent (no per-feature mask yet)
     pixels = assemble_pixels(spark, env, base_layer, needed, geometry=union_geom)
 
@@ -200,9 +180,7 @@ def batch_query(
         # docs/PARITY.md 'typed semantics' + the r13 gate.
         bound = to_spark_sql(bound, column_types=None)
         require_ansi(spark)
-        result = spark.sql(bound)
-        result.schema  # analyze while the view exists
-        return result, failed
+        return spark.sql(bound), failed
     finally:
         spark.catalog.dropTempView(view)
 

@@ -46,7 +46,7 @@ from gfw_data_api_spark.raster.layers import (
 )
 from gfw_data_api_spark.raster.pixels import with_pixel_coordinates
 from gfw_data_api_spark.sql.dialect import require_ansi, to_spark_sql
-from gfw_data_api_spark.sql.guard import QueryGuardError, bind_from, validate_sql
+from gfw_data_api_spark.sql.guard import QueryGuardError, ValidatedQuery, bind_from, validate_sql
 
 # default OTF area cap, hectares (app/settings/globals.py:157-160)
 GEOSTORE_SIZE_LIMIT_OTF = 1_000_000_000.0
@@ -89,6 +89,13 @@ def _rewrite_deprecated(sql: str) -> str:
     sql = sql.replace("umd_glad_alerts__date", "umd_glad_landsat_alerts__date")
     sql = sql.replace("sum(alert__count)", "count(*)")
     return sql
+
+
+def validate_raster_sql(sql: str) -> ValidatedQuery:
+    """The guard for raster SQL: deprecated layer names rewritten, PG's
+    ``isoweek(`` spelled as Spark's ``weekofyear(``, then ``validate_sql``."""
+    sql = re.sub(r"isoweek\(", "weekofyear(", _rewrite_deprecated(sql))
+    return validate_sql(sql)
 
 
 def _calc_column(calc: str, source: Column, area: Column) -> Column:
@@ -292,9 +299,7 @@ def query_raster(
     base_layer = default_layer_name(dataset, pixel_meaning)
 
     env = build_data_environment(registry, grid, version_overrides)
-    sql = _rewrite_deprecated(sql)
-    sql = re.sub(r"isoweek\(", "weekofyear(", sql)
-    validated = validate_sql(sql)
+    validated = validate_raster_sql(sql)
     needed = _referenced_layers(validated.sql, env)
     if base_layer not in needed:
         needed.append(base_layer)
@@ -310,8 +315,6 @@ def query_raster(
         # (queries.py:586-597) where / is true division — float — unlike
         # the Postgres-typed tabular path (operators/query.py). Pinned by
         # the r13 gate + docs/PARITY.md 'typed semantics'.
-        result = spark.sql(to_spark_sql(bound, column_types=None))
-        result.schema  # analyze while the view exists
-        return result
+        return spark.sql(to_spark_sql(bound, column_types=None))
     finally:
         spark.catalog.dropTempView(view)

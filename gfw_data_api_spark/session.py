@@ -18,7 +18,9 @@ master/memory sizing changes. Notes on the choices:
   PySpark's worker invalidates import caches at every task, and before
   Python 3.12 that re-reads ``pyspark.zip`` and the ``spark-core`` jar
   (160–280 ms per Python-UDF task on 4 cores). The daemon makes the
-  re-read conditional on the archive changing on disk.
+  re-read conditional on the archive changing on disk. The workers get
+  the package's parent directory on ``PYTHONPATH``, so the daemon imports
+  wherever the calling script runs.
 """
 
 from __future__ import annotations
@@ -32,6 +34,8 @@ from gfw_data_api_spark import compat
 compat.install()  # YearMonthIntervalType collection shim (see compat.py)
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory that holds the package, for the Python workers' import path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -72,6 +76,7 @@ def get_spark(
         # convert (see sources.tabular.load_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", "gfw_data_api_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

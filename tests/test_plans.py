@@ -323,127 +323,3 @@ def test_pq_carry_cols_rejects_result_column_collisions(spark, sf_dir):
         pq_topk(enc, books, [0.0, 0.0, 0.0, 0.0], k=1, carry_cols=["adc_dist"])
     with pytest.raises(ValueError, match="carry_cols.*collide"):
         pq_topk(enc, books, [0.0, 0.0, 0.0, 0.0], k=1, carry_cols=["vec_id"])
-
-
-def test_inventory_wide_plan_shape_gate(spark, sf_dir):
-    """Every declared inventory query must be free of the three
-    plan-level scale killers: CartesianProduct, BroadcastNestedLoopJoin,
-    and an unpartitioned WindowExec ("Window [..] []" — serializes the
-    whole input through one task). Planning only — nothing executes.
-
-    Exceptions must be listed here WITH the reason, so adding one is a
-    reviewed decision, not an accident.
-    """
-    from gfw_data_api_spark import inventory
-
-    # name → (allowed marker, why). A nested-loop join against a
-    # BROADCAST 1-row aggregate (grand totals / normalizer) is the
-    # intended plan — there is no key to hash on and the build side is
-    # a single row, so "nested loop" degenerates to a map-side constant.
-    allowed = {
-        "t11_domain_mixture": ("BroadcastNestedLoopJoin", "1-row grand-totals join"),
-        "w02_temperature_mixture": ("BroadcastNestedLoopJoin", "1-row totals + normalizer join"),
-        "dq01_constraint_audit": ("BroadcastNestedLoopJoin", "1-row total_rows join onto unique/FK counts"),
-        "p02_curate_round3": ("BroadcastNestedLoopJoin", "inherits w02's 1-row totals + normalizer join"),
-        "s08_ivf_recall_gate": ("BroadcastNestedLoopJoin", "bounded 5-row query-vector batch table onto one corpus scan (R10 batch pattern)"),
-        "s10_pq_recall_gate": ("BroadcastNestedLoopJoin", "inherits s08's bounded 5-row query-vector batch table on the exact side"),
-        "g01_pagerank": ("BroadcastNestedLoopJoin", "1-row dangling-mass share broadcast per superstep (llmops/graph.py)"),
-        "t18_corpus_report": ("BroadcastNestedLoopJoin", "1-row language-total join for entropy fractions"),
-        "t19_vocabulary_stats": ("BroadcastNestedLoopJoin", "1-row Zipf-head total join"),
-        "t17_kneser_ney_lm": ("BroadcastNestedLoopJoin", "1-row bigram-type-total join (KN continuation normalizer)"),
-        "t20_perplexity_buckets": ("BroadcastNestedLoopJoin", "inherits t17's 1-row bigram-type-total join"),
-        "r10_batch_list_query": ("BroadcastNestedLoopJoin", "bbox range-join against the feature list, bounded by MAX_BATCH_FEATURES=100 (raster/batch.py)"),
-        "r11_version_overrides": ("BroadcastNestedLoopJoin", "inherits r10's bounded feature-list range-join (raster/batch.py)"),
-        "a04_count_min_sketch": ("BroadcastNestedLoopJoin", "1-row corpus-total join for the error-bound boolean (t19 convention)"),
-        "a03_heavy_hitters": ("BroadcastNestedLoopJoin", "1-row non-null-row-count join for the MG undercount bound (t19 convention; replaced a serial count() action)"),
-        "t06_tfidf_top_terms": ("BroadcastNestedLoopJoin", "1-row n_docs join for the IDF normalizer (replaced a serial count() action)"),
-        "t15_bm25_search": ("BroadcastNestedLoopJoin", "1-row N/avgdl scalar join for BM25 (replaced a serial scalar-agg action)"),
-        "s09_hybrid_rrf_search": ("BroadcastNestedLoopJoin", "inherits t15's 1-row N/avgdl scalar join on the lexical arm"),
-    }
-
-    bad: dict[str, list[str]] = {}
-    for name, fn in inventory.queries().items():
-        try:
-            df = fn(spark, sf_dir)
-        except Exception as exc:  # pragma: no cover — planning must not fail
-            bad[name] = [f"planning failed: {exc}"]
-            continue
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        findings = []
-        for marker in ("CartesianProduct", "BroadcastNestedLoopJoin"):
-            if marker in plan and allowed.get(name, ("",))[0] != marker:
-                findings.append(marker)
-        # unpartitioned window: "Window [exprs], [partition], [order]" with
-        # empty partition spec prints as "], [], [" in the plan string
-        if "Window" in plan:
-            import re as _re
-
-            for m in _re.finditer(r"Window \[[^\n]*?\], \[\], \[", plan):
-                findings.append("unpartitioned WindowExec")
-                break
-        if findings:
-            bad[name] = findings
-    assert not bad, f"scale-killer plan shapes: {bad}"
-
-
-def test_inventory_broadcast_hint_gate(spark, sf_dir):
-    """A forced ``F.broadcast()`` hint is only safe when the build side
-    is BOUNDED by construction (a 1-row/grand-total aggregate, a top-k
-    limited set, a fixed dimension/catalog table, or a fixed benchmark
-    corpus). A hint on a data-dependent set — e.g. "all ids flagged as
-    duplicates" — is a driver/executor OOM at 100 TB even though it
-    looks fine at test scale (round-3 verdict, What's-wrong #1).
-
-    This gate walks every inventory query's OPTIMIZED logical plan and
-    fails if it carries an explicit broadcast hint (``strategy=broadcast``)
-    without a reviewed allowlist entry naming the bounded build side.
-    Adding a hint therefore requires adding a reason here.
-    """
-    from gfw_data_api_spark import inventory
-
-    # name → why the hinted build side is bounded
-    allowed = {
-        "i02_three_way_join": "nation/region dimension tables (fixed catalog size)",
-        "i08_multiway_join_revenue": "supplier/nation/region dimension tables",
-        "t11_domain_mixture": "1-row grand-totals aggregate",
-        "w01_importance_weights": "1-row raw/target total aggregates",
-        "w02_temperature_mixture": "1-row totals + 1-row normalizer aggregates",
-        "p02_curate_round3": "inherits w02's 1-row totals/normalizer",
-        "dq01_constraint_audit": "1-row total_rows + bounded parent-key dim",
-        "q24_skew_hybrid_join": "top-k hot-key aggregate (LIMITed) + small dim",
-        "s04_blocked_cosine_pairs": "per-block counts guard (fixed bucket count)",
-        "st05_stream_static_enrich": "static dimension table",
-        "d08_benchmark_decontamination": "benchmark corpus side (fixed eval set)",
-        "p01_curate_corpus": "benchmark corpus side (fixed eval set)",
-        "s08_ivf_recall_gate": "bounded 5-row query-vector batch table (exact side of the recall gate)",
-        "t18_corpus_report": "1-row language-total aggregate (entropy normalizer)",
-        "t19_vocabulary_stats": "1-row top-10-token total aggregate",
-        "t17_kneser_ney_lm": "1-row bigram-type-total aggregate (KN continuation normalizer)",
-        "t20_perplexity_buckets": "inherits t17's 1-row bigram-type-total aggregate",
-        "r10_batch_list_query": "feature list bounded by MAX_BATCH_FEATURES=100 (raster/batch.py cap)",
-        "r11_version_overrides": "inherits r10's MAX_BATCH_FEATURES-bounded feature list",
-        "a04_count_min_sketch": "1-row corpus-total aggregate (error-bound normalizer)",
-        "g01_pagerank": "1-row dangling-mass-share aggregate per superstep (llmops/graph.py)",
-        "e20_byte_budget_shards": "bucket-offset table guarded to ≤10M rows "
-        "(llmops/export.py assign_byte_shards — buckets = maxid/bucket_width)",
-        "a03_heavy_hitters": "1-row non-null-row-count aggregate (MG undercount bound)",
-        "t06_tfidf_top_terms": "1-row n_docs aggregate (IDF normalizer)",
-        "t15_bm25_search": "1-row N/avgdl scalar aggregate (BM25 constants)",
-        "s09_hybrid_rrf_search": "inherits t15's 1-row N/avgdl scalar aggregate",
-    }
-
-    offenders: dict[str, int] = {}
-    for name, fn in inventory.queries().items():
-        try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
-        except Exception as exc:  # pragma: no cover
-            offenders[name] = f"planning failed: {exc}"
-            continue
-        n = plan.count("strategy=broadcast")
-        if n and name not in allowed:
-            offenders[name] = n
-    assert not offenders, (
-        "explicit broadcast hint on a build side not reviewed as bounded "
-        f"(add to the allowlist WITH a reason, or drop the hint): {offenders}"
-    )

@@ -21,6 +21,17 @@ def test_count_star(spark, lineitem):
     assert rows[0]["count"] == lineitem.count()
 
 
+def test_result_runs_after_its_view_is_dropped(spark, lineitem):
+    """``spark.sql`` analyzes eagerly: the request's ``gfw_q_*`` view is
+    gone once ``execute_on_dataframe`` returns, and the result still
+    collects."""
+    result = execute_on_dataframe(
+        spark, lineitem, "SELECT l_returnflag, count(*) AS n FROM data GROUP BY l_returnflag"
+    )
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("gfw_q_")]
+    assert sum(r.n for r in result.collect()) == lineitem.count()
+
+
 def test_filter_group_order_limit(spark, lineitem):
     sql = (
         "SELECT l_returnflag, count(*) AS cnt, sum(l_quantity) AS qty "

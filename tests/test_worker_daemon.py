@@ -4,7 +4,9 @@ workers through it."""
 
 import importlib
 import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
 
@@ -15,6 +17,7 @@ from pyspark.sql.functions import pandas_udf
 from gfw_data_api_spark import worker_daemon
 
 MODULE = "gfw_zipstamp_probe"
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _write_archive(path, body: str) -> None:
@@ -97,3 +100,45 @@ def test_session_workers_run_the_engine_daemon(spark):
         "gfw_data_api_spark.worker_daemon"
     }
     assert sorted(r[0] for r in df.select(plus_one("id")).collect()) == list(range(1, 11))
+
+
+def test_udf_workers_import_the_engine_outside_the_repo(tmp_path):
+    """A script run from another directory, with no ``PYTHONPATH``, that
+    puts the repo root on its own ``sys.path``: the JVM starts the engine
+    daemon in that directory, and a pandas UDF still returns its rows."""
+    script = tmp_path / "probe.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+
+            sys.path.insert(0, {REPO_ROOT!r})
+
+            import pandas as pd
+            from pyspark.sql.functions import pandas_udf
+
+            from gfw_data_api_spark.session import get_spark
+
+            spark = get_spark(app_name="worker-path-probe")
+
+            @pandas_udf("long")
+            def plus_one(x: pd.Series) -> pd.Series:
+                return x + 1
+
+            print(sorted(r[0] for r in spark.range(3).select(plus_one("id")).collect()))
+            spark.stop()
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    run = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.strip().splitlines()[-1] == "[1, 2, 3]"

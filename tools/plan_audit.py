@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Physical-plan inventory for every registered query.
 
-Complements the NEGATIVE plan gate (tests/test_plans.py rejects
+Complements the NEGATIVE plan gates (tests/test_entry_contract.py rejects
 CartesianProduct / BroadcastNestedLoopJoin / unpartitioned WindowExec /
 unbounded broadcast hints) with the POSITIVE evidence: per query, how
 many shuffles the plan carries, how many file scans, whether the top-k
