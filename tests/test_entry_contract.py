@@ -1,9 +1,9 @@
-"""Driver-contract tests: the shape of entry()/queries()/oracle_sql(),
+"""Tests of ``__spark_entry__``: the shape of entry()/queries()/oracle_sql(),
 and the one sweep over the operator inventory. The sweep builds each
 query once at sf0.001, checks its plans against the plan-shape and
 broadcast-hint gates, then collects it and compares every value with its
 DuckDB twin through ``tools/check_oracle.py``'s comparator. The sf0.01
-run of the driver contract stays in that tool."""
+parity run stays in that tool."""
 
 import re
 
