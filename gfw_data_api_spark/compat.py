@@ -9,7 +9,8 @@ months => ..)`` (reference surface: pass-through scalar functions,
 ``app/routes/datasets/queries.py``), so a bare-projected year-month
 interval must survive ``.collect()``: patch ``fromInternal`` to wrap
 the month count in :class:`YearMonthInterval`, which the download
-serializers render in PG's text style ('1 year 2 mons').
+serializer (``operators.downloads._interval_to_pg_text``) renders in
+PG's text style ('1 year 2 mons').
 
 The patch is value-adding only — no behavior changes for any other
 type, and consumed forms (``ts + make_interval(...)``) never hit it.
@@ -40,26 +41,6 @@ class YearMonthInterval:
 
     def __repr__(self):
         return f"YearMonthInterval(months={self.months})"
-
-    def pg_text(self) -> str:
-        """PG default IntervalStyle: '1 year 2 mons', '-1 years -2 mons',
-        '00:00:00' for the zero interval (matches PG's interval_out)."""
-        m = self.months
-        if m == 0:
-            return "00:00:00"
-        neg = m < 0
-        sign = -1 if neg else 1
-        years, mons = divmod(abs(m), 12)
-        parts = []
-        if years:
-            parts.append(
-                f"{sign * years} year" + ("s" if years != 1 or neg else "")
-            )
-        if mons:
-            parts.append(
-                f"{sign * mons} mon" + ("s" if mons != 1 or neg else "")
-            )
-        return " ".join(parts)
 
 
 def _ym_from_internal(self, obj):  # noqa: ANN001 - pyspark signature

@@ -9235,7 +9235,7 @@ _SPECS.append(
             "FROM events WHERE event_id % 40 = 0"
         ),
         survey_ref="Q11 round-11: age() two-argument translation "
-        "(sql/dialect.py _age_sql; DuckDB native age() twin, "
+        "(sql/dialect.py _gfw_age; DuckDB native age() twin, "
         "spelling-normalized only)",
     )
 )

@@ -100,35 +100,37 @@ def rows_to_csv(df: DataFrame, delimiter: str = ",") -> str:
     return rows_to_csv_rows(df.columns, _guard_collect(df, "rows_to_csv", "write_csv"), delimiter)
 
 
-def _interval_to_pg_text(td) -> str:
-    """Render a day-time interval (Python timedelta) in PG's default
-    ``postgres`` IntervalStyle: ``N day[s] HH:MM:SS[.ffffff]`` with
-    per-component signs on negative values ('-1 days -02:00:00'), the
-    day part omitted when zero, the time part omitted when zero and a
-    day part exists. Keeps ``timestamp - timestamp`` download columns
-    engine-portable (docs/PARITY.md interval-rendering note; Spark's
-    own rendering is ``INTERVAL '1 02:00:00' DAY TO SECOND``).
-    Year-month intervals (collected via the compat shim) render as
-    '1 year 2 mons'."""
-    if isinstance(td, YearMonthInterval):
-        return td.pg_text()
-    # Integer arithmetic — td.total_seconds() goes through float64 and
-    # loses microsecond exactness beyond ~2^53 us (~285 years).
-    total_us = td // datetime.timedelta(microseconds=1)
-    sign = "-" if total_us < 0 else ""
-    total_us = abs(total_us)
-    days, rem = divmod(total_us, 86_400_000_000)
-    hh, rem = divmod(rem, 3_600_000_000)
-    mm, rem = divmod(rem, 60_000_000)
-    ss, us = divmod(rem, 1_000_000)
-    parts = []
-    if days:
-        parts.append(f"{sign}{days} day" + ("s" if days != 1 or sign else ""))
-    if hh or mm or ss or us or not days:
-        t = f"{sign}{hh:02d}:{mm:02d}:{ss:02d}"
-        if us:
-            t += f".{us:06d}".rstrip("0")
-        parts.append(t)
+def _interval_to_pg_text(value) -> str:
+    """Render a collected interval (a day-time ``timedelta`` or a
+    :class:`YearMonthInterval`) in PG's default ``postgres``
+    IntervalStyle, by the rules of the dialect's
+    ``_gfw_interval_text``: '1 year 2 mons', '2 days 03:00:00'; a
+    component printed only when nonzero, each carrying the sign
+    ('-1 days -02:00:00'), plural unless the value is exactly 1 and not
+    negative; the time as ``HH:MM:SS`` with the fraction's trailing
+    zeros trimmed, omitted when zero beside another component, and
+    '00:00:00' alone for zero. Keeps interval download columns
+    engine-portable (docs/PARITY.md interval-rendering note; Spark's own
+    rendering is ``INTERVAL '1 02:00:00' DAY TO SECOND``)."""
+    if isinstance(value, YearMonthInterval):
+        months, micros = value.months, 0
+    else:
+        # integer arithmetic: total_seconds() goes through float64 and
+        # loses microsecond exactness beyond ~2^53 us (~285 years)
+        months, micros = 0, value // datetime.timedelta(microseconds=1)
+    negative = months < 0 or micros < 0
+    sign = "-" if negative else ""
+    months = abs(months)
+    days, micros = divmod(abs(micros), 86_400_000_000)
+    parts = [
+        f"{sign}{n} {unit}" + ("" if n == 1 and not negative else "s")
+        for n, unit in ((months // 12, "year"), (months % 12, "mon"), (days, "day"))
+        if n
+    ]
+    if micros or not parts:
+        secs, us = divmod(micros, 1_000_000)
+        clock = f"{sign}{secs // 3600:02d}:{secs // 60 % 60:02d}:{secs % 60:02d}"
+        parts.append(clock + (f".{us:06d}".rstrip("0") if us else ""))
     return " ".join(parts)
 
 

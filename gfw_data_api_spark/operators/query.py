@@ -22,7 +22,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from gfw_data_api_spark.sql.dialect import (
-    require_ansi,
+    run_spark_sql,
     schema_type_categories,
     to_spark_sql,
 )
@@ -97,8 +97,7 @@ def execute_on_dataframe(
         # typing rewrites (int/int div, date - date, typed int casts) —
         # the same type knowledge the reference's Postgres evaluator has
         spark_sql = to_spark_sql(bound, column_types=schema_type_categories(df.schema))
-        require_ansi(spark)
         # spark.sql analyzes eagerly, so the view may go once it returns
-        return spark.sql(spark_sql)
+        return run_spark_sql(spark, spark_sql)
     finally:
         spark.catalog.dropTempView(view)

@@ -38,7 +38,7 @@ from gfw_data_api_spark.raster.data_environment import build_data_environment
 from gfw_data_api_spark.raster.grid import Grid
 from gfw_data_api_spark.raster.layers import default_layer_name
 from gfw_data_api_spark.raster.zonal import _referenced_layers, assemble_pixels, validate_raster_sql
-from gfw_data_api_spark.sql.dialect import require_ansi, to_spark_sql
+from gfw_data_api_spark.sql.dialect import run_spark_sql, to_spark_sql
 from gfw_data_api_spark.sql.guard import QueryGuardError, ValidatedQuery, bind_from
 from gfw_data_api_spark.sql.tokenizer import tokenize
 
@@ -179,8 +179,7 @@ def batch_query(
         # (queries.py:586-597), not Postgres typed division. See
         # docs/PARITY.md 'typed semantics' + the r13 gate.
         bound = to_spark_sql(bound, column_types=None)
-        require_ansi(spark)
-        return spark.sql(bound), failed
+        return run_spark_sql(spark, bound), failed
     finally:
         spark.catalog.dropTempView(view)
 

@@ -45,7 +45,7 @@ from gfw_data_api_spark.raster.layers import (
     default_layer_name,
 )
 from gfw_data_api_spark.raster.pixels import with_pixel_coordinates
-from gfw_data_api_spark.sql.dialect import require_ansi, to_spark_sql
+from gfw_data_api_spark.sql.dialect import run_spark_sql, to_spark_sql
 from gfw_data_api_spark.sql.guard import QueryGuardError, ValidatedQuery, bind_from, validate_sql
 
 # default OTF area cap, hectares (app/settings/globals.py:157-160)
@@ -309,12 +309,11 @@ def query_raster(
     df.createOrReplaceTempView(view)
     try:
         bound = bind_from(validated, view)
-        require_ansi(spark)
         # DELIBERATELY type-blind (no column_types): the reference ships
         # raster SQL out-of-process to a NumPy evaluator
         # (queries.py:586-597) where / is true division — float — unlike
         # the Postgres-typed tabular path (operators/query.py). Pinned by
         # the r13 gate + docs/PARITY.md 'typed semantics'.
-        return spark.sql(to_spark_sql(bound, column_types=None))
+        return run_spark_sql(spark, to_spark_sql(bound, column_types=None))
     finally:
         spark.catalog.dropTempView(view)

@@ -47,6 +47,24 @@ def test_translation_matches_golden_corpus():
     assert not bad, f"{len(bad)} of {len(entries)} translations changed:\n" + "\n".join(bad[:10])
 
 
+def test_gate_output_stays_a_small_multiple_of_input():
+    """Emitted SQL of every gate statement stays within 8x its input
+    (q62, whose age() calls once inlined every operand over a hundred
+    times, within 3x): an expansion that repeats its operands shows up
+    here before Catalyst pays for it."""
+    from gfw_data_api_spark.sql.dialect import to_spark_sql
+
+    gates = [e for e in _load() if "name" in e]
+    assert len(gates) == 59
+    ratio = {
+        e["name"]: len(to_spark_sql(e["sql"], column_types=e["column_types"])) / len(e["sql"])
+        for e in gates
+    }
+    assert ratio["q62_age_function"] <= 3, ratio["q62_age_function"]
+    too_big = {name: round(r, 2) for name, r in ratio.items() if r > 8}
+    assert not too_big, too_big
+
+
 def _record() -> None:
     """Rewrite every entry's output from the current dialect."""
     entries = _load()

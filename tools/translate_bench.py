@@ -6,7 +6,10 @@ guarded-path gate SQL in the registry — the per-request cost the API
 pays before Catalyst sees the query. The pass pipeline threads one
 token stream through its ~40 passes and re-tokenizes only after a
 rewrite; ``tokenize_calls`` (one translation per statement) keeps that
-property visible. Budget and history live in docs/BENCH_NOTES.md.
+property visible. ``max_ratio`` is the largest output/input length
+ratio and ``max_ratio_statement`` the gate that has it (emitted SQL
+should stay a small multiple of its input). Budget and history live in
+docs/BENCH_NOTES.md.
 
 Usage: python tools/translate_bench.py [reps]
 """
@@ -58,12 +61,14 @@ def main() -> None:
         return tokenize(text)
 
     # one counted translation per statement, outside the timed reps
+    ratios: dict[str, float] = {}
     dialect.tokenize = counting_tokenize
     try:
-        for sql in sqls.values():
-            dialect.to_spark_sql(sql, column_types=coltypes)
+        for name, sql in sqls.items():
+            ratios[name] = len(dialect.to_spark_sql(sql, column_types=coltypes)) / len(sql)
     finally:
         dialect.tokenize = tokenize
+    worst = max(ratios, key=ratios.get)
     times_ms: dict[str, float] = {}
     for name, sql in sorted(sqls.items()):
         best = float("inf")
@@ -85,6 +90,8 @@ def main() -> None:
                 "max_ms": round(max(vals), 2),
                 "sum_ms": round(sum(vals), 2),
                 "tokenize_calls": calls,
+                "max_ratio": round(ratios[worst], 2),
+                "max_ratio_statement": worst,
                 "slowest": sorted(
                     times_ms.items(), key=lambda kv: -kv[1]
                 )[:5],
