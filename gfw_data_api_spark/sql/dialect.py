@@ -1536,7 +1536,7 @@ def _find_like_op(sql, tokens):
     LIKE), ``~~*`` (ILIKE), ``!~~*`` (NOT ILIKE). Straight keyword
     substitution is exact: the operators share LIKE's precedence and
     both engines default to backslash escaping. Runs BEFORE
-    translate_regex_ops so the ``~`` regex family never sees them
+    _find_regex_op so the ``~`` regex family never sees them
     (round-10; previously an opaque Spark ParseException)."""
     for t in tokens:
         if t.kind == "OP" and t.value in _LIKE_OPS:
@@ -1714,7 +1714,7 @@ def _find_array_subscript(sql, tokens):
     ``CASE WHEN i < 1 THEN NULL ELSE try_element_at(expr, i) END``
     (try_element_at is 1-based and NULL out-of-range, but RAISES on
     literal zero and counts from the end for negatives — the guard
-    closes both). Runs AFTER translate_pg_casts so type brackets
+    closes both). Runs AFTER _find_pg_cast so type brackets
     (``::int[]``) and ``ARRAY[...]`` constructors are already
     consumed. PG slice syntax (``a[1:3]``) raises a named error;
     non-default lower bounds ('[0:2]={...}' literals) are outside the

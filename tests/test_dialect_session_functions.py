@@ -111,3 +111,30 @@ def test_null_operands_give_null(spark):
         "make_interval(months => n)::text AS ym FROM ivnull_t",
     ).collect()[0]
     assert (row.a, row.b, row.dt, row.ym) == (None, None, None, None)
+
+
+def test_concurrent_first_use_creates_the_set_once_for_all(spark):
+    """Requests racing to create the functions on one session all see
+    the whole set (creation is CREATE OR REPLACE, checked on the last)."""
+    import threading
+
+    sql = (
+        "SELECT age(timestamp '2024-03-10 03:30', timestamp '2023-01-09 01:30') AS a, "
+        "make_interval(hours => 26)::text AS b"
+    )
+    results, errors = [], []
+
+    def request():
+        try:
+            results.append(tuple(run_pg_sql(spark, sql).collect()[0]))
+        except Exception as e:  # noqa: BLE001 - any failure is the finding
+            errors.append(repr(e))
+
+    _drop_functions(spark)
+    threads = [threading.Thread(target=request) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    assert results == [("1 year 2 mons 1 day 02:00:00", "1 day 02:00:00")] * 4
