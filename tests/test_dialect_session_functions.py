@@ -135,6 +135,7 @@ def test_concurrent_first_use_creates_the_set_once_for_all(spark):
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
     assert not errors, errors
     assert results == [("1 year 2 mons 1 day 02:00:00", "1 day 02:00:00")] * 4
